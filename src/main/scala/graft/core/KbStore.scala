@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,7 +29,15 @@ import graft.functions.VectorFunctions._
   * Caching (reference `_EmbeddingsMatrix`, `kb.py:856-893`): the
   * embeddings Dataset is persisted on first use and unpersisted by any
   * mutation — the "first query slow, later queries fast" contract
-  * (`README.md:135`) maps directly onto lazy Spark caching.
+  * (`README.md:135`) maps directly onto lazy Spark caching. Below it,
+  * every published segment directory is resolved (listed and
+  * schema-inferred) once per store instance by [[segment]], and each
+  * table's folded merge-on-read view is kept per (table, base, chain),
+  * so a warm read plans without touching the filesystem. Published
+  * version dirs never change, only disappear: the memos are exact,
+  * `invalidate()` (every publish, adoption and close) prunes them to
+  * what the live manifest references, and every directory this store
+  * deletes is evicted with it.
   *
   * Single-writer semantics, like the reference's one-connection
   * discipline (`kb.py:116-137`).
@@ -67,20 +77,100 @@ final class KbStore private (
   private def read(name: String): DataFrame = readWithMeta(metaCache, name)
 
   private def readWithMeta(m: KbMeta, name: String): DataFrame = {
-    val base = spark.read.parquet(
-      tableDir(name, m.table_bases.getOrElse(name, m.table_versions(name))))
-    m.table_deltas.getOrElse(name, Nil).foldLeft(base) { (acc, v) =>
-      val dir = tableDir(name, v)
-      val keys = KbStore.DeltaKeys(name)
-      val afterDel =
-        if (KbStore.hasParquetFiles(s"$dir/del"))
-          acc.join(spark.read.parquet(s"$dir/del"), keys, "left_anti")
-        else acc
-      if (KbStore.hasParquetFiles(s"$dir/add"))
-        afterDel.union(spark.read.parquet(s"$dir/add")
-          .select(afterDel.columns.map(col(_)): _*))
-      else afterDel
+    val base = m.table_bases.getOrElse(name, m.table_versions(name))
+    val chain = m.table_deltas.getOrElse(name, Seq.empty[Long])
+    val key = (name, base, chain)
+    val plan = Option(views.get(key)).getOrElse {
+      val folded = chain.foldLeft(baseSegment(name, base)) { (acc, v) =>
+        val dir = tableDir(name, v)
+        val afterDel = segment(s"$dir/del").fold(acc)(
+          acc.join(_, KbStore.DeltaKeys(name), "left_anti"))
+        segment(s"$dir/add").fold(afterDel)(a =>
+          afterDel.union(a.select(afterDel.columns.map(col(_)): _*)))
+      }
+      val p = folded.queryExecution.analyzed
+      Option(views.putIfAbsent(key, p)).getOrElse(p)
     }
+    KbStore.freshScan(spark, plan)
+  }
+
+  // ------------------------------------------------------------------
+  // segment resolution
+  // ------------------------------------------------------------------
+  /** Published segment dir -> its resolved scan; None when it holds no
+    * parquet file. */
+  private val segments =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[LogicalPlan]]()
+
+  /** (table, base version, delta chain) -> the folded merge-on-read
+    * plan [[readWithMeta]] built for that layout. */
+  private val views = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Seq[Long]), LogicalPlan]()
+
+  /** The one reader of committed segment directories: `dir` (a table's
+    * base dir, or a delta's `del`/`add` side) is listed and its schema
+    * inferred once per store instance, then served from the memo as a
+    * fresh scan with new attribute ids — two reads of one table still
+    * join like two independent scans. None when the directory holds no
+    * parquet file (an empty partitioned write leaves only `_SUCCESS`; a
+    * pure add has no `del`, a pure delete no `add`).
+    *
+    * Exact because a published version dir never changes, it is only
+    * deleted: [[invalidate]] prunes the memo to the live manifest's
+    * segments and [[deleteDir]] evicts whatever it removes. Callers
+    * pass only dirs a published manifest names — a staged, unpublished
+    * `v<N+1>` is never resolved here, so a rolled-back stage that the
+    * retry rewrites cannot be served stale.
+    */
+  private def segment(dir: String): Option[DataFrame] =
+    Option(segments.get(dir)).getOrElse {
+      val p =
+        if (KbStore.hasParquetFiles(dir))
+          Some(spark.read.parquet(dir).queryExecution.analyzed)
+        else None
+      Option(segments.putIfAbsent(dir, p)).getOrElse(p)
+    }.map(KbStore.freshScan(spark, _))
+
+  /** A table's base segment, which every committed layout has. */
+  private def baseSegment(name: String, version: Long): DataFrame = {
+    val dir = tableDir(name, version)
+    segment(dir).getOrElse(throw new IllegalStateException(
+      s"store $path: base segment $dir of table $name holds no parquet file"))
+  }
+
+  /** Every segment dir (base, then each delta's sides) of a layout. */
+  private def layoutDirs(name: String, base: Long,
+      chain: Seq[Long]): Seq[String] =
+    tableDir(name, base) +: chain.flatMap { v =>
+      val dir = tableDir(name, v)
+      Seq(s"$dir/del", s"$dir/add")
+    }
+
+  /** Drop memo entries outside the live manifest's layouts. */
+  private def pruneResolved(): Unit = {
+    import scala.jdk.CollectionConverters._
+    val m = metaCache
+    val live = m.table_versions.keySet.map { name =>
+      (name, m.table_bases.getOrElse(name, m.table_versions(name)),
+        m.table_deltas.getOrElse(name, Seq.empty[Long]))
+    }
+    views.keySet.retainAll(live.asJava)
+    segments.keySet.retainAll(
+      live.flatMap { case (n, b, c) => layoutDirs(n, b, c) }.asJava)
+  }
+
+  /** Delete `p` recursively and evict every memo entry under it. */
+  private def deleteDir(p: Path): Unit = {
+    KbStore.deleteRecursively(p)
+    def under(dir: String) = Paths.get(dir).startsWith(p)
+    segments.keySet.removeIf(under(_))
+    views.keySet.removeIf { case (n, b, c) => layoutDirs(n, b, c).exists(under) }
+  }
+
+  /** Memo contents, for specs: (resolved segment dirs, folded views). */
+  private[graft] def resolvedForSpec: (Set[String], Int) = {
+    import scala.jdk.CollectionConverters._
+    (segments.keySet.asScala.toSet, views.size)
   }
 
   def docs: Dataset[Doc] = read("docs").as[Doc]
@@ -111,6 +201,7 @@ final class KbStore private (
     cachedEmb = None
     cachedIdx.foreach(_.unpersist())
     cachedIdx = None
+    pruneResolved()
   }
 
   /** The batch-built retrieval index (reference `_EmbeddingsMatrix`,
@@ -262,7 +353,7 @@ final class KbStore private (
         case e: Throwable =>
           // rollback: remove staged dirs, meta still points at `cur`
           updated.keys.foreach { name =>
-            KbStore.deleteRecursively(Paths.get(tableDir(name, next)))
+            deleteDir(Paths.get(tableDir(name, next)))
           }
           e match {
             case _: KbStore.PublishConflict
@@ -349,25 +440,19 @@ final class KbStore private (
         // incoming patch) removed — keys of base rows that must not
         // surface plus re-add bookkeeping handled by the merged add
         val chainDels = chain.flatMap { v =>
-          val d = s"${tableDir(name, v)}/del"
-          if (KbStore.hasParquetFiles(d))
-            Some(spark.read.parquet(d).select(keys.map(col(_)): _*))
-          else None
+          segment(s"${tableDir(name, v)}/del")
+            .map(_.select(keys.map(col(_)): _*))
         } ++ patch.del.map(_.select(keys.map(col(_)): _*))
         // merged adds: the chain (plus incoming patch) folded over an
         // empty base — adds that a later segment tombstoned drop out
-        val schema = spark.read.parquet(
-          tableDir(name, cur.table_bases.getOrElse(name,
-            cur.table_versions(name)))).limit(0)
-        var merged = schema
+        var merged = baseSegment(name, cur.table_bases.getOrElse(name,
+          cur.table_versions(name))).limit(0)
         chain.foreach { v =>
           val dir = tableDir(name, v)
-          if (KbStore.hasParquetFiles(s"$dir/del"))
-            merged = merged.join(
-              spark.read.parquet(s"$dir/del"), keys, "left_anti")
-          if (KbStore.hasParquetFiles(s"$dir/add"))
-            merged = merged.union(spark.read.parquet(s"$dir/add")
-              .select(merged.columns.map(col(_)): _*))
+          segment(s"$dir/del").foreach(d =>
+            merged = merged.join(d, keys, "left_anti"))
+          segment(s"$dir/add").foreach(a =>
+            merged = merged.union(a.select(merged.columns.map(col(_)): _*)))
         }
         patch.del.foreach(d => merged = merged.join(d, keys, "left_anti"))
         patch.add.foreach(a =>
@@ -430,7 +515,7 @@ final class KbStore private (
     } catch {
       case e: Throwable =>
         patches.keys.foreach { name =>
-          KbStore.deleteRecursively(Paths.get(tableDir(name, next)))
+          deleteDir(Paths.get(tableDir(name, next)))
         }
         e match {
           case _: KbStore.PublishConflict
@@ -1164,16 +1249,17 @@ final class KbStore private (
     */
   private def changedSince(table: String, since: Long)
       : Option[(DataFrame, DataFrame)] = {
-    // measurement-only kill switch (round 14 evidence debt): lets the
-    // profiling mains time the refresh paths with the segment route
-    // DISABLED (forcing every refresh onto the full keyed diff) so the
-    // O(corpus) → O(batch) claim has a recorded before/after on one
-    // tree. Never set outside a measurement run.
+    // measurement-only kill switch: lets ProfileRefreshPlans time the
+    // refresh paths with the segment route DISABLED (forcing every
+    // refresh onto the full keyed diff) so the O(corpus) → O(batch)
+    // claim has a before/after on one tree. Announces itself once.
     val r =
-      if (sys.props.get("graft.kb.forceFullRefreshDiff").contains("true") ||
-          sys.env.get("GRAFT_KB_FORCE_FULL_REFRESH_DIFF").contains("true"))
+      if (sys.props.get("graft.kb.forceFullRefreshDiff").contains("true")) {
+        if (KbStore.forceFullWarned.compareAndSet(false, true))
+          System.err.println("[graft] warning: graft.kb.forceFullRefreshDiff " +
+            "is set; every index refresh takes the full keyed diff")
         None
-      else changedSinceImpl(table, since)
+      } else changedSinceImpl(table, since)
     // engagement probe (r13 verdict item 3): RefreshFastPathSpec's
     // parity tests are vacuous if the fast path silently stops
     // engaging (route parity with the fallback is then parity with
@@ -1221,14 +1307,13 @@ final class KbStore private (
     // a row added then deleted inside the window nets out of `adds`
     appended.foreach { v =>
       val dir = tableDir(table, v)
-      if (KbStore.hasParquetFiles(s"$dir/del")) {
-        val d = spark.read.parquet(s"$dir/del").select(keys.map(col(_)): _*)
+      segment(s"$dir/del").foreach { del =>
+        val d = del.select(keys.map(col(_)): _*)
         adds = adds.join(d, keys, "left_anti")
         dels = dels.unionByName(d)
       }
-      if (KbStore.hasParquetFiles(s"$dir/add"))
-        adds = adds.unionByName(spark.read.parquet(s"$dir/add")
-          .select(schema.columns.map(col(_)): _*))
+      segment(s"$dir/add").foreach(a =>
+        adds = adds.unionByName(a.select(schema.columns.map(col(_)): _*)))
     }
     Some((adds, dels.distinct()))
   }
@@ -1241,10 +1326,7 @@ final class KbStore private (
     val chain = metaCache.table_deltas.getOrElse(table, Seq.empty[Long])
     val keys = KbStore.DeltaKeys(table)
     val dels = chain.flatMap { v =>
-      val dir = tableDir(table, v)
-      if (KbStore.hasParquetFiles(s"$dir/del"))
-        Some(spark.read.parquet(s"$dir/del").select(keys.map(col(_)): _*))
-      else None
+      segment(s"${tableDir(table, v)}/del").map(_.select(keys.map(col(_)): _*))
     }
     dels.reduceOption(_.unionByName(_)).map(_.distinct())
   }
@@ -1946,7 +2028,7 @@ final class KbStore private (
     // mirror's files under the pre-existing overwrite contract, so this
     // adds no reader hazard a catalog-tracked rebuild doesn't have.
     if (!spark.catalog.tableExists(tbl))
-      try KbStore.deleteRecursively(Paths.get(bucketedCodesDataPath))
+      try deleteDir(Paths.get(bucketedCodesDataPath))
       catch { case _: java.io.IOException => () }
     val codes = read(KbStore.IvfPqCodesTable).withColumnRenamed("vec_id", "id")
     graft.ops.VectorQuant.writeCodesBucketed(codes, tbl, buckets, parts,
@@ -2100,7 +2182,10 @@ final class KbStore private (
         m.index_params + ("text_unicode" -> unicode.toString)),
       partitionBy = Map(KbStore.TextPostingsTable -> Seq("bucket")),
       readSet = Set("docs"))
-    finally postings.unpersist(blocking = false) // buildIndex caches
+    finally { // buildIndex caches both
+      postings.unpersist(blocking = false)
+      docLens.unpersist(blocking = false)
+    }
   }
 
   /** The lexical tier's persisted tokenizer choice. */
@@ -2150,7 +2235,10 @@ final class KbStore private (
         KbStore.TextDocLensTable -> KbStore.TablePatch(
           del = Some(goneIds), add = Some(addLens))),
         identity, readSet = Set("docs"))
-      finally addPost.unpersist(blocking = false) // buildIndex caches
+      finally { // buildIndex caches both
+        addPost.unpersist(blocking = false)
+        addLens.unpersist(blocking = false)
+      }
   }
 
   /** BM25 retrieval through the persistent postings: scores only the
@@ -2844,7 +2932,7 @@ final class KbStore private (
              catch { case _: java.io.IOException |
                           _: java.io.UncheckedIOException => false }))
         if (ours)
-          try KbStore.deleteRecursively(p)
+          try deleteDir(p)
           catch { case _: java.io.IOException |
                        _: java.io.UncheckedIOException => () }
       }
@@ -2891,7 +2979,7 @@ final class KbStore private (
           }
         versions.foreach { case (v, p) =>
           if (!live(v) && !keepHeuristic(v))
-            try KbStore.deleteRecursively(p)
+            try deleteDir(p)
             catch { case _: java.io.IOException |
                          _: java.io.UncheckedIOException => () }
         }
@@ -2918,7 +3006,7 @@ final class KbStore private (
           catch { case _: Exception => () }
           // the table is EXTERNAL (files under the store dir survive the
           // DROP) — reclaim the data files too
-          try KbStore.deleteRecursively(Paths.get(bucketedCodesDataPath))
+          try deleteDir(Paths.get(bucketedCodesDataPath))
           catch { case _: java.io.IOException |
                        _: java.io.UncheckedIOException => () }
           try Files.deleteIfExists(bucketMarkerPath)
@@ -2929,7 +3017,7 @@ final class KbStore private (
         // marker + catalog entry but (deliberately — in-flight readers)
         // left the external files. Vacuum runs reader-free, so the
         // orphaned bytes reclaim here.
-        try KbStore.deleteRecursively(Paths.get(bucketedCodesDataPath))
+        try deleteDir(Paths.get(bucketedCodesDataPath))
         catch { case _: java.io.IOException |
                      _: java.io.UncheckedIOException => () }
     }
@@ -3015,17 +3103,12 @@ final class KbStore private (
           val appended = nextChain.drop(prevChain.size)
           val schema = readWithMeta(next, name).limit(0)
           val adds = appended.flatMap { v =>
-            val d = s"${tableDir(name, v)}/add"
-            if (KbStore.hasParquetFiles(d))
-              Some(spark.read.parquet(d)
-                .select(schema.columns.map(col(_)): _*))
-            else None
+            segment(s"${tableDir(name, v)}/add")
+              .map(_.select(schema.columns.map(col(_)): _*))
           }.reduceOption(_ union _).getOrElse(schema)
           val dels = appended.flatMap { v =>
-            val d = s"${tableDir(name, v)}/del"
-            if (KbStore.hasParquetFiles(d))
-              Some(spark.read.parquet(d).select(keys.map(col(_)): _*))
-            else None
+            segment(s"${tableDir(name, v)}/del")
+              .map(_.select(keys.map(col(_)): _*))
           }.reduceOption(_ union _)
             .getOrElse(schema.select(keys.map(col(_)): _*))
           Some(KbStore.TableChanges(next.version, adds, dels))
@@ -3179,33 +3262,39 @@ object KbStore {
     */
   val DeltaChainLimit: Int = 32
 
-  /** Whether a staged segment side exists with at least one parquet
-    * file — an empty partitioned write leaves only _SUCCESS, and a
-    * mutation may have no del (pure add) or no add (pure delete).
-    *
-    * Memoized: read() probes both sides of every chain segment each
-    * time a table DataFrame is built, and segment dirs are immutable
-    * once published (they change only by deletion — [[deleteRecursively]]
-    * evicts the affected keys), so repeated walks (LIST round-trips on
-    * an object store) would be pure waste on the store's hottest path.
-    */
-  private val segSideCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  /** Whether the refresh kill switch has announced itself yet. */
+  private val forceFullWarned =
+    new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** Whether a segment directory holds at least one parquet file — an
+    * empty partitioned write leaves only _SUCCESS, and a mutation may
+    * have no del (pure add) or no add (pure delete). Not memoized here:
+    * the per-store resolver (`KbStore#segment`) probes each published
+    * segment once and keeps the answer until the manifest stops
+    * referencing that segment or the store deletes it.
+    */
   private[core] def hasParquetFiles(dir: String): Boolean = {
-    val cached = segSideCache.get(dir)
-    if (cached != null) return cached.booleanValue()
     val p = Paths.get(dir)
-    val r =
-      if (!Files.isDirectory(p)) false
-      else {
-        val walk = Files.walk(p)
-        try walk.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
-        finally walk.close()
-      }
-    segSideCache.put(dir, java.lang.Boolean.valueOf(r))
-    r
+    Files.isDirectory(p) && {
+      val walk = Files.walk(p)
+      try walk.anyMatch(f => f.getFileName.toString.endsWith(".parquet"))
+      finally walk.close()
+    }
   }
+
+  /** `plan` (a memoized analyzed read) as a new DataFrame whose scans
+    * carry fresh attribute ids — what a new `spark.read` of the same
+    * files would plan, without re-listing them or re-inferring the
+    * schema.
+    */
+  private[core] def freshScan(spark: SparkSession,
+      plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+      plan.transformUpWithNewOutput {
+        case r: MultiInstanceRelation =>
+          val n = r.newInstance()
+          (n, r.output.zip(n.output))
+      })
 
   /** Above this many vectors `topPairwiseScores` switches from the exact
     * blocked grid (flops grow as n²) to sketch candidates + exact re-rank.
@@ -3492,10 +3581,6 @@ object KbStore {
       Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.deleteIfExists(f))
     }
-    // deletion is the one event that can change a segment-side probe
-    // (rollback re-staging the same v<N>, forceFresh reusing a path)
-    val prefix = p.toString
-    segSideCache.keySet.removeIf(k => k.startsWith(prefix))
   }
 
 }
