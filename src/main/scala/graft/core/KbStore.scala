@@ -39,6 +39,20 @@ import graft.functions.VectorFunctions._
   * what the live manifest references, and every directory this store
   * deletes is evicted with it.
   *
+  * Read-side hydration goes through one resident doc table: the first
+  * read that needs doc rows (a retrieve's hits, `fetchDoc`, …) collects
+  * the whole `docs` view once and keys it by `id` and by `emb_id`, so a
+  * warm retrieve runs no Spark job at all. Like the folded views it is
+  * kept per docs layout (base, chain): a write to another table keeps
+  * it, a docs write publishes a new layout whose first read collects
+  * again, and `invalidate()` prunes the tables of dead layouts; `close`
+  * drops it. Writes never build it: their guard reads stay Spark reads.
+  * The table is resident only while the docs view's planned (Parquet)
+  * size, known from the resolved files without a job, is at most
+  * [[KbStore.ResidentDocsMaxBytes]]; above it each read runs a filtered
+  * Spark read instead. The IVF centroids are likewise collected once
+  * per `ivf_centroids` version.
+  *
   * Single-writer semantics, like the reference's one-connection
   * discipline (`kb.py:116-137`).
   */
@@ -56,6 +70,9 @@ final class KbStore private (
   private[graft] var prePublishHook: () => Unit = () => ()
   private var cachedEmb: Option[Dataset[Emb]] = None
   private var cachedIdx: Option[graft.ops.VectorIndex] = None
+  /** Largest planned docs view (bytes) kept resident; test seam: specs
+    * set -1 to force the filtered Spark read. */
+  private[graft] var residentDocsCap: Long = KbStore.ResidentDocsMaxBytes
 
   def meta: KbMeta = metaCache
 
@@ -76,9 +93,13 @@ final class KbStore private (
     */
   private def read(name: String): DataFrame = readWithMeta(metaCache, name)
 
+  /** A table's layout in manifest `m`: (base version, delta chain). */
+  private def layoutOf(m: KbMeta, name: String): (Long, Seq[Long]) =
+    (m.table_bases.getOrElse(name, m.table_versions(name)),
+      m.table_deltas.getOrElse(name, Seq.empty[Long]))
+
   private def readWithMeta(m: KbMeta, name: String): DataFrame = {
-    val base = m.table_bases.getOrElse(name, m.table_versions(name))
-    val chain = m.table_deltas.getOrElse(name, Seq.empty[Long])
+    val (base, chain) = layoutOf(m, name)
     val key = (name, base, chain)
     val plan = Option(views.get(key)).getOrElse {
       val folded = chain.foldLeft(baseSegment(name, base)) { (acc, v) =>
@@ -106,6 +127,18 @@ final class KbStore private (
     * plan [[readWithMeta]] built for that layout. */
   private val views = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Seq[Long]), LogicalPlan]()
+
+  /** ivf_centroids version -> its (cid, cvec) rows in table order. Each
+    * write of that table ([[buildAnnIndex]], a compaction) is a new
+    * version, so a version's rows never change. */
+  private val centroids =
+    new java.util.concurrent.ConcurrentHashMap[
+      Long, Seq[(Long, Array[Double])]]()
+
+  /** docs layout (base, chain) -> its resident doc table, None when
+    * that layout's view is planned above [[residentDocsCap]]. */
+  private val docTables = new java.util.concurrent.ConcurrentHashMap[
+    (Long, Seq[Long]), Option[KbStore.DocTable]]()
 
   /** The one reader of committed segment directories: `dir` (a table's
     * base dir, or a delta's `del`/`add` side) is listed and its schema
@@ -151,12 +184,15 @@ final class KbStore private (
     import scala.jdk.CollectionConverters._
     val m = metaCache
     val live = m.table_versions.keySet.map { name =>
-      (name, m.table_bases.getOrElse(name, m.table_versions(name)),
-        m.table_deltas.getOrElse(name, Seq.empty[Long]))
+      val (base, chain) = layoutOf(m, name)
+      (name, base, chain)
     }
     views.keySet.retainAll(live.asJava)
     segments.keySet.retainAll(
       live.flatMap { case (n, b, c) => layoutDirs(n, b, c) }.asJava)
+    val liveCents = m.table_versions.get(KbStore.IvfCentroidsTable)
+    centroids.keySet.removeIf(v => !liveCents.contains(v))
+    docTables.keySet.retainAll(java.util.Set.of(layoutOf(m, "docs")))
   }
 
   /** Delete `p` recursively and evict every memo entry under it. */
@@ -202,6 +238,59 @@ final class KbStore private (
     cachedIdx.foreach(_.unpersist())
     cachedIdx = None
     pruneResolved()
+  }
+
+  /** The live docs layout's resident doc table (see the class doc):
+    * built by one `docs.collect()` on the first hydrating read, None
+    * while the docs view is planned above [[residentDocsCap]]. The size
+    * comes from the resolved scans' file sizes, so deciding runs no job.
+    */
+  private def docTable(): Option[KbStore.DocTable] = synchronized {
+    val m = metaCache
+    val key = layoutOf(m, "docs")
+    Option(docTables.get(key)).getOrElse {
+      val view = readWithMeta(m, "docs").as[Doc]
+      val t =
+        if (view.queryExecution.optimizedPlan.stats.sizeInBytes <=
+            residentDocsCap)
+          Some(new KbStore.DocTable(view.collect()))
+        else None
+      docTables.put(key, t)
+      t
+    }
+  }
+
+  /** Doc rows of `ids` keyed by id, from the resident doc table when it
+    * is resident, else by a filtered Spark read; ids without a doc are
+    * absent. Read paths only: a write's guard reads stay Spark reads. */
+  private def docsById(ids: Seq[Long]): Map[Long, Doc] = docTable() match {
+    case Some(t) => ids.flatMap(id => t.byId.get(id).map(id -> _)).toMap
+    case None => docs.filter($"id".isin(ids: _*)).collect()
+      .map(d => d.id -> d).toMap
+  }
+
+  /** [[docsById]] keyed by `emb_id`. */
+  private def docsByEmbId(ids: Seq[Long]): Map[Long, Doc] = docTable() match {
+    case Some(t) => ids.flatMap(id => t.byEmbId.get(id).map(id -> _)).toMap
+    case None => docs.filter($"emb_id".isin(ids: _*)).collect()
+      .map(d => d.emb_id.get -> d).toMap
+  }
+
+  /** Row counts of the resident doc tables held, for specs. */
+  private[graft] def residentDocsForSpec: Seq[Int] = {
+    import scala.jdk.CollectionConverters._
+    docTables.values.asScala.flatten.map(_.byId.size).toSeq
+  }
+
+  /** The current ANN index's centroids as (cid, cvec), collected once
+    * per ivf_centroids version. */
+  private def ivfCentroids(): Seq[(Long, Array[Double])] = {
+    val v = metaCache.table_versions(KbStore.IvfCentroidsTable)
+    Option(centroids.get(v)).getOrElse {
+      val rows = read(KbStore.IvfCentroidsTable).collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      Option(centroids.putIfAbsent(v, rows)).getOrElse(rows)
+    }
   }
 
   /** The batch-built retrieval index (reference `_EmbeddingsMatrix`,
@@ -577,9 +666,10 @@ final class KbStore private (
       readStatsCard()
     else computeStatsCard()
 
-  /** P1 fetch_doc (`kb.py:416-473`); NoSuchElementException on miss. */
+  /** P1 fetch_doc (`kb.py:416-473`), from the resident doc table;
+    * NoSuchElementException on miss. */
   def fetchDoc(id: Long): Doc =
-    docs.filter($"id" === id).collect().headOption.getOrElse(
+    docsById(Seq(id)).getOrElse(id,
       throw new NoSuchElementException(s"doc $id"))
 
   /** P1 with embedding joined in (include_embedding=True). */
@@ -601,7 +691,7 @@ final class KbStore private (
 
   /** P4 inverse embedding lookup (`kb.py:511-524`). */
   def fetchDocWithEmbId(embId: Long): Doc =
-    docs.filter($"emb_id" === embId).collect().headOption.getOrElse(
+    docsByEmbId(Seq(embId)).getOrElse(embId,
       throw new NoSuchElementException(s"emb $embId"))
 
   // ------------------------------------------------------------------
@@ -1143,7 +1233,8 @@ final class KbStore private (
   /** The flagship read (`kb.py:1608-1640`): embed the query, score all
     * cached vectors with a dot product (cosine via the unit-norm
     * invariant), top-n with the reference's tie order (larger id first,
-    * `util.py:190-203`), join docs back.
+    * `util.py:190-203`), then hydrate the hits from the resident doc
+    * table — warm, no Spark job runs (see the class doc).
     */
   def retrieve(query: String, n: Int,
       provider: EmbeddingProvider): Seq[Retrieval] = {
@@ -1154,9 +1245,7 @@ final class KbStore private (
       case Some(idx) =>
         val hits = idx.topK(qv, n) // (emb_id, score), reference tie order
         if (hits.isEmpty) return Seq.empty
-        val embIds = hits.map(_._1)
-        val docByEmb = docs.filter($"emb_id".isin(embIds: _*))
-          .collect().map(d => d.emb_id.get -> d).toMap
+        val docByEmb = docsByEmbId(hits.map(_._1))
         hits.map { case (embId, score) =>
           Retrieval(score, docByEmb(embId))
         }
@@ -1190,8 +1279,7 @@ final class KbStore private (
     val rows = pairs.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val ids = rows.flatMap(r => Seq(r._1, r._2)).distinct
-    val docByEmb = docs.filter($"emb_id".isin(ids: _*)).collect()
-      .map(d => d.emb_id.get -> d).toMap
+    val docByEmb = docsByEmbId(ids.toSeq)
     rows.toSeq.map { case (i1, i2, s) => (s, docByEmb(i1), docByEmb(i2)) }
   }
 
@@ -1411,11 +1499,9 @@ final class KbStore private (
             fullDiffWithReadds(emb, old.select($"vec_id"), "vec_id",
               "embeddings")
         }
-      val packedCents = read(KbStore.IvfCentroidsTable).collect()
-        .map { r =>
-          (r.getLong(0),
-            FloatVecDot.pack(r.getSeq[Double](1).map(_.toFloat).toArray))
-        }.toSeq.toDF("cid", "cvec")
+      val packedCents = ivfCentroids()
+        .map { case (cid, cv) => (cid, FloatVecDot.pack(cv.map(_.toFloat))) }
+        .toDF("cid", "cvec")
       val added = graft.ops.SimilaritySearch.ivfAssignPacked(
         newEmb.select($"vec_id".as("id"), floatVecPack($"embedding").as("vec")),
         packedCents)
@@ -1532,8 +1618,7 @@ final class KbStore private (
       .limit(n)
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
+    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
     hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
   }
 
@@ -1545,18 +1630,17 @@ final class KbStore private (
     * same here.
     */
   private def ivfProbeCids(qv: Array[Float], nProbe: Int): Seq[Long] =
-    read(KbStore.IvfCentroidsTable).collect()
-      .map { r =>
-        val cv = r.getSeq[Double](1).toArray
+    ivfCentroids()
+      .map { case (cid, cv) =>
         var acc = 0.0
         var i = 0
         while (i < cv.length && i < qv.length) {
           acc += cv(i) * qv(i).toDouble; i += 1
         }
-        (r.getLong(0), acc + 0.0)
+        (cid, acc + 0.0)
       }
       .sortBy { case (cid, s) => (-s, cid) }
-      .take(nProbe).map(_._1).toSeq
+      .take(nProbe).map(_._1)
 
   /** [[annRetrieve]] under a document predicate — filtered vector
     * search through the persisted IVF family (the reference's callers
@@ -1602,8 +1686,7 @@ final class KbStore private (
       .limit(n)
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
+    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
     hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
   }
 
@@ -1753,8 +1836,7 @@ final class KbStore private (
       .limit(n)
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
+    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
     hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
   }
 
@@ -1952,8 +2034,7 @@ final class KbStore private (
         n, nProbe, math.max(n, rerank))
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val docByEmb = docs.filter($"emb_id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.emb_id.get -> d).toMap
+    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
     hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
   }
 
@@ -2270,8 +2351,7 @@ final class KbStore private (
         terms, n)
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val byId = docs.filter($"id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.id -> d).toMap
+    val byId = docsById(hits.map(_._1).toSeq)
     hits.toSeq.map { case (id, score) => (score, byId(id)) }
   }
 
@@ -2309,8 +2389,7 @@ final class KbStore private (
         weights.toSeq.toDF("term", "w"), n)
       .as[(Long, Double)].collect()
     if (hits.isEmpty) return Seq.empty
-    val byId = docs.filter($"id".isin(hits.map(_._1): _*))
-      .collect().map(d => d.id -> d).toMap
+    val byId = docsById(hits.map(_._1).toSeq)
     hits.toSeq.map { case (id, score) => (score, byId(id)) }
   }
 
@@ -2589,15 +2668,15 @@ final class KbStore private (
     require(hasAnnIndex,
       "no ANN index: call buildAnnIndex() before semantic screening")
     import graft.functions.FloatVecPack.floatVecPack
-    val centRows = read(KbStore.IvfCentroidsTable).collect()
+    val centRows = ivfCentroids()
     val nlist = centRows.length
     val arch = embeddings.toDF()
       .select($"id".as("vec_id"), $"vec".as("embedding"))
     val archive =
       if (nProbe >= nlist) arch // full probe = exact (oracle anchor)
       else {
-        val cents = centRows.map(r => (r.getLong(0),
-          r.getSeq[Double](1).map(_.toFloat).toArray)).sortBy(_._1)
+        val cents = centRows.map { case (cid, cv) => (cid, cv.map(_.toFloat)) }
+          .sortBy(_._1).toArray
         val packedQ = batchVec.select(col("vec_id").as("id"),
           floatVecPack(col("embedding")).as("vec"))
         val probed = graft.ops.SimilaritySearch
@@ -3130,6 +3209,7 @@ final class KbStore private (
     // closing ends this writer's session — full reclamation is safe
     if (vacuumFirst) vacuum(retain = 0)
     invalidate()
+    docTables.clear()
   }
 }
 
@@ -3295,6 +3375,26 @@ object KbStore {
           val n = r.newInstance()
           (n, r.output.zip(n.output))
       })
+
+  /** Largest planned docs view (Parquet bytes) a store keeps resident
+    * as its doc table. A docs write makes the next read collect the
+    * whole table; measured on a 4-core box, a loop of `updateDocMeta`
+    * then one `fetchDoc` costs about what it does with the filtered read
+    * at 86 KB, +5% at 257 KB and +17% at 0.8 MB, and every further read
+    * per write saves a whole filtered read (~0.8 s there). The table
+    * takes ~13× its Parquet bytes of heap. The storebench stores plan at
+    * 412 KB (serve) and at most ~730 KB (ingest), below the cap; no
+    * workload reaches it, so the cut-off itself is not benchmarked.
+    */
+  val ResidentDocsMaxBytes: Long = 1L << 20
+
+  /** Every doc row of one docs layout, keyed by id and by emb_id: the
+    * resident doc table read paths hydrate hits from. */
+  private[core] final class DocTable(rows: Array[Doc]) {
+    val byId: Map[Long, Doc] = rows.map(d => d.id -> d).toMap
+    val byEmbId: Map[Long, Doc] =
+      rows.flatMap(d => d.emb_id.map(_ -> d)).toMap
+  }
 
   /** Above this many vectors `topPairwiseScores` switches from the exact
     * blocked grid (flops grow as n²) to sketch candidates + exact re-rank.

@@ -23,7 +23,7 @@ import graft.core.KbStore
 class DedupIndexSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-dedup").resolve("kb").toString
+    tempDir("graft-dedup").resolve("kb").toString
 
   private def provider = new graft.core.Embeddings.EmbeddingProvider {
     def name = "hashvec"; def dim = 8

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.core.Kb
 import graft.core.Embeddings.KeywordProvider
 
@@ -11,7 +9,7 @@ import graft.core.Embeddings.KeywordProvider
 class KbFacadeSpec extends SparkSpec {
 
   test("hybridRetrieve: RRF of the lexical and vector tiers, golden fusion") {
-    val path = Files.createTempDirectory("graft-hybrid").resolve("kb").toString
+    val path = tempDir("graft-hybrid").resolve("kb").toString
     val kb = Kb(spark, path, KeywordProvider.fixture)
     // lexical signal says "second"; vector signal for the query
     // "... second ..." also ranks the second doc first — but the two
@@ -43,7 +41,7 @@ class KbFacadeSpec extends SparkSpec {
   }
 
   test("full KB API surface end-to-end") {
-    val path = Files.createTempDirectory("graft-facade").resolve("kb").toString
+    val path = tempDir("graft-facade").resolve("kb").toString
     val kb = Kb(spark, path, KeywordProvider.fixture)
 
     // bulk_add_docs
@@ -106,7 +104,7 @@ class KbFacadeSpec extends SparkSpec {
   }
 
   test("force_fresh_db truncates (tests/test_kb.py:1723-1735)") {
-    val path = Files.createTempDirectory("graft-fresh").resolve("kb").toString
+    val path = tempDir("graft-fresh").resolve("kb").toString
     val kb = Kb(spark, path, KeywordProvider.fixture)
     kb.bulkAddDocs(_.add("first doc"))
     kb.close()

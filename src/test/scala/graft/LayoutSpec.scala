@@ -26,8 +26,7 @@ class LayoutSpec extends SparkSpec {
     val rows = (0 until 2000).map(_ =>
       (rnd.nextInt(256).toLong, rnd.nextInt(256).toLong))
     val df = rows.toDF("x", "y")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-zorder").toString + "/t"
+    val dir = tempDir("graft-zorder").toString + "/t"
     Layout.writeZordered(df, dir,
       Layout.zValue(8, col("x"), col("y")), numFiles = 8)
     val back = spark.read.parquet(dir)
@@ -52,8 +51,7 @@ class LayoutSpec extends SparkSpec {
     val rows = (0 until 4000).map(i =>
       (i.toLong, rnd.nextInt(256).toLong, rnd.nextInt(256).toLong))
     val df = rows.toDF("id", "x", "y")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-skip").toString + "/t"
+    val dir = tempDir("graft-skip").toString + "/t"
     Layout.writeZordered(df, dir,
       Layout.zValue(8, col("x"), col("y")), numFiles = 16)
     val stats = Layout.parquetFileStats(spark, dir, Seq("x", "y")).cache()
@@ -90,8 +88,7 @@ class LayoutSpec extends SparkSpec {
        "ratio, aggregate parity (the svs_skip_scan composition)") {
     // the exact composition Bench's skipping point runs, at 1/5 scale —
     // pins the block so the bench can't silently break
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-benchz").toString + "/t"
+    val dir = tempDir("graft-benchz").toString + "/t"
     val zdf = spark.range(200000L).select(col("id"),
       pmod(hash(col("id")), lit(1024)).cast("long").as("x"),
       pmod(hash(col("id") + 7L), lit(1024)).cast("long").as("y"),

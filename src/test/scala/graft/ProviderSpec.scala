@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.core.{Embeddings, Kb, KbStore}
 import graft.core.Embeddings._
 
@@ -13,7 +11,7 @@ import graft.core.Embeddings._
 class ProviderSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-prov").resolve("kb").toString
+    tempDir("graft-prov").resolve("kb").toString
 
   /** Records requests; answers with a canned per-provider response. */
   private final class FakeTransport(kind: String) extends HttpTransport {

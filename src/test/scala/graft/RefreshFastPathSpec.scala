@@ -20,7 +20,7 @@ import graft.core.KbStore
 class RefreshFastPathSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-rfp").resolve("kb").toString
+    tempDir("graft-rfp").resolve("kb").toString
 
   /** Route-engagement probe (r13 verdict item 3): a refresh's parity
     * with the fallback is vacuous if the fast path silently stopped

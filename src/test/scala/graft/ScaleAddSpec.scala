@@ -11,7 +11,7 @@ class ScaleAddSpec extends SparkSpec {
 
   test("distributed bulk add: 10k docs, dense ids, embed backfill, retrieve") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft-scale").resolve("kb").toString
+    val path = tempDir("graft-scale").resolve("kb").toString
     val kb = KbStore.create(spark, path, Map("provider" -> "mock"))
     val p = MockProvider(8)
 
@@ -45,7 +45,7 @@ class ScaleAddSpec extends SparkSpec {
   }
 
   test("source cache: sha256-keyed fetch + gz freshness (S2/S3)") {
-    val dir = Files.createTempDirectory("graft-src")
+    val dir = tempDir("graft-src")
     val cache = dir.resolve("cache").toString
     val f = dir.resolve("data.txt")
     Files.writeString(f, "hello graft")
@@ -72,7 +72,7 @@ class ScaleAddSpec extends SparkSpec {
   }
 
   test("source cache: injected transport, single-flight, local-only refusal") {
-    val cache = Files.createTempDirectory("graft-cache2").toString
+    val cache = tempDir("graft-cache2").toString
 
     // the local-only fetcher refuses remote schemes when injected
     intercept[IllegalArgumentException] {
@@ -125,7 +125,7 @@ class ScaleAddSpec extends SparkSpec {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val cache = Files.createTempDirectory("graft-cache3").toString
+      val cache = tempDir("graft-cache3").toString
 
       // fetch + inflate in one step — the reference's open-from-URL path
       val out = SourceCache.resolve(s"$base/corpus.txt.gz", cache)

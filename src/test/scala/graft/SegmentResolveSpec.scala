@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.graft.SpecProbes
 
 import graft.core.KbStore
@@ -12,7 +10,7 @@ import graft.core.KbStore
 class SegmentResolveSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-seg").resolve("kb").toString
+    tempDir("graft-seg").resolve("kb").toString
 
   private def provider = new graft.core.Embeddings.EmbeddingProvider {
     def name = "hashvec"; def dim = 8
@@ -26,22 +24,6 @@ class SegmentResolveSpec extends SparkSpec {
 
   private def texts(n: Int, offset: Int = 0): Seq[String] =
     (0 until n).map(i => s"doc ${i + offset} body w${(i + offset) % 7}")
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    SpecProbes.drainListeners(spark)
-    sc.addSparkListener(l)
-    try { body; SpecProbes.drainListeners(spark) }
-    finally sc.removeSparkListener(l)
-    n.get()
-  }
 
   /** Top-1 of a self-query is the doc itself. */
   private def assertFinds(kb: KbStore, text: String): Unit = {
@@ -65,15 +47,30 @@ class SegmentResolveSpec extends SparkSpec {
     assert(views <= m.table_versions.size)
   }
 
-  test("a warm retrieve on an unchanged store runs one Spark job") {
+  private def deltaChainStore(): KbStore = {
     import spark.implicits._
     val kb = KbStore.create(spark, freshPath(), provider.params,
       forceFresh = true)
     kb.bulkAddDocsDistributed(texts(30).toDF("text"), provider)
     kb.bulkAddDocs(provider)(_.add("a delta-chain doc"))
+    kb
+  }
+
+  // with the resident doc table off, the hydration is the one job left
+  test("a warm retrieve on an unchanged store runs one Spark job") {
+    val kb = deltaChainStore()
+    kb.residentDocsCap = -1
     assertFinds(kb, "doc 3 body w3")
     val jobs = jobsDuring(assertFinds(kb, "doc 4 body w4"))
     assert(jobs == 1, s"warm retrieve ran $jobs jobs")
+    kb.close()
+  }
+
+  test("a warm retrieve hydrating from the resident doc table runs no job") {
+    val kb = deltaChainStore()
+    assertFinds(kb, "doc 3 body w3")
+    val jobs = jobsDuring(assertFinds(kb, "doc 4 body w4"))
+    assert(jobs == 0, s"warm retrieve ran $jobs jobs")
     kb.close()
   }
 

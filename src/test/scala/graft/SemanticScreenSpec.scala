@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.core.KbStore
@@ -28,7 +26,7 @@ import graft.core.KbStore
 class SemanticScreenSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-semscreen").resolve("kb").toString
+    tempDir("graft-semscreen").resolve("kb").toString
 
   /** Bag-of-words provider: the vector depends on the SORTED token
     * set, so a word-order paraphrase embeds identically (cos = 1)

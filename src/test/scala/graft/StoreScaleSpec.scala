@@ -15,7 +15,7 @@ import graft.core.KbStore
 class StoreScaleSpec extends SparkSpec {
 
   private def freshPath(): String =
-    Files.createTempDirectory("graft-kb").resolve("kb").toString
+    tempDir("graft-kb").resolve("kb").toString
 
   test("delta commits: a 1-doc mutation writes O(batch) bytes, never the table") {
     import graft.core.Embeddings.EmbeddingProvider

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -337,7 +335,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest: embed stage through a parquet sink") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val out = Files.createTempDirectory("graft-stream").toString
+    val out = tempDir("graft-stream").toString
     val stream = MemoryStream[(Long, String)]
     stream.addData(Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma")))
     val q = StreamingIngest.startIngest(spark, stream.toDF(),
@@ -357,7 +355,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest keeps the persistent ANN index live across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-skb2")
+    val dir = tempDir("graft-skb2")
     val kb = graft.core.KbStore.create(spark,
       dir.resolve("kb").toString, Map("provider" -> "mock"))
     val p = MockProvider(4)
@@ -437,7 +435,7 @@ class StreamingSpec extends SparkSpec {
       "near-dups before the provider is called") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-skb3")
+    val dir = tempDir("graft-skb3")
     val kb = graft.core.KbStore.create(spark,
       dir.resolve("kb").toString, Map("provider" -> "mock"))
     val p = MockProvider(4)
@@ -538,7 +536,7 @@ class StreamingSpec extends SparkSpec {
       "lexical screen") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-skb4")
+    val dir = tempDir("graft-skb4")
     val kb = graft.core.KbStore.create(spark,
       dir.resolve("kb").toString, Map("provider" -> "mock"))
     // bag-of-words provider: sorted-token-bag-seeded unit vectors, so
@@ -604,7 +602,7 @@ class StreamingSpec extends SparkSpec {
       "batches before the screens and the provider") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("graft-skb5")
+    val dir = tempDir("graft-skb5")
     val kb = graft.core.KbStore.create(spark,
       dir.resolve("kb").toString, Map("provider" -> "mock"))
     val p = new SemanticScreenSpec.BagProvider
@@ -664,7 +662,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest into the KbStore via foreachBatch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val path = Files.createTempDirectory("graft-skb").resolve("kb").toString
+    val path = tempDir("graft-skb").resolve("kb").toString
     val kb = graft.core.KbStore.create(spark, path, Map("provider" -> "mock"))
     val p = MockProvider(4)
 
