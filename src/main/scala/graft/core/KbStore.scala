@@ -39,19 +39,24 @@ import graft.functions.VectorFunctions._
   * what the live manifest references, and every directory this store
   * deletes is evicted with it.
   *
-  * Read-side hydration goes through one resident doc table: the first
-  * read that needs doc rows (a retrieve's hits, `fetchDoc`, …) collects
-  * the whole `docs` view once and keys it by `id` and by `emb_id`, so a
-  * warm retrieve runs no Spark job at all. Like the folded views it is
-  * kept per docs layout (base, chain): a write to another table keeps
-  * it, a docs write publishes a new layout whose first read collects
-  * again, and `invalidate()` prunes the tables of dead layouts; `close`
-  * drops it. Writes never build it: their guard reads stay Spark reads.
-  * The table is resident only while the docs view's planned (Parquet)
-  * size, known from the resolved files without a job, is at most
-  * [[KbStore.ResidentDocsMaxBytes]]; above it each read runs a filtered
-  * Spark read instead. The IVF centroids are likewise collected once
-  * per `ivf_centroids` version.
+  * Reads are served from resident tables, held in one memo keyed like
+  * the folded views, per (table, base, chain): the first read that
+  * needs a table collects its whole view once and indexes it on the
+  * driver. Four tables are held this way: `docs` (keyed by `id` and by
+  * `emb_id`; every read path hydrates its hits from it), `ivf_assign`
+  * (the inverted lists [[annRetrieve]] probes), and `text_postings`
+  * with `text_doclens` (what [[bm25Retrieve]] scores), so warm
+  * `retrieve`, `fetchDoc`, `annRetrieve` and `bm25Retrieve` calls run
+  * no Spark job at all. A write to another table keeps a table; a
+  * write to it publishes a new layout whose first read collects again,
+  * and `invalidate()` prunes the entries of dead layouts; `close`
+  * drops them all. Writes never build a table: their guard reads stay
+  * Spark reads. A table is resident only while its view's planned
+  * (Parquet) size, known from the resolved files without a job, is at
+  * most [[KbStore.ResidentMaxBytes]]; above it each read runs its
+  * Spark route instead. The IVF centroids use the same memo without
+  * the cap, since every ANN route and [[refreshAnnIndex]] need them on
+  * the driver.
   *
   * Single-writer semantics, like the reference's one-connection
   * discipline (`kb.py:116-137`).
@@ -70,9 +75,9 @@ final class KbStore private (
   private[graft] var prePublishHook: () => Unit = () => ()
   private var cachedEmb: Option[Dataset[Emb]] = None
   private var cachedIdx: Option[graft.ops.VectorIndex] = None
-  /** Largest planned docs view (bytes) kept resident; test seam: specs
-    * set -1 to force the filtered Spark read. */
-  private[graft] var residentDocsCap: Long = KbStore.ResidentDocsMaxBytes
+  /** Largest planned view (bytes) kept resident; test seam: specs set
+    * -1 to force every read's Spark route. */
+  private[graft] var residentCap: Long = KbStore.ResidentMaxBytes
 
   def meta: KbMeta = metaCache
 
@@ -128,17 +133,11 @@ final class KbStore private (
   private val views = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Seq[Long]), LogicalPlan]()
 
-  /** ivf_centroids version -> its (cid, cvec) rows in table order. Each
-    * write of that table ([[buildAnnIndex]], a compaction) is a new
-    * version, so a version's rows never change. */
-  private val centroids =
-    new java.util.concurrent.ConcurrentHashMap[
-      Long, Seq[(Long, Array[Double])]]()
-
-  /** docs layout (base, chain) -> its resident doc table, None when
-    * that layout's view is planned above [[residentDocsCap]]. */
-  private val docTables = new java.util.concurrent.ConcurrentHashMap[
-    (Long, Seq[Long]), Option[KbStore.DocTable]]()
+  /** (table, base version, delta chain) -> that layout's resident table
+    * (see [[resident]]), None when its view is planned above
+    * [[residentCap]]. */
+  private val residents = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Seq[Long]), Option[KbStore.Resident]]()
 
   /** The one reader of committed segment directories: `dir` (a table's
     * base dir, or a delta's `del`/`add` side) is listed and its schema
@@ -188,11 +187,9 @@ final class KbStore private (
       (name, base, chain)
     }
     views.keySet.retainAll(live.asJava)
+    residents.keySet.retainAll(live.asJava)
     segments.keySet.retainAll(
       live.flatMap { case (n, b, c) => layoutDirs(n, b, c) }.asJava)
-    val liveCents = m.table_versions.get(KbStore.IvfCentroidsTable)
-    centroids.keySet.removeIf(v => !liveCents.contains(v))
-    docTables.keySet.retainAll(java.util.Set.of(layoutOf(m, "docs")))
   }
 
   /** Delete `p` recursively and evict every memo entry under it. */
@@ -240,25 +237,34 @@ final class KbStore private (
     pruneResolved()
   }
 
-  /** The live docs layout's resident doc table (see the class doc):
-    * built by one `docs.collect()` on the first hydrating read, None
-    * while the docs view is planned above [[residentDocsCap]]. The size
-    * comes from the resolved scans' file sizes, so deciding runs no job.
-    */
-  private def docTable(): Option[KbStore.DocTable] = synchronized {
-    val m = metaCache
-    val key = layoutOf(m, "docs")
-    Option(docTables.get(key)).getOrElse {
-      val view = readWithMeta(m, "docs").as[Doc]
-      val t =
-        if (view.queryExecution.optimizedPlan.stats.sizeInBytes <=
-            residentDocsCap)
-          Some(new KbStore.DocTable(view.collect()))
-        else None
-      docTables.put(key, t)
-      t
+  /** The live layout of table `name`, resident (see the class doc):
+    * `rows` collects the view once, on the first read that needs it,
+    * and `index` shapes the collected rows for lookups. None while the
+    * view is planned above [[residentCap]] (unless `capped` is false);
+    * the size comes from the resolved scans' file sizes, so deciding
+    * runs no job. Read paths only. */
+  private def resident[R, T <: AnyRef](name: String, capped: Boolean = true)(
+      rows: DataFrame => Array[R])(index: Array[R] => T): Option[T] =
+    synchronized {
+      val m = metaCache
+      val (base, chain) = layoutOf(m, name)
+      val key = (name, base, chain)
+      Option(residents.get(key)).getOrElse {
+        val view = readWithMeta(m, name)
+        val t =
+          if (!capped ||
+              view.queryExecution.optimizedPlan.stats.sizeInBytes <= residentCap) {
+            val collected = rows(view)
+            Some(KbStore.Resident(index(collected), collected.length))
+          } else None
+        residents.put(key, t)
+        t
+      }.map(_.value.asInstanceOf[T]) // one table name, one table type
     }
-  }
+
+  /** The live docs layout's doc table, when resident. */
+  private def docTable(): Option[KbStore.DocTable] =
+    resident("docs")(_.as[Doc].collect())(new KbStore.DocTable(_))
 
   /** Doc rows of `ids` keyed by id, from the resident doc table when it
     * is resident, else by a filtered Spark read; ids without a doc are
@@ -276,22 +282,39 @@ final class KbStore private (
       .map(d => d.emb_id.get -> d).toMap
   }
 
-  /** Row counts of the resident doc tables held, for specs. */
-  private[graft] def residentDocsForSpec: Seq[Int] = {
+  /** Row counts of the resident tables of `name` held, for specs. */
+  private[graft] def residentRowsForSpec(name: String): Seq[Int] = {
     import scala.jdk.CollectionConverters._
-    docTables.values.asScala.flatten.map(_.byId.size).toSeq
+    residents.asScala.toSeq.collect {
+      case ((`name`, _, _), Some(r)) => r.rows
+    }
   }
 
   /** The current ANN index's centroids as (cid, cvec), collected once
-    * per ivf_centroids version. */
-  private def ivfCentroids(): Seq[(Long, Array[Double])] = {
-    val v = metaCache.table_versions(KbStore.IvfCentroidsTable)
-    Option(centroids.get(v)).getOrElse {
-      val rows = read(KbStore.IvfCentroidsTable).collect().toSeq
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      Option(centroids.putIfAbsent(v, rows)).getOrElse(rows)
-    }
-  }
+    * per ivf_centroids layout and never capped. */
+  private def ivfCentroids(): Seq[(Long, Array[Double])] =
+    resident(KbStore.IvfCentroidsTable, capped = false)(
+      _.select($"cid", $"cvec").as[(Long, Array[Double])].collect())(
+      _.toSeq).get
+
+  /** The current ANN index's inverted lists, when resident. */
+  private def ivfLists(): Option[KbStore.IvfLists] =
+    resident(KbStore.IvfAssignTable)(
+      _.select($"cid", $"vec_id").as[(Long, Long)].collect())(
+      new KbStore.IvfLists(_))
+
+  /** The current text index's postings and doc lengths, when both are
+    * resident. */
+  private def textIndex(): Option[(graft.ops.TextRetrieval.Postings,
+      graft.ops.TextRetrieval.DocLengths)] =
+    for {
+      p <- resident(KbStore.TextPostingsTable)(
+        _.select($"term", $"doc_id", $"tf").as[(String, Long, Double)]
+          .collect())(new graft.ops.TextRetrieval.Postings(_))
+      l <- resident(KbStore.TextDocLensTable)(
+        _.select($"doc_id", $"dl").as[(Long, Double)].collect())(
+        new graft.ops.TextRetrieval.DocLengths(_))
+    } yield (p, l)
 
   /** The batch-built retrieval index (reference `_EmbeddingsMatrix`,
     * `kb.py:856-893`): lazily built on first retrieve, invalidated by
@@ -1359,8 +1382,12 @@ final class KbStore private (
   /** Which route the most recent [[changedSince]] call resolved to:
     * Some("segment") = delta-chain fast path proved exact,
     * Some("full") = caller fell back to the full keyed diff,
-    * None = no refresh has derived changed ids yet. Test probe. */
-  private[graft] var lastRefreshRoute: Option[String] = None
+    * None = no refresh has derived changed ids yet. Test probe.
+    * Single writer: only refreshes write it and the store runs one
+    * refresh at a time; `@volatile` makes a value written on an ingest
+    * thread visible to the reading test thread. Refreshes of two
+    * families racing on two threads would leave whichever wrote last. */
+  @volatile private[graft] var lastRefreshRoute: Option[String] = None
 
   private def changedSinceImpl(table: String, since: Long)
       : Option[(DataFrame, DataFrame)] = {
@@ -1590,6 +1617,17 @@ final class KbStore private (
     * [[graft.ops.SimilaritySearch.ivfTopK]] (which stays as the
     * oracle-parity twin; both accumulate double(f32)·double(f32)
     * sequentially, so results are bit-identical — a spec asserts it).
+    *
+    * Two routes, one answer. While the assignment table is resident
+    * (see the class doc) and [[index]] holds its blocks on the driver,
+    * the probed lists' members come from the resident assignment and
+    * [[graft.ops.VectorIndex.scoreLocal]] scores them with the same
+    * kernel lane scheme as `FloatVecDot`, skipping ids the index does
+    * not hold (the inner join's rule): a warm call runs no Spark job.
+    * Otherwise the assignment ⨝ embeddings join below runs. On both,
+    * a score is the f64 dot rounded like Spark's `round(·, 6)` (HALF_UP
+    * on the double's decimal form), NaN scores drop, and hits order by
+    * (score desc, vec_id asc).
     */
   def annRetrieve(query: String, n: Int, provider: EmbeddingProvider,
       nProbe: Int = 8): Seq[Retrieval] = {
@@ -1606,17 +1644,24 @@ final class KbStore private (
     val qv = Embeddings.checkMagnitude(provider.embed(Seq(query))).head
     val probed = ivfProbeCids(qv, nProbe)
     if (probed.isEmpty) return Seq.empty
-    val packed = embeddings.toDF()
-      .select($"id".as("vec_id"), floatVecPack($"vec").as("pv"))
-    val hits = read(KbStore.IvfAssignTable)
-      .where($"cid".isin(probed: _*))
-      .join(packed, "vec_id")
-      .select($"vec_id",
-        round(floatVecDot($"pv", lit(FloatVecDot.pack(qv))), 6).as("score"))
-      .where(!isnan($"score")) // NaN would sort above every real score
-      .orderBy(desc("score"), $"vec_id")
-      .limit(n)
-      .as[(Long, Double)].collect()
+    val localIdx = ivfLists().flatMap(l => index().filter(_.isLocal).map(l -> _))
+    val hits = localIdx match {
+      case Some((lists, idx)) =>
+        graft.ops.SimilaritySearch.topKRound6(
+          idx.scoreLocal(lists.members(probed), qv), n)
+      case None =>
+        val packed = embeddings.toDF()
+          .select($"id".as("vec_id"), floatVecPack($"vec").as("pv"))
+        read(KbStore.IvfAssignTable)
+          .where($"cid".isin(probed: _*))
+          .join(packed, "vec_id")
+          .select($"vec_id",
+            round(floatVecDot($"pv", lit(FloatVecDot.pack(qv))), 6).as("score"))
+          .where(!isnan($"score")) // NaN would sort above every real score
+          .orderBy(desc("score"), $"vec_id")
+          .limit(n)
+          .as[(Long, Double)].collect()
+    }
     if (hits.isEmpty) return Seq.empty
     val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
     hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
@@ -2324,9 +2369,18 @@ final class KbStore private (
 
   /** BM25 retrieval through the persistent postings: scores only the
     * query terms' posting rows (document frequencies and corpus stats
-    * re-derive from the stored tables — a term-pruned scan and one tiny
-    * aggregate), then joins the doc rows back. Tokenization of the
-    * query matches the index build's.
+    * re-derive from the stored tables), then hydrates the doc rows.
+    * Tokenization of the query matches the index build's.
+    *
+    * Two routes. While the postings and doc lengths are resident (see
+    * the class doc), [[graft.ops.TextRetrieval.Postings.bm25TopK]]
+    * scores on the driver and a warm call runs no Spark job; otherwise
+    * [[graft.ops.TextRetrieval.bm25TopKIndexed]] runs over a
+    * term-pruned scan. Both round scores HALF_UP to 6 dp, like Spark's
+    * `round(·, 6)`, and order hits by (score desc, doc_id asc). They
+    * agree exactly for queries of up to two terms; from three terms on,
+    * the order in which a doc's per-term contributions are summed may
+    * differ, by an ulp before rounding (see `bm25TopK`).
     */
   def bm25Retrieve(query: String, n: Int): Seq[(Double, Doc)] = {
     require(hasTextIndex, textIndexState match {
@@ -2340,16 +2394,19 @@ final class KbStore private (
     // (persisted in the manifest) — a mismatch silently misses postings
     val terms = graft.ops.TextRetrieval.tokenizeQuery(query, textIndexUnicode)
     if (terms.isEmpty) return Seq.empty
-    // bucket pruning BEFORE the term filter: the scan touches only the
-    // query terms' partitions (PartitionFilters in the plan), then the
-    // exact term filter applies within them
-    val qBuckets = terms.map(KbStore.termBucketOf).distinct
-    val postings = read(KbStore.TextPostingsTable)
-      .where($"bucket".isin(qBuckets: _*))
-    val hits = graft.ops.TextRetrieval.bm25TopKIndexed(
-        postings, read(KbStore.TextDocLensTable),
-        terms, n)
-      .as[(Long, Double)].collect()
+    val hits = textIndex() match {
+      case Some((postings, lens)) => postings.bm25TopK(lens, terms, n)
+      case None =>
+        // bucket pruning BEFORE the term filter: the scan touches only
+        // the query terms' partitions (PartitionFilters in the plan),
+        // then the exact term filter applies within them
+        val qBuckets = terms.map(KbStore.termBucketOf).distinct
+        val postings = read(KbStore.TextPostingsTable)
+          .where($"bucket".isin(qBuckets: _*))
+        graft.ops.TextRetrieval.bm25TopKIndexed(
+            postings, read(KbStore.TextDocLensTable), terms, n)
+          .as[(Long, Double)].collect().toSeq
+    }
     if (hits.isEmpty) return Seq.empty
     val byId = docsById(hits.map(_._1).toSeq)
     hits.toSeq.map { case (id, score) => (score, byId(id)) }
@@ -3209,7 +3266,7 @@ final class KbStore private (
     // closing ends this writer's session — full reclamation is safe
     if (vacuumFirst) vacuum(retain = 0)
     invalidate()
-    docTables.clear()
+    residents.clear()
   }
 }
 
@@ -3376,17 +3433,32 @@ object KbStore {
           (n, r.output.zip(n.output))
       })
 
-  /** Largest planned docs view (Parquet bytes) a store keeps resident
-    * as its doc table. A docs write makes the next read collect the
-    * whole table; measured on a 4-core box, a loop of `updateDocMeta`
-    * then one `fetchDoc` costs about what it does with the filtered read
-    * at 86 KB, +5% at 257 KB and +17% at 0.8 MB, and every further read
-    * per write saves a whole filtered read (~0.8 s there). The table
-    * takes ~13× its Parquet bytes of heap. The storebench stores plan at
-    * 412 KB (serve) and at most ~730 KB (ingest), below the cap; no
-    * workload reaches it, so the cut-off itself is not benchmarked.
+  /** Largest planned view (Parquet bytes) of `docs`, `ivf_assign`,
+    * `text_postings` or `text_doclens` a store keeps resident. A write
+    * to one of them makes the next read collect that whole table again.
+    * Measured on a 4-core box:
+    *   - docs: a loop of `updateDocMeta` then one `fetchDoc` costs about
+    *     what it does with the filtered read at 86 KB, +5% at 257 KB and
+    *     +17% at 0.8 MB, and every further read per write saves a whole
+    *     filtered read (~0.8 s there). The table takes ~13× its Parquet
+    *     bytes of heap.
+    *   - text and ANN indexes, with the cap lifted or forced off on one
+    *     store: a loop of a one-doc `bulkAddDocs`, the index refresh and
+    *     one read cost, per cycle (median), BM25 5.0 s resident vs 7.3 s
+    *     Spark at 6k docs (1.8 MB of postings) and 6.1 vs 9.4 s at 20k
+    *     (5.3 MB); ANN 2.8 vs 3.8 s at 6k and 4.2 vs 3.7 s at 20k. A
+    *     read with no write before it took 14–29 ms resident vs 4.9–5.4 s
+    *     on the Spark route (BM25) and 2–4 ms vs 1.8–2.0 s (ANN). The
+    *     resident postings take 2.8–3.6× their Parquet bytes of heap
+    *     (2.4 MB at 2k docs, 19 MB at 20k).
+    * The storebench stores plan below the cap (serve: docs 412 KB,
+    * postings 866 KB; ingest: docs at most ~730 KB); no workload
+    * reaches it, so the cut-off itself is not benchmarked.
     */
-  val ResidentDocsMaxBytes: Long = 1L << 20
+  val ResidentMaxBytes: Long = 1L << 20
+
+  /** One resident table: its driver-side form and its row count. */
+  private final case class Resident(value: AnyRef, rows: Int)
 
   /** Every doc row of one docs layout, keyed by id and by emb_id: the
     * resident doc table read paths hydrate hits from. */
@@ -3394,6 +3466,15 @@ object KbStore {
     val byId: Map[Long, Doc] = rows.map(d => d.id -> d).toMap
     val byEmbId: Map[Long, Doc] =
       rows.flatMap(d => d.emb_id.map(_ -> d)).toMap
+  }
+
+  /** One ivf_assign layout's inverted lists, from its (cid, vec_id)
+    * rows: each list's vec ids in table order. */
+  private[core] final class IvfLists(rows: Array[(Long, Long)]) {
+    private val byCid: Map[Long, Array[Long]] = rows.groupMap(_._1)(_._2)
+    /** Members of the lists `cids`, list by list. */
+    def members(cids: Seq[Long]): Array[Long] =
+      cids.flatMap(byCid.getOrElse(_, Array.emptyLongArray)).toArray
   }
 
   /** Above this many vectors `topPairwiseScores` switches from the exact

@@ -585,6 +585,28 @@ object SimilaritySearch {
     else java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** The top `k` of raw (id, score) hits as a plan computes them with
+    * `round(score, 6)`, `WHERE NOT isnan(score)`, `ORDER BY score DESC,
+    * id` and `LIMIT k`. Rounding moves a score by about 5e-7 at most
+    * and keeps the order of scores, so a hit more than 1e-6 below the
+    * k-th raw score cannot reach the top k; only hits above a 2e-6
+    * floor (margin for the subtraction) are rounded and sorted. Rounded
+    * scores are never -0.0, so with NaN gone the comparison below
+    * orders exactly as Spark's does. */
+  private[graft] def topKRound6(raw: Array[(Long, Double)],
+      k: Int): Array[(Long, Double)] = {
+    val scores = raw.map(_._2).filterNot(_.isNaN)
+    if (scores.isEmpty || k <= 0) return Array.empty
+    java.util.Arrays.sort(scores)
+    val floor = scores(math.max(0, scores.length - k)) - 2e-6
+    raw.collect { case (id, s) if s >= floor => (id, round6(s)) }
+      .sorted((a: (Long, Double), b: (Long, Double)) => {
+        val c = java.lang.Double.compare(b._2, a._2)
+        if (c != 0) c else java.lang.Long.compare(a._1, b._1)
+      })
+      .take(k)
+  }
+
   /** f32 dot of a packed blob against a pre-decoded float array —
     * value-identical to [[graft.functions.FloatVecDot.dot]] (same f32
     * products, same lane scheme and accumulation order; see

@@ -206,6 +206,72 @@ object TextRetrieval {
       .limit(k)
   }
 
+  /** A postings table held on the driver, from its (term, doc_id, tf)
+    * rows: each term's posting rows, in table order. With the
+    * [[DocLengths]] of the same index it answers [[bm25TopKIndexed]]
+    * without a Spark job ([[Postings.bm25TopK]]). */
+  final class Postings(rows: Array[(String, Long, Double)]) {
+    private val byTerm: Map[String, (Array[Long], Array[Double])] =
+      rows.groupBy(_._1).view
+        .mapValues(rs => (rs.map(_._2), rs.map(_._3))).toMap
+
+    /** [[bm25TopKIndexed]] over these postings and `lens`, with its
+      * formula in its operation order: ln is `StrictMath.log` (what
+      * Spark's `log` evaluates), df counts the term's posting rows, n
+      * and avgdl come from `lens`, a doc with no length row drops out
+      * (the inner join), scores round HALF_UP to 6 dp and order by
+      * (score desc, doc_id asc).
+      *
+      * One step may differ: a doc sums its per-term contributions in
+      * query-term order, Spark's hash aggregate in an order of its
+      * own. Two doubles add the same either way, so queries of one or
+      * two terms score bit-identically; from three terms on the sum may
+      * differ by an ulp before rounding, which moves the 6-dp score
+      * only when it sits on a rounding boundary.
+      */
+    def bm25TopK(lens: DocLengths, queryTerms: Seq[String], k: Int,
+        k1: Double = 1.2, b: Double = 0.75): Seq[(Long, Double)] = {
+      require(queryTerms.nonEmpty, "queryTerms must be non-empty")
+      // per doc slot of `lens`: the sum so far, and whether any term hit
+      val sums = new Array[Double](lens.ids.length)
+      val hit = new Array[Boolean](lens.ids.length)
+      val hits = Array.newBuilder[Int]
+      queryTerms.distinct.foreach { t =>
+        byTerm.get(t).foreach { case (docIds, tfs) =>
+          val df = docIds.length.toDouble
+          val idf = StrictMath.log(1.0 + (lens.n - df + 0.5) / (df + 0.5))
+          var i = 0
+          while (i < docIds.length) {
+            val j = lens.slotOf(docIds(i))
+            if (j >= 0) {
+              val tf = tfs(i)
+              sums(j) += idf * (tf * (k1 + 1.0)) /
+                (tf + k1 * ((1.0 - b) + b * lens.dl(j) / lens.avgdl))
+              if (!hit(j)) { hit(j) = true; hits += j }
+            }
+            i += 1
+          }
+        }
+      }
+      SimilaritySearch.topKRound6(
+        hits.result().map(j => (lens.ids(j), sums(j))), k).toSeq
+    }
+  }
+
+  /** A doc-lengths table held on the driver, from its (doc_id, dl)
+    * rows (one per doc, as the keyed table holds them), with the corpus
+    * stats BM25 derives from it. Each dl is a sum of whole-number tf
+    * values, so the total, and avgdl, are exact in any order. */
+  final class DocLengths(rows: Array[(Long, Double)]) {
+    private[ops] val ids: Array[Long] = rows.map(_._1)
+    private[ops] val dl: Array[Double] = rows.map(_._2)
+    private val slots = scala.collection.mutable.LongMap.from(ids.zipWithIndex)
+    /** The slot of `docId` in [[ids]] and [[dl]], -1 without a row. */
+    private[ops] def slotOf(docId: Long): Int = slots.getOrElse(docId, -1)
+    private[ops] val n: Double = rows.length.toDouble
+    private[ops] val avgdl: Double = dl.sum / n
+  }
+
   /** RM3 pseudo-relevance feedback term weights (Lavrenko & Croft's
     * relevance model, interpolated with the original query — the
     * standard query-expansion default of Indri/Anserini). The top

@@ -28,6 +28,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Tie order matches the reference's top-k (larger id first on equal
   * score, `util.py:190-203`).
+  *
+  * A driver-local index ([[isLocal]]) also scores a given id list
+  * ([[scoreLocal]]): the candidate-scoring half of an IVF probe, with
+  * no Spark job, exactly as `FloatVecDot` scores those rows in a plan.
   */
 final class VectorIndex private (
     blocks: RDD[(Array[Long], Array[Byte])],
@@ -44,6 +48,10 @@ final class VectorIndex private (
     */
   private var localBlocks: Option[Array[(Array[Long], Array[Byte])]] = None
 
+  /** id -> (stripe << 32 | row) over [[localBlocks]], built by the first
+    * [[scoreLocal]]. */
+  private var localRowOf: Option[scala.collection.mutable.LongMap[Long]] = None
+
   /** Materialize the index in executor memory (the reference's lazy
     * first-query matrix build); indexes under `localThreshold` vectors
     * are additionally pinned on the driver for job-free queries.
@@ -53,6 +61,7 @@ final class VectorIndex private (
       // stripe once across cores so local queries parallelize without
       // per-query copying
       val rowBytes = dim * 4
+      localRowOf = None
       localBlocks = Some(blocks.collect().flatMap { case (ids, mat) =>
         val n = ids.length
         val nStripes = math.min(
@@ -68,7 +77,45 @@ final class VectorIndex private (
     this
   }
 
-  def unpersist(): Unit = { blocks.unpersist(); localBlocks = None }
+  def unpersist(): Unit = synchronized {
+    blocks.unpersist(); localBlocks = None; localRowOf = None
+  }
+
+  /** Whether the blocks are held on the driver (see [[materialize]]). */
+  def isLocal: Boolean = localBlocks.isDefined
+
+  /** Exact dot scores of `ids` against the driver-local blocks, as
+    * (id, score) in input order; ids the index does not hold are
+    * skipped, like an inner join on id. The query is clamped to the
+    * index dim as in [[topK]], and the row kernel uses the lane scheme
+    * of `FloatVecDot` (see `VecKernels`), so each score is bit-identical
+    * to that expression's over the same packed vectors. Requires
+    * [[isLocal]].
+    */
+  def scoreLocal(ids: Array[Long], query: Array[Float]): Array[(Long, Double)] = {
+    val (stripes, rowOf) = synchronized {
+      val stripes = localBlocks.getOrElse(throw new IllegalStateException(
+        "scoreLocal needs a driver-local index"))
+      val rowOf = localRowOf.getOrElse {
+        val m = new scala.collection.mutable.LongMap[Long]()
+        stripes.indices.foreach { s =>
+          val sIds = stripes(s)._1
+          sIds.indices.foreach(r => m.update(sIds(r), s.toLong << 32 | r))
+        }
+        localRowOf = Some(m)
+        m
+      }
+      (stripes, rowOf)
+    }
+    val d = dim
+    val q = if (query.length > d) java.util.Arrays.copyOf(query, d) else query
+    ids.flatMap { id =>
+      rowOf.get(id).map { pos =>
+        val mat = stripes((pos >>> 32).toInt)._2
+        (id, graft.functions.VecKernels.dotPackedAt(mat, pos.toInt * d * 4, q))
+      }
+    }
+  }
 
   /** Fraction of the persisted blocks' bytes resident in executor
     * MEMORY (vs spilled to disk under pool pressure, or not cached at

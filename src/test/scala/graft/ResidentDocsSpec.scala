@@ -4,16 +4,18 @@ import org.apache.spark.sql.functions.col
 
 import graft.core.KbStore
 
-/** Read paths hydrate their hits from the store's resident doc table: a
-  * warm read runs no Spark job, every read answers exactly as the
-  * filtered Spark read it replaces (the residency-off path, cap -1),
-  * reads see every write, and a write alone never builds the table. */
+/** Reads are served from the store's resident tables: read paths
+  * hydrate their hits from the resident doc table, and `annRetrieve` and
+  * `bm25Retrieve` score from the resident assignment, postings and doc
+  * lengths. A warm read runs no Spark job, every read answers exactly as
+  * the Spark route it replaces (the residency-off path, cap -1), reads
+  * see every write, and a write alone never builds a table. */
 class ResidentDocsSpec extends SparkSpec {
 
   /** `path` opened with the resident doc table off. */
   private def openResidencyOff(path: String): KbStore = {
     val kb = KbStore.open(spark, path)
-    kb.residentDocsCap = -1
+    kb.residentCap = -1
     kb
   }
 
@@ -38,6 +40,21 @@ class ResidentDocsSpec extends SparkSpec {
       forceFresh = true)
     kb.bulkAddDocsDistributed((1 to 30).map(text).toDF("text"), provider)
     kb.bulkAddDocs(provider)(_.add(text(31)))
+    kb
+  }
+
+  /** The tables annRetrieve and bm25Retrieve score from. */
+  private val IndexTables = Seq(KbStore.IvfAssignTable,
+    KbStore.TextPostingsTable, KbStore.TextDocLensTable)
+
+  /** [[smallStore]] plus two more docs with the text of doc 3 (ids 32
+    * and 33, tied with it in every score), with ANN (4 lists) and text
+    * indexes built. */
+  private def indexedStore(): KbStore = {
+    val kb = smallStore()
+    kb.bulkAddDocs(provider) { a => a.add(text(3)); a.add(text(3)) }
+    kb.buildAnnIndex(nlist = 4, iters = 1)
+    kb.buildTextIndex()
     kb
   }
 
@@ -71,10 +88,11 @@ class ResidentDocsSpec extends SparkSpec {
   private def assertSameReads(path: String, ids: Seq[Long]): Unit = {
     val resident = KbStore.open(spark, path)
     val got = reads(resident, ids)
-    assert(resident.residentDocsForSpec == Seq(resident.countDocs.toInt))
+    assert(resident.residentRowsForSpec("docs") == Seq(resident.countDocs.toInt))
+    IndexTables.foreach(t => assert(resident.residentRowsForSpec(t).nonEmpty, t))
     val off = openResidencyOff(path)
     val want = reads(off, ids)
-    assert(off.residentDocsForSpec.isEmpty)
+    assert(off.residentRowsForSpec("docs").isEmpty)
     off.close()
     assert(got.size == want.size)
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
@@ -86,7 +104,7 @@ class ResidentDocsSpec extends SparkSpec {
   test("warm retrieve, fetchDoc and fetchDocWithEmbId run no Spark job") {
     val kb = smallStore()
     assert(topText(kb, text(3)).contains(text(3)))
-    assert(kb.residentDocsForSpec == Seq(31))
+    assert(kb.residentRowsForSpec("docs") == Seq(31))
     val retrieveJobs = jobsDuring(
       assert(topText(kb, text(4)).contains(text(4))))
     val fetchJobs = jobsDuring(assert(kb.fetchDoc(5L).text == text(5)))
@@ -152,7 +170,7 @@ class ResidentDocsSpec extends SparkSpec {
     assert(kb.fetchDoc(4L).meta.contains("""{"v": 2}"""))
     assert(kb.retrieve(text(4), 1, provider).map(_.doc.meta) ==
       Seq(Some("""{"v": 2}""")))
-    assert(kb.residentDocsForSpec == Seq(31))
+    assert(kb.residentRowsForSpec("docs") == Seq(31))
     kb.close()
   }
 
@@ -163,10 +181,10 @@ class ResidentDocsSpec extends SparkSpec {
       intercept[NoSuchElementException](store.fetchDocWithEmbId(999L))
     }
     misses(kb)
-    assert(kb.residentDocsForSpec.nonEmpty)
+    assert(kb.residentRowsForSpec("docs").nonEmpty)
     val off = openResidencyOff(kb.path)
     misses(off)
-    assert(off.residentDocsForSpec.isEmpty)
+    assert(off.residentRowsForSpec("docs").isEmpty)
     off.close()
     kb.close()
   }
@@ -177,11 +195,11 @@ class ResidentDocsSpec extends SparkSpec {
     kb.updateDocMeta(id, Some("{}"))
     kb.setDocEmbedding(id, None)
     kb.bulkDelDocs(Seq(id))
-    assert(kb.residentDocsForSpec.isEmpty)
+    assert(kb.residentRowsForSpec("docs").isEmpty)
     assert(kb.fetchDoc(1L).text == text(1))
-    assert(kb.residentDocsForSpec == Seq(31))
+    assert(kb.residentRowsForSpec("docs") == Seq(31))
     kb.bulkAddDocs(provider)(_.add(text(61)))
-    assert(kb.residentDocsForSpec.isEmpty)
+    assert(kb.residentRowsForSpec("docs").isEmpty)
     kb.close()
   }
 
@@ -190,9 +208,95 @@ class ResidentDocsSpec extends SparkSpec {
     assert(kb.fetchDoc(1L).text == text(1))
     val edge = kb.addEdge(1L, 2L, 1L)
     kb.delEdge(edge)
-    assert(kb.residentDocsForSpec == Seq(31))
+    assert(kb.residentRowsForSpec("docs") == Seq(31))
     assert(jobsDuring(assert(kb.fetchDoc(2L).text == text(2))) == 0)
     kb.close()
-    assert(kb.residentDocsForSpec.isEmpty)
+    assert(kb.residentRowsForSpec("docs").isEmpty)
+  }
+
+  test("warm annRetrieve and bm25Retrieve run no Spark job") {
+    val kb = indexedStore()
+    assert(kb.annRetrieve(text(4), 5, provider).head.doc.text == text(4))
+    assert(kb.bm25Retrieve("doc 4", 5).head._2.id == 4L)
+    val annJobs = jobsDuring(assert(
+      kb.annRetrieve(text(5), 5, provider).head.doc.text == text(5)))
+    val bm25Jobs = jobsDuring(
+      assert(kb.bm25Retrieve("doc 5", 5).head._2.id == 5L))
+    assert((annJobs, bm25Jobs) == (0, 0))
+    kb.close()
+  }
+
+  test("ANN and BM25 answer alike on both routes: ties, long queries, full probe") {
+    val kb = indexedStore()
+    val off = openResidencyOff(kb.path)
+    def ann(s: KbStore, q: String, n: Int, nProbe: Int) =
+      s.annRetrieve(q, n, provider, nProbe).map(r => (r.score, r.doc.id))
+    def bm25(s: KbStore, q: String, n: Int) =
+      s.bm25Retrieve(q, n).map { case (score, d) => (score, d.id) }
+    val queries = Seq(text(3), "doc 9", "topic2 word4 doc",
+      "topic1 word3 on doc 12 topic4", "no such term")
+    queries.foreach { q =>
+      Seq(1, 2).foreach(p => assert(ann(kb, q, 10, p) == ann(off, q, 10, p), q))
+      // nProbe = nlist probes every list: all 33 embedded docs come back
+      val full = ann(kb, q, 50, 4)
+      assert(full.size == 33)
+      assert(full == ann(off, q, 50, 4), q)
+      assert(bm25(kb, q, 10) == bm25(off, q, 10), q)
+    }
+    IndexTables.foreach { t =>
+      assert(kb.residentRowsForSpec(t).nonEmpty, t)
+      assert(off.residentRowsForSpec(t).isEmpty, t)
+    }
+    // docs 3, 32 and 33 share a text: tied at the top, ascending ids
+    val embIds = Seq(3L, 32L, 33L).map(kb.fetchDoc(_).emb_id.get)
+    val annTop = ann(kb, text(3), 3, 4)
+    assert(annTop.map(_._1).distinct.size == 1)
+    assert(annTop.map(x => kb.fetchDoc(x._2).emb_id.get) == embIds.sorted)
+    val bm25Top = bm25(kb, text(3), 3)
+    assert(bm25Top.map(_._1).distinct.size == 1)
+    assert(bm25Top.map(_._2) == Seq(3L, 32L, 33L))
+    off.close()
+    kb.close()
+  }
+
+  test("ANN and BM25 reads see bulkAddDocs and bulkDelDocs after a refresh") {
+    val kb = indexedStore()
+    val novel = "zebra quartz lantern"
+    def annTop(k: KbStore) =
+      k.annRetrieve(novel, 1, provider, nProbe = 4).map(_.doc.id)
+    assert(kb.bm25Retrieve("zebra", 5).isEmpty)
+    val added = kb.bulkAddDocs(provider)(_.add(novel)).head
+    // a stale index refuses on the resident route as on the Spark one
+    intercept[IllegalArgumentException](annTop(kb))
+    intercept[IllegalArgumentException](kb.bm25Retrieve("zebra", 5))
+    kb.refreshAnnIndex()
+    kb.refreshTextIndex()
+    assert(annTop(kb) == Seq(added))
+    assert(kb.bm25Retrieve("zebra", 5).map(_._2.id) == Seq(added))
+    kb.bulkDelDocs(Seq(added))
+    intercept[IllegalArgumentException](annTop(kb))
+    intercept[IllegalArgumentException](kb.bm25Retrieve("zebra", 5))
+    kb.refreshAnnIndex()
+    kb.refreshTextIndex()
+    assert(!annTop(kb).contains(added))
+    assert(kb.bm25Retrieve("zebra", 5).isEmpty)
+    IndexTables.foreach(t => assert(kb.residentRowsForSpec(t).nonEmpty, t))
+    kb.close()
+  }
+
+  test("a write alone never builds the index tables, and close drops them") {
+    val kb = indexedStore()
+    kb.bulkAddDocs(provider)(_.add(text(70)))
+    kb.refreshAnnIndex()
+    kb.refreshTextIndex()
+    IndexTables.foreach(t => assert(kb.residentRowsForSpec(t).isEmpty, t))
+    assert(kb.annRetrieve(text(70), 1, provider, nProbe = 4).head.doc.text ==
+      text(70))
+    assert(kb.bm25Retrieve("doc 70", 1).head._2.text == text(70))
+    assert(kb.residentRowsForSpec(KbStore.IvfAssignTable) == Seq(34))
+    assert(kb.residentRowsForSpec(KbStore.TextDocLensTable) == Seq(34))
+    assert(kb.residentRowsForSpec(KbStore.TextPostingsTable).head > 34)
+    kb.close()
+    IndexTables.foreach(t => assert(kb.residentRowsForSpec(t).isEmpty, t))
   }
 }

@@ -59,7 +59,7 @@ class SegmentResolveSpec extends SparkSpec {
   // with the resident doc table off, the hydration is the one job left
   test("a warm retrieve on an unchanged store runs one Spark job") {
     val kb = deltaChainStore()
-    kb.residentDocsCap = -1
+    kb.residentCap = -1
     assertFinds(kb, "doc 3 body w3")
     val jobs = jobsDuring(assertFinds(kb, "doc 4 body w4"))
     assert(jobs == 1, s"warm retrieve ran $jobs jobs")
