@@ -158,7 +158,8 @@ final class KbStore private (
     Option(segments.get(dir)).getOrElse {
       val p =
         if (KbStore.hasParquetFiles(dir))
-          Some(spark.read.parquet(dir).queryExecution.analyzed)
+          Some(KbStore.listedOnDriver(spark)(
+            spark.read.parquet(dir).queryExecution.analyzed))
         else None
       Option(segments.putIfAbsent(dir, p)).getOrElse(p)
     }.map(KbStore.freshScan(spark, _))
@@ -2300,9 +2301,13 @@ final class KbStore private (
     // postings persist PARTITIONED by a term-hash bucket: a query's
     // terms map to ≤|terms| buckets, so the retrieval scan is physical
     // partition pruning (1/64th of the postings per term), not a full
-    // scan with a filter
+    // scan with a filter. One task per bucket writes one file per
+    // bucket, not one per input partition: every scan of the postings
+    // (a query's buckets, or the whole table a resident read collects)
+    // opens each file, and 4 cores wrote 256 files where 64 hold it.
     try commit(
-      Map(KbStore.TextPostingsTable -> KbStore.withTermBucket(postings),
+      Map(KbStore.TextPostingsTable ->
+          KbStore.withTermBucket(postings).repartition($"bucket"),
         KbStore.TextDocLensTable -> docLens),
       m => m.copy(index_params =
         m.index_params + ("text_unicode" -> unicode.toString)),
@@ -3419,6 +3424,27 @@ object KbStore {
     }
   }
 
+  /** `read` with Spark's file listing kept on the driver. A read of a
+    * directory with more than `parallelPartitionDiscovery.threshold`
+    * (32) subdirectories lists them with a distributed job of one task
+    * per subdirectory: ~0.5 s for the [[TextBuckets]] partition dirs of
+    * a `text_postings` segment, where the driver lists them in a few
+    * ms. Store segments are local directories of at most that many
+    * partition dirs, so the driver's listing is always the cheaper one.
+    * The session setting is restored afterwards; the lock keeps two
+    * overlapping reads from restoring each other's value.
+    */
+  private[core] def listedOnDriver[A](spark: SparkSession)(read: => A): A =
+    ListingLock.synchronized {
+      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, Int.MaxValue.toString)
+      try read
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+
+  private object ListingLock
+
   /** `plan` (a memoized analyzed read) as a new DataFrame whose scans
     * carry fresh attribute ids — what a new `spark.read` of the same
     * files would plan, without re-listing them or re-inferring the
@@ -3450,9 +3476,11 @@ object KbStore {
     *     read with no write before it took 14–29 ms resident vs 4.9–5.4 s
     *     on the Spark route (BM25) and 2–4 ms vs 1.8–2.0 s (ANN). The
     *     resident postings take 2.8–3.6× their Parquet bytes of heap
-    *     (2.4 MB at 2k docs, 19 MB at 20k).
+    *     (2.4 MB at 2k docs, 19 MB at 20k). These runs predate the
+    *     one-file-per-bucket postings write, which stores the same rows
+    *     in ~30% fewer bytes.
     * The storebench stores plan below the cap (serve: docs 412 KB,
-    * postings 866 KB; ingest: docs at most ~730 KB); no workload
+    * postings 617 KB; ingest: docs at most ~730 KB); no workload
     * reaches it, so the cut-off itself is not benchmarked.
     */
   val ResidentMaxBytes: Long = 1L << 20
