@@ -30,6 +30,34 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.t(s, dir, name)
 
+  /** application id -> the scratch dir of that session's fixtures. */
+  private val fixtureDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+
+  /** A temp dir for the fixture files `s`'s queries generate, one per
+    * application (so two sessions never overwrite each other's fixture
+    * mid-read), made on first use. It is deleted, with what it holds,
+    * when the session's SparkContext stops, or at JVM exit if it never
+    * does: a query's DataFrame reads its fixture lazily, so the file
+    * must outlive the query function. */
+  private def fixtureDir(s: SparkSession): java.nio.file.Path =
+    fixtureDirs.computeIfAbsent(s.sparkContext.applicationId, app => {
+      val dir = java.nio.file.Files.createTempDirectory("graft_fixtures_")
+      def delete(): Unit = if (fixtureDirs.remove(app, dir)) {
+        val walk = java.nio.file.Files.walk(dir)
+        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(p => java.nio.file.Files.deleteIfExists(p))
+        finally walk.close()
+      }
+      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          delete()
+      })
+      Runtime.getRuntime.addShutdownHook(new Thread(() => delete()))
+      dir
+    })
+
   /** Cast computed 32-bit int columns to long: DuckDB's count/len/ascii/
     * row_number yield BIGINT, and the driver compare is schema-sensitive.
     */
@@ -1217,10 +1245,8 @@ object SparkEntry {
     "s9_csv_ingest" -> ((s, dir) => {
       import s.implicits._
       import org.apache.spark.sql.types._
-      // applicationId-scoped: a concurrent builder + driver pair (or
-      // Verify vs Bench) must not overwrite-delete each other's fixture
-      // mid-read; within one session reps overwrite sequentially
-      val path = s"/tmp/graft_s9_fixture_${s.sparkContext.applicationId}"
+      // within one session reps overwrite sequentially
+      val path = fixtureDir(s).resolve("s9_fixture").toString
       val docs = t(s, dir, "documents").select($"doc_id",
         when(pmod($"doc_id", lit(7)) === 0, concat($"text", lit(" x,\"y")))
           .otherwise($"text").as("txt"))
@@ -1254,8 +1280,7 @@ object SparkEntry {
     "s10_jsonl_ingest" -> ((s, dir) => {
       import s.implicits._
       import org.apache.spark.sql.types._
-      // applicationId-scoped (same rationale as s9's fixture path)
-      val path = s"/tmp/graft_s10_fixture_${s.sparkContext.applicationId}"
+      val path = fixtureDir(s).resolve("s10_fixture").toString
       val docs = t(s, dir, "documents")
       val clean = docs.where(pmod($"doc_id", lit(11)) =!= 0)
         .select(to_json(struct($"doc_id", $"text", $"lang")).as("value"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Model._
@@ -27,36 +28,48 @@ import graft.functions.VectorFunctions._
   * so the design carries to object stores unchanged.
   *
   * Caching (reference `_EmbeddingsMatrix`, `kb.py:856-893`): the
-  * embeddings Dataset is persisted on first use and unpersisted by any
-  * mutation — the "first query slow, later queries fast" contract
-  * (`README.md:135`) maps directly onto lazy Spark caching. Below it,
-  * every published segment directory is resolved (listed and
-  * schema-inferred) once per store instance by [[segment]], and each
+  * embeddings Dataset is persisted on first use and the retrieval
+  * matrix ([[index]]) built on the first retrieve — the "first query
+  * slow, later queries fast" contract (`README.md:135`) maps directly
+  * onto lazy Spark caching. Both are kept per embeddings layout (base,
+  * chain): a commit that leaves `embeddings` alone keeps them. Below
+  * them, every published segment directory is resolved (listed and
+  * its schema fixed) once per store instance by [[segment]], and each
   * table's folded merge-on-read view is kept per (table, base, chain),
-  * so a warm read plans without touching the filesystem. Published
-  * version dirs never change, only disappear: the memos are exact,
-  * `invalidate()` (every publish, adoption and close) prunes them to
-  * what the live manifest references, and every directory this store
-  * deletes is evicted with it.
+  * so a warm read plans without touching the filesystem. A segment this
+  * store wrote is read with the schema of the frame written to it,
+  * which the commit that published it records, so no read runs a
+  * schema inference job for it; another writer's segments are inferred
+  * once.
+  * Published version dirs never change, only disappear: the memos are
+  * exact, `invalidate()` (every publish, adoption and close) prunes
+  * them to what the live manifest references, and every directory this
+  * store deletes is evicted with it.
   *
-  * Reads are served from resident tables, held in one memo keyed like
-  * the folded views, per (table, base, chain): the first read that
-  * needs a table collects its whole view once and indexes it on the
-  * driver. Four tables are held this way: `docs` (keyed by `id` and by
-  * `emb_id`; every read path hydrates its hits from it), `ivf_assign`
-  * (the inverted lists [[annRetrieve]] probes), and `text_postings`
-  * with `text_doclens` (what [[bm25Retrieve]] scores), so warm
-  * `retrieve`, `fetchDoc`, `annRetrieve` and `bm25Retrieve` calls run
-  * no Spark job at all. A write to another table keeps a table; a
-  * write to it publishes a new layout whose first read collects again,
-  * and `invalidate()` prunes the entries of dead layouts; `close`
-  * drops them all. Writes never build a table: their guard reads stay
-  * Spark reads. A table is resident only while its view's planned
-  * (Parquet) size, known from the resolved files without a job, is at
-  * most [[KbStore.ResidentMaxBytes]]; above it each read runs its
-  * Spark route instead. The IVF centroids use the same memo without
-  * the cap, since every ANN route and [[refreshAnnIndex]] need them on
-  * the driver.
+  * Reads are served from resident tables, held in one memo per table
+  * with the layout they hold: the first read that needs a table
+  * collects its whole view once and indexes it on the driver. Five
+  * tables are held this way: `docs` (keyed by `id` and by `emb_id`;
+  * every read path hydrates its hits from it), `keyval` (what
+  * [[getKey]] and its siblings read), `ivf_assign` (the inverted lists
+  * [[annRetrieve]] probes), and `text_postings` with `text_doclens`
+  * (what [[bm25Retrieve]] scores), so warm `retrieve`, `fetchDoc`,
+  * `getKeyOr`, `annRetrieve` and `bm25Retrieve` calls run no Spark job
+  * at all. A write to another table keeps a table. A write to it
+  * publishes a layout that extends the held one (same base, the held
+  * chain plus new versions), and the next read folds the new versions'
+  * `del` and `add` segments into the held rows: O(batch) reads, not a
+  * collect of the table. The driver-local retrieval matrix folds the
+  * same way. A layout that does not extend the held one (a minor
+  * compaction, `compact()`, a full rewrite, an adopted rewrite) is
+  * collected again; `close` drops everything. Writes never build or
+  * fold a table: their guard reads stay Spark reads. A table is
+  * resident only while its view's planned (Parquet) size, known from
+  * the resolved files without a job, is at most
+  * [[KbStore.ResidentMaxBytes]]; above it, the entry is dropped and
+  * each read runs its Spark route instead. The IVF centroids use the
+  * same memo without the cap, since every ANN route and
+  * [[refreshAnnIndex]] need them on the driver.
   *
   * Single-writer semantics, like the reference's one-connection
   * discipline (`kb.py:116-137`).
@@ -73,8 +86,11 @@ final class KbStore private (
     * and its manifest publish, so a spec can inject a racing writer
     * deterministically and exercise the publish-conflict retry. */
   private[graft] var prePublishHook: () => Unit = () => ()
-  private var cachedEmb: Option[Dataset[Emb]] = None
-  private var cachedIdx: Option[graft.ops.VectorIndex] = None
+  /** The persisted embeddings Dataset and the retrieval index, each
+    * with the embeddings layout (base, chain) it was built from. */
+  private var cachedEmb: Option[((Long, Seq[Long]), Dataset[Emb])] = None
+  private var cachedIdx: Option[((Long, Seq[Long]), graft.ops.VectorIndex)] =
+    None
   /** Largest planned view (bytes) kept resident; test seam: specs set
     * -1 to force every read's Spark route. */
   private[graft] var residentCap: Long = KbStore.ResidentMaxBytes
@@ -133,19 +149,26 @@ final class KbStore private (
   private val views = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Seq[Long]), LogicalPlan]()
 
-  /** (table, base version, delta chain) -> that layout's resident table
-    * (see [[resident]]), None when its view is planned above
-    * [[residentCap]]. */
+  /** table -> the layout (base version, delta chain) held for it and
+    * that layout's resident table (see [[resident]]), None when its
+    * view is planned above [[residentCap]]. */
   private val residents = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Seq[Long]), Option[KbStore.Resident]]()
+    String, ((Long, Seq[Long]), Option[KbStore.Resident])]()
+
+  /** Segment dir this store published -> the schema of the frame it
+    * wrote there (see [[seedSchemas]]). */
+  private val writtenSchemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   /** The one reader of committed segment directories: `dir` (a table's
     * base dir, or a delta's `del`/`add` side) is listed and its schema
-    * inferred once per store instance, then served from the memo as a
+    * fixed once per store instance, then served from the memo as a
     * fresh scan with new attribute ids — two reads of one table still
-    * join like two independent scans. None when the directory holds no
-    * parquet file (an empty partitioned write leaves only `_SUCCESS`; a
-    * pure add has no `del`, a pure delete no `add`).
+    * join like two independent scans. The schema is the one this store
+    * wrote the dir with, when it did; otherwise it is inferred, which
+    * costs a Spark job. None when the directory holds no parquet file
+    * (an empty partitioned write leaves only `_SUCCESS`; a pure add has
+    * no `del`, a pure delete no `add`).
     *
     * Exact because a published version dir never changes, it is only
     * deleted: [[invalidate]] prunes the memo to the live manifest's
@@ -155,14 +178,34 @@ final class KbStore private (
     * retry rewrites cannot be served stale.
     */
   private def segment(dir: String): Option[DataFrame] =
+    resolved(dir).map(KbStore.freshScan(spark, _))
+
+  /** The memoized analyzed scan behind [[segment]]. */
+  private def resolved(dir: String): Option[LogicalPlan] =
     Option(segments.get(dir)).getOrElse {
       val p =
-        if (KbStore.hasParquetFiles(dir))
-          Some(KbStore.listedOnDriver(spark)(
-            spark.read.parquet(dir).queryExecution.analyzed))
-        else None
+        if (!KbStore.hasParquetFiles(dir)) None
+        else Some(KbStore.listedOnDriver(spark) {
+          // Parquet stores every column as nullable, so the written
+          // schema made nullable is the one inference would find
+          Option(writtenSchemas.get(dir)).fold(spark.read)(t =>
+            spark.read.schema(org.apache.spark.sql.graft.Bridge.asNullable(t)))
+            .parquet(dir).queryExecution.analyzed
+        })
       Option(segments.putIfAbsent(dir, p)).getOrElse(p)
-    }.map(KbStore.freshScan(spark, _))
+    }
+
+  /** Remember the schema of each segment dir a commit staged, once
+    * manifest `m` has published it, so no read of it runs a schema
+    * inference job. Only published dirs: a rolled-back stage is never
+    * seeded, and dirs `m` does not name (a family the same commit
+    * dropped) are skipped. */
+  private def seedSchemas(m: KbMeta, staged: Seq[(String, StructType)]): Unit = {
+    val live = liveDirs(m)
+    staged.foreach { case (dir, schema) =>
+      if (live.contains(dir)) writtenSchemas.put(dir, schema)
+    }
+  }
 
   /** A table's base segment, which every committed layout has. */
   private def baseSegment(name: String, version: Long): DataFrame = {
@@ -179,7 +222,23 @@ final class KbStore private (
       Seq(s"$dir/del", s"$dir/add")
     }
 
-  /** Drop memo entries outside the live manifest's layouts. */
+  /** Every segment dir the layouts of manifest `m` name. */
+  private def liveDirs(m: KbMeta): Set[String] =
+    m.table_versions.keySet.flatMap { name =>
+      val (base, chain) = layoutOf(m, name)
+      layoutDirs(name, base, chain)
+    }
+
+  /** Whether state built for `held` can be brought to layout `live` by
+    * applying the new versions' segments: the same base, and a chain
+    * that extends the held one (published segments never change). */
+  private def extendsLayout(held: (Long, Seq[Long]),
+      live: (Long, Seq[Long])): Boolean =
+    held._1 == live._1 && live._2.startsWith(held._2)
+
+  /** Drop memo entries outside the live manifest's layouts. A resident
+    * table stays while the live layout extends the one it holds: the
+    * next read folds the new versions into it. */
   private def pruneResolved(): Unit = {
     import scala.jdk.CollectionConverters._
     val m = metaCache
@@ -188,9 +247,13 @@ final class KbStore private (
       (name, base, chain)
     }
     views.keySet.retainAll(live.asJava)
-    residents.keySet.retainAll(live.asJava)
-    segments.keySet.retainAll(
-      live.flatMap { case (n, b, c) => layoutDirs(n, b, c) }.asJava)
+    residents.entrySet.removeIf { e =>
+      !m.table_versions.contains(e.getKey) ||
+        !extendsLayout(e.getValue._1, layoutOf(m, e.getKey))
+    }
+    val dirs = liveDirs(m).asJava
+    segments.keySet.retainAll(dirs)
+    writtenSchemas.keySet.retainAll(dirs)
   }
 
   /** Delete `p` recursively and evict every memo entry under it. */
@@ -198,6 +261,7 @@ final class KbStore private (
     KbStore.deleteRecursively(p)
     def under(dir: String) = Paths.get(dir).startsWith(p)
     segments.keySet.removeIf(under(_))
+    writtenSchemas.keySet.removeIf(under(_))
     views.keySet.removeIf { case (n, b, c) => layoutDirs(n, b, c).exists(under) }
   }
 
@@ -207,20 +271,28 @@ final class KbStore private (
     (segments.keySet.asScala.toSet, views.size)
   }
 
+  /** The memoized scan schema of segment `dir`, for specs; None when
+    * the dir is not resolved or holds no parquet file. */
+  private[graft] def segmentSchemaForSpec(dir: String): Option[StructType] =
+    Option(segments.get(dir)).flatten.map(_.schema)
+
   def docs: Dataset[Doc] = read("docs").as[Doc]
   def edges: Dataset[Edge] = read("edges").as[Edge]
   def keyval: Dataset[KV] = read("keyval").as[KV]
 
   /** Cached embeddings — the analog of the reference's in-RAM matrix
-    * (`kb.py:573-618`); invalidated by every mutation.
+    * (`kb.py:573-618`); dropped by every write that moves the
+    * embeddings table.
     */
   def embeddings: Dataset[Emb] = synchronized {
+    val layout = layoutOf(metaCache, "embeddings")
     cachedEmb match {
-      case Some(ds) => ds
-      case None =>
+      case Some((`layout`, ds)) => ds
+      case _ =>
+        cachedEmb.foreach(_._2.unpersist())
         val ds = read("embeddings").as[Emb]
           .persist(StorageLevel.MEMORY_AND_DISK)
-        cachedEmb = Some(ds)
+        cachedEmb = Some(layout -> ds)
         ds
     }
   }
@@ -230,12 +302,46 @@ final class KbStore private (
     */
   private[graft] def readTableForSpec(name: String): DataFrame = read(name)
 
+  /** Prune the memos to the live manifest. The cached embeddings stay
+    * while the embeddings layout is unchanged, and the retrieval index
+    * while the layout extends the one it was built from and it is held
+    * on the driver (the next [[index]] folds the new versions in). */
   private def invalidate(): Unit = synchronized {
-    cachedEmb.foreach(_.unpersist())
-    cachedEmb = None
-    cachedIdx.foreach(_.unpersist())
-    cachedIdx = None
+    val emb = layoutOf(metaCache, "embeddings")
+    if (!cachedEmb.exists(_._1 == emb)) {
+      cachedEmb.foreach(_._2.unpersist())
+      cachedEmb = None
+    }
+    if (!cachedIdx.exists { case (l, idx) => idx.isLocal && extendsLayout(l, emb) })
+      dropIndex()
     pruneResolved()
+  }
+
+  private def dropIndex(): Unit = synchronized {
+    cachedIdx.foreach(_._2.unpersist())
+    cachedIdx = None
+  }
+
+  /** The planned (Parquet) size of table `name`'s merge-on-read view in
+    * `layout`: the file bytes of its base and `add` segments, which is
+    * what the optimizer plans for the view (a union plans the sum of
+    * its inputs, an anti-join its left side), read off the resolved
+    * scans without planning the view. */
+  private def plannedBytes(name: String, layout: (Long, Seq[Long])): BigInt =
+    (tableDir(name, layout._1) +: layout._2.map(v => s"${tableDir(name, v)}/add"))
+      .flatMap(resolved).map(_.stats.sizeInBytes).sum
+
+  /** Keys tombstoned by version `v` of table `name` and the `add`
+    * segment it appended (None for either side it lacks). Every table's
+    * [[KbStore.DeltaKeys]] is one column, so a key is that column's
+    * value. */
+  private def versionDelta(name: String, v: Long)
+      : (Set[Any], Option[DataFrame]) = {
+    val dir = tableDir(name, v)
+    val key = KbStore.DeltaKeys(name).head
+    val gone = segment(s"$dir/del").fold(Set.empty[Any])(
+      _.select(col(key)).collect().iterator.map(_.get(0)).toSet)
+    (gone, segment(s"$dir/add"))
   }
 
   /** The live layout of table `name`, resident (see the class doc):
@@ -243,29 +349,51 @@ final class KbStore private (
     * and `index` shapes the collected rows for lookups. None while the
     * view is planned above [[residentCap]] (unless `capped` is false);
     * the size comes from the resolved scans' file sizes, so deciding
-    * runs no job. Read paths only. */
-  private def resident[R, T <: AnyRef](name: String, capped: Boolean = true)(
-      rows: DataFrame => Array[R])(index: Array[R] => T): Option[T] =
+    * runs no job ([[plannedBytes]]). Read paths only.
+    *
+    * When a write moved the layout by appending versions to the chain
+    * held (see [[extendsLayout]]), the held rows are brought forward
+    * instead of collected again: per new version in publish order, the
+    * rows whose `key` that version tombstoned drop and the rows of its
+    * `add` segment (collected by `rows`) append, then `index` runs over
+    * the result. That is the merge-on-read fold of [[readWithMeta]] over
+    * the same segments, so it holds the rows a fresh collect would
+    * return, in the order the view's scans produce them. */
+  private def resident[R: scala.reflect.ClassTag, T <: AnyRef](name: String,
+      capped: Boolean = true)(rows: DataFrame => Array[R])(key: R => Any)(
+      index: Array[R] => T): Option[T] =
     synchronized {
       val m = metaCache
-      val (base, chain) = layoutOf(m, name)
-      val key = (name, base, chain)
-      Option(residents.get(key)).getOrElse {
-        val view = readWithMeta(m, name)
-        val t =
-          if (!capped ||
-              view.queryExecution.optimizedPlan.stats.sizeInBytes <= residentCap) {
-            val collected = rows(view)
-            Some(KbStore.Resident(index(collected), collected.length))
-          } else None
-        residents.put(key, t)
-        t
-      }.map(_.value.asInstanceOf[T]) // one table name, one table type
-    }
+      val layout = layoutOf(m, name)
+      val held = Option(residents.get(name))
+      held match {
+        case Some((`layout`, t)) => t
+        case _ =>
+          val t =
+            if (!capped || plannedBytes(name, layout) <= residentCap) {
+              val collected = held match {
+                case Some((from, Some(r))) if extendsLayout(from, layout) =>
+                  val columns = baseSegment(name, layout._1).columns
+                  layout._2.drop(from._2.size).foldLeft(
+                      r.rows.asInstanceOf[Array[R]]) { (acc, v) =>
+                    val (gone, add) = versionDelta(name, v)
+                    val kept =
+                      if (gone.isEmpty) acc else acc.filterNot(r => gone(key(r)))
+                    add.fold(kept)(a =>
+                      kept ++ rows(a.select(columns.map(col(_)): _*)))
+                  }
+                case _ => rows(readWithMeta(m, name))
+              }
+              Some(KbStore.Resident(collected, index(collected)))
+            } else None
+          residents.put(name, (layout, t))
+          t
+      }
+    }.map(_.value.asInstanceOf[T]) // one table name, one table type
 
   /** The live docs layout's doc table, when resident. */
   private def docTable(): Option[KbStore.DocTable] =
-    resident("docs")(_.as[Doc].collect())(new KbStore.DocTable(_))
+    resident("docs")(_.as[Doc].collect())(_.id)(new KbStore.DocTable(_))
 
   /** Doc rows of `ids` keyed by id, from the resident doc table when it
     * is resident, else by a filtered Spark read; ids without a doc are
@@ -283,25 +411,26 @@ final class KbStore private (
       .map(d => d.emb_id.get -> d).toMap
   }
 
-  /** Row counts of the resident tables of `name` held, for specs. */
-  private[graft] def residentRowsForSpec(name: String): Seq[Int] = {
-    import scala.jdk.CollectionConverters._
-    residents.asScala.toSeq.collect {
-      case ((`name`, _, _), Some(r)) => r.rows
+  /** Row count of `name`'s resident table for the live layout, if one
+    * is held, for specs. Rows held for an earlier layout, kept for the
+    * next read to fold, do not count. */
+  private[graft] def residentRowsForSpec(name: String): Seq[Int] =
+    Option(residents.get(name)).toSeq.collect {
+      case (layout, Some(r)) if layout == layoutOf(metaCache, name) =>
+        r.rows.length
     }
-  }
 
   /** The current ANN index's centroids as (cid, cvec), collected once
     * per ivf_centroids layout and never capped. */
   private def ivfCentroids(): Seq[(Long, Array[Double])] =
     resident(KbStore.IvfCentroidsTable, capped = false)(
-      _.select($"cid", $"cvec").as[(Long, Array[Double])].collect())(
+      _.select($"cid", $"cvec").as[(Long, Array[Double])].collect())(_._1)(
       _.toSeq).get
 
   /** The current ANN index's inverted lists, when resident. */
   private def ivfLists(): Option[KbStore.IvfLists] =
     resident(KbStore.IvfAssignTable)(
-      _.select($"cid", $"vec_id").as[(Long, Long)].collect())(
+      _.select($"cid", $"vec_id").as[(Long, Long)].collect())(_._2)(
       new KbStore.IvfLists(_))
 
   /** The current text index's postings and doc lengths, when both are
@@ -311,25 +440,58 @@ final class KbStore private (
     for {
       p <- resident(KbStore.TextPostingsTable)(
         _.select($"term", $"doc_id", $"tf").as[(String, Long, Double)]
-          .collect())(new graft.ops.TextRetrieval.Postings(_))
+          .collect())(_._2)(new graft.ops.TextRetrieval.Postings(_))
       l <- resident(KbStore.TextDocLensTable)(
-        _.select($"doc_id", $"dl").as[(Long, Double)].collect())(
+        _.select($"doc_id", $"dl").as[(Long, Double)].collect())(_._1)(
         new graft.ops.TextRetrieval.DocLengths(_))
     } yield (p, l)
 
+  /** The live keyval layout keyed by key, when resident. */
+  private def keyTable(): Option[Map[String, KV]] =
+    resident("keyval")(_.as[KV].collect())(_.key)(
+      _.iterator.map(kv => kv.key -> kv).toMap)
+
   /** The batch-built retrieval index (reference `_EmbeddingsMatrix`,
-    * `kb.py:856-893`): lazily built on first retrieve, invalidated by
-    * every mutation. None when the store has no embeddings.
+    * `kb.py:856-893`): lazily built on first retrieve, kept for the
+    * embeddings layout it was built from. None when the store has no
+    * embeddings.
+    *
+    * After a write that appended versions to the embeddings chain, a
+    * driver-local index is brought forward instead of rebuilt: per new
+    * version, the ids it tombstoned leave and its `add` rows, packed by
+    * the same `floatVecPack`, join as one more stripe
+    * ([[graft.ops.VectorIndex.updated]]). A result above the local
+    * threshold, or an empty one, is built from scratch like any other
+    * layout.
     */
   def index(): Option[graft.ops.VectorIndex] = synchronized {
-    cachedIdx.orElse {
-      embeddings.limit(1).collect().headOption.map { probe =>
-        val idx = graft.ops.VectorIndex.fromArrays(
-          embeddings.toDF().select($"id", $"vec"), probe.vec.length)
-          .materialize()
-        cachedIdx = Some(idx)
-        idx
-      }
+    import graft.functions.FloatVecPack.floatVecPack
+    val layout = layoutOf(metaCache, "embeddings")
+    cachedIdx match {
+      case Some((`layout`, idx)) => Some(idx)
+      case held =>
+        val folded = held.collect {
+          case (from, idx) if idx.isLocal && extendsLayout(from, layout) =>
+            layout._2.drop(from._2.size).foldLeft(idx) { (acc, v) =>
+              val (gone, add) = versionDelta("embeddings", v)
+              val rows = add.fold(Array.empty[(Long, Array[Byte])])(
+                _.select($"id", floatVecPack($"vec")).as[(Long, Array[Byte])]
+                  .collect())
+              acc.updated(gone.map(_.asInstanceOf[Long]), rows.map(_._1),
+                Array.concat(rows.map(_._2).toSeq: _*))
+            }
+        }.filter(i => i.count > 0 && i.count <= graft.ops.VectorIndex.LocalThreshold)
+        dropIndex()
+        folded.orElse {
+          embeddings.limit(1).collect().headOption.map { probe =>
+            graft.ops.VectorIndex.fromArrays(
+              embeddings.toDF().select($"id", $"vec"), probe.vec.length)
+              .materialize()
+          }
+        }.map { idx =>
+          cachedIdx = Some(layout -> idx)
+          idx
+        }
     }
   }
 
@@ -431,12 +593,13 @@ final class KbStore private (
       val cur = casOrAdopt(updated.keySet, newMeta, readSet)
       val next = cur.version + 1
       try {
-        updated.foreach { case (name, df) =>
+        val staged = updated.toSeq.map { case (name, df) =>
           val w = df.write.mode(SaveMode.Overwrite)
             .option("compression", codec)
           partitionBy.get(name).filter(_.nonEmpty)
             .fold(w)(cols => w.partitionBy(cols: _*))
             .parquet(tableDir(name, next))
+          tableDir(name, next) -> df.schema
         }
         var pointers = cur.table_versions ++ updated.keys.map(_ -> next)
         // a full rewrite replaces the whole table at the new version, so
@@ -461,6 +624,7 @@ final class KbStore private (
         KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
         metaCache = m
         invalidate()
+        seedSchemas(m, staged)
         done = true
       } catch {
         case e: Throwable =>
@@ -546,6 +710,14 @@ final class KbStore private (
       val (overflow, asDelta) = patches.partition { case (name, _) =>
         cur.table_deltas.getOrElse(name, Nil).size >= KbStore.DeltaChainLimit
       }
+      // every segment dir written below, with the schema written to it
+      val staged = Seq.newBuilder[(String, StructType)]
+      def stage(df: DataFrame, dir: String,
+          partitionCols: Option[Seq[String]] = None): Unit = {
+        val w = df.write.mode(SaveMode.Overwrite).option("compression", "snappy")
+        partitionCols.fold(w)(cols => w.partitionBy(cols: _*)).parquet(dir)
+        staged += dir -> df.schema
+      }
       overflow.foreach { case (name, patch) =>
         val keys = KbStore.DeltaKeys(name)
         val chain = cur.table_deltas(name)
@@ -571,25 +743,16 @@ final class KbStore private (
         patch.add.foreach(a =>
           merged = merged.union(a.select(merged.columns.map(col(_)): _*)))
         val delOut = chainDels.reduceOption(_ union _).map(_.distinct())
-        delOut.foreach(_.write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy")
-          .parquet(s"${tableDir(name, next)}/del"))
-        val w = merged.write.mode(SaveMode.Overwrite)
-          .option("compression", "snappy")
-        KbStore.DeltaPartitioning.get(name)
-          .fold(w)(cols => w.partitionBy(cols: _*))
-          .parquet(s"${tableDir(name, next)}/add")
+        delOut.foreach(stage(_, s"${tableDir(name, next)}/del"))
+        stage(merged, s"${tableDir(name, next)}/add",
+          KbStore.DeltaPartitioning.get(name))
       }
       asDelta.foreach { case (name, patch) =>
-        patch.del.foreach(_.select(KbStore.DeltaKeys(name).map(col(_)): _*)
-          .write.mode(SaveMode.Overwrite).option("compression", "snappy")
-          .parquet(s"${tableDir(name, next)}/del"))
-        patch.add.foreach { a =>
-          val w = a.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-          KbStore.DeltaPartitioning.get(name)
-            .fold(w)(cols => w.partitionBy(cols: _*))
-            .parquet(s"${tableDir(name, next)}/add")
-        }
+        patch.del.foreach(d => stage(
+          d.select(KbStore.DeltaKeys(name).map(col(_)): _*),
+          s"${tableDir(name, next)}/del"))
+        patch.add.foreach(stage(_, s"${tableDir(name, next)}/add",
+          KbStore.DeltaPartitioning.get(name)))
       }
       var pointers = cur.table_versions ++ patches.keys.map(_ -> next)
       var bases = cur.table_bases
@@ -624,6 +787,7 @@ final class KbStore private (
       KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
       metaCache = m
       invalidate()
+      seedSchemas(m, staged.result())
       done = true
     } catch {
       case e: Throwable =>
@@ -1221,20 +1385,27 @@ final class KbStore private (
   def hasKey(key: String): Boolean =
     !keyval.filter($"key" === key).isEmpty
 
+  /** `key`'s row, from the resident keyval table when it is resident,
+    * else by a filtered Spark read. Read paths only: [[hasKey]], the
+    * guard writes use, stays a Spark read. */
+  private def lookupKey(key: String): Option[KV] = keyTable() match {
+    case Some(t) => t.get(key)
+    case None => keyval.filter($"key" === key).collect().headOption
+  }
+
   def getKey(key: String): Any =
-    keyval.filter($"key" === key).collect().headOption
+    lookupKey(key)
       .getOrElse(throw new NoSuchElementException(s"key $key")).value
 
   def getKeyOr(key: String, default: Any): Any =
-    keyval.filter($"key" === key).collect().headOption
-      .map(_.value).getOrElse(default)
+    lookupKey(key).map(_.value).getOrElse(default)
 
   /** `get(key, ExceptionClass)` raise protocol (`kb.py:1746-1756`): a
     * missing key re-raises the lookup error itself when the class IS a
     * lookup error, otherwise raises a fresh instance of the given class.
     */
   def getKeyRaising(key: String, raiseAs: Class[_ <: Throwable]): Any =
-    keyval.filter($"key" === key).collect().headOption.map(_.value)
+    lookupKey(key).map(_.value)
       .getOrElse {
         if (classOf[NoSuchElementException].isAssignableFrom(raiseAs))
           throw new NoSuchElementException(s"key $key")
@@ -1360,7 +1531,7 @@ final class KbStore private (
     * version below the data table's or use a full rebuild path.
     */
   private def changedSince(table: String, since: Long)
-      : Option[(DataFrame, DataFrame)] = {
+      : Option[(DataFrame, Option[DataFrame])] = {
     // measurement-only kill switch: lets ProfileRefreshPlans time the
     // refresh paths with the segment route DISABLED (forcing every
     // refresh onto the full keyed diff) so the O(corpus) → O(batch)
@@ -1391,7 +1562,7 @@ final class KbStore private (
   @volatile private[graft] var lastRefreshRoute: Option[String] = None
 
   private def changedSinceImpl(table: String, since: Long)
-      : Option[(DataFrame, DataFrame)] = {
+      : Option[(DataFrame, Option[DataFrame])] = {
     val head = metaCache
     if (!head.table_versions.contains(table)) return None
     val old =
@@ -1417,7 +1588,7 @@ final class KbStore private (
     val keys = KbStore.DeltaKeys(table)
     val schema = read(table).limit(0)
     var adds = schema
-    var dels = schema.select(keys.map(col(_)): _*)
+    val dels = Seq.newBuilder[DataFrame]
     // fold in publish order: a segment's tombstones apply to earlier
     // segments' adds (removed-then-added, the read-side contract), so
     // a row added then deleted inside the window nets out of `adds`
@@ -1426,12 +1597,14 @@ final class KbStore private (
       segment(s"$dir/del").foreach { del =>
         val d = del.select(keys.map(col(_)): _*)
         adds = adds.join(d, keys, "left_anti")
-        dels = dels.unionByName(d)
+        dels += d
       }
       segment(s"$dir/add").foreach(a =>
         adds = adds.unionByName(a.select(schema.columns.map(col(_)): _*)))
     }
-    Some((adds, dels.distinct()))
+    // no tombstones in the window: no del side, so a refresh stages no
+    // empty del segment for every later read of its chain to fold
+    Some((adds, dels.result().reduceOption(_.unionByName(_)).map(_.distinct())))
   }
 
   /** Distinct keys of `table` rows tombstoned by any del segment in
@@ -1500,7 +1673,7 @@ final class KbStore private (
     * Since round 13 the changed ids come from [[changedSince]]'s
     * segment route when the manifests prove it exact — O(batch) IO,
     * no corpus scan — with the original full anti-join pair as the
-    * fallback.
+    * fallback. A window without deletes commits no del segment.
     */
   def refreshAnnIndex(): Unit = annIndexState match {
     case KbStore.AnnCurrent => ()
@@ -1519,13 +1692,14 @@ final class KbStore private (
             metaCache.table_versions(KbStore.IvfAssignTable)) match {
           case Some((adds, dels)) =>
             (adds.select($"id".as("vec_id"), $"vec".as("embedding")),
-              dels.select($"id".as("vec_id")))
+              dels.map(_.select($"id".as("vec_id"))))
           case None =>
             val emb = embeddings.toDF()
               .select($"id".as("vec_id"), $"vec".as("embedding"))
             val old = read(KbStore.IvfAssignTable)
-            fullDiffWithReadds(emb, old.select($"vec_id"), "vec_id",
-              "embeddings")
+            val (nw, gone) = fullDiffWithReadds(emb, old.select($"vec_id"),
+              "vec_id", "embeddings")
+            (nw, Some(gone))
         }
       val packedCents = ivfCentroids()
         .map { case (cid, cv) => (cid, FloatVecDot.pack(cv.map(_.toFloat))) }
@@ -1534,7 +1708,7 @@ final class KbStore private (
         newEmb.select($"vec_id".as("id"), floatVecPack($"embedding").as("vec")),
         packedCents)
       commitDelta(Map(KbStore.IvfAssignTable ->
-        KbStore.TablePatch(del = Some(removed), add = Some(added))), identity,
+        KbStore.TablePatch(del = removed, add = Some(added))), identity,
         readSet = Set("embeddings", KbStore.IvfCentroidsTable))
   }
 
@@ -1825,12 +1999,13 @@ final class KbStore private (
             metaCache.table_versions(KbStore.SqCodesTable)) match {
           case Some((adds, dels)) =>
             (adds.select($"id".as("vec_id"), $"vec"),
-              dels.select($"id".as("vec_id")))
+              dels.map(_.select($"id".as("vec_id"))))
           case None =>
             val emb = embeddings.toDF().select($"id".as("vec_id"), $"vec")
             val old = read(KbStore.SqCodesTable)
-            fullDiffWithReadds(emb, old.select($"vec_id"), "vec_id",
-              "embeddings")
+            val (nw, gone) = fullDiffWithReadds(emb, old.select($"vec_id"),
+              "vec_id", "embeddings")
+            (nw, Some(gone))
         }
       val added = graft.ops.VectorQuant.sqEncodePacked(
           newEmb.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")))
@@ -1838,7 +2013,7 @@ final class KbStore private (
       // ENCODE work was already O(changed); the delta commit makes the
       // WRITE O(changed) too (the r5 verdict's remaining disclosure)
       commitDelta(Map(KbStore.SqCodesTable ->
-        KbStore.TablePatch(del = Some(removed), add = Some(added))), identity,
+        KbStore.TablePatch(del = removed, add = Some(added))), identity,
         readSet = Set("embeddings"))
   }
 
@@ -1992,13 +2167,13 @@ final class KbStore private (
             metaCache.table_versions(KbStore.IvfPqCodesTable)) match {
           case Some((adds, dels)) =>
             (adds.select($"id", floatVecPack($"vec").as("vec")),
-              dels.select($"id".as("vec_id")))
+              dels.map(_.select($"id".as("vec_id"))))
           case None =>
             val emb = embeddings.toDF().select($"id".as("vec_id"), $"vec")
             val (nw, rm) = fullDiffWithReadds(emb, old.select($"vec_id"),
               "vec_id", "embeddings")
             (nw.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")),
-              rm)
+              Some(rm))
         }
       val added = graft.ops.VectorQuant.ivfPqEncode(
           graft.ops.VectorQuant.ivfResiduals(newEmb, loadPqCents()),
@@ -2012,8 +2187,8 @@ final class KbStore private (
       val marker = readBucketMarker()
       val changedPps: Seq[Long] = marker match {
         case Some((_, _, parts, _)) if parts > 0 =>
-          added.select($"cid")
-            .union(old.join(removed, Seq("vec_id")).select($"cid"))
+          removed.foldLeft(added.select($"cid"))((cids, r) =>
+            cids.union(old.join(r, Seq("vec_id")).select($"cid")))
             .select(pmod($"cid", lit(parts.toLong)).as("pp"))
             .distinct().as[Long].collect().toSeq
         case _ => Nil
@@ -2021,7 +2196,7 @@ final class KbStore private (
       val preCodesVersion =
         metaCache.table_versions.get(KbStore.IvfPqCodesTable)
       commitDelta(Map(KbStore.IvfPqCodesTable ->
-        KbStore.TablePatch(del = Some(removed), add = Some(added))), identity,
+        KbStore.TablePatch(del = removed, add = Some(added))), identity,
         readSet = Set("embeddings", KbStore.IvfPqCentroidsTable,
           KbStore.IvfPqBooksTable))
       // keep the bucketed mirror current when one was materialized. A
@@ -2343,12 +2518,13 @@ final class KbStore private (
             metaCache.table_versions(KbStore.TextPostingsTable)) match {
           case Some((adds, dels)) =>
             (adds.select($"id".as("doc_id"), $"text"),
-              dels.select($"id".as("doc_id")))
+              dels.map(_.select($"id".as("doc_id"))))
           case None =>
             val live = docs.toDF().select($"id".as("doc_id"), $"text")
             val oldLens = read(KbStore.TextDocLensTable)
-            fullDiffWithReadds(live, oldLens.select($"doc_id"), "doc_id",
-              "docs")
+            val (nw, gone) = fullDiffWithReadds(live,
+              oldLens.select($"doc_id"), "doc_id", "docs")
+            (nw, Some(gone))
         }
       // tokenize the catch-up batch exactly as the original build did
       val (addPost, addLens) =
@@ -2361,10 +2537,10 @@ final class KbStore private (
       // base and deltas alike.
       try commitDelta(Map(
         KbStore.TextPostingsTable -> KbStore.TablePatch(
-          del = Some(goneIds),
+          del = goneIds,
           add = Some(KbStore.withTermBucket(addPost))),
         KbStore.TextDocLensTable -> KbStore.TablePatch(
-          del = Some(goneIds), add = Some(addLens))),
+          del = goneIds, add = Some(addLens))),
         identity, readSet = Set("docs"))
       finally { // buildIndex caches both
         addPost.unpersist(blocking = false)
@@ -2555,16 +2731,17 @@ final class KbStore private (
             metaCache.table_versions(KbStore.DedupBandsTable)) match {
           case Some((adds, dels)) =>
             (adds.select($"id".as("doc_id"), $"text"),
-              dels.select($"id".as("doc_id")))
+              dels.map(_.select($"id".as("doc_id"))))
           case None =>
             val live = docs.toDF().select($"id".as("doc_id"), $"text")
             val stored = read(KbStore.DedupBandsTable)
               .select($"doc_id").distinct()
-            fullDiffWithReadds(live, stored, "doc_id", "docs")
+            val (nw, gone) = fullDiffWithReadds(live, stored, "doc_id", "docs")
+            (nw, Some(gone))
         }
       commitDelta(Map(
         KbStore.DedupBandsTable -> KbStore.TablePatch(
-          del = Some(goneIds),
+          del = goneIds,
           add = Some(dedupBandsFor(newDocs, k, nh, rpb, uni)))),
         identity, readSet = Set("docs"))
   }
@@ -3270,8 +3447,13 @@ final class KbStore private (
   def close(vacuumFirst: Boolean = false): Unit = {
     // closing ends this writer's session — full reclamation is safe
     if (vacuumFirst) vacuum(retain = 0)
-    invalidate()
-    residents.clear()
+    synchronized {
+      cachedEmb.foreach(_._2.unpersist())
+      cachedEmb = None
+      dropIndex()
+      invalidate()
+      residents.clear()
+    }
   }
 }
 
@@ -3459,10 +3641,15 @@ object KbStore {
           (n, r.output.zip(n.output))
       })
 
-  /** Largest planned view (Parquet bytes) of `docs`, `ivf_assign`,
-    * `text_postings` or `text_doclens` a store keeps resident. A write
-    * to one of them makes the next read collect that whole table again.
-    * Measured on a 4-core box:
+  /** Largest planned view (Parquet bytes) of `docs`, `keyval`,
+    * `ivf_assign`, `text_postings` or `text_doclens` a store keeps
+    * resident. A write that appends to a table's delta chain costs the
+    * next read only the new segments, folded into the held rows; a
+    * write that rewrites the table (a compaction, a full commit) makes
+    * the next read collect the whole table again. The cap is checked
+    * on every new layout, so a table that grows past it leaves
+    * residency. Measured on a 4-core box, before the fold (every write
+    * made the next read collect the whole table):
     *   - docs: a loop of `updateDocMeta` then one `fetchDoc` costs about
     *     what it does with the filtered read at 86 KB, +5% at 257 KB and
     *     +17% at 0.8 MB, and every further read per write saves a whole
@@ -3485,8 +3672,9 @@ object KbStore {
     */
   val ResidentMaxBytes: Long = 1L << 20
 
-  /** One resident table: its driver-side form and its row count. */
-  private final case class Resident(value: AnyRef, rows: Int)
+  /** One resident table: the rows collected (kept so a later layout
+    * can fold its new segments into them) and their driver-side form. */
+  private final case class Resident(rows: Array[_], value: AnyRef)
 
   /** Every doc row of one docs layout, keyed by id and by emb_id: the
     * resident doc table read paths hydrate hits from. */
@@ -3540,19 +3728,22 @@ object KbStore {
       s"store already exists at $path")
     Files.createDirectories(p)
     import spark.implicits._
-    spark.createDataset(Seq.empty[Doc]).write
-      .mode(SaveMode.Overwrite).parquet(s"$path/docs/v0")
-    spark.createDataset(Seq.empty[Emb]).write
-      .mode(SaveMode.Overwrite).parquet(s"$path/embeddings/v0")
-    spark.createDataset(Seq.empty[Edge]).write
-      .mode(SaveMode.Overwrite).parquet(s"$path/edges/v0")
-    spark.createDataset(Seq.empty[KV]).write
-      .mode(SaveMode.Overwrite).parquet(s"$path/keyval/v0")
+    val empty = Seq(
+      "docs" -> spark.createDataset(Seq.empty[Doc]).toDF(),
+      "embeddings" -> spark.createDataset(Seq.empty[Emb]).toDF(),
+      "edges" -> spark.createDataset(Seq.empty[Edge]).toDF(),
+      "keyval" -> spark.createDataset(Seq.empty[KV]).toDF())
+    empty.foreach { case (name, df) =>
+      df.write.mode(SaveMode.Overwrite).parquet(s"$path/$name/v0")
+    }
     val meta = KbMeta(SchemaVersion,
       java.time.Instant.now().toString, embeddingParams, 0L, 0L, 0L,
       TableNames.map(_ -> 0L).toMap)
     writeMetaAtomic(path, meta)
-    new KbStore(spark, path)
+    val kb = new KbStore(spark, path)
+    kb.seedSchemas(meta,
+      empty.map { case (name, df) => s"$path/$name/v0" -> df.schema })
+    kb
   }
 
   /** One schema-migration step: rewrite a version-`from` store in place

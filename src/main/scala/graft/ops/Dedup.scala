@@ -1021,16 +1021,9 @@ object Dedup {
           tr.select(col("tid").as("id"), col("tv").as("vec")), dim, bits, nb, 42L)
         val skTe = PairwiseTopK.signSketches(
           te.select(col("qid").as("id"), col("qv").as("vec")), dim, bits, nb, 42L)
-        val a = skTr.select(posexplode(col("bkeys")).as(Seq("band", "bkey")),
-          col("id").as("tid"), col("sk").as("sk1"))
-        val b = skTe.select(posexplode(col("bkeys")).as(Seq("band", "bkey")),
-          col("id").as("qid"), col("sk").as("sk2"))
-        val cands = a.join(b, Seq("band", "bkey"))
-          .select(col("qid"), col("tid"),
-            expr("aggregate(zip_with(sk1, sk2, (x, y) -> bit_count(x ^ y)), 0, (s, h) -> s + h)")
-              .as("hamming"))
+        val cands = PairwiseTopK.bandCandidates(skTr, skTe, "tid", "qid")
           .where(col("hamming") <= maxHam)
-          .select(col("qid"), col("tid")).distinct()
+          .select(col("qid"), col("tid"))
         cands.join(tr, "tid").join(te, "qid")
           .select(col("qid"), col("tid"),
             round(floatVecDot(col("qv"), col("tv")), 6).as("cos"))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale paths for §3.3 `document_top_pairwise_scores`
@@ -261,6 +261,29 @@ object PairwiseTopK {
       .toDF("id", "sk", "bkeys")
   }
 
+  /** Full-sketch Hamming distance between array columns `sk1` and `sk2`. */
+  private def hammingCol: Column =
+    expr("aggregate(zip_with(sk1, sk2, (x, y) -> bit_count(x ^ y)), 0, (s, h) -> s + h)")
+
+  /** The distinct (`left`, `right`) id pairs that share a band key, each
+    * with its full-sketch Hamming distance as `hamming`. `a` and `b` are
+    * [[signSketches]] outputs (`b` may be `a`). A band row carries only
+    * its id: the sketch, `sketchBits / 8` bytes, is joined back once per
+    * candidate pair rather than repeated on every band row, where it
+    * made the band join's shuffle and sort grow with bands × sketch
+    * size. */
+  private[ops] def bandCandidates(a: DataFrame, b: DataFrame, left: String,
+      right: String, pairFilter: Option[Column] = None): DataFrame = {
+    def bandRows(sk: DataFrame, id: String) =
+      sk.select(posexplode(col("bkeys")).as(Seq("band", "bkey")), col("id").as(id))
+    val joined = bandRows(a, left).join(bandRows(b, right), Seq("band", "bkey"))
+    pairFilter.fold(joined)(joined.where)
+      .select(col(left), col(right)).distinct()
+      .join(a.select(col("id").as(left), col("sk").as("sk1")), left)
+      .join(b.select(col("id").as(right), col("sk").as("sk2")), right)
+      .select(col(left), col(right), hammingCol.as("hamming"))
+  }
+
   /** Approximate top-k pairs at corpus scale: sign-sketch banding +
     * Hamming prefilter + exact re-rank of the best `rerank` candidates.
     */
@@ -271,18 +294,8 @@ object PairwiseTopK {
     val sketches = signSketches(packed, dim, sketchBits, bands, seed)
 
     // 2. banded collisions → candidate pairs ranked by full-sketch Hamming
-    val banded = sketches.select(col("id"), col("sk"),
-      posexplode(col("bkeys")).as(Seq("band", "bkey")))
-    val a = banded.select(col("band"), col("bkey"),
-      col("id").as("id1"), col("sk").as("sk1"))
-    val c = banded.select(col("band"), col("bkey"),
-      col("id").as("id2"), col("sk").as("sk2"))
-    val cands = a.join(c, Seq("band", "bkey"))
-      .where(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        expr("aggregate(zip_with(sk1, sk2, (x, y) -> bit_count(x ^ y)), 0, (s, h) -> s + h)")
-          .as("hamming"))
-      .groupBy(col("id1"), col("id2")).agg(min(col("hamming")).as("hamming"))
+    val cands = bandCandidates(sketches, sketches, "id1", "id2",
+        Some(col("id1") < col("id2")))
       .orderBy(col("hamming"), col("id1"), col("id2"))
       .limit(rerank)
 
@@ -354,19 +367,10 @@ object PairwiseTopK {
       math.acos(math.max(-1.0, math.min(1.0, threshold))) / math.Pi *
         hammingSlack).toInt
 
-    val banded = sketches.select(col("id"), col("sk"),
-      posexplode(col("bkeys")).as(Seq("band", "bkey")))
-    val a = banded.select(col("band"), col("bkey"),
-      col("id").as("id1"), col("sk").as("sk1"))
-    val c = banded.select(col("band"), col("bkey"),
-      col("id").as("id2"), col("sk").as("sk2"))
-    val cands = a.join(c, Seq("band", "bkey"))
-      .where(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        expr("aggregate(zip_with(sk1, sk2, (x, y) -> bit_count(x ^ y)), 0, (s, h) -> s + h)")
-          .as("hamming"))
+    val cands = bandCandidates(sketches, sketches, "id1", "id2",
+        Some(col("id1") < col("id2")))
       .where(col("hamming") <= maxHam)
-      .select(col("id1"), col("id2")).distinct()
+      .select(col("id1"), col("id2"))
 
     import graft.functions.FloatVecDot.floatVecDot
     val v1 = packed.select(col("id").as("id1"), col("vec").as("v1"))

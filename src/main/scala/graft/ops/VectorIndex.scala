@@ -32,13 +32,24 @@ import org.apache.spark.storage.StorageLevel
   * A driver-local index ([[isLocal]]) also scores a given id list
   * ([[scoreLocal]]): the candidate-scoring half of an IVF probe, with
   * no Spark job, exactly as `FloatVecDot` scores those rows in a plan.
+  *
+  * A driver-local index also takes a write without a rebuild:
+  * [[updated]] returns a driver-only index (stripes, no RDD) with some
+  * ids removed and a new stripe of rows added. Scores are the same
+  * kernel's over the same bytes, and [[topK]] orders the global
+  * (score, id) list, so the answer does not depend on how the rows are
+  * striped.
   */
 final class VectorIndex private (
-    blocks: RDD[(Array[Long], Array[Byte])],
-    val dim: Int) extends Serializable {
+    blocks: Option[RDD[(Array[Long], Array[Byte])]],
+    val dim: Int,
+    stripes: Option[Array[(Array[Long], Array[Byte])]]) extends Serializable {
 
   /** Number of indexed vectors. */
-  lazy val count: Long = blocks.map(_._1.length.toLong).sum().toLong
+  lazy val count: Long = localBlocks match {
+    case Some(s) => s.iterator.map(_._1.length.toLong).sum
+    case None => blocks.get.map(_._1.length.toLong).sum().toLong
+  }
 
   /** Driver-local copy of the blocks for small indexes: below this many
     * vectors the whole matrix is cheaper to hold on the driver (it is
@@ -46,7 +57,7 @@ final class VectorIndex private (
     * per query — a 10k×1536 corpus is 65 MB and scans in ~10 ms, while
     * job dispatch alone costs ~30-50 ms.
     */
-  private var localBlocks: Option[Array[(Array[Long], Array[Byte])]] = None
+  private var localBlocks: Option[Array[(Array[Long], Array[Byte])]] = stripes
 
   /** id -> (stripe << 32 | row) over [[localBlocks]], built by the first
     * [[scoreLocal]]. */
@@ -56,29 +67,57 @@ final class VectorIndex private (
     * first-query matrix build); indexes under `localThreshold` vectors
     * are additionally pinned on the driver for job-free queries.
     */
-  def materialize(localThreshold: Long = 200000): VectorIndex = {
-    if (count <= localThreshold) {
+  def materialize(
+      localThreshold: Long = VectorIndex.LocalThreshold): VectorIndex = {
+    if (!isLocal && count <= localThreshold) {
       // stripe once across cores so local queries parallelize without
       // per-query copying
-      val rowBytes = dim * 4
       localRowOf = None
-      localBlocks = Some(blocks.collect().flatMap { case (ids, mat) =>
-        val n = ids.length
-        val nStripes = math.min(
-          Runtime.getRuntime.availableProcessors(), math.max(1, n / 1024))
-        (0 until nStripes).map { s =>
-          val lo = (n.toLong * s / nStripes).toInt
-          val hi = (n.toLong * (s + 1) / nStripes).toInt
-          (java.util.Arrays.copyOfRange(ids, lo, hi),
-            java.util.Arrays.copyOfRange(mat, lo * rowBytes, hi * rowBytes))
-        }
+      localBlocks = Some(blocks.get.collect().flatMap { case (ids, mat) =>
+        VectorIndex.striped(ids, mat, dim)
       })
     }
     this
   }
 
+  /** Release the executor blocks and the driver copy made from them. A
+    * driver-only index ([[updated]]) holds no executor blocks and stays
+    * usable: its stripes go with the object. */
   def unpersist(): Unit = synchronized {
-    blocks.unpersist(); localBlocks = None; localRowOf = None
+    blocks.foreach { b => b.unpersist(); localBlocks = None; localRowOf = None }
+  }
+
+  /** A driver-only index of this one's vectors without the ids in
+    * `removed`, plus the rows `addIds` (packed f32 rows in `addMat`,
+    * as `FloatVecPack` packs them) as one more stripe. Stripes that
+    * lose no row are shared, not copied; once there are more stripes
+    * than cores, all rows are cut into fresh stripes as [[materialize]]
+    * cuts them. Requires [[isLocal]].
+    */
+  def updated(removed: scala.collection.Set[Long], addIds: Array[Long],
+      addMat: Array[Byte]): VectorIndex = {
+    val held = synchronized(localBlocks).getOrElse(
+      throw new IllegalStateException("updated needs a driver-local index"))
+    val rowBytes = dim * 4
+    val kept = held.flatMap { case (ids, mat) =>
+      if (removed.isEmpty || !ids.exists(removed.contains)) Some((ids, mat))
+      else {
+        val keep = ids.indices.filterNot(r => removed.contains(ids(r))).toArray
+        Option.when(keep.nonEmpty) {
+          val m = new Array[Byte](keep.length * rowBytes)
+          keep.indices.foreach { j =>
+            System.arraycopy(mat, keep(j) * rowBytes, m, j * rowBytes, rowBytes)
+          }
+          (keep.map(ids), m)
+        }
+      }
+    }
+    val all = if (addIds.isEmpty) kept else kept :+ ((addIds, addMat))
+    val next =
+      if (all.length <= Runtime.getRuntime.availableProcessors()) all
+      else VectorIndex.striped(all.flatMap(_._1),
+        Array.concat(all.map(_._2).toSeq: _*), dim)
+    new VectorIndex(None, dim, Some(next))
   }
 
   /** Whether the blocks are held on the driver (see [[materialize]]). */
@@ -126,7 +165,8 @@ final class VectorIndex private (
   def memoryResidency(): Double = localBlocks match {
     case Some(_) => 1.0
     case None =>
-      blocks.sparkContext.getRDDStorageInfo.find(_.id == blocks.id) match {
+      val rdd = blocks.get
+      rdd.sparkContext.getRDDStorageInfo.find(_.id == rdd.id) match {
         case Some(info) if info.numPartitions > 0 =>
           val cachedFrac =
             info.numCachedPartitions.toDouble / info.numPartitions
@@ -174,7 +214,7 @@ final class VectorIndex private (
         java.util.Arrays.stream(stripes.indices.toArray).parallel()
           .mapToObj(i => scanPartition(Iterator.single(stripes(i))).next())
           .toArray(new Array[Array[(Double, Long)]](_))
-      case None => blocks.mapPartitions(scanPartition).collect()
+      case None => blocks.get.mapPartitions(scanPartition).collect()
     }
     perPart.flatten
       .sortBy { case (s, id) => (-s, -id) } // desc score, larger id first
@@ -185,6 +225,26 @@ final class VectorIndex private (
 }
 
 object VectorIndex {
+
+  /** At most this many vectors are held on the driver by default (see
+    * [[VectorIndex.materialize]]). */
+  val LocalThreshold: Long = 200000L
+
+  /** One block cut into `min(cores, n / 1024)` (at least one) stripes of
+    * consecutive rows. */
+  private def striped(ids: Array[Long], mat: Array[Byte],
+      dim: Int): Array[(Array[Long], Array[Byte])] = {
+    val rowBytes = dim * 4
+    val n = ids.length
+    val nStripes = math.min(
+      Runtime.getRuntime.availableProcessors(), math.max(1, n / 1024))
+    Array.tabulate(nStripes) { s =>
+      val lo = (n.toLong * s / nStripes).toInt
+      val hi = (n.toLong * (s + 1) / nStripes).toInt
+      (java.util.Arrays.copyOfRange(ids, lo, hi),
+        java.util.Arrays.copyOfRange(mat, lo * rowBytes, hi * rowBytes))
+    }
+  }
 
   private val heapOrder: java.util.Comparator[(Double, Long)] =
     (a: (Double, Long), b: (Double, Long)) => {
@@ -223,7 +283,7 @@ object VectorIndex {
         }
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    new VectorIndex(blocks, dim)
+    new VectorIndex(Some(blocks), dim, None)
   }
 
   /** Build from an (id LONG, vec ARRAY<FLOAT>) embeddings table. */

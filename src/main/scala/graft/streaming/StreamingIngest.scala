@@ -545,8 +545,12 @@ object StreamingIngest {
         if (kb.pqIndexState == graft.core.KbStore.AnnStale)
           kb.refreshPqIndex()
       }
+      // only a stage that ran can have emptied the batch `rawBatch.isEmpty`
+      // found non-empty (`identity` curation returns the batch itself),
+      // so the emptiness checks below run, each one job, only after one
+      val filtered = dedupScreen.isDefined || (batch ne rawBatch)
       try {
-        if (toAdd.isEmpty) {
+        if (filtered && toAdd.isEmpty) {
           // every doc was a dup: still advance the marker so a replay
           // doesn't re-screen the batch forever
           kb.setKey(markerKey, batchId)
@@ -572,7 +576,7 @@ object StreamingIngest {
             case None => (toAdd, () => ())
           }
         try {
-          if (toCommit.isEmpty) {
+          if (semanticScreen.isDefined && toCommit.isEmpty) {
             kb.setKey(markerKey, batchId)
             refreshStaleFamilies()
             return true

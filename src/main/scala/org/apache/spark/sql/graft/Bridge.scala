@@ -2,16 +2,22 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 
-/** The one `private[sql]` doorway the custom-plan tier needs: turn a
-  * hand-built [[LogicalPlan]] into a user-facing DataFrame
+/** The `private[sql]` doorways the store and the custom-plan tier need:
+  * turn a hand-built [[LogicalPlan]] into a user-facing DataFrame
   * (`Dataset.ofRows` — package-private to `org.apache.spark.sql`,
-  * which is why this object lives under it). Everything else in the
-  * custom-operator stack (logical node, strategy, exec node,
-  * `extraStrategies` registration) uses public APIs.
+  * which is why this object lives under it), and make a schema
+  * nullable as Spark's Parquet writer does (`StructType.asNullable`).
+  * Everything else in the custom-operator stack (logical node,
+  * strategy, exec node, `extraStrategies` registration) uses public
+  * APIs.
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSparkSession], plan)
+
+  /** `schema` with every field nullable, at every depth. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 }

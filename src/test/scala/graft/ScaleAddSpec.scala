@@ -158,7 +158,7 @@ class ScaleAddSpec extends SparkSpec {
     try {
       val url =
         s"http://127.0.0.1:${server.getAddress.getPort}/stall.txt"
-      val tmp = Files.createTempFile("graft-stall", ".tmp")
+      val tmp = tempDir("graft-stall").resolve("stall.tmp")
       // without a REQUEST timeout this blocks forever (and with it held,
       // the per-URL single-flight lock would wedge every other fetcher)
       intercept[java.net.http.HttpTimeoutException] {

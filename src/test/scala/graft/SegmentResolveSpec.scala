@@ -4,9 +4,10 @@ import org.apache.spark.sql.graft.SpecProbes
 
 import graft.core.KbStore
 
-/** Each published segment directory is listed and schema-inferred once
-  * per store; the memo must stay exact across every mutation that
-  * moves the manifest, and bounded by what the live manifest names. */
+/** Each published segment directory is listed and schema-resolved once
+  * per store (with the schema it was written with, when this store wrote
+  * it); the memo must stay exact across every mutation that moves the
+  * manifest, and bounded by what the live manifest names. */
 class SegmentResolveSpec extends SparkSpec {
 
   private def freshPath(): String =
@@ -120,6 +121,62 @@ class SegmentResolveSpec extends SparkSpec {
     kb.vacuum(retain = 0)
     assertMemoLive(kb)
     assert(kb.countKeys == 40)
+    kb.close()
+  }
+
+  test("a segment this store wrote is read with the schema it wrote, " +
+      "as inference would read it, and with no job") {
+    import spark.implicits._
+    val kb = KbStore.create(spark, freshPath(), provider.params,
+      forceFresh = true)
+    kb.bulkAddDocsDistributed(texts(30).toDF("text"), provider)
+    kb.addEdges(Seq((1L, 2L, 3L, Some(0.5), true), (4L, 5L, 6L, None, false)))
+    kb.setKey("k", "v")
+    kb.buildStats()
+    kb.buildAnnIndex(nlist = 4, iters = 1)
+    kb.buildSqIndex()
+    kb.buildPqIndex(nlist = 4, m = 4, ncodes = 16, iters = 2, sampleMod = 1)
+    kb.buildTextIndex()
+    kb.buildDedupIndex()
+    // del and add segments of every family
+    kb.bulkAddDocs(provider)(a => texts(3, 100).foreach(a.add(_)))
+    kb.bulkDelDocs(Seq(3L))
+    kb.delKey("k")
+    kb.setKey("k2", 2.5)
+    kb.refreshAnnIndex()
+    kb.refreshSqIndex()
+    kb.refreshPqIndex()
+    kb.refreshTextIndex()
+    kb.refreshDedupIndex()
+    def live: Set[String] = {
+      val m = kb.meta
+      m.table_versions.keySet.flatMap { name =>
+        val base = m.table_bases.getOrElse(name, m.table_versions(name))
+        s"${kb.path}/$name/v$base" +:
+          m.table_deltas.getOrElse(name, Nil).flatMap { v =>
+            Seq(s"${kb.path}/$name/v$v/del", s"${kb.path}/$name/v$v/add")
+          }
+      }
+    }
+    def assertAsInferred(deltas: Boolean): Unit = {
+      val tables = kb.meta.table_versions.keys.toSeq
+      assert(KbStore.IndexTables.forall(tables.contains), tables)
+      val jobs = jobsDuring(tables.foreach(t =>
+        kb.readTableForSpec(t).queryExecution.optimizedPlan.stats))
+      assert(jobs == 0, s"resolving the store's own segments ran $jobs jobs")
+      val withFiles = live.filter(d =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(d)) &&
+          kb.segmentSchemaForSpec(d).isDefined)
+      assert(withFiles.exists(_.contains(s"/${KbStore.TextPostingsTable}/")))
+      assert(withFiles.exists(_.endsWith("/del")) == deltas)
+      withFiles.foreach { d =>
+        assert(kb.segmentSchemaForSpec(d).contains(spark.read.parquet(d).schema),
+          s"segment $d")
+      }
+    }
+    assertAsInferred(deltas = true)
+    kb.compact()
+    assertAsInferred(deltas = false)
     kb.close()
   }
 
