@@ -1925,10 +1925,7 @@ object Bench {
             stream2.addData(batchTexts(b))
             q2.processAllAvailable()
           }
-          if (kb.annIndexState == graft.core.KbStore.AnnStale)
-            kb.refreshAnnIndex()
-          if (kb.textIndexState == graft.core.KbStore.AnnStale)
-            kb.refreshTextIndex()
+          kb.refreshStaleIndexes()
         }
       } finally {
         try q2.stop() catch { case _: Throwable => () }

@@ -601,25 +601,24 @@ final class KbStore private (
             .parquet(tableDir(name, next))
           tableDir(name, next) -> df.schema
         }
-        var pointers = cur.table_versions ++ updated.keys.map(_ -> next)
+        // a new embeddings version invalidates the vector-derived index
+        // families: REPLACED vectors drop their pointers entirely (the
+        // dirs are reclaimed by the next vacuum); add/delete-only
+        // mutations pass `preserveIndex` and merely leave them STALE
+        // (older version than embeddings) — existing rows stay valid and
+        // each family's refresh catches it up incrementally
+        val dropped =
+          if (updated.contains("embeddings") &&
+              !updated.contains(KbStore.IvfAssignTable) && !preserveIndex)
+            KbStore.VectorIndexTables
+          else Nil
         // a full rewrite replaces the whole table at the new version, so
         // any merge-on-read segment chain it had is obsolete
-        var bases = cur.table_bases -- updated.keys
-        var deltaChains = cur.table_deltas -- updated.keys
-        // a new embeddings version invalidates a batch-built ANN index:
-        // REPLACED vectors drop its pointers entirely (the dirs are
-        // reclaimed by the next vacuum); add/delete-only mutations pass
-        // `preserveIndex` and merely leave it STALE (older version than
-        // embeddings) — existing assignments stay valid and
-        // refreshAnnIndex() catches the index up incrementally
-        if (updated.contains("embeddings") &&
-            !updated.contains(KbStore.IvfAssignTable) && !preserveIndex) {
-          pointers = pointers -- KbStore.VectorIndexTables
-          bases = bases -- KbStore.VectorIndexTables
-          deltaChains = deltaChains -- KbStore.VectorIndexTables
-        }
-        val m = newMeta(cur).copy(version = next, table_versions = pointers,
-          table_bases = bases, table_deltas = deltaChains)
+        val m = newMeta(cur).copy(version = next,
+          table_versions =
+            cur.table_versions ++ updated.keys.map(_ -> next) -- dropped,
+          table_bases = cur.table_bases -- updated.keys -- dropped,
+          table_deltas = cur.table_deltas -- updated.keys -- dropped)
         prePublishHook()
         KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
         metaCache = m
@@ -754,14 +753,9 @@ final class KbStore private (
         patch.add.foreach(stage(_, s"${tableDir(name, next)}/add",
           KbStore.DeltaPartitioning.get(name)))
       }
-      var pointers = cur.table_versions ++ patches.keys.map(_ -> next)
+      val pointers = cur.table_versions ++ patches.keys.map(_ -> next)
       var bases = cur.table_bases
       var deltaChains = cur.table_deltas
-      if (dropStats) {
-        pointers -= KbStore.StatsTable
-        bases -= KbStore.StatsTable
-        deltaChains -= KbStore.StatsTable
-      }
       // minor-compacted tables keep their base; the chain collapses to
       // the one merged segment just staged
       overflow.keys.foreach { name =>
@@ -776,13 +770,13 @@ final class KbStore private (
       // same invalidation clause as the full commit: an embeddings
       // patch without preserveIndex is a vector REPLACEMENT — the
       // vector-derived families' pointers (and chains) drop
-      if (patches.contains("embeddings") && !preserveIndex) {
-        pointers = pointers -- KbStore.VectorIndexTables
-        bases = bases -- KbStore.VectorIndexTables
-        deltaChains = deltaChains -- KbStore.VectorIndexTables
-      }
-      val m = newMeta(cur).copy(version = next, table_versions = pointers,
-        table_bases = bases, table_deltas = deltaChains)
+      val dropped = (if (dropStats) Seq(KbStore.StatsTable) else Nil) ++
+        (if (patches.contains("embeddings") && !preserveIndex)
+           KbStore.VectorIndexTables
+         else Nil)
+      val m = newMeta(cur).copy(version = next,
+        table_versions = pointers -- dropped,
+        table_bases = bases -- dropped, table_deltas = deltaChains -- dropped)
       prePublishHook()
       KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
       metaCache = m
@@ -1483,20 +1477,90 @@ final class KbStore private (
   // vector index in batch"; no reference counterpart, its only index is
   // the in-RAM matrix)
   // ------------------------------------------------------------------
-  /** Index lifecycle: `None` — never built or invalidated by vector
-    * replacement (rebuild required); `Stale` — docs were added/deleted
-    * since the build, existing assignments still valid
-    * ([[refreshAnnIndex]] catches up incrementally); `Current` —
-    * serves queries. Freshness is pure manifest arithmetic: the index
-    * is current iff its table version is at least the embeddings
-    * table's version.
-    */
-  def annIndexState: KbStore.AnnState = {
+  /** Index lifecycle of family `f` (see [[KbStore.IndexFamily]]):
+    * `None` — never built or invalidated by vector replacement (rebuild
+    * required); `Stale` — source rows were added/deleted since the
+    * build, existing rows still valid (its refresh catches up
+    * incrementally); `Current` — serves queries. */
+  private def indexState(f: KbStore.IndexFamily): KbStore.AnnState = {
     val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.IvfAssignTable)) KbStore.AnnNone
-    else if (tv(KbStore.IvfAssignTable) >= tv("embeddings")) KbStore.AnnCurrent
+    if (!tv.contains(f.watermark)) KbStore.AnnNone
+    else if (tv(f.watermark) >= tv(f.source)) KbStore.AnnCurrent
     else KbStore.AnnStale
   }
+
+  /** Refuse to serve a family that is not current — silently-stale
+    * answers are worse than an error. */
+  private def requireCurrent(f: KbStore.IndexFamily,
+      staleHint: String = "to catch it up"): Unit = {
+    val s = indexState(f)
+    require(s == KbStore.AnnCurrent,
+      if (s == KbStore.AnnStale)
+        s"${f.words} is stale: call refresh${f.name}Index() $staleHint"
+      else s"no ${f.words}: call build${f.name}Index()")
+  }
+
+  private def refreshIfStale(f: KbStore.IndexFamily): Unit =
+    if (indexState(f) == KbStore.AnnStale) f.refresh(this)
+
+  /** Catch every stale family up, in [[KbStore.IndexFamily.All]]'s order;
+    * families that were never built stay absent. */
+  private[graft] def refreshStaleIndexes(): Unit =
+    KbStore.IndexFamily.All.foreach(refreshIfStale)
+
+  /** The shared head of every `refresh*Index`: a current family is a
+    * no-op and a missing one throws. A stale one gets the source rows it
+    * missed as `(key, payload)` rows to (re-)index plus the keys whose
+    * index rows must tombstone, and `apply` encodes and commits them.
+    *
+    * The changed rows come from [[changedSince]]'s segment route when
+    * the manifests prove it exact — O(batch) IO, no corpus scan — and
+    * from the full keyed diff ([[fullDiffWithReadds]]) otherwise. A
+    * window without deletes yields no tombstones, so the refresh stages
+    * no del segment.
+    */
+  private def refreshFamily(f: KbStore.IndexFamily)(
+      apply: (DataFrame, Option[DataFrame]) => Unit): Unit = {
+    lastRefreshRoute = None
+    indexState(f) match {
+      case KbStore.AnnCurrent => ()
+      case KbStore.AnnNone => throw new IllegalStateException(
+        s"no ${f.words} to refresh — call build${f.name}Index()")
+      case KbStore.AnnStale =>
+        def project(rows: DataFrame) =
+          rows.select(col("id").as(f.key), col(f.payload))
+        val window =
+          changedSince(f.source, metaCache.table_versions(f.watermark))
+        // engagement probe: RefreshFastPathSpec's parity tests are
+        // vacuous if the fast path silently stops engaging (route parity
+        // with the fallback is then parity with itself)
+        lastRefreshRoute = Some(if (window.isDefined) "segment" else "full")
+        window match {
+          case Some((adds, dels)) =>
+            apply(project(adds), dels.map(_.select(col("id").as(f.key))))
+          case None =>
+            val live =
+              if (f.source == "embeddings") embeddings.toDF() else read(f.source)
+            val (nw, gone) = fullDiffWithReadds(project(live),
+              read(f.keyed).select(col(f.key)).distinct(), f.key, f.source)
+            apply(nw, Some(gone))
+        }
+    }
+  }
+
+  /** Which route the most recent refresh resolved to:
+    * Some("segment") = delta-chain fast path proved exact,
+    * Some("full") = it fell back to the full keyed diff,
+    * None = it had nothing to catch up (or no refresh ran yet). Test
+    * probe; every refresh clears it first, so a no-op never reports the
+    * route of the refresh before it.
+    * Single writer: only refreshes write it and the store runs one
+    * refresh at a time; `@volatile` makes a value written on an ingest
+    * thread visible to the reading test thread. Refreshes of two
+    * families racing on two threads would leave whichever wrote last. */
+  @volatile private[graft] var lastRefreshRoute: Option[String] = None
+
+  def annIndexState: KbStore.AnnState = indexState(KbStore.IndexFamily.Ann)
 
   /** Whether a CURRENT ANN index exists (a stale one never serves). */
   def hasAnnIndex: Boolean = annIndexState == KbStore.AnnCurrent
@@ -1504,11 +1568,12 @@ final class KbStore private (
   /** Net rows added to / keys removed from `table` strictly after
     * manifest version `since`, derived from the delta-segment chain
     * alone — O(changed) IO with NO full-table scan and NO anti-join
-    * over the corpus. The segment route is exact iff the table's base
-    * pointer is unchanged since `since` and the head's chain extends
-    * `since`'s chain (the [[tableChangelog]] criterion); anything else
-    * (a compaction, a full rewrite, a vacuumed history file) returns
-    * None and the caller falls back to the full keyed diff.
+    * over the corpus. The segment route is exact iff the table's
+    * layout at `since` extends to the head's ([[extendsLayout]]: same
+    * base, chain extended); anything else (a compaction, a full
+    * rewrite, a vacuumed history file) returns None and the caller
+    * falls back to the full keyed diff. `since` is a family's coverage
+    * watermark (see [[KbStore.IndexFamily]]).
     *
     * This is what makes the per-batch index refreshes of a
     * continuously ingesting store O(batch): before round 13 every
@@ -1517,18 +1582,6 @@ final class KbStore private (
     * is two corpus scans plus two corpus-sized exchanges per
     * micro-batch; the segment route reads exactly the delta files the
     * index missed.
-    *
-    * WATERMARK INVARIANT (r13 advice): every caller passes
-    * `tv(indexTable)` as `since`, treating the index table's manifest
-    * version as a COVERAGE watermark over the data table. That is
-    * valid because every index-table writer (build*, refresh*) commits
-    * in the same manifest transaction that reads the data table's
-    * current head — an index row set at version V has, by
-    * construction, folded every data segment ≤ V. A future writer
-    * that bumps an index table's version WITHOUT covering the data
-    * table (e.g. a metadata-only rewrite of the postings layout) would
-    * silently skip rows here; such a writer must either keep the index
-    * version below the data table's or use a full rebuild path.
     */
   private def changedSince(table: String, since: Long)
       : Option[(DataFrame, Option[DataFrame])] = {
@@ -1536,46 +1589,21 @@ final class KbStore private (
     // refresh paths with the segment route DISABLED (forcing every
     // refresh onto the full keyed diff) so the O(corpus) → O(batch)
     // claim has a before/after on one tree. Announces itself once.
-    val r =
-      if (sys.props.get("graft.kb.forceFullRefreshDiff").contains("true")) {
-        if (KbStore.forceFullWarned.compareAndSet(false, true))
-          System.err.println("[graft] warning: graft.kb.forceFullRefreshDiff " +
-            "is set; every index refresh takes the full keyed diff")
-        None
-      } else changedSinceImpl(table, since)
-    // engagement probe (r13 verdict item 3): RefreshFastPathSpec's
-    // parity tests are vacuous if the fast path silently stops
-    // engaging (route parity with the fallback is then parity with
-    // itself) — the spec asserts this flag after each refresh
-    lastRefreshRoute = Some(if (r.isDefined) "segment" else "full")
-    r
-  }
-
-  /** Which route the most recent [[changedSince]] call resolved to:
-    * Some("segment") = delta-chain fast path proved exact,
-    * Some("full") = caller fell back to the full keyed diff,
-    * None = no refresh has derived changed ids yet. Test probe.
-    * Single writer: only refreshes write it and the store runs one
-    * refresh at a time; `@volatile` makes a value written on an ingest
-    * thread visible to the reading test thread. Refreshes of two
-    * families racing on two threads would leave whichever wrote last. */
-  @volatile private[graft] var lastRefreshRoute: Option[String] = None
-
-  private def changedSinceImpl(table: String, since: Long)
-      : Option[(DataFrame, Option[DataFrame])] = {
+    if (sys.props.get("graft.kb.forceFullRefreshDiff").contains("true")) {
+      if (KbStore.forceFullWarned.compareAndSet(false, true))
+        System.err.println("[graft] warning: graft.kb.forceFullRefreshDiff " +
+          "is set; every index refresh takes the full keyed diff")
+      return None
+    }
     val head = metaCache
     if (!head.table_versions.contains(table)) return None
     val old =
       if (since == head.version) head
       else scala.util.Try(metaAt(since)).getOrElse(return None)
     if (!old.table_versions.contains(table)) return None
-    def basePtr(m: KbMeta): Long =
-      m.table_bases.getOrElse(table, m.table_versions(table))
-    val oldChain = old.table_deltas.getOrElse(table, Seq.empty[Long])
-    val headChain = head.table_deltas.getOrElse(table, Seq.empty[Long])
-    if (basePtr(old) != basePtr(head) || !headChain.startsWith(oldChain))
-      return None
-    val appended = headChain.drop(oldChain.size)
+    val (from, to) = (layoutOf(old, table), layoutOf(head, table))
+    if (!extendsLayout(from, to)) return None
+    val appended = to._2.drop(from._2.size)
     // plan-depth cap (r13 verdict item 6): the fold below builds one
     // left_anti + union operator pair PER segment, so Catalyst
     // analysis cost grows with the window length. The head chain is
@@ -1668,44 +1696,19 @@ final class KbStore private (
     * one pass over the old assignment, no re-clustering. The "update
     * the index in batch" half of the index story; no-op when current,
     * error when no index survives (vector replacement requires
-    * [[buildAnnIndex]]).
-    *
-    * Since round 13 the changed ids come from [[changedSince]]'s
-    * segment route when the manifests prove it exact — O(batch) IO,
-    * no corpus scan — with the original full anti-join pair as the
-    * fallback. A window without deletes commits no del segment.
+    * [[buildAnnIndex]]). Changed ids come from [[refreshFamily]].
     */
-  def refreshAnnIndex(): Unit = annIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no ANN index to refresh — call buildAnnIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
+  def refreshAnnIndex(): Unit = refreshFamily(KbStore.IndexFamily.Ann) {
+    (changed, removed) =>
       import graft.functions.FloatVecDot
       import graft.functions.FloatVecPack.floatVecPack
       // delta commit: tombstone assignments of deleted ids, append
-      // assignments of new ids — write volume O(changed), not O(index).
-      // Changed ids via the segment route when provable (O(batch) IO);
-      // full anti-join pair otherwise.
-      val (newEmb, removed) =
-        changedSince("embeddings",
-            metaCache.table_versions(KbStore.IvfAssignTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("vec_id"), $"vec".as("embedding")),
-              dels.map(_.select($"id".as("vec_id"))))
-          case None =>
-            val emb = embeddings.toDF()
-              .select($"id".as("vec_id"), $"vec".as("embedding"))
-            val old = read(KbStore.IvfAssignTable)
-            val (nw, gone) = fullDiffWithReadds(emb, old.select($"vec_id"),
-              "vec_id", "embeddings")
-            (nw, Some(gone))
-        }
+      // assignments of new ids — write volume O(changed), not O(index)
       val packedCents = ivfCentroids()
         .map { case (cid, cv) => (cid, FloatVecDot.pack(cv.map(_.toFloat))) }
         .toDF("cid", "cvec")
       val added = graft.ops.SimilaritySearch.ivfAssignPacked(
-        newEmb.select($"vec_id".as("id"), floatVecPack($"embedding").as("vec")),
+        changed.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")),
         packedCents)
       commitDelta(Map(KbStore.IvfAssignTable ->
         KbStore.TablePatch(del = removed, add = Some(added))), identity,
@@ -1806,11 +1809,7 @@ final class KbStore private (
     */
   def annRetrieve(query: String, n: Int, provider: EmbeddingProvider,
       nProbe: Int = 8): Seq[Retrieval] = {
-    require(hasAnnIndex, annIndexState match {
-      case KbStore.AnnStale =>
-        "ANN index is stale: call refreshAnnIndex() to catch it up"
-      case _ => "no ANN index: call buildAnnIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Ann)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     import graft.functions.FloatVecDot
@@ -1877,11 +1876,7 @@ final class KbStore private (
   def annRetrieveFiltered(query: String, n: Int,
       provider: EmbeddingProvider,
       pred: org.apache.spark.sql.Column, nProbe: Int = 8): Seq[Retrieval] = {
-    require(hasAnnIndex, annIndexState match {
-      case KbStore.AnnStale =>
-        "ANN index is stale: call refreshAnnIndex() to catch it up"
-      case _ => "no ANN index: call buildAnnIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Ann)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     import graft.functions.FloatVecDot
@@ -1922,11 +1917,7 @@ final class KbStore private (
     * (score desc, vec_id asc).
     */
   def knnJoin(queries: DataFrame, k: Int, nProbe: Int = 8): DataFrame = {
-    require(hasAnnIndex, annIndexState match {
-      case KbStore.AnnStale =>
-        "ANN index is stale: call refreshAnnIndex() to catch it up"
-      case _ => "no ANN index: call buildAnnIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Ann)
     import spark.implicits._
     import graft.functions.FloatVecPack.floatVecPack
     val centsDf = read(KbStore.IvfCentroidsTable)
@@ -1950,16 +1941,7 @@ final class KbStore private (
   // quantized codes — the scan tier that keeps a 100 TB corpus in 1/4
   // the memory, re-ranked exactly against the raw vectors
   // ------------------------------------------------------------------
-  /** Compressed-tier lifecycle, same manifest arithmetic as
-    * [[annIndexState]]: current iff the codes table's version is at
-    * least the embeddings table's.
-    */
-  def sqIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.SqCodesTable)) KbStore.AnnNone
-    else if (tv(KbStore.SqCodesTable) >= tv("embeddings")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  def sqIndexState: KbStore.AnnState = indexState(KbStore.IndexFamily.Sq)
 
   def hasSqIndex: Boolean = sqIndexState == KbStore.AnnCurrent
 
@@ -1985,30 +1967,11 @@ final class KbStore private (
     * delta commits both the ENCODE work and the WRITE volume are
     * O(changed docs).
     */
-  def refreshSqIndex(): Unit = sqIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no compressed tier to refresh — call buildSqIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
+  def refreshSqIndex(): Unit = refreshFamily(KbStore.IndexFamily.Sq) {
+    (changed, removed) =>
       import graft.functions.FloatVecPack.floatVecPack
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise
-      val (newEmb, removed) =
-        changedSince("embeddings",
-            metaCache.table_versions(KbStore.SqCodesTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("vec_id"), $"vec"),
-              dels.map(_.select($"id".as("vec_id"))))
-          case None =>
-            val emb = embeddings.toDF().select($"id".as("vec_id"), $"vec")
-            val old = read(KbStore.SqCodesTable)
-            val (nw, gone) = fullDiffWithReadds(emb, old.select($"vec_id"),
-              "vec_id", "embeddings")
-            (nw, Some(gone))
-        }
       val added = graft.ops.VectorQuant.sqEncodePacked(
-          newEmb.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")))
+          changed.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")))
         .withColumnRenamed("id", "vec_id")
       // ENCODE work was already O(changed); the delta commit makes the
       // WRITE O(changed) too (the r5 verdict's remaining disclosure)
@@ -2026,11 +1989,7 @@ final class KbStore private (
     */
   def sqRetrieve(query: String, n: Int, provider: EmbeddingProvider,
       rerank: Int = 100): Seq[Retrieval] = {
-    require(hasSqIndex, sqIndexState match {
-      case KbStore.AnnStale =>
-        "compressed tier is stale: call refreshSqIndex() to catch it up"
-      case _ => "no compressed tier: call buildSqIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Sq)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     import graft.functions.{FloatVecDot, Int8VecDot}
@@ -2067,15 +2026,7 @@ final class KbStore private (
   // tier for corpora whose raw vectors (and even int8 codes) no longer
   // fit the memory budget (Jégou et al. 2011)
   // ------------------------------------------------------------------
-  /** Same manifest arithmetic as the other vector families: current
-    * iff the codes table's version is at least the embeddings table's.
-    */
-  def pqIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.IvfPqCodesTable)) KbStore.AnnNone
-    else if (tv(KbStore.IvfPqCodesTable) >= tv("embeddings")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  def pqIndexState: KbStore.AnnState = indexState(KbStore.IndexFamily.Pq)
 
   def hasPqIndex: Boolean = pqIndexState == KbStore.AnnCurrent
 
@@ -2149,44 +2100,24 @@ final class KbStore private (
     * deleted ids, residual-assign + encode new ids against the STORED
     * centroids and codebooks — encode AND write are O(changed docs).
     */
-  def refreshPqIndex(): Unit = pqIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no IVF-PQ index to refresh — call buildPqIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
+  def refreshPqIndex(): Unit = refreshFamily(KbStore.IndexFamily.Pq) {
+    (changed, removed) =>
       import graft.functions.FloatVecPack.floatVecPack
-      val old = read(KbStore.IvfPqCodesTable)
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise. `old` is
-      // still needed below for the sharded mirror's cid lookup, but in
-      // the fast path it is scanned once behind a broadcast join, not
-      // anti-joined against the corpus.
-      val (newEmb, removed) =
-        changedSince("embeddings",
-            metaCache.table_versions(KbStore.IvfPqCodesTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id", floatVecPack($"vec").as("vec")),
-              dels.map(_.select($"id".as("vec_id"))))
-          case None =>
-            val emb = embeddings.toDF().select($"id".as("vec_id"), $"vec")
-            val (nw, rm) = fullDiffWithReadds(emb, old.select($"vec_id"),
-              "vec_id", "embeddings")
-            (nw.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")),
-              Some(rm))
-        }
       val added = graft.ops.VectorQuant.ivfPqEncode(
-          graft.ops.VectorQuant.ivfResiduals(newEmb, loadPqCents()),
+          graft.ops.VectorQuant.ivfResiduals(
+            changed.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")),
+            loadPqCents()),
           loadPqBooks())
         .withColumnRenamed("id", "vec_id")
       // mirror maintenance prep (before the commit moves the head):
       // the shards a sharded mirror must rewrite are those containing
-      // any added or removed row's list id — `old` stays pinned to the
-      // pre-commit version paths, so this is computable either side of
-      // the commit, but the intent reads cleanest here
+      // any added or removed row's list id, looked up in the pre-commit
+      // codes behind a join with the removed keys (never anti-joined
+      // against the corpus)
       val marker = readBucketMarker()
       val changedPps: Seq[Long] = marker match {
         case Some((_, _, parts, _)) if parts > 0 =>
+          val old = read(KbStore.IvfPqCodesTable)
           removed.foldLeft(added.select($"cid"))((cids, r) =>
             cids.union(old.join(r, Seq("vec_id")).select($"cid")))
             .select(pmod($"cid", lit(parts.toLong)).as("pp"))
@@ -2237,11 +2168,7 @@ final class KbStore private (
     */
   def pqRetrieve(query: String, n: Int, provider: EmbeddingProvider,
       nProbe: Int = 8, rerank: Int = 100): Seq[Retrieval] = {
-    require(hasPqIndex, pqIndexState match {
-      case KbStore.AnnStale =>
-        "IVF-PQ index is stale: call refreshPqIndex() to catch it up"
-      case _ => "no IVF-PQ index: call buildPqIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Pq)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     import graft.functions.FloatVecPack.floatVecPack
@@ -2314,11 +2241,7 @@ final class KbStore private (
     * codes-exchange-free. Requires a current IVF-PQ tier.
     */
   def bucketPqCodes(buckets: Int = 32, parts: Int = 64): Unit = {
-    require(pqIndexState == KbStore.AnnCurrent, pqIndexState match {
-      case KbStore.AnnStale =>
-        "IVF-PQ index is stale: call refreshPqIndex() before bucketing"
-      case _ => "no IVF-PQ index: call buildPqIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Pq, "before bucketing")
     val tbl = bucketedCodesTableName
     // A compact that found a stale marker drops the CATALOG entry but
     // leaves the external _pq_codes_data files for vacuum (a reader may
@@ -2414,11 +2337,7 @@ final class KbStore private (
     */
   def pqKnnJoin(queries: DataFrame, k: Int, nProbe: Int = 8,
       rerank: Int = 100): DataFrame = {
-    require(hasPqIndex, pqIndexState match {
-      case KbStore.AnnStale =>
-        "IVF-PQ index is stale: call refreshPqIndex() to catch it up"
-      case _ => "no IVF-PQ index: call buildPqIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Pq)
     import spark.implicits._
     import graft.functions.FloatVecPack.floatVecPack
     val cents = loadPqCents()
@@ -2444,15 +2363,8 @@ final class KbStore private (
   // persistent lexical (BM25) index: postings + doc lengths as a third
   // manifest-managed index family — full-text retrieval over the KB
   // ------------------------------------------------------------------
-  /** Lexical-tier lifecycle: same manifest arithmetic, keyed on the
-    * DOCS table (text, not vectors, is what it indexes).
-    */
-  def textIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.TextPostingsTable)) KbStore.AnnNone
-    else if (tv(KbStore.TextPostingsTable) >= tv("docs")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  /** Keyed on the DOCS table: text, not vectors, is what it indexes. */
+  def textIndexState: KbStore.AnnState = indexState(KbStore.IndexFamily.Text)
 
   def hasTextIndex: Boolean = textIndexState == KbStore.AnnCurrent
 
@@ -2505,27 +2417,8 @@ final class KbStore private (
     * meta only), so surviving postings are never wrong, just possibly
     * incomplete.
     */
-  def refreshTextIndex(): Unit = textIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no text index to refresh — call buildTextIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise
-      val (newDocs, goneIds) =
-        changedSince("docs",
-            metaCache.table_versions(KbStore.TextPostingsTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("doc_id"), $"text"),
-              dels.map(_.select($"id".as("doc_id"))))
-          case None =>
-            val live = docs.toDF().select($"id".as("doc_id"), $"text")
-            val oldLens = read(KbStore.TextDocLensTable)
-            val (nw, gone) = fullDiffWithReadds(live,
-              oldLens.select($"doc_id"), "doc_id", "docs")
-            (nw, Some(gone))
-        }
+  def refreshTextIndex(): Unit = refreshFamily(KbStore.IndexFamily.Text) {
+    (newDocs, goneIds) =>
       // tokenize the catch-up batch exactly as the original build did
       val (addPost, addLens) =
         graft.ops.TextRetrieval.buildIndex(newDocs, unicode = textIndexUnicode)
@@ -2564,11 +2457,7 @@ final class KbStore private (
     * differ, by an ulp before rounding (see `bm25TopK`).
     */
   def bm25Retrieve(query: String, n: Int): Seq[(Double, Doc)] = {
-    require(hasTextIndex, textIndexState match {
-      case KbStore.AnnStale =>
-        "text index is stale: call refreshTextIndex() to catch it up"
-      case _ => "no text index: call buildTextIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Text)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     // tokenize the query with the tokenizer the index was BUILT with
@@ -2604,11 +2493,7 @@ final class KbStore private (
     */
   def rm3Retrieve(query: String, n: Int, fbDocs: Int = 10,
       fbTerms: Int = 10, alpha: Double = 0.5): Seq[(Double, Doc)] = {
-    require(hasTextIndex, textIndexState match {
-      case KbStore.AnnStale =>
-        "text index is stale: call refreshTextIndex() to catch it up"
-      case _ => "no text index: call buildTextIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Text)
     if (n <= 0) return Seq.empty
     import spark.implicits._
     val terms = graft.ops.TextRetrieval.tokenizeQuery(query, textIndexUnicode)
@@ -2646,12 +2531,7 @@ final class KbStore private (
     * doc id here — surviving bands are never wrong, just possibly
     * incomplete).
     */
-  def dedupIndexState: KbStore.AnnState = {
-    val tv = metaCache.table_versions
-    if (!tv.contains(KbStore.DedupBandsTable)) KbStore.AnnNone
-    else if (tv(KbStore.DedupBandsTable) >= tv("docs")) KbStore.AnnCurrent
-    else KbStore.AnnStale
-  }
+  def dedupIndexState: KbStore.AnnState = indexState(KbStore.IndexFamily.Dedup)
 
   def hasDedupIndex: Boolean = dedupIndexState == KbStore.AnnCurrent
 
@@ -2717,28 +2597,9 @@ final class KbStore private (
     * bands of departed docs tombstone, new docs shingle+sign fresh and
     * append — SIGNATURE work and WRITE volume are both O(changed docs).
     */
-  def refreshDedupIndex(): Unit = dedupIndexState match {
-    case KbStore.AnnCurrent => ()
-    case KbStore.AnnNone => throw new IllegalStateException(
-      "no dedup index to refresh — call buildDedupIndex()")
-    case KbStore.AnnStale =>
-      import spark.implicits._
+  def refreshDedupIndex(): Unit = refreshFamily(KbStore.IndexFamily.Dedup) {
+    (newDocs, goneIds) =>
       val (k, nh, rpb, uni) = dedupParams
-      // changed ids via the segment route when provable (O(batch) IO,
-      // no corpus anti-join); full keyed diff otherwise
-      val (newDocs, goneIds) =
-        changedSince("docs",
-            metaCache.table_versions(KbStore.DedupBandsTable)) match {
-          case Some((adds, dels)) =>
-            (adds.select($"id".as("doc_id"), $"text"),
-              dels.map(_.select($"id".as("doc_id"))))
-          case None =>
-            val live = docs.toDF().select($"id".as("doc_id"), $"text")
-            val stored = read(KbStore.DedupBandsTable)
-              .select($"doc_id").distinct()
-            val (nw, gone) = fullDiffWithReadds(live, stored, "doc_id", "docs")
-            (nw, Some(gone))
-        }
       commitDelta(Map(
         KbStore.DedupBandsTable -> KbStore.TablePatch(
           del = goneIds,
@@ -2779,11 +2640,7 @@ final class KbStore private (
     */
   private[graft] def dedupCandidatesWithCleanup(batch: DataFrame,
       threshold: Double = 0.8): (DataFrame, () => Unit) = {
-    require(hasDedupIndex, dedupIndexState match {
-      case KbStore.AnnStale =>
-        "dedup index is stale: call refreshDedupIndex() to catch it up"
-      case _ => "no dedup index: call buildDedupIndex()"
-    })
+    requireCurrent(KbStore.IndexFamily.Dedup)
     import spark.implicits._
     val (k, nh, rpb, uni) = dedupParams
     val shB = graft.ops.Dedup.shingles(batch, k, unicode = uni)
@@ -2813,7 +2670,7 @@ final class KbStore private (
     require(!batch.columns.contains(pid),
       s"screenBatch appends a $pid column; the batch already has one " +
         "(re-screening an exported screen result? drop it first)")
-    if (dedupIndexState == KbStore.AnnStale) refreshDedupIndex()
+    refreshIfStale(KbStore.IndexFamily.Dedup)
     // provisional ids disjoint from (and ABOVE) the store's dense id
     // space, order-stable so keep-first is well-defined — appended as
     // a COLUMN so the batch's other columns survive the screen
@@ -2903,7 +2760,7 @@ final class KbStore private (
     */
   private[graft] def semanticDropHits(batchVec: DataFrame,
       cosThreshold: Double, nProbe: Int = 8): DataFrame = {
-    if (annIndexState == KbStore.AnnStale) refreshAnnIndex()
+    refreshIfStale(KbStore.IndexFamily.Ann)
     require(hasAnnIndex,
       "no ANN index: call buildAnnIndex() before semantic screening")
     import graft.functions.FloatVecPack.floatVecPack
@@ -2966,7 +2823,7 @@ final class KbStore private (
     require(!batch.columns.contains("vec"),
       "screenBatchSemantic embeds the batch itself; drop the existing " +
         "vec column (or commit via bulkAddDocsDistributed directly)")
-    if (annIndexState == KbStore.AnnStale) refreshAnnIndex()
+    refreshIfStale(KbStore.IndexFamily.Ann)
     require(hasAnnIndex,
       "no ANN index: call buildAnnIndex() before semantic screening")
     val base = metaCache.max_doc_id + 1L
@@ -3032,9 +2889,8 @@ final class KbStore private (
         val survivors = kept.count() // cached by the screen — O(metadata)
         if (survivors > 0) {
           bulkAddDocsDistributed(kept, provider)
-          if (lexicalThreshold.isDefined &&
-              dedupIndexState == KbStore.AnnStale)
-            refreshDedupIndex()
+          if (lexicalThreshold.isDefined)
+            refreshIfStale(KbStore.IndexFamily.Dedup)
           refreshAnnIndex()
         }
         val total = if (lexTotal >= 0) lexTotal else semTotal
@@ -3129,18 +2985,8 @@ final class KbStore private (
     // the compressed tier is current, and vice versa): stale families
     // keep their old pointers (still stale after the bump) and their
     // refresh then compacts them naturally.
-    val staleIdx: Set[String] =
-      (if (annIndexState == KbStore.AnnStale) KbStore.AnnIndexTables
-       else Seq.empty[String]).toSet ++
-        (if (sqIndexState == KbStore.AnnStale) Set(KbStore.SqCodesTable)
-         else Set.empty[String]) ++
-        (if (pqIndexState == KbStore.AnnStale) KbStore.IvfPqTables.toSet
-         else Set.empty[String]) ++
-        (if (textIndexState == KbStore.AnnStale) KbStore.TextIndexTables.toSet
-         else Set.empty[String]) ++
-        (if (dedupIndexState == KbStore.AnnStale)
-           KbStore.DedupIndexTables.toSet
-         else Set.empty[String])
+    val staleIdx = KbStore.IndexFamily.All
+      .filter(indexState(_) == KbStore.AnnStale).flatMap(_.tables).toSet
     val names = metaCache.table_versions.keys.filterNot(staleIdx.contains)
     // captured BEFORE the commit moves the head: the marker bump below
     // is only sound for a mirror that was current going in
@@ -3171,7 +3017,7 @@ final class KbStore private (
     // bucketCodes = false) — promoting it here would make pqKnnJoin
     // serve the old mirror's codes as current, so drop the marker and
     // let callers fall back (or rebuild) instead.
-    if (pqIndexState == KbStore.AnnCurrent)
+    if (hasPqIndex)
       readBucketMarker().foreach { case (tbl, b, parts, v) =>
         metaCache.table_versions.get(KbStore.IvfPqCodesTable).foreach { nv =>
           if (preCodesVersion.contains(v)) {
@@ -3508,19 +3354,63 @@ object KbStore {
     postings.withColumn("bucket",
       (crc32(col("term").cast("binary")) % TextBuckets).cast("int"))
 
-  /** The ANN index family (invalidated/refreshed together). */
-  val AnnIndexTables: Seq[String] = Seq(IvfCentroidsTable, IvfAssignTable)
-  /** Vector-derived families — dropped when a vector is REPLACED. */
+  /** One manifest-managed index family: the facts its lifecycle reads.
+    * `tables` commit, go stale, compact and vacuum together;
+    * `watermark` is the table whose version says how far the family
+    * has covered its `source` (`embeddings` or `docs`); `keyed`/`key`
+    * name the index table and column the full-diff fallback reads the
+    * stored keys from; `payload` is the source column the family
+    * encodes; `words` and `name` spell its errors ("no ANN index:
+    * call buildAnnIndex()").
+    *
+    * State is pure manifest arithmetic: None while `watermark` has no
+    * pointer (never built, or dropped by a vector replacement), Current
+    * while its version is at least `source`'s, Stale otherwise — the
+    * surviving rows are still right, only incomplete, and a refresh
+    * catches them up from the changed source rows.
+    *
+    * WATERMARK INVARIANT: a refresh reads the source rows changed
+    * strictly after `tv(watermark)`, treating the watermark's manifest
+    * version as a COVERAGE watermark over `source`. That is valid
+    * because every writer of a family's tables (build*, refresh*)
+    * commits in the same manifest transaction that reads the source's
+    * current head — an index row set at version V has, by
+    * construction, folded every source segment ≤ V. A future writer
+    * that bumps a family's version WITHOUT covering the source (e.g. a
+    * metadata-only rewrite of the postings layout) would silently skip
+    * rows; such a writer must either keep the family's version below
+    * the source's or use a full rebuild path.
+    */
+  private final case class IndexFamily(words: String, name: String,
+      tables: Seq[String], watermark: String, source: String,
+      payload: String, keyed: String, key: String,
+      refresh: KbStore => Unit)
+
+  private object IndexFamily {
+    val Ann = IndexFamily("ANN index", "Ann",
+      Seq(IvfCentroidsTable, IvfAssignTable), IvfAssignTable,
+      "embeddings", "vec", IvfAssignTable, "vec_id", _.refreshAnnIndex())
+    val Sq = IndexFamily("compressed tier", "Sq", Seq(SqCodesTable),
+      SqCodesTable, "embeddings", "vec", SqCodesTable, "vec_id",
+      _.refreshSqIndex())
+    val Pq = IndexFamily("IVF-PQ index", "Pq", IvfPqTables, IvfPqCodesTable,
+      "embeddings", "vec", IvfPqCodesTable, "vec_id", _.refreshPqIndex())
+    val Text = IndexFamily("text index", "Text",
+      Seq(TextPostingsTable, TextDocLensTable), TextPostingsTable, "docs",
+      "text", TextDocLensTable, "doc_id", _.refreshTextIndex())
+    val Dedup = IndexFamily("dedup index", "Dedup", Seq(DedupBandsTable),
+      DedupBandsTable, "docs", "text", DedupBandsTable, "doc_id",
+      _.refreshDedupIndex())
+    /** Every family, in the order [[KbStore.refreshStaleIndexes]] runs. */
+    val All: Seq[IndexFamily] = Seq(Ann, Sq, Text, Dedup, Pq)
+  }
+
+  /** Vector-derived families' tables — dropped when a vector is
+    * REPLACED; the text-derived families survive it. */
   val VectorIndexTables: Seq[String] =
-    (AnnIndexTables :+ SqCodesTable) ++ IvfPqTables
-  /** The text family survives vector replacement (it indexes text). */
-  val TextIndexTables: Seq[String] = Seq(TextPostingsTable, TextDocLensTable)
-  /** The dedup-signature family — text-derived like the lexical tier,
-    * so it likewise survives vector replacement. */
-  val DedupIndexTables: Seq[String] = Seq(DedupBandsTable)
+    IndexFamily.All.filter(_.source == "embeddings").flatMap(_.tables)
   /** Every index-family table (vacuum ownership, compact bookkeeping). */
-  val IndexTables: Seq[String] =
-    VectorIndexTables ++ TextIndexTables ++ DedupIndexTables
+  val IndexTables: Seq[String] = IndexFamily.All.flatMap(_.tables)
 
   sealed trait AnnState
   case object AnnNone extends AnnState

@@ -515,36 +515,19 @@ object StreamingIngest {
           case None => (batch, () => ())
         }
       // keep whichever index families exist live. Refresh COMPUTE is
-      // O(this batch) against the stored centroids / encoder, but each
-      // refresh commit rewrites its index table (the versioned-table
-      // write model) — for high-frequency micro-batches over a huge
-      // store, prefer maintainIndex = false + periodic refresh.
+      // O(this batch) against the stored centroids / encoder, and each
+      // refresh commits a delta segment; for high-frequency
+      // micro-batches over a huge store, prefer maintainIndex = false
+      // + periodic refresh. The PQ tier's refresh also keeps a
+      // materialized bucketed-codes mirror current, and the dedup
+      // family lets every next batch screen against the whole history.
       // Runs on EVERY applied batch, including the all-dups early exit
       // below: families left stale by a prior crash (commit landed,
       // refresh didn't) must not stay stale just because the next
       // batches happen to be all duplicates — maintainIndex promises
       // per-batch liveness, not per-non-empty-batch liveness.
-      def refreshStaleFamilies(): Unit = if (maintainIndex) {
-        if (kb.annIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshAnnIndex()
-        if (kb.sqIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshSqIndex()
-        if (kb.textIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshTextIndex()
-        // the dedup-signature family refreshes like the text tier (band
-        // ONLY this batch's docs against the stored MinHash parameters),
-        // so a continuously ingesting store can screen every next batch
-        // against its whole history via dedupCandidates without a rescan
-        if (kb.dedupIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshDedupIndex()
-        // the IVF-PQ tier refreshes like the others (encode O(batch)
-        // against the stored centroids/codebooks); its refresh also
-        // keeps a materialized bucketed-codes mirror current, so a
-        // streaming store serves the exchange-free pqKnnJoin path
-        // continuously
-        if (kb.pqIndexState == graft.core.KbStore.AnnStale)
-          kb.refreshPqIndex()
-      }
+      def refreshStaleFamilies(): Unit =
+        if (maintainIndex) kb.refreshStaleIndexes()
       // only a stage that ran can have emptied the batch `rawBatch.isEmpty`
       // found non-empty (`identity` curation returns the batch itself),
       // so the emptiness checks below run, each one job, only after one

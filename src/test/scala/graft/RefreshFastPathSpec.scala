@@ -77,8 +77,14 @@ class RefreshFastPathSpec extends SparkSpec {
         .mkString(" ")
     }
 
+  /** Rows as sorted strings; binary columns (the vector codes) in hex,
+    * so equal bytes compare equal. */
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
+    df.select(df.schema.fields.toSeq.map { f =>
+      if (f.dataType == org.apache.spark.sql.types.BinaryType)
+        hex(col(f.name)).as(f.name)
+      else col(f.name)
+    }: _*).collect().map(_.toString).sorted.toSeq
 
   test("segment-route refresh == full rebuild for every family") {
     import spark.implicits._
@@ -89,6 +95,7 @@ class RefreshFastPathSpec extends SparkSpec {
     kb.buildSqIndex()
     kb.buildTextIndex()
     kb.buildDedupIndex()
+    kb.buildPqIndex(nlist = 4, m = 4, ncodes = 16, iters = 1)
 
     // two delta commits + a delete: the index families go stale across
     // a multi-segment window, then one refresh catches each up
@@ -101,10 +108,12 @@ class RefreshFastPathSpec extends SparkSpec {
     kb.refreshSqIndex(); assertRoute(kb, "segment")
     kb.refreshTextIndex(); assertRoute(kb, "segment")
     kb.refreshDedupIndex(); assertRoute(kb, "segment")
+    kb.refreshPqIndex(); assertRoute(kb, "segment")
     assert(kb.annIndexState == KbStore.AnnCurrent)
     assert(kb.sqIndexState == KbStore.AnnCurrent)
     assert(kb.textIndexState == KbStore.AnnCurrent)
     assert(kb.dedupIndexState == KbStore.AnnCurrent)
+    assert(kb.pqIndexState == KbStore.AnnCurrent)
 
     // ground truth: the refreshed assignment covers exactly the live
     // embedding ids, each assigned to its nearest STORED centroid —
@@ -128,6 +137,25 @@ class RefreshFastPathSpec extends SparkSpec {
       kb.embeddings.toDF().select($"id".as("vec_id"),
         $"vec".as("embedding")), cents).select($"vec_id", $"cid")
     assert(sortedRows(assign.select($"vec_id", $"cid")) == sortedRows(fresh))
+
+    // likewise the refreshed IVF-PQ codes equal a from-scratch encode of
+    // the live embeddings against the STORED centroids and codebooks
+    val pqCents = kb.readTableForSpec(KbStore.IvfPqCentroidsTable).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).map(_.toFloat).toArray))
+      .sortBy(_._1)
+    val bookRows = kb.readTableForSpec(KbStore.IvfPqBooksTable).collect()
+      .map(r => (r.getInt(0), r.getInt(1),
+        r.getSeq[Double](2).map(_.toFloat).toArray))
+    val books = Array.tabulate(bookRows.map(_._1).max + 1)(s =>
+      bookRows.filter(_._1 == s).sortBy(_._2).map(_._3))
+    val packed = kb.embeddings.toDF().select($"id",
+      graft.functions.FloatVecPack.floatVecPack($"vec").as("vec"))
+    val freshCodes = graft.ops.VectorQuant.ivfPqEncode(
+      graft.ops.VectorQuant.ivfResiduals(packed, pqCents), books)
+    val codes = kb.readTableForSpec(KbStore.IvfPqCodesTable)
+    assert(codes.select($"vec_id").as[Long].collect().toSet == liveIds)
+    assert(sortedRows(codes.select($"vec_id", $"cid", $"code")) ==
+      sortedRows(freshCodes.select($"id", $"cid", $"code")))
   }
 
   test("fallback (base moved by compact) == segment-route refresh") {
@@ -139,11 +167,17 @@ class RefreshFastPathSpec extends SparkSpec {
     kbA.bulkAddDocsDistributed(texts(30).toDF("text"), provider)
     kbA.buildAnnIndex(nlist = 4, iters = 1)
     kbA.buildTextIndex()
+    kbA.buildSqIndex()
+    kbA.buildDedupIndex()
+    kbA.buildPqIndex(nlist = 4, m = 4, ncodes = 16, iters = 1)
     kbA.bulkAddDocsDistributed(texts(10, offset = 100).toDF("text"), provider)
     kbA.bulkDelDocs(Seq(5L))
     kbA.compact(codec = "snappy") // rewrites bases; stale families keep pointers
     kbA.refreshAnnIndex(); assertRoute(kbA, "full")
     kbA.refreshTextIndex(); assertRoute(kbA, "full")
+    kbA.refreshSqIndex(); assertRoute(kbA, "full")
+    kbA.refreshPqIndex(); assertRoute(kbA, "full")
+    kbA.refreshDedupIndex(); assertRoute(kbA, "full")
 
     // store B: identical mutations, no compact (segment route)
     val kbB = KbStore.create(spark, freshPath(), provider.params,
@@ -151,10 +185,16 @@ class RefreshFastPathSpec extends SparkSpec {
     kbB.bulkAddDocsDistributed(texts(30).toDF("text"), provider)
     kbB.buildAnnIndex(nlist = 4, iters = 1)
     kbB.buildTextIndex()
+    kbB.buildSqIndex()
+    kbB.buildDedupIndex()
+    kbB.buildPqIndex(nlist = 4, m = 4, ncodes = 16, iters = 1)
     kbB.bulkAddDocsDistributed(texts(10, offset = 100).toDF("text"), provider)
     kbB.bulkDelDocs(Seq(5L))
     kbB.refreshAnnIndex(); assertRoute(kbB, "segment")
     kbB.refreshTextIndex(); assertRoute(kbB, "segment")
+    kbB.refreshSqIndex(); assertRoute(kbB, "segment")
+    kbB.refreshPqIndex(); assertRoute(kbB, "segment")
+    kbB.refreshDedupIndex(); assertRoute(kbB, "segment")
 
     assert(kbA.annIndexState == KbStore.AnnCurrent)
     assert(kbB.annIndexState == KbStore.AnnCurrent)
@@ -171,6 +211,25 @@ class RefreshFastPathSpec extends SparkSpec {
     assert(
       sortedRows(kbA.readTableForSpec(KbStore.TextDocLensTable)) ==
         sortedRows(kbB.readTableForSpec(KbStore.TextDocLensTable)))
+    Seq(KbStore.SqCodesTable, KbStore.IvfPqCodesTable,
+        KbStore.DedupBandsTable).foreach { t =>
+      assert(sortedRows(kbA.readTableForSpec(t)) ==
+        sortedRows(kbB.readTableForSpec(t)), t)
+    }
+  }
+
+  test("a refresh with nothing to catch up reports no route") {
+    import spark.implicits._
+    val kb = KbStore.create(spark, freshPath(), provider.params,
+      forceFresh = true)
+    kb.bulkAddDocsDistributed(texts(10).toDF("text"), provider)
+    kb.buildAnnIndex(nlist = 2, iters = 1)
+    kb.bulkAddDocsDistributed(texts(3, offset = 100).toDF("text"), provider)
+    kb.buildTextIndex() // current: its refresh below has nothing to do
+    kb.refreshAnnIndex(); assertRoute(kb, "segment")
+    kb.refreshTextIndex()
+    assert(kb.lastRefreshRoute.isEmpty,
+      s"no-op refresh reported route ${kb.lastRefreshRoute}")
   }
 
   test("segment-route refresh input volume is O(batch), not O(corpus)") {

@@ -640,18 +640,33 @@ class StoreScaleSpec extends SparkSpec {
     }
     kb.bulkAddDocs(p) { a => (0 until 40).foreach(i => a.add(s"doc $i")) }
     kb.buildSqIndex()
-    kb.bulkAddDocs(p)(_.add("late"))  // sq goes stale
+    kb.buildTextIndex()
+    kb.buildDedupIndex()
+    kb.bulkAddDocs(p)(_.add("late"))  // sq, text and dedup go stale
     kb.buildAnnIndex(nlist = 4, iters = 1) // ann built AFTER -> current
     assert(kb.sqIndexState == KbStore.AnnStale)
     assert(kb.annIndexState == KbStore.AnnCurrent)
+    assert(kb.textIndexState == KbStore.AnnStale)
+    assert(kb.dedupIndexState == KbStore.AnnStale)
     // compact: the current ANN family rides along (stays current), the
     // stale SQ family is held back (stays stale, not silently promoted)
     kb.compact()
     assert(kb.annIndexState == KbStore.AnnCurrent)
     assert(kb.sqIndexState == KbStore.AnnStale)
+    // the docs-keyed families are held back the same way
+    assert(kb.textIndexState == KbStore.AnnStale)
+    assert(kb.dedupIndexState == KbStore.AnnStale)
     kb.refreshSqIndex()
     assert(kb.sqIndexState == KbStore.AnnCurrent)
     assert(kb.sqRetrieve("late", 1, p, rerank = 100).head.doc.text == "late")
+    kb.refreshTextIndex()
+    kb.refreshDedupIndex()
+    assert(kb.textIndexState == KbStore.AnnCurrent)
+    assert(kb.dedupIndexState == KbStore.AnnCurrent)
+    assert(kb.bm25Retrieve("late", 1).head._2.text == "late")
+    val docIds = kb.docs.collect().map(_.id).toSet
+    assert(kb.dedupBands.select(col("doc_id")).distinct().collect()
+      .map(_.getLong(0)).toSet == docIds)
     kb.close()
   }
 
