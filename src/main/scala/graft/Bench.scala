@@ -446,19 +446,10 @@ object Bench {
     budgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
       .getOrElse(1380.0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table points write through the catalog; keep the
-      // warehouse off the repo tree
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // bucketed-table points write through the catalog; keep the
+    // warehouse off the repo tree
+    val spark = Tables.session("spark.sql.warehouse.dir" ->
+      sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
 
     // per-task CPU/run accumulation for the contention detector (the
     // `cpu_run` provenance field — see [[cpuRunRatio]])
@@ -568,7 +559,7 @@ object Bench {
 
     // ---- the 1M protocol, the interleaved ladder, tiers, sweeps ----
     if (runSvs) {
-      try svsHeavy(spark, cpus)
+      try svsHeavy(spark)
       catch { case _: BudgetUp =>
         addSkip(s"(budget reached at ${f"$elapsedS%.0f"}s — later part-2 points not run)")
       } finally reservedS = 0.0
@@ -774,7 +765,7 @@ object Bench {
     * expensive non-headline sweeps (pairs/neardup) LAST. Sections are
     * independently BudgetUp-gated where they have no data dependency.
     */
-  private def svsHeavy(spark: SparkSession, cpus: String): Unit = {
+  private def svsHeavy(spark: SparkSession): Unit = {
     // a pathological calib entering the round's most expensive section
     // is re-checked before it can gate anything: if the opening probe
     // hit a transient stall, this is where the poisoned median would
@@ -1003,7 +994,7 @@ object Bench {
         spark.conf.get("spark.sql.warehouse.dir")
           .stripPrefix("file:") + "/graft_bench_pq_codes")
       graft.ops.VectorQuant.writeCodesBucketed(ivfpqCodes,
-        "graft_bench_pq_codes", buckets = cpus.toInt)
+        "graft_bench_pq_codes", buckets = spark.sparkContext.defaultParallelism)
       spark.catalog.cacheTable("graft_bench_pq_codes")
       spark.table("graft_bench_pq_codes").count()
       pqReady = true
@@ -1340,8 +1331,8 @@ object Bench {
       ensureCorpus()
       // longRepS raised past this point's KNOWN bimodal-high mode
       // (r10 driver 69.9 s vs 28.4 s clean; r11 86-110 s vs 15.9-21 s
-      // same-day, cpu_run ~0.95 both modes — ProfileKnnBimodal pins
-      // the cause as hypervisor CPU-steal waves that inflate thread
+      // same-day, cpu_run ~0.95 both modes — SURVEY's round-11 record
+      // pins the cause as hypervisor CPU-steal waves that inflate thread
       // CPU itself, so neither cpu_run nor residency can flag them):
       // a pathological first rep must not be published alone when the
       // budget can afford companions
@@ -1621,31 +1612,8 @@ object Bench {
     * the ≥ 0.9 spec gates promise.
     */
   private def clusteredRecallPoint(spark: SparkSession): Unit = {
-    // entry gate covers only the generate+truth slice (~12 s healthy):
-    // a 90 s whole-section estimate at calib 2+ priced the section out
-    // of days that could in fact afford it (rehearsal 3) — the
-    // expensive encode slice re-gates itself inside the core, so the
-    // worst case is ~12 s of generation paid before a mid-section skip
-    val recall = clusteredRecallCore(spark, groups = 62500L,
-      stage = (_, estS) => body => { setup(estS); body })
-    Seq("svs_knn2k_pq_1m", "svs_knn2k_pq_bucketed_1m",
-      "svs_ivfpq_probe_1m").foreach(
-      setRecallKey(_, "recall_at_10_clustered", recall))
-  }
-
-  /** The clustered-recall measurement core, SHARED between the official
-    * point above and [[ProfileClusteredRecall]] (the r13 review: the
-    * profiler exists to validate exactly this pipeline, so it must run
-    * this code, not a copy that can silently drift): planted-structure
-    * corpus → blocked exact truth → probed-lists-only residual IVF-PQ →
-    * recall@10. `stage(name, estimateS)(body)` wraps each expensive
-    * slice — the official point budget-gates there, the profiler times.
-    */
-  private[graft] def clusteredRecallCore(spark: SparkSession,
-      groups: Long,
-      stage: (String, Double) => (=> Unit) => Unit): Double = {
     import spark.implicits._
-    import graft.functions.FloatVecDot.floatVecDot
+    val groups = 62500L
     val perGroup = 16
     val kClusters = 256
     val centers = Array.tabulate(kClusters)(c =>
@@ -1664,9 +1632,14 @@ object Bench {
         }
       }.toDF("id", "vec").persist(StorageLevel.MEMORY_AND_DISK)
     var codes: DataFrame = null
-    var recall = 0.0
     try {
-      stage("generate+persist", 20.0) { corpus.count(): Unit }
+      // each slice gates itself: the entry gate covers only generation
+      // (a 90 s whole-section estimate at calib 2+ priced the section
+      // out of days that could in fact afford it, rehearsal 3), so the
+      // worst case is ~12 s of generation and truth paid before a
+      // mid-section skip
+      setup(20.0)
+      corpus.count()
       // 32 fresh queries, one per distinct near-dup group (spread
       // across clusters): each query's true top-10 is dominated by its
       // group's 16 members — the macro-margin ranking problem a real
@@ -1684,8 +1657,8 @@ object Bench {
       // query array with per-partition top-10 heaps (a DataFrame
       // crossJoin would ship 12 KB of vectors per pair row — measured
       // 58 s vs ~2 s for this shape at 1M × 32)
-      var exact: Map[Long, Set[Long]] = Map.empty
-      stage("exact truth (blocked)", 10.0) {
+      setup(10.0)
+      val exact = {
         val bcQ = spark.sparkContext.broadcast(qArr)
         val partTops = corpus.select(col("id"), col("vec"))
           .as[(Long, Array[Byte])]
@@ -1717,7 +1690,7 @@ object Bench {
                 .map(j => (qs(qi)._1, topI(qi)(j), topS(qi)(j)))
             }
           }.collect()
-        exact = partTops.groupBy(_._1).map { case (q, rs) =>
+        partTops.groupBy(_._1).map { case (q, rs) =>
           q -> rs.sortBy(r => (-r._3, r._2)).take(10).map(_._2).toSet
         }
       }
@@ -1726,7 +1699,8 @@ object Bench {
       // per-query top-4 centroids, computed on the driver): the join
       // never scores a candidate outside them, so the skipped lists
       // cannot change the measured recall — and the encode bill halves
-      stage("residual pq train+encode (probed lists only)", 55.0) {
+      setup(55.0)
+      val recall = {
         val probedCids = qArr.flatMap { case (_, qv) =>
           centsArr.map { case (cid, cv) =>
             (cid, graft.functions.VecKernels.dotFloats(qv, cv)) }
@@ -1748,9 +1722,11 @@ object Bench {
         val per = exact.toSeq.map { case (q, ex) =>
           ap.get(q).map(_.intersect(ex).size.toDouble / ex.size)
             .getOrElse(0.0) }
-        recall = per.sum / math.max(1, per.size)
+        per.sum / math.max(1, per.size)
       }
-      recall
+      Seq("svs_knn2k_pq_1m", "svs_knn2k_pq_bucketed_1m",
+        "svs_ivfpq_probe_1m").foreach(
+        setRecallKey(_, "recall_at_10_clustered", recall))
     } finally {
       if (codes != null) codes.unpersist(true)
       corpus.unpersist(true)
@@ -1763,7 +1739,7 @@ object Bench {
     * (norms 1, 0.55, 0.15 ⇒ within-group cos ≈ 0.98,
     * same-cluster-cross-group ≈ 0.76, cross-cluster ≈ 0).
     */
-  private[graft] def clusterMemberVec(cArr: Array[Float], gArr: Array[Float],
+  private def clusterMemberVec(cArr: Array[Float], gArr: Array[Float],
       seed: Long): Array[Float] = {
     val rnd = new java.util.Random(
       seed * 2862933555777941757L + 3037000493L)
@@ -2192,7 +2168,7 @@ object Bench {
   /** One deterministic synthetic unit vector (the reference's fake d1536
     * embeddings, `One Million Documents Benchmark.ipynb` cell 5).
     */
-  private[graft] def syntheticVec(id: Long): Array[Float] = {
+  private def syntheticVec(id: Long): Array[Float] = {
     val rnd = new java.util.Random(id * 6364136223846793005L + 1442695040888963407L)
     val v = new Array[Float](Dim)
     var s = 0.0

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: print the formatted physical plan of named oracle
   * queries (all of them when none are named) without executing — the
   * dev loop behind the per-round "read the plan, not just the timing"
@@ -12,12 +10,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.length > 1) args.drop(1).toSeq

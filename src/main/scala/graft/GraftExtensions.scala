@@ -8,8 +8,8 @@ import graft.functions.{BitHamming, FloatVecDot, FloatVecPack, Int8VecDot, Sorte
 
 /** Session extensions registering the graft custom expressions as SQL
   * functions, so `spark.sql("SELECT float_vec_dot(a, b)")` works — the
-  * SURVEY §7.3 path (c): extension injection via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * SURVEY §7.3 path (c): extension injection via a session builder's
+  * `withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

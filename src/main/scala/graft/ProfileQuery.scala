@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: run one named SparkEntry query against an SF dir and
   * print wall time + row count (+ formatted plan with -v).
   * Run: `sbt "runMain graft.ProfileQuery <name> <sfDir> [-v]"`.
@@ -11,13 +9,7 @@ object ProfileQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val verbose = args.contains("-v")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     val fn = SparkEntry.queries(name)
     // job counter: queries with eager interior actions (iterative graph
     // ops, checkpoints) schedule more jobs than their final plan shows;

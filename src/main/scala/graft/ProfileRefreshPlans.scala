@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -25,12 +24,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object ProfileRefreshPlans {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Tables.session()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
@@ -106,15 +100,14 @@ object ProfileRefreshPlans {
     }
 
     val base = Files.createTempDirectory("graft-rplans")
-    val kbSeg = mkStore(s"$base/seg")
-    refreshAll(kbSeg, "segment")
-
-    System.setProperty("graft.kb.forceFullRefreshDiff", "true")
     try {
-      val kbFull = mkStore(s"$base/full")
-      refreshAll(kbFull, "full")
-    } finally System.clearProperty("graft.kb.forceFullRefreshDiff")
-
-    spark.stop()
+      refreshAll(mkStore(s"$base/seg"), "segment")
+      System.setProperty("graft.kb.forceFullRefreshDiff", "true")
+      try refreshAll(mkStore(s"$base/full"), "full")
+      finally System.clearProperty("graft.kb.forceFullRefreshDiff")
+    } finally {
+      spark.stop()
+      KbStoreCleanup.delete(base.toString)
+    }
   }
 }

@@ -19,6 +19,24 @@ object Tables {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC")
 
+  /** The session every graft main runs on: `local[n]`, with n from
+    * `SPARK_GRAFT_CPUS`, else the machine's cores; n shuffle
+    * partitions; no UI; [[sessionConfigs]]. `extra` holds the caller's
+    * own configs, such as Bench's warehouse dir.
+    */
+  def session(extra: (String, String)*): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+    (sessionConfigs ++ extra).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // Two generations of events.parquet exist: epoch-nanos as long

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -42,15 +42,7 @@ object TwinGate {
     val sfDir = if (args.length > 0) args(0) else "/tmp/graft_sfbig"
     val verifyOut = if (args.length > 1) args(1) else "/tmp/verify_big"
     val outJson = if (args.length > 2) args(2) else "/tmp/twin_gate.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session()
     import spark.implicits._
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

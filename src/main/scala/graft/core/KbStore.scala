@@ -411,6 +411,15 @@ final class KbStore private (
       .map(d => d.emb_id.get -> d).toMap
   }
 
+  /** Ranked `(emb_id, score)` hits as [[Retrieval]]s, in order, each
+    * hydrated with its doc by [[docsByEmbId]]. */
+  private def hydrate(hits: collection.Seq[(Long, Double)]): Seq[Retrieval] =
+    if (hits.isEmpty) Seq.empty
+    else {
+      val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
+      hits.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }.toSeq
+    }
+
   /** Row count of `name`'s resident table for the live layout, if one
     * is held, for specs. Rows held for an earlier layout, kept for the
     * next read to fold, do not count. */
@@ -1431,13 +1440,7 @@ final class KbStore private (
     val qv = Embeddings.checkMagnitude(provider.embed(Seq(query))).head
     index() match {
       case None => Seq.empty
-      case Some(idx) =>
-        val hits = idx.topK(qv, n) // (emb_id, score), reference tie order
-        if (hits.isEmpty) return Seq.empty
-        val docByEmb = docsByEmbId(hits.map(_._1))
-        hits.map { case (embId, score) =>
-          Retrieval(score, docByEmb(embId))
-        }
+      case Some(idx) => hydrate(idx.topK(qv, n)) // reference tie order
     }
   }
 
@@ -1836,9 +1839,7 @@ final class KbStore private (
           .limit(n)
           .as[(Long, Double)].collect()
     }
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
+    hydrate(hits)
   }
 
   /** Probe selection against the persisted centroid table: same
@@ -1900,9 +1901,7 @@ final class KbStore private (
       .orderBy(desc("score"), $"vec_id")
       .limit(n)
       .as[(Long, Double)].collect()
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
+    hydrate(hits)
   }
 
   /** Batch k-NN JOIN against the persisted ANN index: every row of
@@ -2015,9 +2014,7 @@ final class KbStore private (
       .orderBy(desc("score"), $"id")
       .limit(n)
       .as[(Long, Double)].collect()
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
+    hydrate(hits)
   }
 
   // ------------------------------------------------------------------
@@ -2181,9 +2178,7 @@ final class KbStore private (
         codes, packed, loadPqCents(), loadPqBooks(), qv,
         n, nProbe, math.max(n, rerank))
       .as[(Long, Double)].collect()
-    if (hits.isEmpty) return Seq.empty
-    val docByEmb = docsByEmbId(hits.map(_._1).toSeq)
-    hits.toSeq.map { case (embId, score) => Retrieval(score, docByEmb(embId)) }
+    hydrate(hits)
   }
 
   // ------------------------------------------------------------------

@@ -64,12 +64,12 @@ final class VectorIndex private (
   private var localRowOf: Option[scala.collection.mutable.LongMap[Long]] = None
 
   /** Materialize the index in executor memory (the reference's lazy
-    * first-query matrix build); indexes under `localThreshold` vectors
-    * are additionally pinned on the driver for job-free queries.
+    * first-query matrix build); indexes of at most
+    * [[VectorIndex.LocalThreshold]] vectors are additionally pinned on
+    * the driver for job-free queries.
     */
-  def materialize(
-      localThreshold: Long = VectorIndex.LocalThreshold): VectorIndex = {
-    if (!isLocal && count <= localThreshold) {
+  def materialize(): VectorIndex = {
+    if (!isLocal && count <= VectorIndex.LocalThreshold) {
       // stripe once across cores so local queries parallelize without
       // per-query copying
       localRowOf = None
@@ -226,7 +226,7 @@ final class VectorIndex private (
 
 object VectorIndex {
 
-  /** At most this many vectors are held on the driver by default (see
+  /** At most this many vectors are held on the driver (see
     * [[VectorIndex.materialize]]). */
   val LocalThreshold: Long = 200000L
 

@@ -225,8 +225,8 @@ object VectorQuant {
   }
 
   /** Flatten one subspace codebook to (row-major codewords, per-code
-    * L2 norms) for [[nearestCodeFlat]]'s SIMD argmin form. Built once
-    * per partition — k·dsub floats, trivial against the scan.
+    * L2 norms), the layout the ADC lookup tables are built from. Built
+    * once per partition — k·dsub floats, trivial against the scan.
     */
   private[graft] def flattenBook(book: Array[Array[Float]]): (Array[Float], Array[Double]) = {
     val k = book.length
@@ -245,15 +245,14 @@ object VectorQuant {
   /** Dimension-major (transposed) codebook layout for the encode hot
     * path: `flatT(i * ncodes + j) = book(j)(i)` as double, plus the
     * codeword L2 norms. [[nearestCodeT]] accumulates v·c_j for ALL
-    * codewords in one daxpy-shaped pass per dimension — the
-    * codes-major [[nearestCodeFlat]] form pays a SIMD horizontal
-    * reduction per codeword (ncodes × m × corpus of them at encode
-    * time, the dominant cost at dsub = 16 where each dot is a single
-    * vector op but the reduce is tens of cycles), while the
-    * transposed inner loop over 256 codewords is the shape the JIT
-    * auto-vectorizes with no reductions at all. Per-codeword
-    * accumulation stays double, ascending-i — the scalar kernels'
-    * summation order.
+    * codewords in one daxpy-shaped pass per dimension: a codes-major
+    * SIMD dot would pay a horizontal reduction per codeword (ncodes ×
+    * m × corpus of them at encode time, the dominant cost at dsub = 16
+    * where each dot is a single vector op but the reduce is tens of
+    * cycles), while the transposed inner loop over 256 codewords is
+    * the shape the JIT auto-vectorizes with no reductions at all.
+    * Per-codeword accumulation stays double, ascending-i — the scalar
+    * kernels' summation order.
     */
   private[graft] def flattenBookT(book: Array[Array[Float]])
       : (Array[Double], Array[Double]) = {
@@ -272,16 +271,13 @@ object VectorQuant {
     (flatT, norms)
   }
 
-  /** Transposed-book nearest codeword: same argmin_j (||c_j||² −
-    * 2·v·c_j) objective, strict-< ascending-j tie rule and NaN → code
-    * 0 behavior as [[nearestCodeFlat]] — but NOT bit-identical
-    * distances: this kernel accumulates the dot in double while
-    * nearestCodeFlat rides the float SIMD dotFloatsAt, so assignments
-    * can flip between the two on NEAR-tied (float-rounding-scale)
-    * codewords, not just exactly equidistant ones; indexes rebuilt
-    * through this path are equivalent in objective, not in bits, to
-    * pre-round-13 ones. `acc` is a caller-provided ncodes-sized
-    * scratch (reused across subspaces and rows).
+  /** Transposed-book nearest codeword: argmin_j ||v−c_j||² computed
+    * as argmin_j (||c_j||² − 2·v·c_j), with the strict-< ascending-j
+    * tie rule of [[nearestCode]]. The expansion changes rounding, so
+    * near-tied codewords can assign differently from the distance
+    * form; a NaN-component subvector scores NaN against every codeword
+    * and keeps code 0. `acc` is a caller-provided ncodes-sized scratch
+    * (reused across subspaces and rows).
     */
   private[ops] def nearestCodeT(flatT: Array[Double], norms: Array[Double],
       dsub: Int, v: Array[Float], off: Int, acc: Array[Double]): Int = {
@@ -300,29 +296,6 @@ object VectorQuant {
     var j = 0
     while (j < k) {
       val d = norms(j) - 2.0 * acc(j)
-      if (d < bestD) { bestD = d; best = j }
-      j += 1
-    }
-    best
-  }
-
-  /** SIMD nearest codeword: argmin_j ||v−c_j||² computed as
-    * argmin_j (||c_j||² − 2·v·c_j) over the flattened book, the dot on
-    * [[graft.functions.VecKernels.dotFloatsAt]]. Same strict-< /
-    * ascending-j tie rule as [[nearestCode]]; the expansion changes
-    * rounding at the ~1e-15 scale, which can flip only genuinely
-    * equidistant codewords (the recall gates, not exactness, own this
-    * path). A NaN-component subvector scores NaN against every
-    * codeword and keeps code 0, like the distance form.
-    */
-  private[ops] def nearestCodeFlat(flat: Array[Float], norms: Array[Double],
-      dsub: Int, v: Array[Float], off: Int): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var j = 0
-    while (j < norms.length) {
-      val d = norms(j) - 2.0 * graft.functions.VecKernels
-        .dotFloatsAt(flat, j * dsub, v, off, dsub)
       if (d < bestD) { bestD = d; best = j }
       j += 1
     }
@@ -558,7 +531,7 @@ object VectorQuant {
     * sides. [[SimilaritySearch.knnJoinIvfPacked]] ships every probed
     * candidate's full f32 vector through the join and scores it exactly
     * (~2.4e11 flops at the 10k×1M bench shape — the measured wall-clock
-    * dominator, see ProfileKnnIdx). Here the join carries the 1-byte-
+    * dominator when the join was profiled in round 6). Here the join carries the 1-byte-
     * per-subspace PQ codes instead: candidates rank by ADC
     * (q·c offset + m table lookups), only each query's top `rerank`
     * survivors touch their raw vectors in the exact re-rank — m/4d of

@@ -1048,23 +1048,32 @@ class OpsSpec extends SparkSpec {
   }
 
   test("vector index topK equals the declarative brute-force ranking") {
-    import spark.implicits._
     val packed = emb.select(col("vec_id").as("id"),
       col("embedding").as("vec"))
-    val idx = VectorIndex.fromArrays(packed, 64).materialize()
-    assert(idx.count == 500L)
-    val q = emb.where(col("vec_id") === 7L)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val got = idx.topK(q, 10)
-    val brute = SimilaritySearch.topK(emb, 7L, 10).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    // same ids in same order; index scores are unrounded
-    assert(got.map(_._1).toSeq == brute.map(_._1).toSeq)
-    got.zip(brute).foreach { case ((_, s1), (_, s2)) =>
-      assert(math.abs(s1 - s2) < 1e-5)
+    // the executor-block form (the route above LocalThreshold) and the
+    // driver-local form materialize() pins
+    val blocks = VectorIndex.fromArrays(packed, 64)
+    val local = VectorIndex.fromArrays(packed, 64).materialize()
+    try {
+      assert(!blocks.isLocal && local.isLocal)
+      val q = emb.where(col("vec_id") === 7L)
+        .select(col("embedding")).head().getSeq[Float](0).toArray
+      val brute = SimilaritySearch.topK(emb, 7L, 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1)))
+      Seq(blocks, local).foreach { idx =>
+        assert(idx.count == 500L)
+        val got = idx.topK(q, 10)
+        // same ids in same order; index scores are unrounded
+        assert(got.map(_._1).toSeq == brute.map(_._1).toSeq)
+        got.zip(brute).foreach { case ((_, s1), (_, s2)) =>
+          assert(math.abs(s1 - s2) < 1e-5)
+        }
+        assert(idx.topK(q, 0).isEmpty)
+      }
+    } finally {
+      blocks.unpersist()
+      local.unpersist()
     }
-    assert(idx.topK(q, 0).isEmpty)
-    idx.unpersist()
   }
 
   test("salted aggregation equals direct aggregation") {
