@@ -2131,7 +2131,7 @@ object Bench {
     * BASELINE.md rows (and which have no published counterpart). */
   private def notesJson(): String = Seq(
     "ordering" -> "r13: io probe, then the cheap protocol points (10k, load-docs), then the FULL part-1 inventory single-rep, then the 1M protocol + the interleaved 2k-probe ORDERING ladder (two guaranteed cycles — their budget is RESERVED from the moment the part-1 sweep starts, stepped down at each spine milestone), then the 10k absolute plain knn leg, then compressed tiers + ivf build/probe, then the round's FIRST-TIME design sections (clustered-recall counterpart, streaming ingest incl. the semantic dedup screen) BEFORE the sections prior records already certify — curation (incl. real sf0.1/sf1-scale corpus points), z-order, bpe, image — then the pairs/neardup sweeps last, and a part-1 median upgrade if budget remains. Rationale: on a contention-clipped day a new point that never lands is absent from the round entirely, while a re-certified one keeps its prior-record value. Ladder RETRIES (beyond the one reservation-funded retry of the worst ordering inversion) only run when the remaining budget also covers every design section not yet recorded",
-    "provenance" -> "every recorded point carries {reps, calib-at-measurement, cpu_run} in the record's provenance map (warm points and ladder legs add the working set's memory-residency fraction; the approximate 1M tier points add recall_at_10 measured vs the exact top-10 on the same corpus — 32-query mean for the knn-join legs, the probe query itself for single-query probes; NOTE the corpus is isotropic random vectors, the hardest case for quantized tiers — see the svs_knn2k_pq_1m note): single-rep points on a calib>2 day are weather-limited and marked as such by their own record. cpu_run = sum(task executorCpuTime)/sum(task executorRunTime) across the point's published rep(s) — <<1 means the executor threads were descheduled or IO-blocked (a slow number is environment/contention, e.g. this record's warm-1M); ~1.0 means the tasks were on-CPU, which is EITHER real work or this VM's second contention mode, hypervisor CPU steal, which inflates thread CPU itself and is invisible to every guest-side counter (ProfileKnnBimodal pins it: identical back-to-back calls burning 2.5x the cpu-seconds with zero GC; /proc/stat shows hours of steal arriving in waves) — hence median-of-reps and the interleaved ladder rather than any single-shot number",
+    "provenance" -> "every recorded point carries {reps, calib-at-measurement, cpu_run} in the record's provenance map (warm points and ladder legs add the working set's memory-residency fraction; the approximate 1M tier points add recall_at_10 measured vs the exact top-10 on the same corpus — 32-query mean for the knn-join legs, the probe query itself for single-query probes; NOTE the corpus is isotropic random vectors, the hardest case for quantized tiers — see the svs_knn2k_pq_1m note): single-rep points on a calib>2 day are weather-limited and marked as such by their own record. cpu_run = sum(task executorCpuTime)/sum(task executorRunTime) across the point's published rep(s) — <<1 means the executor threads were descheduled or IO-blocked (a slow number is environment/contention, e.g. this record's warm-1M); ~1.0 means the tasks were on-CPU, which is EITHER real work or this VM's second contention mode, hypervisor CPU steal, which inflates thread CPU itself and is invisible to every guest-side counter (SURVEY's round-11 record pins it: identical back-to-back calls burning 2.5x the cpu-seconds with zero GC; /proc/stat shows hours of steal arriving in waves) — hence median-of-reps and the interleaved ladder rather than any single-shot number",
     "ladder" -> "the four knn-ladder legs (svs_knn2k_*) run 2000 probes against the SAME 1M x d1536 corpus, reps INTERLEAVED round-robin (A,B,C,D,A,B,C,D; published value = min per leg) so contention drift lands on all legs equally instead of mapping onto ladder position (r8/r10 published inverted orderings exactly that way). r11: the ladder certifies ORDERING at 2k probes — the amortization claim (every rung beats per-call assignment) is probe-count-invariant, and 2k legs are cheap enough that TWO full cycles fit even at calib 3, with their budget reserved before the part-1 sweep can eat it; the plain path also records once at 10k probes (svs_knn_join_1m) for the absolute magnitude. The ladder_monotone/ladder_cycles contract fields state the outcome explicitly. r13 SPLIT CONTRACT: ladder_monotone covers the rungs with MEASURABLE local deltas (indexed, pq vs plain); the bucketed rung's elided codes exchange is ~100 MB at this scale — inside run noise by design (r12's official record inverted on exactly that) — so that rung is certified STRUCTURALLY by the OpsSpec/StoreScaleSpec zero-shuffle-under-the-codes-child assertions, and the record carries bucketed_vs_pq_s, its measured noise-bounded delta vs the pq rung. The worst out-of-order ordering rung gets one retry funded by the ladder's own RESERVATION (never competing with design-section budget); further out-of-order rungs get targeted retries, worst first, each gated on the budget still covering all unrecorded design sections. The indexed leg's derived layout is built ONCE before cycle 1 (untimed index maintenance) and held storage-pool resident across cycles; every rep stamps residency + cpu_run, so a spill- or contention-poisoned rep is visible in its own record",
     "noise" -> s"part-1 queries record single-shot EARLY, then upgrade to medians of $repsG when budget remains (the upgrade replaces value + provenance); part-2 points on persisted state are medians of up to 3 under a 20s rule; cold/load stay single-shot (rerunning those would measure the page cache). The whole run fits SPARK_GRAFT_BENCH_BUDGET_S (default 1380s): points that would overflow are listed in `skipped`, never silently dropped; per-point estimates rescale by `calib` (median measured/expected vs the recorded healthy run)",
     "svs_io_probe_read" -> "fixed-size IO calibration: ~1 GB uncompressed parquet written from cache then read with the page cache dropped; the ratio vs the recorded healthy run seeds the budget estimator, and the pair attributes any run-to-run delta on disk-bound points to environment vs code (r7: same-tree svs_build_1m measured 299s vs 61s purely from IO contention)",
