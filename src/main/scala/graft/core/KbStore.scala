@@ -27,14 +27,8 @@ import graft.functions.VectorFunctions._
   * write-temp-then-publish discipline a distributed commit protocol uses,
   * so the design carries to object stores unchanged.
   *
-  * Caching (reference `_EmbeddingsMatrix`, `kb.py:856-893`): the
-  * embeddings Dataset is persisted on first use and the retrieval
-  * matrix ([[index]]) built on the first retrieve — the "first query
-  * slow, later queries fast" contract (`README.md:135`) maps directly
-  * onto lazy Spark caching. Both are kept per embeddings layout (base,
-  * chain): a commit that leaves `embeddings` alone keeps them. Below
-  * them, every published segment directory is resolved (listed and
-  * its schema fixed) once per store instance by [[segment]], and each
+  * Every published segment directory is resolved (listed and its
+  * schema fixed) once per store instance by [[segment]], and each
   * table's folded merge-on-read view is kept per (table, base, chain),
   * so a warm read plans without touching the filesystem. A segment this
   * store wrote is read with the schema of the frame written to it,
@@ -46,30 +40,45 @@ import graft.functions.VectorFunctions._
   * them to what the live manifest references, and every directory this
   * store deletes is evicted with it.
   *
-  * Reads are served from resident tables, held in one memo per table
-  * with the layout they hold: the first read that needs a table
-  * collects its whole view once and indexes it on the driver. Five
-  * tables are held this way: `docs` (keyed by `id` and by `emb_id`;
-  * every read path hydrates its hits from it), `keyval` (what
-  * [[getKey]] and its siblings read), `ivf_assign` (the inverted lists
-  * [[annRetrieve]] probes), and `text_postings` with `text_doclens`
-  * (what [[bm25Retrieve]] scores), so warm `retrieve`, `fetchDoc`,
-  * `getKeyOr`, `annRetrieve` and `bm25Retrieve` calls run no Spark job
-  * at all. A write to another table keeps a table. A write to it
-  * publishes a layout that extends the held one (same base, the held
-  * chain plus new versions), and the next read folds the new versions'
-  * `del` and `add` segments into the held rows: O(batch) reads, not a
-  * collect of the table. The driver-local retrieval matrix folds the
-  * same way. A layout that does not extend the held one (a minor
-  * compaction, `compact()`, a full rewrite, an adopted rewrite) is
-  * collected again; `close` drops everything. Writes never build or
-  * fold a table: their guard reads stay Spark reads. A table is
+  * Reads are served from one memo of read state, [[held]]: each entry
+  * is kept with the layout (base, chain) of the table it was loaded
+  * from, loaded by the first read that needs it and reused by every
+  * later read of that layout — the reference's "first query slow, later
+  * queries fast" matrix (`_EmbeddingsMatrix`, `kb.py:856-893`,
+  * `README.md:135`), applied to all read state. The entries:
+  *   - resident tables, each collected whole once and indexed on the
+  *     driver: `docs` (keyed by `id` and by `emb_id`; every read path
+  *     hydrates its hits from it), `keyval` (what [[getKey]] and its
+  *     siblings read), `ivf_centroids` with `ivf_assign` (the inverted
+  *     lists [[annRetrieve]] probes), and `text_postings` with
+  *     `text_doclens` (what [[bm25Retrieve]] scores);
+  *   - the retrieval matrix ([[index]]), in the form
+  *     `VectorIndex.fromPacked` picks: driver stripes from one collect,
+  *     or persisted executor blocks above its local threshold;
+  *   - the persisted [[embeddings]] Dataset the Spark routes and the
+  *     index refreshes read.
+  * So warm `retrieve`, `fetchDoc`, `getKeyOr`, `annRetrieve` and
+  * `bm25Retrieve` calls run no Spark job at all. A write to another
+  * table keeps an entry. A write to its table publishes a layout that
+  * extends the held one (same base, the held chain plus new versions),
+  * and the next read folds the new versions' `del` and `add` segments
+  * into what is held: O(batch) reads, not a reload. Resident rows drop
+  * the tombstoned keys and append the added rows; the driver-local
+  * matrix does the same through `VectorIndex.updated`; the Dataset and
+  * an executor-block matrix do not fold. Whatever cannot be folded to
+  * the live layout (those two after any embeddings write, anything
+  * after a minor compaction, `compact()`, a full rewrite or an adopted
+  * rewrite) is loaded again. The one loop that folds or loads also
+  * releases what it replaces (the Dataset and executor blocks are
+  * unpersisted); a publish releases the entries it leaves unable to
+  * fold, and `close` releases all of them. Writes never build or fold
+  * a resident table: their guard reads stay Spark reads. A table is
   * resident only while its view's planned (Parquet) size, known from
   * the resolved files without a job, is at most
-  * [[KbStore.ResidentMaxBytes]]; above it, the entry is dropped and
-  * each read runs its Spark route instead. The IVF centroids use the
-  * same memo without the cap, since every ANN route and
-  * [[refreshAnnIndex]] need them on the driver.
+  * [[KbStore.ResidentMaxBytes]]; above it, its entry holds nothing and
+  * each read runs its Spark route instead. The IVF centroids are held
+  * without the cap, since every ANN route and [[refreshAnnIndex]] need
+  * them on the driver.
   *
   * Single-writer semantics, like the reference's one-connection
   * discipline (`kb.py:116-137`).
@@ -86,11 +95,6 @@ final class KbStore private (
     * and its manifest publish, so a spec can inject a racing writer
     * deterministically and exercise the publish-conflict retry. */
   private[graft] var prePublishHook: () => Unit = () => ()
-  /** The persisted embeddings Dataset and the retrieval index, each
-    * with the embeddings layout (base, chain) it was built from. */
-  private var cachedEmb: Option[((Long, Seq[Long]), Dataset[Emb])] = None
-  private var cachedIdx: Option[((Long, Seq[Long]), graft.ops.VectorIndex)] =
-    None
   /** Largest planned view (bytes) kept resident; test seam: specs set
     * -1 to force every read's Spark route. */
   private[graft] var residentCap: Long = KbStore.ResidentMaxBytes
@@ -119,8 +123,12 @@ final class KbStore private (
     (m.table_bases.getOrElse(name, m.table_versions(name)),
       m.table_deltas.getOrElse(name, Seq.empty[Long]))
 
-  private def readWithMeta(m: KbMeta, name: String): DataFrame = {
-    val (base, chain) = layoutOf(m, name)
+  private def readWithMeta(m: KbMeta, name: String): DataFrame =
+    view(name, layoutOf(m, name))
+
+  /** Table `name`'s merge-on-read view in `layout`. */
+  private def view(name: String, layout: (Long, Seq[Long])): DataFrame = {
+    val (base, chain) = layout
     val key = (name, base, chain)
     val plan = Option(views.get(key)).getOrElse {
       val folded = chain.foldLeft(baseSegment(name, base)) { (acc, v) =>
@@ -149,11 +157,10 @@ final class KbStore private (
   private val views = new java.util.concurrent.ConcurrentHashMap[
     (String, Long, Seq[Long]), LogicalPlan]()
 
-  /** table -> the layout (base version, delta chain) held for it and
-    * that layout's resident table (see [[resident]]), None when its
-    * view is planned above [[residentCap]]. */
-  private val residents = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Seq[Long]), Option[KbStore.Resident])]()
+  /** The read memo (see the class doc and [[held]]): entry name -> what
+    * the entry holds and the layout of its table it holds it for. */
+  private val residents =
+    new java.util.concurrent.ConcurrentHashMap[String, KbStore.Held[_]]()
 
   /** Segment dir this store published -> the schema of the frame it
     * wrote there (see [[seedSchemas]]). */
@@ -236,10 +243,11 @@ final class KbStore private (
       live: (Long, Seq[Long])): Boolean =
     held._1 == live._1 && live._2.startsWith(held._2)
 
-  /** Drop memo entries outside the live manifest's layouts. A resident
-    * table stays while the live layout extends the one it holds: the
-    * next read folds the new versions into it. */
-  private def pruneResolved(): Unit = {
+  /** Prune the memos to the live manifest. A read-memo entry stays
+    * while it holds the live layout of its table, or one the live
+    * layout extends and it can fold (the next read folds the new
+    * versions into it); every other entry is released. */
+  private def invalidate(): Unit = synchronized {
     import scala.jdk.CollectionConverters._
     val m = metaCache
     val live = m.table_versions.keySet.map { name =>
@@ -247,9 +255,11 @@ final class KbStore private (
       (name, base, chain)
     }
     views.keySet.retainAll(live.asJava)
-    residents.entrySet.removeIf { e =>
-      !m.table_versions.contains(e.getKey) ||
-        !extendsLayout(e.getValue._1, layoutOf(m, e.getKey))
+    release { h =>
+      !m.table_versions.contains(h.memo.table) || {
+        val now = layoutOf(m, h.memo.table)
+        h.layout != now && !(h.folds && extendsLayout(h.layout, now))
+      }
     }
     val dirs = liveDirs(m).asJava
     segments.keySet.retainAll(dirs)
@@ -280,47 +290,21 @@ final class KbStore private (
   def edges: Dataset[Edge] = read("edges").as[Edge]
   def keyval: Dataset[KV] = read("keyval").as[KV]
 
-  /** Cached embeddings — the analog of the reference's in-RAM matrix
-    * (`kb.py:573-618`); dropped by every write that moves the
-    * embeddings table.
-    */
-  def embeddings: Dataset[Emb] = synchronized {
-    val layout = layoutOf(metaCache, "embeddings")
-    cachedEmb match {
-      case Some((`layout`, ds)) => ds
-      case _ =>
-        cachedEmb.foreach(_._2.unpersist())
-        val ds = read("embeddings").as[Emb]
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        cachedEmb = Some(layout -> ds)
-        ds
-    }
-  }
+  /** The embeddings table, persisted on first use per layout (a read
+    * memo entry, see the class doc): released by every write that
+    * moves the embeddings table. */
+  def embeddings: Dataset[Emb] = held(embeddingsMemo).get
+
+  private val embeddingsMemo = new KbStore.Memo[Dataset[Emb]](
+    "embeddings", "embeddings",
+    load = l => Some(view("embeddings", l).as[Emb]
+      .persist(StorageLevel.MEMORY_AND_DISK)),
+    release = _.unpersist())
 
   /** Chain-resolved table access for specs (parity twins need the same
     * merged view the store itself queries).
     */
   private[graft] def readTableForSpec(name: String): DataFrame = read(name)
-
-  /** Prune the memos to the live manifest. The cached embeddings stay
-    * while the embeddings layout is unchanged, and the retrieval index
-    * while the layout extends the one it was built from and it is held
-    * on the driver (the next [[index]] folds the new versions in). */
-  private def invalidate(): Unit = synchronized {
-    val emb = layoutOf(metaCache, "embeddings")
-    if (!cachedEmb.exists(_._1 == emb)) {
-      cachedEmb.foreach(_._2.unpersist())
-      cachedEmb = None
-    }
-    if (!cachedIdx.exists { case (l, idx) => idx.isLocal && extendsLayout(l, emb) })
-      dropIndex()
-    pruneResolved()
-  }
-
-  private def dropIndex(): Unit = synchronized {
-    cachedIdx.foreach(_._2.unpersist())
-    cachedIdx = None
-  }
 
   /** The planned (Parquet) size of table `name`'s merge-on-read view in
     * `layout`: the file bytes of its base and `add` segments, which is
@@ -344,52 +328,71 @@ final class KbStore private (
     (gone, segment(s"$dir/add"))
   }
 
-  /** The live layout of table `name`, resident (see the class doc):
-    * `rows` collects the view once, on the first read that needs it,
-    * and `index` shapes the collected rows for lookups. None while the
-    * view is planned above [[residentCap]] (unless `capped` is false);
-    * the size comes from the resolved scans' file sizes, so deciding
-    * runs no job ([[plannedBytes]]). Read paths only.
-    *
-    * When a write moved the layout by appending versions to the chain
-    * held (see [[extendsLayout]]), the held rows are brought forward
-    * instead of collected again: per new version in publish order, the
-    * rows whose `key` that version tombstoned drop and the rows of its
-    * `add` segment (collected by `rows`) append, then `index` runs over
-    * the result. That is the merge-on-read fold of [[readWithMeta]] over
-    * the same segments, so it holds the rows a fresh collect would
-    * return, in the order the view's scans produce them. */
-  private def resident[R: scala.reflect.ClassTag, T <: AnyRef](name: String,
-      capped: Boolean = true)(rows: DataFrame => Array[R])(key: R => Any)(
-      index: Array[R] => T): Option[T] =
+  /** What read-memo entry `memo` holds for the live layout of its
+    * table, None when its load holds nothing (see the class doc). The
+    * one loop over the memo: a held value for the live layout is
+    * returned as is. Otherwise, when the live layout extends the held
+    * one and the held value folds, the versions appended since are
+    * folded into it, and the fold takes it over; else (or when the fold
+    * declines) the held value is released and the entry loaded again.
+    * Read paths only. */
+  private def held[T <: AnyRef](memo: KbStore.Memo[T]): Option[T] =
     synchronized {
-      val m = metaCache
-      val layout = layoutOf(m, name)
-      val held = Option(residents.get(name))
-      held match {
-        case Some((`layout`, t)) => t
+      val layout = layoutOf(metaCache, memo.table)
+      val prior = Option(residents.get(memo.name))
+        .map(_.asInstanceOf[KbStore.Held[T]]) // one name, one memo type
+      prior match {
+        case Some(h) if h.layout == layout => h.value
         case _ =>
-          val t =
-            if (!capped || plannedBytes(name, layout) <= residentCap) {
-              val collected = held match {
-                case Some((from, Some(r))) if extendsLayout(from, layout) =>
-                  val columns = baseSegment(name, layout._1).columns
-                  layout._2.drop(from._2.size).foldLeft(
-                      r.rows.asInstanceOf[Array[R]]) { (acc, v) =>
-                    val (gone, add) = versionDelta(name, v)
-                    val kept =
-                      if (gone.isEmpty) acc else acc.filterNot(r => gone(key(r)))
-                    add.fold(kept)(a =>
-                      kept ++ rows(a.select(columns.map(col(_)): _*)))
-                  }
-                case _ => rows(readWithMeta(m, name))
-              }
-              Some(KbStore.Resident(collected, index(collected)))
-            } else None
-          residents.put(name, (layout, t))
-          t
+          val folded = prior.filter(h => h.folds && extendsLayout(h.layout, layout))
+            .flatMap(h => memo.fold(h.value.get, layout, layout._2.drop(h.layout._2.size)))
+          if (folded.isEmpty) prior.foreach(_.release())
+          val value = folded.orElse(memo.load(layout))
+          residents.put(memo.name, KbStore.Held(memo, layout, value))
+          value
       }
-    }.map(_.value.asInstanceOf[T]) // one table name, one table type
+    }
+
+  /** Release and drop the read-memo entries `drop` selects. */
+  private def release(drop: KbStore.Held[_] => Boolean): Unit =
+    residents.values.removeIf { h =>
+      drop(h) && { h.release(); true }
+    }
+
+  /** The read-memo entry of table `name` held as its collected rows
+    * while `within` its layout (see the class doc): `rows` collects a
+    * view and `index` shapes the collected rows for lookups. A fold
+    * takes, per new version in publish order, the rows whose `key` that
+    * version tombstoned out and appends the rows of its `add` segment
+    * (collected by `rows`), then runs `index` over the result. That is
+    * the merge-on-read fold of [[readWithMeta]] over the same segments,
+    * so it holds the rows a fresh collect would return, in the order
+    * the view's scans produce them. */
+  private def rowsMemo[R: scala.reflect.ClassTag, T <: AnyRef](name: String,
+      within: ((Long, Seq[Long])) => Boolean)(rows: DataFrame => Array[R])(
+      key: R => Any)(index: Array[R] => T): KbStore.Memo[KbStore.Resident[R, T]] = {
+    def resident(collected: Array[R]) = KbStore.Resident(collected, index(collected))
+    new KbStore.Memo[KbStore.Resident[R, T]](name, name,
+      load = l => Option.when(within(l))(resident(rows(view(name, l)))),
+      folds = _ => true,
+      fold = (r, l, versions) => Option.when(within(l)) {
+        val columns = baseSegment(name, l._1).columns
+        resident(versions.foldLeft(r.rows) { (acc, v) =>
+          val (gone, add) = versionDelta(name, v)
+          val kept = if (gone.isEmpty) acc else acc.filterNot(r => gone(key(r)))
+          add.fold(kept)(a => kept ++ rows(a.select(columns.map(col(_)): _*)))
+        })
+      })
+  }
+
+  /** The live layout of table `name`, resident (see the class doc) while
+    * its view is planned at most [[residentCap]]; the size comes from
+    * the resolved scans' file sizes, so deciding runs no job
+    * ([[plannedBytes]]). */
+  private def resident[R: scala.reflect.ClassTag, T <: AnyRef](name: String)(
+      rows: DataFrame => Array[R])(key: R => Any)(index: Array[R] => T): Option[T] =
+    held(rowsMemo(name, plannedBytes(name, _) <= residentCap)(rows)(key)(index))
+      .map(_.value)
 
   /** The live docs layout's doc table, when resident. */
   private def docTable(): Option[KbStore.DocTable] =
@@ -425,16 +428,16 @@ final class KbStore private (
     * next read to fold, do not count. */
   private[graft] def residentRowsForSpec(name: String): Seq[Int] =
     Option(residents.get(name)).toSeq.collect {
-      case (layout, Some(r)) if layout == layoutOf(metaCache, name) =>
-        r.rows.length
+      case KbStore.Held(_, layout, Some(r: KbStore.Resident[_, _]))
+          if layout == layoutOf(metaCache, name) => r.rows.length
     }
 
   /** The current ANN index's centroids as (cid, cvec), collected once
     * per ivf_centroids layout and never capped. */
   private def ivfCentroids(): Seq[(Long, Array[Double])] =
-    resident(KbStore.IvfCentroidsTable, capped = false)(
+    held(rowsMemo(KbStore.IvfCentroidsTable, _ => true)(
       _.select($"cid", $"cvec").as[(Long, Array[Double])].collect())(_._1)(
-      _.toSeq).get
+      _.toSeq)).get.value
 
   /** The current ANN index's inverted lists, when resident. */
   private def ivfLists(): Option[KbStore.IvfLists] =
@@ -461,9 +464,11 @@ final class KbStore private (
       _.iterator.map(kv => kv.key -> kv).toMap)
 
   /** The batch-built retrieval index (reference `_EmbeddingsMatrix`,
-    * `kb.py:856-893`): lazily built on first retrieve, kept for the
-    * embeddings layout it was built from. None when the store has no
-    * embeddings.
+    * `kb.py:856-893`): a read-memo entry (see the class doc), built on
+    * the first retrieve by `VectorIndex.fromPacked` straight from the
+    * embeddings view, so a cold build below its local threshold runs a
+    * count and one collect and persists nothing. None when the store
+    * has no embeddings.
     *
     * After a write that appended versions to the embeddings chain, a
     * driver-local index is brought forward instead of rebuilt: per new
@@ -473,35 +478,23 @@ final class KbStore private (
     * threshold, or an empty one, is built from scratch like any other
     * layout.
     */
-  def index(): Option[graft.ops.VectorIndex] = synchronized {
+  def index(): Option[graft.ops.VectorIndex] = held(indexMemo)
+
+  private val indexMemo = {
     import graft.functions.FloatVecPack.floatVecPack
-    val layout = layoutOf(metaCache, "embeddings")
-    cachedIdx match {
-      case Some((`layout`, idx)) => Some(idx)
-      case held =>
-        val folded = held.collect {
-          case (from, idx) if idx.isLocal && extendsLayout(from, layout) =>
-            layout._2.drop(from._2.size).foldLeft(idx) { (acc, v) =>
-              val (gone, add) = versionDelta("embeddings", v)
-              val rows = add.fold(Array.empty[(Long, Array[Byte])])(
-                _.select($"id", floatVecPack($"vec")).as[(Long, Array[Byte])]
-                  .collect())
-              acc.updated(gone.map(_.asInstanceOf[Long]), rows.map(_._1),
-                Array.concat(rows.map(_._2).toSeq: _*))
-            }
-        }.filter(i => i.count > 0 && i.count <= graft.ops.VectorIndex.LocalThreshold)
-        dropIndex()
-        folded.orElse {
-          embeddings.limit(1).collect().headOption.map { probe =>
-            graft.ops.VectorIndex.fromArrays(
-              embeddings.toDF().select($"id", $"vec"), probe.vec.length)
-              .materialize()
-          }
-        }.map { idx =>
-          cachedIdx = Some(layout -> idx)
-          idx
+    new KbStore.Memo[graft.ops.VectorIndex]("index", "embeddings",
+      load = l => graft.ops.VectorIndex.fromArrays(view("embeddings", l)),
+      folds = _.isLocal,
+      fold = (idx, _, versions) => versions.foldLeft(Option(idx)) { (acc, v) =>
+        acc.flatMap { i =>
+          val (gone, add) = versionDelta("embeddings", v)
+          val rows = add.fold(Array.empty[(Long, Array[Byte])])(
+            _.select($"id", floatVecPack($"vec")).as[(Long, Array[Byte])].collect())
+          i.updated(gone.map(_.asInstanceOf[Long]), rows.map(_._1),
+            Array.concat(rows.map(_._2).toSeq: _*))
         }
-    }
+      }.filter(_.count > 0),
+      release = _.unpersist())
   }
 
   // ------------------------------------------------------------------
@@ -3289,11 +3282,8 @@ final class KbStore private (
     // closing ends this writer's session — full reclamation is safe
     if (vacuumFirst) vacuum(retain = 0)
     synchronized {
-      cachedEmb.foreach(_._2.unpersist())
-      cachedEmb = None
-      dropIndex()
       invalidate()
-      residents.clear()
+      release(_ => true)
     }
   }
 }
@@ -3559,7 +3549,28 @@ object KbStore {
 
   /** One resident table: the rows collected (kept so a later layout
     * can fold its new segments into them) and their driver-side form. */
-  private final case class Resident(rows: Array[_], value: AnyRef)
+  private final case class Resident[R, T](rows: Array[R], value: T)
+
+  /** One kind of read-memo entry (see the class doc): what reads of
+    * `table` hold for one of its layouts, under `name`. `load` builds
+    * it for a layout, None when that layout is not held; `fold` brings
+    * a held value that `folds` forward to a layout whose chain appends
+    * the given versions to its own, None when it cannot (the entry is
+    * then loaded again); `release` frees what a value pins outside the
+    * driver heap. */
+  private final class Memo[T <: AnyRef](val name: String, val table: String,
+      val load: ((Long, Seq[Long])) => Option[T],
+      val folds: T => Boolean = (_: T) => false,
+      val fold: (T, (Long, Seq[Long]), Seq[Long]) => Option[T] =
+        (_: T, _: (Long, Seq[Long]), _: Seq[Long]) => None,
+      val release: T => Unit = (_: T) => ())
+
+  /** What read-memo entry `memo` holds for `layout` of its table. */
+  private final case class Held[T <: AnyRef](memo: Memo[T],
+      layout: (Long, Seq[Long]), value: Option[T]) {
+    def folds: Boolean = value.exists(memo.folds)
+    def release(): Unit = value.foreach(memo.release)
+  }
 
   /** Every doc row of one docs layout, keyed by id and by emb_id: the
     * resident doc table read paths hydrate hits from. */

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, length}
 import org.apache.spark.storage.StorageLevel
 
 /** A batch-built, memory-resident vector index: the Spark-native
@@ -29,77 +29,62 @@ import org.apache.spark.storage.StorageLevel
   * Tie order matches the reference's top-k (larger id first on equal
   * score, `util.py:190-203`).
   *
-  * A driver-local index ([[isLocal]]) also scores a given id list
-  * ([[scoreLocal]]): the candidate-scoring half of an IVF probe, with
-  * no Spark job, exactly as `FloatVecDot` scores those rows in a plan.
+  * [[VectorIndex.fromPacked]] picks the form from the row count: at
+  * most [[VectorIndex.LocalThreshold]] vectors are collected once and
+  * held on the driver in stripes ([[isLocal]]), exactly the reference's
+  * in-RAM matrix; larger ones stay in persisted executor blocks. An
+  * index never changes after it is built.
+  *
+  * A driver-local index also scores a given id list ([[scoreLocal]]):
+  * the candidate-scoring half of an IVF probe, with no Spark job,
+  * exactly as `FloatVecDot` scores those rows in a plan.
   *
   * A driver-local index also takes a write without a rebuild:
-  * [[updated]] returns a driver-only index (stripes, no RDD) with some
-  * ids removed and a new stripe of rows added. Scores are the same
-  * kernel's over the same bytes, and [[topK]] orders the global
-  * (score, id) list, so the answer does not depend on how the rows are
-  * striped.
+  * [[updated]] returns a new driver-local index with some ids removed
+  * and a new stripe of rows added. Scores are the same kernel's over
+  * the same bytes, and [[topK]] orders the global (score, id) list, so
+  * the answer does not depend on how the rows are striped.
   */
 final class VectorIndex private (
     blocks: Option[RDD[(Array[Long], Array[Byte])]],
+    stripes: Option[Array[(Array[Long], Array[Byte])]],
     val dim: Int,
-    stripes: Option[Array[(Array[Long], Array[Byte])]]) extends Serializable {
+    /** Number of indexed vectors. */
+    val count: Long) extends Serializable {
 
-  /** Number of indexed vectors. */
-  lazy val count: Long = localBlocks match {
-    case Some(s) => s.iterator.map(_._1.length.toLong).sum
-    case None => blocks.get.map(_._1.length.toLong).sum().toLong
-  }
-
-  /** Driver-local copy of the blocks for small indexes: below this many
-    * vectors the whole matrix is cheaper to hold on the driver (it is
-    * exactly the reference's in-RAM matrix) than to schedule a Spark job
-    * per query — a 10k×1536 corpus is 65 MB and scans in ~10 ms, while
-    * job dispatch alone costs ~30-50 ms.
-    */
-  private var localBlocks: Option[Array[(Array[Long], Array[Byte])]] = stripes
-
-  /** id -> (stripe << 32 | row) over [[localBlocks]], built by the first
-    * [[scoreLocal]]. */
-  private var localRowOf: Option[scala.collection.mutable.LongMap[Long]] = None
-
-  /** Materialize the index in executor memory (the reference's lazy
-    * first-query matrix build); indexes of at most
-    * [[VectorIndex.LocalThreshold]] vectors are additionally pinned on
-    * the driver for job-free queries.
-    */
-  def materialize(): VectorIndex = {
-    if (!isLocal && count <= VectorIndex.LocalThreshold) {
-      // stripe once across cores so local queries parallelize without
-      // per-query copying
-      localRowOf = None
-      localBlocks = Some(blocks.get.collect().flatMap { case (ids, mat) =>
-        VectorIndex.striped(ids, mat, dim)
-      })
+  /** id -> (stripe << 32 | row) over the driver stripes, built by the
+    * first [[scoreLocal]]. */
+  private lazy val rowOf: scala.collection.mutable.LongMap[Long] = {
+    val m = new scala.collection.mutable.LongMap[Long]()
+    val held = localStripes("scoreLocal")
+    held.indices.foreach { s =>
+      val sIds = held(s)._1
+      sIds.indices.foreach(r => m.update(sIds(r), s.toLong << 32 | r))
     }
-    this
+    m
   }
 
-  /** Release the executor blocks and the driver copy made from them. A
-    * driver-only index ([[updated]]) holds no executor blocks and stays
-    * usable: its stripes go with the object. */
-  def unpersist(): Unit = synchronized {
-    blocks.foreach { b => b.unpersist(); localBlocks = None; localRowOf = None }
-  }
+  private def localStripes(op: String): Array[(Array[Long], Array[Byte])] =
+    stripes.getOrElse(
+      throw new IllegalStateException(s"$op needs a driver-local index"))
 
-  /** A driver-only index of this one's vectors without the ids in
+  /** Release the executor blocks. A driver-local index holds none and
+    * stays usable: its stripes go with the object. */
+  def unpersist(): Unit = blocks.foreach(_.unpersist())
+
+  /** A driver-local index of this one's vectors without the ids in
     * `removed`, plus the rows `addIds` (packed f32 rows in `addMat`,
-    * as `FloatVecPack` packs them) as one more stripe. Stripes that
+    * as `FloatVecPack` packs them) as one more stripe; None when the
+    * result would hold more than [[VectorIndex.LocalThreshold]] vectors,
+    * which [[VectorIndex.fromPacked]] keeps on executors. Stripes that
     * lose no row are shared, not copied; once there are more stripes
-    * than cores, all rows are cut into fresh stripes as [[materialize]]
-    * cuts them. Requires [[isLocal]].
+    * than cores, all rows are cut into fresh stripes as
+    * [[VectorIndex.fromPacked]] cuts them. Requires [[isLocal]].
     */
   def updated(removed: scala.collection.Set[Long], addIds: Array[Long],
-      addMat: Array[Byte]): VectorIndex = {
-    val held = synchronized(localBlocks).getOrElse(
-      throw new IllegalStateException("updated needs a driver-local index"))
+      addMat: Array[Byte]): Option[VectorIndex] = {
     val rowBytes = dim * 4
-    val kept = held.flatMap { case (ids, mat) =>
+    val kept = localStripes("updated").flatMap { case (ids, mat) =>
       if (removed.isEmpty || !ids.exists(removed.contains)) Some((ids, mat))
       else {
         val keep = ids.indices.filterNot(r => removed.contains(ids(r))).toArray
@@ -113,15 +98,21 @@ final class VectorIndex private (
       }
     }
     val all = if (addIds.isEmpty) kept else kept :+ ((addIds, addMat))
-    val next =
-      if (all.length <= Runtime.getRuntime.availableProcessors()) all
-      else VectorIndex.striped(all.flatMap(_._1),
-        Array.concat(all.map(_._2).toSeq: _*), dim)
-    new VectorIndex(None, dim, Some(next))
+    val n = all.iterator.map(_._1.length.toLong).sum
+    Option.when(n <= VectorIndex.LocalThreshold) {
+      val next =
+        if (all.length <= Runtime.getRuntime.availableProcessors()) all
+        else {
+          val mat = Array.concat(all.map(_._2).toSeq: _*)
+          VectorIndex.striped(all.flatMap(_._1), dim)(r => (mat, r * rowBytes))
+        }
+      new VectorIndex(None, Some(next), dim, n)
+    }
   }
 
-  /** Whether the blocks are held on the driver (see [[materialize]]). */
-  def isLocal: Boolean = localBlocks.isDefined
+  /** Whether the vectors are held on the driver (see
+    * [[VectorIndex.fromPacked]]). */
+  def isLocal: Boolean = stripes.isDefined
 
   /** Exact dot scores of `ids` against the driver-local blocks, as
     * (id, score) in input order; ids the index does not hold are
@@ -132,25 +123,12 @@ final class VectorIndex private (
     * [[isLocal]].
     */
   def scoreLocal(ids: Array[Long], query: Array[Float]): Array[(Long, Double)] = {
-    val (stripes, rowOf) = synchronized {
-      val stripes = localBlocks.getOrElse(throw new IllegalStateException(
-        "scoreLocal needs a driver-local index"))
-      val rowOf = localRowOf.getOrElse {
-        val m = new scala.collection.mutable.LongMap[Long]()
-        stripes.indices.foreach { s =>
-          val sIds = stripes(s)._1
-          sIds.indices.foreach(r => m.update(sIds(r), s.toLong << 32 | r))
-        }
-        localRowOf = Some(m)
-        m
-      }
-      (stripes, rowOf)
-    }
+    val held = localStripes("scoreLocal")
     val d = dim
     val q = if (query.length > d) java.util.Arrays.copyOf(query, d) else query
     ids.flatMap { id =>
       rowOf.get(id).map { pos =>
-        val mat = stripes((pos >>> 32).toInt)._2
+        val mat = held((pos >>> 32).toInt)._2
         (id, graft.functions.VecKernels.dotPackedAt(mat, pos.toInt * d * 4, q))
       }
     }
@@ -162,10 +140,9 @@ final class VectorIndex private (
     * is only meaningful when this is ~1.0 — a partially-evicted matrix
     * measures the disk, not the scan (the r8 `svs_warm_1m` lesson).
     */
-  def memoryResidency(): Double = localBlocks match {
-    case Some(_) => 1.0
-    case None =>
-      val rdd = blocks.get
+  def memoryResidency(): Double = blocks match {
+    case None => 1.0
+    case Some(rdd) =>
       rdd.sparkContext.getRDDStorageInfo.find(_.id == rdd.id) match {
         case Some(info) if info.numPartitions > 0 =>
           val cachedFrac =
@@ -207,12 +184,12 @@ final class VectorIndex private (
       }
       Iterator.single(heap.toArray(Array.empty[(Double, Long)]))
     }
-    val perPart = localBlocks match {
-      case Some(stripes) =>
+    val perPart = stripes match {
+      case Some(held) =>
         // driver-local pre-striped scan on the common FJ pool: no Spark
         // job, no copying — the reference's warm in-RAM query path
-        java.util.Arrays.stream(stripes.indices.toArray).parallel()
-          .mapToObj(i => scanPartition(Iterator.single(stripes(i))).next())
+        java.util.Arrays.stream(held.indices.toArray).parallel()
+          .mapToObj(i => scanPartition(Iterator.single(held(i))).next())
           .toArray(new Array[Array[(Double, Long)]](_))
       case None => blocks.get.mapPartitions(scanPartition).collect()
     }
@@ -226,14 +203,18 @@ final class VectorIndex private (
 
 object VectorIndex {
 
-  /** At most this many vectors are held on the driver (see
-    * [[VectorIndex.materialize]]). */
+  /** At most this many vectors are held on the driver: below it the
+    * whole matrix is cheaper to hold there (it is exactly the
+    * reference's in-RAM matrix) than to schedule a Spark job per query
+    * — a 10k×1536 corpus is 65 MB and scans in ~10 ms, while job
+    * dispatch alone costs ~30-50 ms. */
   val LocalThreshold: Long = 200000L
 
-  /** One block cut into `min(cores, n / 1024)` (at least one) stripes of
-    * consecutive rows. */
-  private def striped(ids: Array[Long], mat: Array[Byte],
-      dim: Int): Array[(Array[Long], Array[Byte])] = {
+  /** `ids` with their rows cut into `min(cores, n / 1024)` (at least
+    * one) stripes of consecutive rows; `row(r)` gives the array holding
+    * row `r`'s `dim * 4` bytes and its offset there. */
+  private def striped(ids: Array[Long], dim: Int)(
+      row: Int => (Array[Byte], Int)): Array[(Array[Long], Array[Byte])] = {
     val rowBytes = dim * 4
     val n = ids.length
     val nStripes = math.min(
@@ -241,8 +222,12 @@ object VectorIndex {
     Array.tabulate(nStripes) { s =>
       val lo = (n.toLong * s / nStripes).toInt
       val hi = (n.toLong * (s + 1) / nStripes).toInt
-      (java.util.Arrays.copyOfRange(ids, lo, hi),
-        java.util.Arrays.copyOfRange(mat, lo * rowBytes, hi * rowBytes))
+      val mat = new Array[Byte]((hi - lo) * rowBytes)
+      (lo until hi).foreach { r =>
+        val (src, off) = row(r)
+        System.arraycopy(src, off, mat, (r - lo) * rowBytes, rowBytes)
+      }
+      (java.util.Arrays.copyOfRange(ids, lo, hi), mat)
     }
   }
 
@@ -253,16 +238,47 @@ object VectorIndex {
     }
 
   /** Build from a DataFrame with (id LONG, vec BINARY packed f32) —
-    * e.g. the Bench corpus or a packed embeddings table.
+    * e.g. the Bench corpus or a packed embeddings table — or None when
+    * it has no rows. One job counts the rows; at most
+    * [[LocalThreshold]] of them are then collected in one more job and
+    * cut into driver stripes, and nothing is persisted. Above it the
+    * index is [[onExecutors]], with the dim read off one row.
     *
-    * @param numBlocks optional shard count; use fewer blocks for small
-    *                  corpora so per-task scheduling overhead doesn't
-    *                  dominate query latency (a block of ≲100k×d1536
-    *                  scans in a few ms)
+    * @param numBlocks optional shard count of the executor form; use
+    *                  fewer blocks for small corpora so per-task
+    *                  scheduling overhead doesn't dominate query
+    *                  latency (a block of ≲100k×d1536 scans in a few ms)
     */
-  def fromPacked(df: DataFrame, dim: Int, numBlocks: Int = 0): VectorIndex = {
+  def fromPacked(df: DataFrame, numBlocks: Int = 0): Option[VectorIndex] = {
     val base = df.select(col("id"), col("vec"))
-    val shaped = if (numBlocks > 0) base.coalesce(numBlocks) else base
+    // a row count with no aggregate: one job, no shuffle stage
+    val n = base.select(col("id")).rdd.count()
+    if (n == 0) None
+    else if (n <= LocalThreshold) {
+      val rows = base.collect()
+      val ids = rows.map(_.getLong(0))
+      val dim = rows.head.getAs[Array[Byte]](1).length / 4
+      val held = striped(ids, dim)(r => (rows(r).getAs[Array[Byte]](1), 0))
+      Some(new VectorIndex(None, Some(held), dim, ids.length.toLong))
+    } else {
+      val dim = base.select(length(col("vec"))).head().getInt(0) / 4
+      Some(onExecutors(base, dim, n, numBlocks))
+    }
+  }
+
+  /** Build from an (id LONG, vec ARRAY<FLOAT>) embeddings table, as
+    * [[fromPacked]] does. */
+  def fromArrays(df: DataFrame): Option[VectorIndex] = {
+    import graft.functions.FloatVecPack.floatVecPack
+    fromPacked(df.select(col("id"), floatVecPack(col("vec")).as("vec")))
+  }
+
+  /** The executor form of [[fromPacked]] over `df`'s (id, vec) rows,
+    * in that column order: one dense block per partition, persisted on
+    * first use; `count` is the row count the caller knows. */
+  private[graft] def onExecutors(df: DataFrame, dim: Int, count: Long,
+      numBlocks: Int = 0): VectorIndex = {
+    val shaped = if (numBlocks > 0) df.coalesce(numBlocks) else df
     val blocks = shaped
       .rdd
       .mapPartitions { it =>
@@ -283,12 +299,6 @@ object VectorIndex {
         }
       }
       .persist(StorageLevel.MEMORY_AND_DISK)
-    new VectorIndex(Some(blocks), dim, None)
-  }
-
-  /** Build from an (id LONG, vec ARRAY<FLOAT>) embeddings table. */
-  def fromArrays(df: DataFrame, dim: Int): VectorIndex = {
-    import graft.functions.FloatVecPack.floatVecPack
-    fromPacked(df.select(col("id"), floatVecPack(col("vec")).as("vec")), dim)
+    new VectorIndex(Some(blocks), None, dim, count)
   }
 }

@@ -1050,10 +1050,11 @@ class OpsSpec extends SparkSpec {
   test("vector index topK equals the declarative brute-force ranking") {
     val packed = emb.select(col("vec_id").as("id"),
       col("embedding").as("vec"))
-    // the executor-block form (the route above LocalThreshold) and the
-    // driver-local form materialize() pins
-    val blocks = VectorIndex.fromArrays(packed, 64)
-    val local = VectorIndex.fromArrays(packed, 64).materialize()
+    // the driver-local form the factory picks for 500 rows, and the
+    // executor-block form it builds above LocalThreshold
+    val local = VectorIndex.fromArrays(packed).get
+    val blocks = VectorIndex.onExecutors(packed.select(col("id"),
+      graft.functions.FloatVecPack.floatVecPack(col("vec")).as("vec")), 64, 500L)
     try {
       assert(!blocks.isLocal && local.isLocal)
       val q = emb.where(col("vec_id") === 7L)

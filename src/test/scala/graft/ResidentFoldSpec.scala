@@ -266,4 +266,36 @@ class ResidentFoldSpec extends SparkSpec {
     assert(kb.index().exists(_ eq idx.get))
     kb.close()
   }
+
+  /** (cache-manager entries, persisted RDD ids) of the session. */
+  private def cacheProbes: (Int, Set[Int]) =
+    (SpecProbes.cachedEntries(spark),
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+  test("a cold index() below the local threshold runs <= 2 jobs and " +
+      "persists nothing") {
+    val kb = indexedStore(50)
+    kb.close() // what a reopened store holds: no read state
+    val before = cacheProbes
+    var idx: Option[graft.ops.VectorIndex] = None
+    val jobs = jobsDuring { idx = kb.index() }
+    assert(idx.exists(i => i.isLocal && i.count == 50L))
+    assert(jobs <= 2, s"the cold index() ran $jobs jobs")
+    assert(cacheProbes == before)
+    kb.close()
+  }
+
+  test("close() releases what reads, a write and its fold held") {
+    import spark.implicits._
+    val before = cacheProbes
+    val kb = indexedStore(40)
+    assert(kb.index().isDefined)
+    assert(kb.retrieve(text(3), 5, provider).nonEmpty)
+    assert(kb.annRetrieve(text(3), 5, provider).nonEmpty)
+    kb.bulkAddDocsDistributed((41 to 60).map(text).toDF("text"), provider)
+    kb.refreshAnnIndex()
+    assert(kb.retrieve(text(45), 5, provider).head.doc.text == text(45))
+    kb.close()
+    assert(cacheProbes == before)
+  }
 }
