@@ -45,18 +45,21 @@ import graft.functions.VectorFunctions._
   * from, loaded by the first read that needs it and reused by every
   * later read of that layout — the reference's "first query slow, later
   * queries fast" matrix (`_EmbeddingsMatrix`, `kb.py:856-893`,
-  * `README.md:135`), applied to all read state. The entries:
+  * `README.md:135`), applied to all read state. Two kinds of entry:
   *   - resident tables, each collected whole once and indexed on the
   *     driver: `docs` (keyed by `id` and by `emb_id`; every read path
   *     hydrates its hits from it), `keyval` (what [[getKey]] and its
   *     siblings read), `ivf_centroids` with `ivf_assign` (the inverted
   *     lists [[annRetrieve]] probes), and `text_postings` with
   *     `text_doclens` (what [[bm25Retrieve]] scores);
-  *   - the retrieval matrix ([[index]]), in the form
-  *     `VectorIndex.fromPacked` picks: driver stripes from one collect,
-  *     or persisted executor blocks above its local threshold;
-  *   - the persisted [[embeddings]] Dataset the Spark routes and the
-  *     index refreshes read.
+  *   - the retrieval matrix ([[index]]), the one copy of the vectors a
+  *     store holds, in the form `VectorIndex.fromPacked` picks: driver
+  *     stripes from one collect, or persisted executor blocks above its
+  *     local threshold.
+  * [[embeddings]] is a plain merge-on-read view like [[docs]]: the
+  * Spark routes scan only the columns they need, and an operation that
+  * scans the vectors more than once persists its own input and
+  * unpersists it before it returns.
   * So warm `retrieve`, `fetchDoc`, `getKeyOr`, `annRetrieve` and
   * `bm25Retrieve` calls run no Spark job at all. A write to another
   * table keeps an entry. A write to its table publishes a layout that
@@ -64,21 +67,21 @@ import graft.functions.VectorFunctions._
   * and the next read folds the new versions' `del` and `add` segments
   * into what is held: O(batch) reads, not a reload. Resident rows drop
   * the tombstoned keys and append the added rows; the driver-local
-  * matrix does the same through `VectorIndex.updated`; the Dataset and
-  * an executor-block matrix do not fold. Whatever cannot be folded to
-  * the live layout (those two after any embeddings write, anything
-  * after a minor compaction, `compact()`, a full rewrite or an adopted
-  * rewrite) is loaded again. The one loop that folds or loads also
-  * releases what it replaces (the Dataset and executor blocks are
-  * unpersisted); a publish releases the entries it leaves unable to
-  * fold, and `close` releases all of them. Writes never build or fold
-  * a resident table: their guard reads stay Spark reads. A table is
-  * resident only while its view's planned (Parquet) size, known from
-  * the resolved files without a job, is at most
-  * [[KbStore.ResidentMaxBytes]]; above it, its entry holds nothing and
-  * each read runs its Spark route instead. The IVF centroids are held
-  * without the cap, since every ANN route and [[refreshAnnIndex]] need
-  * them on the driver.
+  * matrix does the same through `VectorIndex.updated`; an
+  * executor-block matrix does not fold. Whatever cannot be folded to
+  * the live layout (executor blocks after any embeddings write,
+  * anything after a minor compaction, `compact()`, a full rewrite or
+  * an adopted rewrite) is loaded again. The one loop that folds or
+  * loads also releases what it replaces, and only executor blocks are
+  * unpersisted (the other entries live on the driver heap); a publish
+  * releases the entries it leaves unable to fold, and `close` releases
+  * all of them. Writes never build or fold a resident table: their
+  * guard reads stay Spark reads. A table is resident only while its
+  * view's planned (Parquet) size, known from the resolved files
+  * without a job, is at most [[KbStore.ResidentMaxBytes]]; above it,
+  * its entry holds nothing and each read runs its Spark route instead.
+  * The IVF centroids are held without the cap, since every ANN route
+  * and [[refreshAnnIndex]] need them on the driver.
   *
   * Single-writer semantics, like the reference's one-connection
   * discipline (`kb.py:116-137`).
@@ -289,17 +292,7 @@ final class KbStore private (
   def docs: Dataset[Doc] = read("docs").as[Doc]
   def edges: Dataset[Edge] = read("edges").as[Edge]
   def keyval: Dataset[KV] = read("keyval").as[KV]
-
-  /** The embeddings table, persisted on first use per layout (a read
-    * memo entry, see the class doc): released by every write that
-    * moves the embeddings table. */
-  def embeddings: Dataset[Emb] = held(embeddingsMemo).get
-
-  private val embeddingsMemo = new KbStore.Memo[Dataset[Emb]](
-    "embeddings", "embeddings",
-    load = l => Some(view("embeddings", l).as[Emb]
-      .persist(StorageLevel.MEMORY_AND_DISK)),
-    release = _.unpersist())
+  def embeddings: Dataset[Emb] = read("embeddings").as[Emb]
 
   /** Chain-resolved table access for specs (parity twins need the same
     * merged view the store itself queries).
@@ -577,6 +570,18 @@ final class KbStore private (
     onDisk
   }
 
+  /** Write `df` as segment dir `dir`, partitioned by `partitionCols`
+    * when there are any. A partitioned write is shuffled by those
+    * columns first, so one task writes each partition value and its dir
+    * holds one file, not one per input partition: every scan of it (a
+    * query's term buckets, or the whole table a resident read collects)
+    * opens each file. */
+  private def writeSegment(df: DataFrame, dir: String, codec: String,
+      partitionCols: Seq[String]): Unit =
+    (if (partitionCols.isEmpty) df else df.repartition(partitionCols.map(col): _*))
+      .write.mode(SaveMode.Overwrite).option("compression", codec)
+      .partitionBy(partitionCols: _*).parquet(dir)
+
   private def commit(updated: Map[String, DataFrame],
       newMeta: KbMeta => KbMeta, codec: String = "snappy",
       preserveIndex: Boolean = false,
@@ -596,11 +601,8 @@ final class KbStore private (
       val next = cur.version + 1
       try {
         val staged = updated.toSeq.map { case (name, df) =>
-          val w = df.write.mode(SaveMode.Overwrite)
-            .option("compression", codec)
-          partitionBy.get(name).filter(_.nonEmpty)
-            .fold(w)(cols => w.partitionBy(cols: _*))
-            .parquet(tableDir(name, next))
+          writeSegment(df, tableDir(name, next), codec,
+            partitionBy.getOrElse(name, Nil))
           tableDir(name, next) -> df.schema
         }
         // a new embeddings version invalidates the vector-derived index
@@ -714,9 +716,8 @@ final class KbStore private (
       // every segment dir written below, with the schema written to it
       val staged = Seq.newBuilder[(String, StructType)]
       def stage(df: DataFrame, dir: String,
-          partitionCols: Option[Seq[String]] = None): Unit = {
-        val w = df.write.mode(SaveMode.Overwrite).option("compression", "snappy")
-        partitionCols.fold(w)(cols => w.partitionBy(cols: _*)).parquet(dir)
+          partitionCols: Seq[String] = Nil): Unit = {
+        writeSegment(df, dir, "snappy", partitionCols)
         staged += dir -> df.schema
       }
       overflow.foreach { case (name, patch) =>
@@ -746,14 +747,14 @@ final class KbStore private (
         val delOut = chainDels.reduceOption(_ union _).map(_.distinct())
         delOut.foreach(stage(_, s"${tableDir(name, next)}/del"))
         stage(merged, s"${tableDir(name, next)}/add",
-          KbStore.DeltaPartitioning.get(name))
+          KbStore.DeltaPartitioning.getOrElse(name, Nil))
       }
       asDelta.foreach { case (name, patch) =>
         patch.del.foreach(d => stage(
           d.select(KbStore.DeltaKeys(name).map(col(_)): _*),
           s"${tableDir(name, next)}/del"))
         patch.add.foreach(stage(_, s"${tableDir(name, next)}/add",
-          KbStore.DeltaPartitioning.get(name)))
+          KbStore.DeltaPartitioning.getOrElse(name, Nil)))
       }
       val pointers = cur.table_versions ++ patches.keys.map(_ -> next)
       var bases = cur.table_bases
@@ -1447,22 +1448,27 @@ final class KbStore private (
     * [[graft.ops.PairwiseTopK]] notes).
     */
   def topPairwiseScores(n: Int): Seq[(Double, Doc, Doc)] = {
-    val total = embeddings.count()
-    if (total < 2 || n <= 0) return Seq.empty
-    val dim = embeddings.limit(1).collect().head.vec.length
+    if (n <= 0) return Seq.empty
+    // the count, the dim probe and the pairs operator each scan the
+    // vectors: read them once, for this call only
     val packed = embeddings.toDF()
       .select($"id", graft.functions.FloatVecPack.floatVecPack($"vec").as("vec"))
-    val blocks = math.max(1, math.min(32, total / 4096)).toInt
-    val pairs =
-      if (total <= KbStore.PairwiseExactLimit)
-        graft.ops.PairwiseTopK.blockedTopKPairs(
-          packed, dim, n, blocks, refTie = true)
-      else
-        graft.ops.PairwiseTopK.sketchTopKPairs(
-          packed, dim, n, refTie = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = try {
+      val total = packed.count()
+      if (total < 2) return Seq.empty
+      val dim = packed.limit(1).collect().head.getAs[Array[Byte]](1).length / 4
+      val blocks = math.max(1, math.min(32, total / 4096)).toInt
+      val pairs =
+        if (total <= KbStore.PairwiseExactLimit)
+          graft.ops.PairwiseTopK.blockedTopKPairs(
+            packed, dim, n, blocks, refTie = true)
+        else
+          graft.ops.PairwiseTopK.sketchTopKPairs(
+            packed, dim, n, refTie = true)
+      pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    } finally packed.unpersist(blocking = false)
     // build doc lookups for the few ids involved
-    val rows = pairs.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val ids = rows.flatMap(r => Seq(r._1, r._2)).distinct
     val docByEmb = docsByEmbId(ids.toSeq)
     rows.toSeq.map { case (i1, i2, s) => (s, docByEmb(i1), docByEmb(i2)) }
@@ -1535,9 +1541,7 @@ final class KbStore private (
           case Some((adds, dels)) =>
             apply(project(adds), dels.map(_.select(col("id").as(f.key))))
           case None =>
-            val live =
-              if (f.source == "embeddings") embeddings.toDF() else read(f.source)
-            val (nw, gone) = fullDiffWithReadds(project(live),
+            val (nw, gone) = fullDiffWithReadds(project(read(f.source)),
               read(f.keyed).select(col(f.key)).distinct(), f.key, f.source)
             apply(nw, Some(gone))
         }
@@ -1721,60 +1725,61 @@ final class KbStore private (
   def buildAnnIndex(nlist: Int = 64, iters: Int = 2,
       packedPathAbove: Long = 100000L): Unit = {
     import spark.implicits._
+    import graft.functions.FloatVecDot
+    import graft.functions.FloatVecPack.floatVecPack
     val emb = embeddings.toDF()
       .select($"id".as("vec_id"), $"vec".as("embedding"))
     val total = emb.count()
     require(total > 0, "cannot build an ANN index over an empty store")
     val k = math.max(1, math.min(nlist.toLong, total).toInt)
-    var cleanup: () => Unit = () => ()
-    val (centsDf, assign) =
-      if (total <= packedPathAbove) {
-        // declarative array path: fine while every k-means pass is cheap
-        val seeds = emb
-          .select($"vec_id", $"embedding",
-            md5(concat(lit("ivf:"), $"vec_id")).as("h"))
-          .orderBy($"h").limit(k).collect()
-        val cents0 = seeds.zipWithIndex.map { case (r, i) =>
-          (i.toLong, r.getSeq[Float](1).map(_.toDouble))
-        }.toSeq.toDF("cid", "cvec")
-        val cents = graft.ops.SimilaritySearch
-          .kmeansCentroids(emb, cents0, iters)
-        (cents,
-          graft.ops.SimilaritySearch.ivfAssign(emb, cents)
-            .select($"vec_id", $"cid"))
-      } else {
-        // packed path: the per-partition primitive kernels that hold at
-        // 1M × d1536 (see SimilaritySearch ivfAssignPacked /
-        // kmeansCentroidsPacked)
-        import graft.functions.FloatVecDot
-        import graft.functions.FloatVecPack.floatVecPack
-        val packed = emb
-          .select($"vec_id".as("id"), floatVecPack($"embedding").as("vec"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        cleanup = () => { packed.unpersist(blocking = false); () }
-        val seeds = packed
-          .select($"id", $"vec", md5(concat(lit("ivf:"), $"id")).as("h"))
-          .orderBy($"h").limit(k).collect()
-          .zipWithIndex.map { case (r, i) =>
-            (i.toLong, FloatVecDot.unpack(r.getAs[Array[Byte]](1)))
-          }
-        val cents = graft.ops.SimilaritySearch
-          .kmeansCentroidsPacked(packed, seeds, iters)
-        val centsPackedDf = cents.toSeq
-          .map { case (cid, v) => (cid, FloatVecDot.pack(v)) }
-          .toDF("cid", "cvec")
-        val centsStored = cents.toSeq
-          .map { case (cid, v) => (cid, v.map(_.toDouble).toSeq) }
-          .toDF("cid", "cvec")
-        (centsStored,
-          graft.ops.SimilaritySearch.ivfAssignPacked(packed, centsPackedDf))
-      }
+    val declarative = total <= packedPathAbove
+    // the seeds, every k-means pass and the assignment each scan the
+    // vectors: read them once, for this build only
+    val input = (if (declarative) emb
+      else emb.select($"vec_id".as("id"), floatVecPack($"embedding").as("vec")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      val (centsDf, assign) =
+        if (declarative) {
+          // declarative array path: fine while every k-means pass is cheap
+          val seeds = input
+            .select($"vec_id", $"embedding",
+              md5(concat(lit("ivf:"), $"vec_id")).as("h"))
+            .orderBy($"h").limit(k).collect()
+          val cents0 = seeds.zipWithIndex.map { case (r, i) =>
+            (i.toLong, r.getSeq[Float](1).map(_.toDouble))
+          }.toSeq.toDF("cid", "cvec")
+          val cents = graft.ops.SimilaritySearch
+            .kmeansCentroids(input, cents0, iters)
+          (cents,
+            graft.ops.SimilaritySearch.ivfAssign(input, cents)
+              .select($"vec_id", $"cid"))
+        } else {
+          // packed path: the per-partition primitive kernels that hold
+          // at 1M × d1536 (see SimilaritySearch ivfAssignPacked /
+          // kmeansCentroidsPacked)
+          val seeds = input
+            .select($"id", $"vec", md5(concat(lit("ivf:"), $"id")).as("h"))
+            .orderBy($"h").limit(k).collect()
+            .zipWithIndex.map { case (r, i) =>
+              (i.toLong, FloatVecDot.unpack(r.getAs[Array[Byte]](1)))
+            }
+          val cents = graft.ops.SimilaritySearch
+            .kmeansCentroidsPacked(input, seeds, iters)
+          val centsPackedDf = cents.toSeq
+            .map { case (cid, v) => (cid, FloatVecDot.pack(v)) }
+            .toDF("cid", "cvec")
+          val centsStored = cents.toSeq
+            .map { case (cid, v) => (cid, v.map(_.toDouble).toSeq) }
+            .toDF("cid", "cvec")
+          (centsStored,
+            graft.ops.SimilaritySearch.ivfAssignPacked(input, centsPackedDf))
+        }
       commit(
         Map(KbStore.IvfCentroidsTable -> centsDf,
           KbStore.IvfAssignTable -> assign),
         identity, readSet = Set("embeddings"))
-    } finally cleanup()
+    } finally input.unpersist(blocking = false)
   }
 
   /** ANN retrieval through the persistent index: embed the query, probe
@@ -2376,13 +2381,9 @@ final class KbStore private (
     // postings persist PARTITIONED by a term-hash bucket: a query's
     // terms map to ≤|terms| buckets, so the retrieval scan is physical
     // partition pruning (1/64th of the postings per term), not a full
-    // scan with a filter. One task per bucket writes one file per
-    // bucket, not one per input partition: every scan of the postings
-    // (a query's buckets, or the whole table a resident read collects)
-    // opens each file, and 4 cores wrote 256 files where 64 hold it.
+    // scan with a filter
     try commit(
-      Map(KbStore.TextPostingsTable ->
-          KbStore.withTermBucket(postings).repartition($"bucket"),
+      Map(KbStore.TextPostingsTable -> KbStore.withTermBucket(postings),
         KbStore.TextDocLensTable -> docLens),
       m => m.copy(index_params =
         m.index_params + ("text_unicode" -> unicode.toString)),
@@ -3560,9 +3561,8 @@ object KbStore {
     * driver heap. */
   private final class Memo[T <: AnyRef](val name: String, val table: String,
       val load: ((Long, Seq[Long])) => Option[T],
-      val folds: T => Boolean = (_: T) => false,
-      val fold: (T, (Long, Seq[Long]), Seq[Long]) => Option[T] =
-        (_: T, _: (Long, Seq[Long]), _: Seq[Long]) => None,
+      val folds: T => Boolean,
+      val fold: (T, (Long, Seq[Long]), Seq[Long]) => Option[T],
       val release: T => Unit = (_: T) => ())
 
   /** What read-memo entry `memo` holds for `layout` of its table. */

@@ -298,4 +298,38 @@ class ResidentFoldSpec extends SparkSpec {
     kb.close()
     assert(cacheProbes == before)
   }
+
+  test("no store operation leaves a persist behind for close() to release") {
+    import spark.implicits._
+    val kb = indexedStore(40)
+    kb.residentCap = -1 // every read takes its Spark route
+    /** `op` run on a store that holds no read state leaves the session's
+      * cache as it found it. */
+    def leavesNoPersist(op: String)(body: => Unit): Unit = {
+      kb.close()
+      val before = cacheProbes
+      body
+      assert(cacheProbes == before, s"$op left a persist behind")
+    }
+    leavesNoPersist("buildAnnIndex, declarative path")(
+      kb.buildAnnIndex(nlist = 4, iters = 1))
+    leavesNoPersist("buildAnnIndex, packed path")(
+      kb.buildAnnIndex(nlist = 4, iters = 1, packedPathAbove = 0))
+    leavesNoPersist("buildSqIndex")(kb.buildSqIndex())
+    leavesNoPersist("buildPqIndex")(
+      kb.buildPqIndex(nlist = 4, m = 4, ncodes = 16, iters = 1))
+    leavesNoPersist("topPairwiseScores")(
+      assert(kb.topPairwiseScores(3).size == 3))
+    leavesNoPersist("Spark-route annRetrieve")(
+      assert(kb.annRetrieve(text(3), 5, provider).head.doc.text == text(3)))
+    kb.bulkAddDocsDistributed((41 to 50).map(text).toDF("text"), provider)
+    kb.compact(codec = "snappy") // the segment route cannot span a new base
+    leavesNoPersist("full-diff refreshAnnIndex") {
+      kb.refreshAnnIndex()
+      assert(kb.lastRefreshRoute == Some("full"))
+    }
+    leavesNoPersist("fetchDocWithEmbedding")(
+      assert(kb.fetchDocWithEmbedding(3L)._2.isDefined))
+    kb.close()
+  }
 }

@@ -188,13 +188,27 @@ class SegmentResolveSpec extends SparkSpec {
     val entries = SpecProbes.cachedEntries(spark)
     val rdds = spark.sparkContext.getPersistentRDDs.keySet
     kb.buildTextIndex()
-    kb.bulkAddDocs(provider)(a => texts(4, 50).foreach(a.add(_)))
+    kb.bulkAddDocs(provider)(a => texts(200, 50).foreach(a.add(_)))
     kb.refreshTextIndex()
     assert(kb.lastRefreshRoute == Some("segment"))
     assert(kb.bm25Retrieve("doc 52", 1).map(_._2.text) ==
       Seq("doc 52 body w3"))
     assert(SpecProbes.cachedEntries(spark) <= entries)
     assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(rdds))
+    // the refresh's postings add segment holds one file per term bucket
+    import scala.jdk.CollectionConverters._
+    def listed(p: java.nio.file.Path) = {
+      val s = java.nio.file.Files.list(p)
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val v = kb.meta.table_versions(KbStore.TextPostingsTable)
+    val buckets = listed(java.nio.file.Paths.get(kb.path,
+      KbStore.TextPostingsTable, s"v$v", "add"))
+      .filter(_.getFileName.toString.startsWith("bucket="))
+    val files = buckets.map(b =>
+      b.getFileName -> listed(b).count(_.getFileName.toString.endsWith(".parquet")))
+    assert(buckets.size > 1)
+    assert(files.forall(_._2 == 1), files.filter(_._2 != 1))
     kb.close()
   }
 }

@@ -9,10 +9,21 @@ Pair i runs `python3 storebench/run.py --workload W --seed S+i --seconds
 and the change first on odd ones. `run_seconds`, the end-to-end metrics,
 their directions and their bounds come from CHANGE_DIR/BENCHMARK.json. Every
 run's metrics are printed as it finishes. Then, per end-to-end metric: each
-side's median and IQR, the pairs the change won, and whether the change
-median is worse than the parent's by more than the bound (a fraction of
-the parent's median). A run that fails is reported and its pair skipped.
-Reads only `storebench/` and `BENCHMARK.json` of each checkout.
+side's median and IQR, the pairs the change won, the change of the median
+against the bound (a fraction of the parent's median), and one verdict:
+
+  unresolved  the parent's IQR exceeds the bound, so its runs spread too
+              widely to tell, unless every change run beats every parent run
+  gain        the change won at least 9 in 10 of the pairs run, and its
+              median is better than the parent's by more than the parent's IQR
+  worse       the change median is worse than the parent's by more than the
+              bound
+  flat        none of the above
+
+A run that fails is reported and its pair skipped (it counts as run, not
+won). Exits 2 when some change median is worse than its bound, 1 when no
+pair completed, else 0. Reads only `storebench/` and `BENCHMARK.json` of
+each checkout.
 """
 
 import argparse
@@ -82,20 +93,30 @@ def main():
     if n == 0:
         return 1
     print(f"{'metric':<18}{'parent p50':>12}{'IQR':>10}{'change p50':>12}{'IQR':>10}"
-          f"{'change won':>12}{'bound':>8}  worse than bound")
+          f"{'change won':>12}{'bound':>8}{'median':>9}  verdict")
     worse_any = False
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         p = [r[name] for r in results["parent"]]
         c = [r[name] for r in results["change"]]
         pq, cq = quartiles(p), quartiles(c)
-        won = sum(1 for a, b in zip(p, c) if (b < a if lower else b > a))
+        p_iqr = pq[2] - pq[0]
+        better = (lambda a, b: b < a) if lower else (lambda a, b: b > a)
+        won = sum(1 for a, b in zip(p, c) if better(a, b))
         rel = (cq[1] - pq[1]) / pq[1] if pq[1] else 0.0
         worse = (rel if lower else -rel) > m["bound"]
         worse_any |= worse
-        print(f"{name:<18}{pq[1]:>12.4g}{pq[2] - pq[0]:>10.3g}{cq[1]:>12.4g}"
-              f"{cq[2] - cq[0]:>10.3g}{f'{won}/{n}':>12}{m['bound']:>8}  "
-              f"{'YES' if worse else 'no'} ({rel:+.1%})")
+        if p_iqr > m["bound"] * abs(pq[1]) and not all(better(a, b) for a in p for b in c):
+            verdict = "unresolved"
+        elif won >= 0.9 * args.pairs and better(pq[1], cq[1]) and abs(cq[1] - pq[1]) > p_iqr:
+            verdict = "gain"
+        elif worse:
+            verdict = "worse"
+        else:
+            verdict = "flat"
+        print(f"{name:<18}{pq[1]:>12.4g}{p_iqr:>10.3g}{cq[1]:>12.4g}"
+              f"{cq[2] - cq[0]:>10.3g}{f'{won}/{args.pairs}':>12}{m['bound']:>8}"
+              f"{rel:>+9.1%}  {verdict}")
     return 2 if worse_any else 0
 
 
