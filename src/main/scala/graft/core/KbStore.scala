@@ -18,9 +18,11 @@ import graft.functions.VectorFunctions._
   * an atomically-swapped `_meta.json` — the Spark-native re-expression of
   * the reference's single SQLite file (`/root/reference/src/svs/kb.py:66-113`).
   *
-  * Transaction model (reference M10, `kb.py:794-829`): every bulk scope
-  * stages its output tables under the next version directory
-  * (`docs/v<N+1>/…`), then commits by atomically replacing `_meta.json`
+  * Transaction model (reference M10, `kb.py:794-829`): every write goes
+  * through one publish path, [[publish]]. It stages each table it
+  * writes under the next version directory (`docs/v<N+1>/…`): a rewrite
+  * as a new base, a delta as the `del`/`add` segments that extend the
+  * table's chain. Then it commits by atomically replacing `_meta.json`
   * (which names the committed version). An exception inside the scope
   * deletes the staged directories and leaves the meta untouched — readers
   * never observe a partial write. This is the same
@@ -110,15 +112,9 @@ final class KbStore private (
   private def tableDir(name: String, version: Long): String =
     s"$path/$name/v$version"
 
-  /** Merge-on-read: the base segment with each delta's tombstones
-    * anti-joined and add-rows unioned, in version order. Order matters —
-    * a key may be tombstoned and later re-added (keyval upserts, the
-    * reference's emb-id reuse after delete), which a single global
-    * anti-join would get wrong. Each tombstone set is a point-mutation
-    * batch, so the anti-joins are broadcast-hash probes in practice
-    * (AQE decides from file stats); the chain is bounded by
-    * [[KbStore.DeltaChainLimit]] and collapsed by compact().
-    */
+  /** Table `name` as the live manifest publishes it: its merge-on-read
+    * [[view]], the base segment with its chain folded on by
+    * [[foldPatches]]. */
   private def read(name: String): DataFrame = readWithMeta(metaCache, name)
 
   /** A table's layout in manifest `m`: (base version, delta chain). */
@@ -129,22 +125,54 @@ final class KbStore private (
   private def readWithMeta(m: KbMeta, name: String): DataFrame =
     view(name, layoutOf(m, name))
 
-  /** Table `name`'s merge-on-read view in `layout`. */
+  /** Table `name`'s merge-on-read view in `layout`: the base segment
+    * with the chain's versions folded on in order ([[foldPatches]]),
+    * planned once per layout. */
   private def view(name: String, layout: (Long, Seq[Long])): DataFrame = {
     val (base, chain) = layout
     val key = (name, base, chain)
     val plan = Option(views.get(key)).getOrElse {
-      val folded = chain.foldLeft(baseSegment(name, base)) { (acc, v) =>
-        val dir = tableDir(name, v)
-        val afterDel = segment(s"$dir/del").fold(acc)(
-          acc.join(_, KbStore.DeltaKeys(name), "left_anti"))
-        segment(s"$dir/add").fold(afterDel)(a =>
-          afterDel.union(a.select(afterDel.columns.map(col(_)): _*)))
-      }
-      val p = folded.queryExecution.analyzed
+      val (rows, _) = foldPatches(name, baseSegment(name, base),
+        chain.map(published(name, _)))
+      val p = rows.queryExecution.analyzed
       Option(views.putIfAbsent(key, p)).getOrElse(p)
     }
     KbStore.freshScan(spark, plan)
+  }
+
+  /** Version `v` of table `name` as the patch it published: its `del`
+    * and `add` segments, None for a side it lacks. */
+  private def published(name: String, v: Long): KbStore.TablePatch = {
+    val dir = tableDir(name, v)
+    KbStore.TablePatch(segment(s"$dir/del"), segment(s"$dir/add"))
+  }
+
+  /** The one walk over a segment chain: `patches` applied to `rows` in
+    * order, each one's tombstone keys ([[KbStore.DeltaKeys]]) anti-joined
+    * out and then its add rows, aligned to `rows`' columns, unioned in.
+    * Order matters — a key may be tombstoned and later re-added (keyval
+    * upserts, the reference's emb-id reuse after delete), which a single
+    * global anti-join would get wrong. Each tombstone set is a
+    * point-mutation batch, so the anti-joins are broadcast-hash probes in
+    * practice (AQE decides from file stats), and a chain is bounded by
+    * [[KbStore.DeltaChainLimit]].
+    *
+    * Over a base segment this is a table's view; over an empty frame of
+    * the base's columns it is the net change of the patches alone (adds
+    * that a later patch tombstoned drop out), which the minor compaction,
+    * the refresh window and the change feed read without touching the
+    * base. Returns the folded rows and the union of the patches'
+    * tombstone keys, None when no patch has a `del` side. */
+  private def foldPatches(name: String, rows: DataFrame,
+      patches: Seq[KbStore.TablePatch]): (DataFrame, Option[DataFrame]) = {
+    lazy val keys = KbStore.DeltaKeys(name) // tables that take no delta have none
+    patches.foldLeft((rows, Option.empty[DataFrame])) {
+      case ((acc, gone), p) =>
+        val del = p.del.map(_.select(keys.map(col(_)): _*))
+        val kept = del.fold(acc)(acc.join(_, keys, "left_anti"))
+        (p.add.fold(kept)(a => kept.union(a.select(kept.columns.map(col(_)): _*))),
+          del.fold(gone)(d => Some(gone.fold(d)(_.union(d)))))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -493,12 +521,6 @@ final class KbStore private (
   // ------------------------------------------------------------------
   // commit machinery
   // ------------------------------------------------------------------
-  /** Stage the given tables as version+1 and atomically publish via the
-    * meta manifest. Tables not in `updated` keep their existing version
-    * pointer — carry-forward moves zero bytes (the property that makes
-    * point-mutations affordable when one table is 100 TB and another is
-    * a 5-row keyval).
-    */
   /** Manifest CAS with disjoint-footprint adoption (r7) — the
     * multi-writer relaxation of the single-writer contract: if another
     * writer published since this store snapshotted the manifest, the
@@ -582,59 +604,137 @@ final class KbStore private (
       .write.mode(SaveMode.Overwrite).option("compression", codec)
       .partitionBy(partitionCols: _*).parquet(dir)
 
-  private def commit(updated: Map[String, DataFrame],
-      newMeta: KbMeta => KbMeta, codec: String = "snappy",
-      preserveIndex: Boolean = false,
-      partitionBy: Map[String, Seq[String]] = Map.empty,
-      readSet: Set[String] = Set.empty): Unit = {
-    // bounded CAS retry (r8): if ANOTHER disjoint writer published
-    // between our adoption and our manifest swap, the publish-time
-    // version check raises PublishConflict and the whole
-    // adopt→stage→publish cycle re-runs against the new head — so N
-    // interleaved disjoint writers all land. Overlapping footprints
-    // still throw ConcurrentModificationException from casOrAdopt on
-    // the FIRST attempt (loud, not retried), and retries are capped.
+  /** The one publish path (reference M10, `kb.py:794-829`): stage every
+    * table of `writes` under version N+1, then atomically publish the
+    * manifest that names it. Tables not in `writes` keep their layout —
+    * carry-forward moves zero bytes (the property that makes point
+    * mutations affordable when one table is 100 TB and another is a
+    * 5-row keyval). Each table of the write set is one of:
+    *
+    *   - a [[KbStore.Rewrite]]: its rows become the new base `v<N+1>`,
+    *     and the old base's segment chain goes with it;
+    *   - a [[KbStore.TablePatch]]: only the mutation's tombstone keys and
+    *     add rows are staged, under `v<N+1>/{del,add}`, and N+1 extends
+    *     the chain — a 1-doc add to a 100 TB table writes one tiny file.
+    *     A chain already at [[KbStore.DeltaChainLimit]] is MINOR-compacted
+    *     (LSM-style) instead: N+1 becomes its one delta, with `del` the
+    *     union of the chain's and the patch's tombstone keys and `add`
+    *     the chain and the patch folded over an EMPTY base
+    *     ([[foldPatches]]). Both come from the segments alone, so the base
+    *     is never read or rewritten and write volume stays O(accumulated
+    *     changes). Correct because mutations never add a key that exists
+    *     un-tombstoned: adds allocate fresh high-water ids and updates
+    *     tombstone before re-adding. compact() remains the explicit MAJOR
+    *     compaction that folds chains into a fresh base.
+    *
+    * Every segment keeps its table's [[KbStore.DeltaPartitioning]] and is
+    * written with `codec`.
+    *
+    * Dataset card: when the stats table is live and a patch touches a
+    * user-data table, `statsDelta` (run only here, after adoption, so two
+    * disjoint writers' deltas both accumulate) is folded into the card in
+    * the same publish. A data patch without a delta drops the card
+    * instead — a card that silently stops moving is worse than no card.
+    * Rewrites leave the card as it is.
+    *
+    * `replacesVectors` marks a write that REPLACES vectors: the
+    * vector-derived index families' pointers (and chains) drop, and the
+    * next vacuum reclaims their dirs. Any other embeddings write leaves
+    * them STALE (older than embeddings): their rows stay valid, and each
+    * family's refresh catches up incrementally.
+    *
+    * The manifest moves by [[casOrAdopt]] and a version-checked publish.
+    * If another disjoint writer published between our adoption and our
+    * publish, the publish raises PublishConflict and the whole
+    * adopt→stage→publish cycle re-runs against the new head, at most
+    * [[KbStore.CasMaxRetries]] more times, so N interleaved disjoint
+    * writers all land. Any failure deletes the staged dirs, and the
+    * manifest still names N.
+    */
+  private def publish(writes: Map[String, KbStore.TableWrite],
+      newMeta: KbMeta => KbMeta, replacesVectors: Boolean = false,
+      statsDelta: Option[() => KbStore.StatsDelta] = None,
+      readSet: Set[String] = Set.empty, codec: String = "snappy"): Unit = {
     var attempt = 0
     var done = false
     while (!done) {
-      val cur = casOrAdopt(updated.keySet, newMeta, readSet)
+      val cur = casOrAdopt(writes.keySet, newMeta, readSet)
       val next = cur.version + 1
-      try {
-        val staged = updated.toSeq.map { case (name, df) =>
-          writeSegment(df, tableDir(name, next), codec,
-            partitionBy.getOrElse(name, Nil))
-          tableDir(name, next) -> df.schema
+      val touchesData = writes.exists {
+        case (name, _: KbStore.TablePatch) => KbStore.DataTables(name)
+        case _ => false
+      }
+      val (all, dropStats) =
+        if (!touchesData || !cur.table_versions.contains(KbStore.StatsTable))
+          (writes, false)
+        else statsDelta match {
+          case Some(thunk) =>
+            val d = thunk()
+            val card = readStatsCard()
+            val rows = Seq(
+              ("n_docs", card.getOrElse("n_docs", 0L) + d.docs),
+              ("n_embeddings", card.getOrElse("n_embeddings", 0L) + d.embeddings),
+              ("n_edges", card.getOrElse("n_edges", 0L) + d.edges),
+              ("n_keys", card.getOrElse("n_keys", 0L) + d.keys),
+              ("n_chars", card.getOrElse("n_chars", 0L) + d.chars))
+            (writes + (KbStore.StatsTable -> KbStore.TablePatch(
+              del = Some(rows.map(_._1).toDF("metric")),
+              add = Some(rows.toDF("metric", "value")))), false)
+          case None => (writes, true)
         }
-        // a new embeddings version invalidates the vector-derived index
-        // families: REPLACED vectors drop their pointers entirely (the
-        // dirs are reclaimed by the next vacuum); add/delete-only
-        // mutations pass `preserveIndex` and merely leave them STALE
-        // (older version than embeddings) — existing rows stay valid and
-        // each family's refresh catches it up incrementally
-        val dropped =
-          if (updated.contains("embeddings") &&
-              !updated.contains(KbStore.IvfAssignTable) && !preserveIndex)
-            KbStore.VectorIndexTables
-          else Nil
-        // a full rewrite replaces the whole table at the new version, so
-        // any merge-on-read segment chain it had is obsolete
+      try {
+        // every segment dir written below, with the schema written to it
+        val staged = Seq.newBuilder[(String, StructType)]
+        def stage(df: DataFrame, dir: String, partitionCols: Seq[String]): Unit = {
+          writeSegment(df, dir, codec, partitionCols)
+          staged += dir -> df.schema
+        }
+        // the new (base, chain) of each patched table
+        val extended = all.toSeq.flatMap { case (name, write) =>
+          val dir = tableDir(name, next)
+          val parts = KbStore.DeltaPartitioning.getOrElse(name, Nil)
+          write match {
+            case KbStore.Rewrite(rows) =>
+              stage(rows, dir, parts)
+              None
+            case patch: KbStore.TablePatch =>
+              val (base, chain) = layoutOf(cur, name)
+              val full = chain.size >= KbStore.DeltaChainLimit
+              val (add, del) =
+                if (!full) (patch.add,
+                  patch.del.map(_.select(KbStore.DeltaKeys(name).map(col(_)): _*)))
+                else {
+                  val (merged, gone) = foldPatches(name,
+                    baseSegment(name, base).limit(0),
+                    chain.map(published(name, _)) :+ patch)
+                  (Some(merged), gone.map(_.distinct()))
+                }
+              del.foreach(stage(_, s"$dir/del", Nil))
+              add.foreach(stage(_, s"$dir/add", parts))
+              Some(name -> (base, (if (full) Nil else chain) :+ next))
+          }
+        }
+        val dropped = (if (dropStats) Seq(KbStore.StatsTable) else Nil) ++
+          (if (replacesVectors) KbStore.VectorIndexTables else Nil)
+        // every written table's old layout goes; a rewritten one is its
+        // new base alone, a patched one gets its new chain
         val m = newMeta(cur).copy(version = next,
           table_versions =
-            cur.table_versions ++ updated.keys.map(_ -> next) -- dropped,
-          table_bases = cur.table_bases -- updated.keys -- dropped,
-          table_deltas = cur.table_deltas -- updated.keys -- dropped)
+            cur.table_versions ++ all.keys.map(_ -> next) -- dropped,
+          table_bases = cur.table_bases -- all.keys ++
+            extended.map { case (name, (base, _)) => name -> base } -- dropped,
+          table_deltas = cur.table_deltas -- all.keys ++
+            extended.map { case (name, (_, chain)) => name -> chain } -- dropped)
         prePublishHook()
         KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
         metaCache = m
         invalidate()
-        seedSchemas(m, staged)
+        seedSchemas(m, staged.result())
         done = true
       } catch {
         case e: Throwable =>
           // rollback: remove staged dirs, meta still points at `cur`
-          updated.keys.foreach { name =>
-            deleteDir(Paths.get(tableDir(name, next)))
-          }
+          all.keys.foreach(name => deleteDir(Paths.get(tableDir(name, next))))
           e match {
             case _: KbStore.PublishConflict
                 if attempt < KbStore.CasMaxRetries => attempt += 1
@@ -645,162 +745,6 @@ final class KbStore private (
             case _ => throw e
           }
       }
-    }
-  }
-
-  /** O(batch) sibling of [[commit]] (round 6, the 100 TB mutation
-    * story): stage only this mutation's tombstone keys and add-rows
-    * under `v<N+1>/{del,add}` and publish the extended segment chain —
-    * a 1-doc add to a 100 TB table writes one tiny file, never the
-    * table. Readers resolve the chain via [[read]]'s ordered fold.
-    *
-    * When a table's chain would exceed [[KbStore.DeltaChainLimit]],
-    * that table's chain is MINOR-compacted (LSM-style) into one merged
-    * delta at the new version: `del` = the union of the chain's
-    * tombstone keys (plus the incoming patch's), `add` = the chain
-    * folded over an EMPTY base (adds minus later tombstones) — both
-    * computable from the segments alone, so the BASE is never read or
-    * rewritten and write volume stays O(accumulated changes), never
-    * O(table). (Correct because mutations never add a key that exists
-    * un-tombstoned: adds allocate fresh high-water ids and updates
-    * tombstone before re-adding.) Read fan-in thus stays bounded
-    * without anyone calling compact(); compact() remains the explicit
-    * MAJOR compaction that folds chains into a fresh base. Same CAS,
-    * same atomic manifest publish, same rollback discipline as a full
-    * commit.
-    */
-  private def commitDelta(patches0: Map[String, KbStore.TablePatch],
-      newMeta: KbMeta => KbMeta,
-      preserveIndex: Boolean = true,
-      statsDelta: Option[() => KbStore.StatsDelta] = None,
-      readSet: Set[String] = Set.empty): Unit = {
-    // same CAS + disjoint-footprint adoption + bounded publish-retry
-    // as the full commit; the stats-card fold below runs AFTER
-    // adoption (inside the retry loop), so two disjoint writers'
-    // deltas both accumulate onto the card
-    var attempt = 0
-    var done = false
-    while (!done) {
-    val cur = casOrAdopt(patches0.keySet, newMeta, readSet)
-    val next = cur.version + 1
-    // dataset-card maintenance: when the stats table exists and this
-    // mutation touches user data, fold the caller-supplied delta into
-    // the card IN the same atomic publish (the thunk runs only here, so
-    // untracked paths cost nothing). A data mutation WITHOUT a delta
-    // drops the stats pointer instead — a card that silently stops
-    // moving is worse than no card.
-    val statsLive = cur.table_versions.contains(KbStore.StatsTable)
-    val touchesData = patches0.keys.exists(KbStore.DataTables.contains)
-    val (patches, dropStats) =
-      if (statsLive && touchesData) statsDelta match {
-        case Some(thunk) =>
-          val d = thunk()
-          val card = readStatsCard()
-          val rows = Seq(
-            ("n_docs", card.getOrElse("n_docs", 0L) + d.docs),
-            ("n_embeddings", card.getOrElse("n_embeddings", 0L) + d.embeddings),
-            ("n_edges", card.getOrElse("n_edges", 0L) + d.edges),
-            ("n_keys", card.getOrElse("n_keys", 0L) + d.keys),
-            ("n_chars", card.getOrElse("n_chars", 0L) + d.chars))
-          (patches0 + (KbStore.StatsTable -> KbStore.TablePatch(
-            del = Some(rows.map(_._1).toDF("metric")),
-            add = Some(rows.toDF("metric", "value")))), false)
-        case None => (patches0, true)
-      } else (patches0, false)
-    try {
-      // tables whose chain is full get a MINOR compaction (chain merged
-      // into one delta, base untouched); the rest stage plain segments
-      val (overflow, asDelta) = patches.partition { case (name, _) =>
-        cur.table_deltas.getOrElse(name, Nil).size >= KbStore.DeltaChainLimit
-      }
-      // every segment dir written below, with the schema written to it
-      val staged = Seq.newBuilder[(String, StructType)]
-      def stage(df: DataFrame, dir: String,
-          partitionCols: Seq[String] = Nil): Unit = {
-        writeSegment(df, dir, "snappy", partitionCols)
-        staged += dir -> df.schema
-      }
-      overflow.foreach { case (name, patch) =>
-        val keys = KbStore.DeltaKeys(name)
-        val chain = cur.table_deltas(name)
-        // merged tombstones: every key any chain segment (or the
-        // incoming patch) removed — keys of base rows that must not
-        // surface plus re-add bookkeeping handled by the merged add
-        val chainDels = chain.flatMap { v =>
-          segment(s"${tableDir(name, v)}/del")
-            .map(_.select(keys.map(col(_)): _*))
-        } ++ patch.del.map(_.select(keys.map(col(_)): _*))
-        // merged adds: the chain (plus incoming patch) folded over an
-        // empty base — adds that a later segment tombstoned drop out
-        var merged = baseSegment(name, cur.table_bases.getOrElse(name,
-          cur.table_versions(name))).limit(0)
-        chain.foreach { v =>
-          val dir = tableDir(name, v)
-          segment(s"$dir/del").foreach(d =>
-            merged = merged.join(d, keys, "left_anti"))
-          segment(s"$dir/add").foreach(a =>
-            merged = merged.union(a.select(merged.columns.map(col(_)): _*)))
-        }
-        patch.del.foreach(d => merged = merged.join(d, keys, "left_anti"))
-        patch.add.foreach(a =>
-          merged = merged.union(a.select(merged.columns.map(col(_)): _*)))
-        val delOut = chainDels.reduceOption(_ union _).map(_.distinct())
-        delOut.foreach(stage(_, s"${tableDir(name, next)}/del"))
-        stage(merged, s"${tableDir(name, next)}/add",
-          KbStore.DeltaPartitioning.getOrElse(name, Nil))
-      }
-      asDelta.foreach { case (name, patch) =>
-        patch.del.foreach(d => stage(
-          d.select(KbStore.DeltaKeys(name).map(col(_)): _*),
-          s"${tableDir(name, next)}/del"))
-        patch.add.foreach(stage(_, s"${tableDir(name, next)}/add",
-          KbStore.DeltaPartitioning.getOrElse(name, Nil)))
-      }
-      val pointers = cur.table_versions ++ patches.keys.map(_ -> next)
-      var bases = cur.table_bases
-      var deltaChains = cur.table_deltas
-      // minor-compacted tables keep their base; the chain collapses to
-      // the one merged segment just staged
-      overflow.keys.foreach { name =>
-        deltaChains += name -> Seq(next)
-      }
-      asDelta.keys.foreach { name =>
-        if (!bases.contains(name))
-          bases += name -> cur.table_versions(name)
-        deltaChains += name ->
-          (deltaChains.getOrElse(name, Seq.empty[Long]) :+ next)
-      }
-      // same invalidation clause as the full commit: an embeddings
-      // patch without preserveIndex is a vector REPLACEMENT — the
-      // vector-derived families' pointers (and chains) drop
-      val dropped = (if (dropStats) Seq(KbStore.StatsTable) else Nil) ++
-        (if (patches.contains("embeddings") && !preserveIndex)
-           KbStore.VectorIndexTables
-         else Nil)
-      val m = newMeta(cur).copy(version = next,
-        table_versions = pointers -- dropped,
-        table_bases = bases -- dropped, table_deltas = deltaChains -- dropped)
-      prePublishHook()
-      KbStore.writeMetaAtomic(path, m, expectVersion = Some(cur.version))
-      metaCache = m
-      invalidate()
-      seedSchemas(m, staged.result())
-      done = true
-    } catch {
-      case e: Throwable =>
-        patches.keys.foreach { name =>
-          deleteDir(Paths.get(tableDir(name, next)))
-        }
-        e match {
-          case _: KbStore.PublishConflict
-              if attempt < KbStore.CasMaxRetries => attempt += 1
-          case _: KbStore.PublishConflict =>
-            throw new java.util.ConcurrentModificationException(
-              s"store $path: manifest publish raced " +
-                s"${KbStore.CasMaxRetries + 1} consecutive times — giving up")
-          case _ => throw e
-        }
-    }
     }
   }
 
@@ -838,8 +782,8 @@ final class KbStore private (
     */
   def buildStats(): Unit = {
     val card = computeStatsCard()
-    commit(Map(KbStore.StatsTable ->
-      card.toSeq.sortBy(_._1).toDF("metric", "value")), identity)
+    publish(Map(KbStore.StatsTable -> KbStore.Rewrite(
+      card.toSeq.sortBy(_._1).toDF("metric", "value"))), identity)
   }
 
   /** The corpus dataset card: row counts per table + total text chars.
@@ -932,7 +876,7 @@ final class KbStore private (
       Doc(id, nd.parentId, level, nd.text, embIdByDocId.get(id), nd.meta)
     }
 
-    commitDelta(
+    publish(
       Map(
         "docs" -> KbStore.TablePatch(
           add = Some(spark.createDataset(docRows).toDF())),
@@ -1013,93 +957,94 @@ final class KbStore private (
             r.getString(0), Option(r.getString(2)))
         }.toDF("id", "parent_id", "text", "meta")
     }).persist(StorageLevel.MEMORY_AND_DISK)
-
-    // ONE stats pass over the cached id frame: row count, char volume
-    // (the dataset-card delta) and whether any row carries a parent —
-    // previously three separate jobs (count, chars agg, the
-    // missing-parent isEmpty), each a full dispatch per micro-batch
-    val stats = ids.agg(count(lit(1)), coalesce(sum(length($"text")),
-      lit(0L)), count($"parent_id")).collect()(0)
-    val added = stats.getLong(0)
-    val charsAdded = stats.getLong(1)
-    val anyParents = stats.getLong(2) > 0L
-
-    // level derivation: one broadcast-or-shuffle join against existing
-    // docs; missing parents fail the job before anything is committed.
-    // A batch with NO parent_ids (the common root-docs ingest shape)
-    // skips the join — and with it the per-batch scan of the docs
-    // table, which at 100 TB is the difference between O(batch) and
-    // O(corpus) per micro-batch commit
-    val levelled = if (!anyParents) {
-      val cols = Seq($"id", $"parent_id", $"text", $"meta",
-        lit(0).as("level")) ++ (if (hasVec) Seq($"vec") else Nil)
-      ids.select(cols: _*)
-    } else {
-      val parents = docs.toDF().select($"id".as("pid"), $"level".as("plevel"))
-      val levelCols = Seq($"id", $"parent_id", $"text", $"meta",
-        when($"parent_id".isNull, 0).otherwise($"plevel" + 1).as("level")) ++
-        (if (hasVec) Seq($"vec") else Nil)
-      val lv = ids.join(parents, ids("parent_id") === col("pid"), "left")
-        .select(levelCols: _*)
-      val missing = lv.filter($"parent_id".isNotNull && $"level".isNull)
-      if (!missing.isEmpty)
-        throw new IllegalArgumentException(
-          "some parent_ids do not exist in the store")
-      lv
-    }
-
-    // batched embedding inside mapPartitions (chunk=200, kb.py:52);
-    // emb ids share the doc id (1:1 for the distributed path)
-    val prov = provider
-    val embRows =
-      if (hasVec)
-        levelled.select($"id", $"vec").as[(Long, Array[Float])]
-          .mapPartitions { it =>
-            it.grouped(EmbeddingProvider.BatchSize).flatMap { chunk =>
-              val vecs = Embeddings.checkMagnitude(chunk.map(_._2))
-              chunk.map(_._1).zip(vecs).map { case (id, v) => Emb(id, v) }
-            }
-          }
-      else
-        levelled.select($"id", $"text").as[(Long, String)]
-          .mapPartitions { it =>
-            it.grouped(EmbeddingProvider.BatchSize).flatMap { chunk =>
-              val vecs = Embeddings.checkMagnitude(prov.embed(chunk.map(_._2)))
-              chunk.map(_._1).zip(vecs).map { case (id, v) => Emb(id, v) }
-            }
-          }
-
-    val docRows = levelled.select($"id", $"parent_id",
-      $"level".cast("int").as("level"), $"text", $"id".as("emb_id"), $"meta")
-    // small batches (the streaming micro-batch shape) collapse to one
-    // output file per segment: the source frame inherits the session's
-    // parallelism, so without this a 500-doc commit writes ~32 tiny
-    // files per table whose chain every subsequent read must fold —
-    // file-count hygiene per guide §6, worth nothing at bulk-load
-    // sizes (left untouched) and a lot at high commit frequency.
-    // docRows coalesce (no exchange — building a doc row is trivial);
-    // embRows REPARTITION (r13 verdict item 10): a coalesce(1) here
-    // collapsed the embedding mapPartitions into one task, serializing
-    // up to ~11 provider chunk calls that a remote provider wants in
-    // parallel — the repartition's exchange keeps the embed stage at
-    // source parallelism and single-tasks only the file write, at the
-    // cost of shuffling one micro-batch of vectors (~12 MB at 2048 ×
-    // d1536, local)
-    val onePart = (df: DataFrame) =>
-      if (added <= 2048) df.coalesce(1) else df
-    val onePartShuffled = (df: DataFrame) =>
-      if (added <= 2048) df.repartition(1) else df
-    val patches = Map(
-      "docs" -> KbStore.TablePatch(add = Some(onePart(docRows))),
-      "embeddings" -> KbStore.TablePatch(
-        add = Some(onePartShuffled(embRows.toDF())))) ++
-      ingestMarker.map { case (mk, mv) =>
-        "keyval" -> KbStore.TablePatch(
-          del = Some(Seq(mk).toDF("key")),
-          add = Some(spark.createDataset(Seq(KV.of(mk, mv))).toDF()))
-      }
+    // every step from here to the commit can fail (the missing-parent
+    // check throws), so the persist is released on every path
     try {
-      commitDelta(patches, m => m.copy(max_doc_id = n0 + added),
+      // ONE stats pass over the cached id frame: row count, char volume
+      // (the dataset-card delta) and whether any row carries a parent —
+      // previously three separate jobs (count, chars agg, the
+      // missing-parent isEmpty), each a full dispatch per micro-batch
+      val stats = ids.agg(count(lit(1)), coalesce(sum(length($"text")),
+        lit(0L)), count($"parent_id")).collect()(0)
+      val added = stats.getLong(0)
+      val charsAdded = stats.getLong(1)
+      val anyParents = stats.getLong(2) > 0L
+
+      // level derivation: one broadcast-or-shuffle join against existing
+      // docs; missing parents fail the job before anything is committed.
+      // A batch with NO parent_ids (the common root-docs ingest shape)
+      // skips the join — and with it the per-batch scan of the docs
+      // table, which at 100 TB is the difference between O(batch) and
+      // O(corpus) per micro-batch commit
+      val levelled = if (!anyParents) {
+        val cols = Seq($"id", $"parent_id", $"text", $"meta",
+          lit(0).as("level")) ++ (if (hasVec) Seq($"vec") else Nil)
+        ids.select(cols: _*)
+      } else {
+        val parents = docs.toDF().select($"id".as("pid"), $"level".as("plevel"))
+        val levelCols = Seq($"id", $"parent_id", $"text", $"meta",
+          when($"parent_id".isNull, 0).otherwise($"plevel" + 1).as("level")) ++
+          (if (hasVec) Seq($"vec") else Nil)
+        val lv = ids.join(parents, ids("parent_id") === col("pid"), "left")
+          .select(levelCols: _*)
+        val missing = lv.filter($"parent_id".isNotNull && $"level".isNull)
+        if (!missing.isEmpty)
+          throw new IllegalArgumentException(
+            "some parent_ids do not exist in the store")
+        lv
+      }
+
+      // batched embedding inside mapPartitions (chunk=200, kb.py:52);
+      // emb ids share the doc id (1:1 for the distributed path)
+      val prov = provider
+      val embRows =
+        if (hasVec)
+          levelled.select($"id", $"vec").as[(Long, Array[Float])]
+            .mapPartitions { it =>
+              it.grouped(EmbeddingProvider.BatchSize).flatMap { chunk =>
+                val vecs = Embeddings.checkMagnitude(chunk.map(_._2))
+                chunk.map(_._1).zip(vecs).map { case (id, v) => Emb(id, v) }
+              }
+            }
+        else
+          levelled.select($"id", $"text").as[(Long, String)]
+            .mapPartitions { it =>
+              it.grouped(EmbeddingProvider.BatchSize).flatMap { chunk =>
+                val vecs = Embeddings.checkMagnitude(prov.embed(chunk.map(_._2)))
+                chunk.map(_._1).zip(vecs).map { case (id, v) => Emb(id, v) }
+              }
+            }
+
+      val docRows = levelled.select($"id", $"parent_id",
+        $"level".cast("int").as("level"), $"text", $"id".as("emb_id"), $"meta")
+      // small batches (the streaming micro-batch shape) collapse to one
+      // output file per segment: the source frame inherits the session's
+      // parallelism, so without this a 500-doc commit writes ~32 tiny
+      // files per table whose chain every subsequent read must fold —
+      // file-count hygiene per guide §6, worth nothing at bulk-load
+      // sizes (left untouched) and a lot at high commit frequency.
+      // docRows coalesce (no exchange — building a doc row is trivial);
+      // embRows REPARTITION (r13 verdict item 10): a coalesce(1) here
+      // collapsed the embedding mapPartitions into one task, serializing
+      // up to ~11 provider chunk calls that a remote provider wants in
+      // parallel — the repartition's exchange keeps the embed stage at
+      // source parallelism and single-tasks only the file write, at the
+      // cost of shuffling one micro-batch of vectors (~12 MB at 2048 ×
+      // d1536, local)
+      val onePart = (df: DataFrame) =>
+        if (added <= 2048) df.coalesce(1) else df
+      val onePartShuffled = (df: DataFrame) =>
+        if (added <= 2048) df.repartition(1) else df
+      val patches = Map(
+        "docs" -> KbStore.TablePatch(add = Some(onePart(docRows))),
+        "embeddings" -> KbStore.TablePatch(
+          add = Some(onePartShuffled(embRows.toDF())))) ++
+        ingestMarker.map { case (mk, mv) =>
+          "keyval" -> KbStore.TablePatch(
+            del = Some(Seq(mk).toDF("key")),
+            add = Some(spark.createDataset(Seq(KV.of(mk, mv))).toDF()))
+        }
+      publish(patches, m => m.copy(max_doc_id = n0 + added),
         statsDelta = Some(() => KbStore.StatsDelta(
           docs = added, embeddings = added,
           keys = ingestMarker.map(m =>
@@ -1107,8 +1052,8 @@ final class KbStore private (
           // char volume precomputed in the single stats pass above —
           // the thunk no longer dispatches its own aggregation job
           chars = charsAdded)))
+      added
     } finally ids.unpersist(blocking = false)
-    added
   }
 
   /** Bulk delete (M3, `kb.py:360-414`): per-id parent guard honoring
@@ -1144,7 +1089,7 @@ final class KbStore private (
     val edgeIds = edges.filter(
         $"src".isin(ids: _*) || $"dst".isin(ids: _*) || $"rel".isin(ids: _*))
       .select($"id").toDF()
-    commitDelta(
+    publish(
       Map(
         "docs" -> KbStore.TablePatch(del = Some(ids.distinct.toDF("id"))),
         "edges" -> KbStore.TablePatch(del = Some(edgeIds))) ++
@@ -1191,7 +1136,7 @@ final class KbStore private (
         val e = edges.toDF()
         e.join(del, e(c) === del("del_id"), "left_semi").select(col("id"))
       }.reduce(_ union _).distinct()
-      commitDelta(
+      publish(
         Map(
           "docs" -> KbStore.TablePatch(
             del = Some(del.select(col("del_id").as("id")))),
@@ -1238,8 +1183,8 @@ final class KbStore private (
         spark.createDataset(Seq(Emb(newEmbId.get, v))).toDF()))
     // a one-row doc patch (tombstone + re-add with the new emb_id) plus
     // the embedding delta; vector REPLACEMENT still drops the
-    // vector-derived index families (preserveIndex = false)
-    commitDelta(
+    // vector-derived index families (replacesVectors)
+    publish(
       Map(
         "docs" -> KbStore.TablePatch(
           del = Some(Seq(docId).toDF("id")),
@@ -1248,7 +1193,7 @@ final class KbStore private (
         "embeddings" -> embPatch),
       m => m.copy(max_doc_id =
         math.max(m.max_doc_id, newEmbId.getOrElse(0L))),
-      preserveIndex = false,
+      replacesVectors = true,
       statsDelta = Some(() => KbStore.StatsDelta(
         embeddings = newEmbId.size.toLong - delEmbId.size.toLong)))
   }
@@ -1257,7 +1202,7 @@ final class KbStore private (
   def updateDocMeta(id: Long, newMeta: Option[String]): Unit = {
     val docRow = docs.filter($"id" === id).collect().headOption
       .getOrElse(throw new NoSuchElementException(s"doc $id"))
-    commitDelta(
+    publish(
       Map("docs" -> KbStore.TablePatch(
         del = Some(Seq(id).toDF("id")),
         add = Some(spark.createDataset(
@@ -1279,7 +1224,7 @@ final class KbStore private (
   private[graft] def replaceDocTextForSpec(id: Long, newText: String): Unit = {
     val docRow = docs.filter($"id" === id).collect().headOption
       .getOrElse(throw new NoSuchElementException(s"doc $id"))
-    commitDelta(
+    publish(
       Map("docs" -> KbStore.TablePatch(
         del = Some(Seq(id).toDF("id")),
         add = Some(spark.createDataset(
@@ -1315,7 +1260,7 @@ final class KbStore private (
       next += 1
       Edge(next, s, d, r, w, dir)
     }
-    commitDelta(
+    publish(
       Map("edges" -> KbStore.TablePatch(
         add = Some(spark.createDataset(rows).toDF()))),
       m => m.copy(max_edge_id = next),
@@ -1330,7 +1275,7 @@ final class KbStore private (
   def delEdge(id: Long): Unit = {
     if (edges.filter($"id" === id).isEmpty)
       throw new NoSuchElementException(s"edge $id")
-    commitDelta(Map("edges" ->
+    publish(Map("edges" ->
       KbStore.TablePatch(del = Some(Seq(id).toDF("id")))), identity,
       statsDelta = Some(() => KbStore.StatsDelta(edges = -1L)))
   }
@@ -1370,7 +1315,7 @@ final class KbStore private (
   // ------------------------------------------------------------------
   def setKey(key: String, value: Any): Unit = {
     val row = KV.of(key, value)
-    commitDelta(
+    publish(
       Map("keyval" -> KbStore.TablePatch(
         del = Some(Seq(key).toDF("key")),
         add = Some(spark.createDataset(Seq(row)).toDF()))),
@@ -1411,7 +1356,7 @@ final class KbStore private (
 
   def delKey(key: String): Unit = {
     if (!hasKey(key)) throw new NoSuchElementException(s"key $key")
-    commitDelta(Map("keyval" ->
+    publish(Map("keyval" ->
       KbStore.TablePatch(del = Some(Seq(key).toDF("key")))), identity,
       statsDelta = Some(() => KbStore.StatsDelta(keys = -1L)))
   }
@@ -1613,26 +1558,13 @@ final class KbStore private (
     // never hand the analyzer an unbounded plan: past it the full
     // keyed diff is cheaper than the plan itself.
     if (appended.size > KbStore.DeltaChainLimit) return None
-    val keys = KbStore.DeltaKeys(table)
-    val schema = read(table).limit(0)
-    var adds = schema
-    val dels = Seq.newBuilder[DataFrame]
-    // fold in publish order: a segment's tombstones apply to earlier
-    // segments' adds (removed-then-added, the read-side contract), so
-    // a row added then deleted inside the window nets out of `adds`
-    appended.foreach { v =>
-      val dir = tableDir(table, v)
-      segment(s"$dir/del").foreach { del =>
-        val d = del.select(keys.map(col(_)): _*)
-        adds = adds.join(d, keys, "left_anti")
-        dels += d
-      }
-      segment(s"$dir/add").foreach(a =>
-        adds = adds.unionByName(a.select(schema.columns.map(col(_)): _*)))
-    }
-    // no tombstones in the window: no del side, so a refresh stages no
-    // empty del segment for every later read of its chain to fold
-    Some((adds, dels.result().reduceOption(_.unionByName(_)).map(_.distinct())))
+    // the window's net change: a row added then deleted inside it nets
+    // out of `adds`. No tombstones in the window: no del side, so a
+    // refresh stages no empty del segment for every later read of its
+    // chain to fold
+    val (adds, dels) = foldPatches(table, baseSegment(table, to._1).limit(0),
+      appended.map(published(table, _)))
+    Some((adds, dels.map(_.distinct())))
   }
 
   /** Distinct keys of `table` rows tombstoned by any del segment in
@@ -1640,12 +1572,9 @@ final class KbStore private (
     * ids. Reads only the chain's (small) del files, never the base;
     * None when the chain holds no tombstones. */
   private def tombstonedKeysInChain(table: String): Option[DataFrame] = {
-    val chain = metaCache.table_deltas.getOrElse(table, Seq.empty[Long])
-    val keys = KbStore.DeltaKeys(table)
-    val dels = chain.flatMap { v =>
-      segment(s"${tableDir(table, v)}/del").map(_.select(keys.map(col(_)): _*))
-    }
-    dels.reduceOption(_.unionByName(_)).map(_.distinct())
+    val (base, chain) = layoutOf(metaCache, table)
+    foldPatches(table, baseSegment(table, base).limit(0),
+      chain.map(published(table, _)))._2.map(_.distinct())
   }
 
   /** The refresh fallbacks' full keyed diff, made re-add-aware (r13
@@ -1667,7 +1596,7 @@ final class KbStore private (
     * doc mutations (updateDocMeta, setDocEmbedding's doc patch) re-add
     * the SAME text so a surviving index row is never wrong, and
     * embeddings VECTOR REPLACEMENT drops the vector families outright
-    * (preserveIndex = false) rather than leaving them stale.
+    * (`replacesVectors`) rather than leaving them stale.
     *
     * Returns (rows of `live` the index must (re-)ingest, keys whose
     * index rows must tombstone) — the two sides of each union are
@@ -1710,7 +1639,7 @@ final class KbStore private (
       val added = graft.ops.SimilaritySearch.ivfAssignPacked(
         changed.select($"vec_id".as("id"), floatVecPack($"vec").as("vec")),
         packedCents)
-      commitDelta(Map(KbStore.IvfAssignTable ->
+      publish(Map(KbStore.IvfAssignTable ->
         KbStore.TablePatch(del = removed, add = Some(added))), identity,
         readSet = Set("embeddings", KbStore.IvfCentroidsTable))
   }
@@ -1775,9 +1704,9 @@ final class KbStore private (
           (centsStored,
             graft.ops.SimilaritySearch.ivfAssignPacked(input, centsPackedDf))
         }
-      commit(
-        Map(KbStore.IvfCentroidsTable -> centsDf,
-          KbStore.IvfAssignTable -> assign),
+      publish(
+        Map(KbStore.IvfCentroidsTable -> KbStore.Rewrite(centsDf),
+          KbStore.IvfAssignTable -> KbStore.Rewrite(assign)),
         identity, readSet = Set("embeddings"))
     } finally input.unpersist(blocking = false)
   }
@@ -1953,9 +1882,9 @@ final class KbStore private (
       "cannot build a compressed tier over an empty store")
     val packed = embeddings.toDF()
       .select($"id", floatVecPack($"vec").as("vec"))
-    commit(Map(KbStore.SqCodesTable ->
+    publish(Map(KbStore.SqCodesTable -> KbStore.Rewrite(
       graft.ops.VectorQuant.sqEncodePacked(packed)
-        .withColumnRenamed("id", "vec_id")), identity,
+        .withColumnRenamed("id", "vec_id"))), identity,
       readSet = Set("embeddings"))
   }
 
@@ -1972,7 +1901,7 @@ final class KbStore private (
         .withColumnRenamed("id", "vec_id")
       // ENCODE work was already O(changed); the delta commit makes the
       // WRITE O(changed) too (the r5 verdict's remaining disclosure)
-      commitDelta(Map(KbStore.SqCodesTable ->
+      publish(Map(KbStore.SqCodesTable ->
         KbStore.TablePatch(del = removed, add = Some(added))), identity,
         readSet = Set("embeddings"))
   }
@@ -2068,10 +1997,10 @@ final class KbStore private (
           sub.zipWithIndex.map { case (cv, c) =>
             (s, c, cv.map(_.toDouble).toSeq) }
         }.toSeq.toDF("s", "c", "v")
-        commit(
-          Map(KbStore.IvfPqCentroidsTable -> centsDf,
-            KbStore.IvfPqBooksTable -> booksDf,
-            KbStore.IvfPqCodesTable -> codes),
+        publish(
+          Map(KbStore.IvfPqCentroidsTable -> KbStore.Rewrite(centsDf),
+            KbStore.IvfPqBooksTable -> KbStore.Rewrite(booksDf),
+            KbStore.IvfPqCodesTable -> KbStore.Rewrite(codes)),
           identity, readSet = Set("embeddings"))
       } finally res.unpersist(blocking = false)
     } finally packed.unpersist(blocking = false)
@@ -2121,7 +2050,7 @@ final class KbStore private (
       }
       val preCodesVersion =
         metaCache.table_versions.get(KbStore.IvfPqCodesTable)
-      commitDelta(Map(KbStore.IvfPqCodesTable ->
+      publish(Map(KbStore.IvfPqCodesTable ->
         KbStore.TablePatch(del = removed, add = Some(added))), identity,
         readSet = Set("embeddings", KbStore.IvfPqCentroidsTable,
           KbStore.IvfPqBooksTable))
@@ -2132,7 +2061,7 @@ final class KbStore private (
       // is the same volume with less bookkeeping. The sharded fast path
       // additionally requires the marker to have named exactly the
       // PRE-commit codes version: a mirror that had already missed an
-      // update (crash between commitDelta and the marker write, or a
+      // update (crash between the delta publish and the marker write, or a
       // rebuild without bucketCodes) has unchanged shards that are
       // older than this delta — promoting it after rewriting only this
       // delta's shards would serve those stale rows as current. Such a
@@ -2382,12 +2311,12 @@ final class KbStore private (
     // terms map to ≤|terms| buckets, so the retrieval scan is physical
     // partition pruning (1/64th of the postings per term), not a full
     // scan with a filter
-    try commit(
-      Map(KbStore.TextPostingsTable -> KbStore.withTermBucket(postings),
-        KbStore.TextDocLensTable -> docLens),
+    try publish(
+      Map(KbStore.TextPostingsTable ->
+          KbStore.Rewrite(KbStore.withTermBucket(postings)),
+        KbStore.TextDocLensTable -> KbStore.Rewrite(docLens)),
       m => m.copy(index_params =
         m.index_params + ("text_unicode" -> unicode.toString)),
-      partitionBy = Map(KbStore.TextPostingsTable -> Seq("bucket")),
       readSet = Set("docs"))
     finally { // buildIndex caches both
       postings.unpersist(blocking = false)
@@ -2417,7 +2346,7 @@ final class KbStore private (
       // identically to the stored ones and the add segment persists
       // partitioned by bucket, so retrieval's partition pruning spans
       // base and deltas alike.
-      try commitDelta(Map(
+      try publish(Map(
         KbStore.TextPostingsTable -> KbStore.TablePatch(
           del = goneIds,
           add = Some(KbStore.withTermBucket(addPost))),
@@ -2572,8 +2501,8 @@ final class KbStore private (
     val bands = dedupBandsFor(
       docs.toDF().select($"id".as("doc_id"), $"text"),
       k, numHashes, rowsPerBand, unicode)
-    commit(
-      Map(KbStore.DedupBandsTable -> bands),
+    publish(
+      Map(KbStore.DedupBandsTable -> KbStore.Rewrite(bands)),
       m => m.copy(index_params = m.index_params ++ Map(
         "dedup_k" -> k.toString,
         "dedup_num_hashes" -> numHashes.toString,
@@ -2589,7 +2518,7 @@ final class KbStore private (
   def refreshDedupIndex(): Unit = refreshFamily(KbStore.IndexFamily.Dedup) {
     (newDocs, goneIds) =>
       val (k, nh, rpb, uni) = dedupParams
-      commitDelta(Map(
+      publish(Map(
         KbStore.DedupBandsTable -> KbStore.TablePatch(
           del = goneIds,
           add = Some(dedupBandsFor(newDocs, k, nh, rpb, uni)))),
@@ -2921,9 +2850,10 @@ final class KbStore private (
           chunk.map(_._1).zip(vecs).map { case (id, v) => Emb(id, v) }
         }
       }
-    commit(
-      Map("embeddings" -> newEmb.toDF()),
-      m => m.copy(embedding_params = provider.params))
+    publish(
+      Map("embeddings" -> KbStore.Rewrite(newEmb.toDF())),
+      m => m.copy(embedding_params = provider.params),
+      replacesVectors = true)
   }
 
   // ------------------------------------------------------------------
@@ -2981,21 +2911,19 @@ final class KbStore private (
     // is only sound for a mirror that was current going in
     val preCodesVersion =
       metaCache.table_versions.get(KbStore.IvfPqCodesTable)
-    // preserveIndex: this rewrite includes `embeddings` but replaces no
-    // vectors, so commit's invalidation clause must not strip the stale
-    // index's pointers (that would flip AnnStale -> AnnNone and let the
-    // next vacuum delete the index dirs instead of refreshing them).
-    // The postings table keeps its term-bucket partition layout through
-    // the rewrite — without it a routine compact would silently demote
-    // bm25Retrieve's partition pruning to a full scan.
-    commit(
+    // this rewrite includes `embeddings` but replaces no vectors, so it
+    // does not set `replacesVectors`: a stale index keeps its pointers
+    // (dropping them would flip AnnStale -> AnnNone and let the next
+    // vacuum delete the index dirs instead of refreshing them). The
+    // postings table keeps its term-bucket partitioning through the
+    // rewrite, like every write of it (KbStore.DeltaPartitioning).
+    publish(
       names.map { name =>
-        name -> layout.getOrElse(name,
+        name -> KbStore.Rewrite(layout.getOrElse(name,
           (df: DataFrame) => df.coalesce(math.max(1, numFiles)))
-          .apply(read(name))
+          .apply(read(name)))
       }.toMap,
-      identity, codec, preserveIndex = true,
-      partitionBy = Map(KbStore.TextPostingsTable -> Seq("bucket")))
+      identity, codec = codec)
     // a compacted (current) pq family moved the codes VERSION but not
     // its rows (a compact is a same-content rewrite), so a mirror that
     // reflected the PRE-compact version is still byte-correct — just
@@ -3238,42 +3166,35 @@ final class KbStore private (
     val to = if (toVersion < 0L) metaCache.version else toVersion
     require(fromVersion <= to,
       s"fromVersion $fromVersion is past toVersion $to")
-    val keys = KbStore.DeltaKeys(name)
+    val keys = KbStore.DeltaKeys(name).map(col(_))
     val metas = (fromVersion to to).map(metaAt)
-    def basePtr(m: KbMeta): Option[Long] = m.table_versions.get(name)
-      .map(head => m.table_bases.getOrElse(name, head))
     metas.sliding(2).flatMap {
       case Seq(prev, next) =>
-        val prevChain = prev.table_deltas.getOrElse(name, Nil)
-        val nextChain = next.table_deltas.getOrElse(name, Nil)
+        val (had, has) =
+          (prev.table_versions.contains(name), next.table_versions.contains(name))
         val untouched =
           prev.table_versions.get(name) == next.table_versions.get(name) &&
-            prevChain == nextChain
+            prev.table_deltas.getOrElse(name, Nil) ==
+              next.table_deltas.getOrElse(name, Nil)
         if (untouched) None
-        else if (basePtr(prev).isDefined && basePtr(prev) == basePtr(next) &&
-            nextChain.startsWith(prevChain)) {
+        else if (had && has &&
+            extendsLayout(layoutOf(prev, name), layoutOf(next, name))) {
           // chain extension: the appended segments ARE the change
-          val appended = nextChain.drop(prevChain.size)
-          val schema = readWithMeta(next, name).limit(0)
-          val adds = appended.flatMap { v =>
-            segment(s"${tableDir(name, v)}/add")
-              .map(_.select(schema.columns.map(col(_)): _*))
-          }.reduceOption(_ union _).getOrElse(schema)
-          val dels = appended.flatMap { v =>
-            segment(s"${tableDir(name, v)}/del")
-              .map(_.select(keys.map(col(_)): _*))
-          }.reduceOption(_ union _)
-            .getOrElse(schema.select(keys.map(col(_)): _*))
-          Some(KbStore.TableChanges(next.version, adds, dels))
+          val (base, chain) = layoutOf(next, name)
+          val empty = baseSegment(name, base).limit(0)
+          val (adds, dels) = foldPatches(name, empty,
+            chain.drop(layoutOf(prev, name)._2.size).map(published(name, _)))
+          Some(KbStore.TableChanges(next.version, adds,
+            dels.getOrElse(empty.select(keys: _*))))
         } else {
           // base moved (compact / minor merge / full rewrite / family
           // build or drop): exact keyed snapshot diff
-          val a = if (basePtr(prev).isDefined) readWithMeta(prev, name)
+          val a = if (had) readWithMeta(prev, name)
             else readWithMeta(next, name).limit(0)
-          val b = if (basePtr(next).isDefined) readWithMeta(next, name)
+          val b = if (has) readWithMeta(next, name)
             else a.limit(0)
           Some(KbStore.TableChanges(next.version,
-            b.except(a), a.except(b).select(keys.map(col(_)): _*)))
+            b.except(a), a.except(b).select(keys: _*)))
         }
       case _ => None // single manifest: empty range
     }.toSeq
@@ -3404,11 +3325,18 @@ object KbStore {
   case object AnnCurrent extends AnnState
 
   // ---------------- merge-on-read segment chains (round 6) ----------
+  /** One table's part of a commit: a new base ([[Rewrite]]) or a delta
+    * that extends its segment chain ([[TablePatch]]). */
+  sealed trait TableWrite
+
+  /** A table's new base: `rows` replace the table and its chain. */
+  private[core] final case class Rewrite(rows: DataFrame) extends TableWrite
+
   /** One mutation's effect on one table: tombstone keys to remove and
     * rows to append, applied in that order.
     */
   final case class TablePatch(del: Option[DataFrame] = None,
-      add: Option[DataFrame] = None)
+      add: Option[DataFrame] = None) extends TableWrite
 
   /** One step of [[KbStore.tableChangelog]]: the manifest version that
     * published the change, the rows it added (full table schema), and
@@ -3449,9 +3377,10 @@ object KbStore {
     TextPostingsTable -> Seq("doc_id"), TextDocLensTable -> Seq("doc_id"),
     DedupBandsTable -> Seq("doc_id"))
 
-  /** Physical layout add-segments (and chain-overflow rewrites) must
-    * preserve — the postings' term-bucket partitioning is what makes
-    * bm25Retrieve's scan prune.
+  /** Physical layout every write of a table keeps (a rewritten base,
+    * an add segment, a minor compaction's merged segment) — the
+    * postings' term-bucket partitioning is what makes bm25Retrieve's
+    * scan prune.
     */
   val DeltaPartitioning: Map[String, Seq[String]] = Map(
     TextPostingsTable -> Seq("bucket"))

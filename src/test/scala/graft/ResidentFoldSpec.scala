@@ -330,6 +330,9 @@ class ResidentFoldSpec extends SparkSpec {
     }
     leavesNoPersist("fetchDocWithEmbedding")(
       assert(kb.fetchDocWithEmbedding(3L)._2.isDefined))
+    leavesNoPersist("bulkAddDocsDistributed naming a missing parent")(
+      intercept[IllegalArgumentException](kb.bulkAddDocsDistributed(
+        Seq(("orphan", 999999L)).toDF("text", "parent_id"), provider)))
     kb.close()
   }
 }

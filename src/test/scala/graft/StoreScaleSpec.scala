@@ -951,6 +951,98 @@ class StoreScaleSpec extends SparkSpec {
     y.close(); x.close()
   }
 
+  test("every publish shape (full rewrite, delta, minor compaction) " +
+      "retries past a disjoint racing writer and rolls back a failed publish") {
+    import graft.core.Embeddings.EmbeddingProvider
+    val path = freshPath()
+    val p = new EmbeddingProvider {
+      def name = "hashvec"; def dim = 4
+      def embed(texts: Seq[String]): Seq[Array[Float]] =
+        texts.map { t =>
+          val rnd = new java.util.Random(t.hashCode.toLong)
+          val v = Array.fill(4)(rnd.nextGaussian())
+          val norm = math.sqrt(v.map(x => x * x).sum)
+          v.map(x => (x / norm).toFloat)
+        }
+    }
+    val kb = KbStore.create(spark, path, Map())
+    kb.bulkAddDocs(p) { add =>
+      (0 until 5).foreach(i => add.add(s"seed doc $i"))
+    }
+    kb.setKey("k0", 0L)
+
+    /** What the reads of `s` return: its docs, keys and edges. */
+    def reads(s: KbStore): Any = (s.docs.collect().sortBy(_.id).toSeq,
+      s.items, s.edges.collect().sortBy(_.id).toSeq)
+
+    var racedEdges = 0L
+    /** `write` lands after a disjoint writer (an edge add) publishes
+      * between its staging and its publish: it retries on the new head,
+      * and both writes are in the store. */
+    def landsPastRace(write: => Unit): Unit = {
+      val v = kb.meta.version
+      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+      racedEdges += 1
+      val rel = racedEdges
+      kb.prePublishHook = () =>
+        if (fired.compareAndSet(false, true)) {
+          val other = KbStore.open(spark, path)
+          try other.addEdge(1L, 2L, rel) finally other.close()
+        }
+      try write finally kb.prePublishHook = () => ()
+      assert(fired.get, "the racing writer must have run")
+      assert(kb.meta.version == v + 2, "the write must land on the racer's head")
+      assert(kb.countEdges == racedEdges, "the racing edge add must survive")
+    }
+
+    /** `write`, whose publish fails once, leaves the store as it was: the
+      * call throws, the manifest keeps its version in memory and on disk,
+      * no `v<N+1>` dir is left under `tables`, and reads answer as
+      * before. */
+    def rollsBack(tables: Iterable[String])(write: => Unit): Unit = {
+      val v = kb.meta.version
+      val before = reads(kb)
+      kb.prePublishHook = () => throw new IllegalStateException("injected")
+      val e = try intercept[IllegalStateException](write)
+        finally kb.prePublishHook = () => ()
+      assert(e.getMessage == "injected")
+      assert(kb.meta.version == v)
+      val onDisk = KbStore.open(spark, path)
+      try assert(onDisk.meta.version == v) finally onDisk.close()
+      tables.foreach { t =>
+        assert(!Files.exists(Paths.get(s"$path/$t/v${v + 1}")),
+          s"a failed publish left $t/v${v + 1} behind")
+      }
+      assert(reads(kb) == before)
+    }
+
+    // a full rewrite: the text index build races, a compact fails
+    landsPastRace(kb.buildTextIndex())
+    assert(kb.hasTextIndex && kb.bm25Retrieve("seed", 3).nonEmpty)
+    rollsBack(kb.meta.table_versions.keys)(kb.compact())
+
+    // a plain delta
+    landsPastRace(kb.setKey("k1", 1L))
+    assert(kb.getKey("k1") == 1L)
+    rollsBack(Seq("keyval"))(kb.setKey("k1", 2L))
+    assert(kb.getKey("k1") == 1L)
+
+    // a minor compaction: the keyval chain at its limit
+    var i = 0
+    while (kb.meta.table_deltas("keyval").size < KbStore.DeltaChainLimit) {
+      i += 1
+      kb.setKey(s"fill$i", i.toLong)
+    }
+    rollsBack(Seq("keyval"))(kb.setKey("k0", 99L))
+    assert(kb.meta.table_deltas("keyval").size == KbStore.DeltaChainLimit)
+    landsPastRace(kb.setKey("k0", 99L))
+    assert(kb.meta.table_deltas("keyval") == Seq(kb.meta.version),
+      "the chain must have been minor-compacted")
+    assert(kb.getKey("k0") == 99L && kb.getKey("k1") == 1L &&
+      kb.getKey(s"fill$i") == i.toLong)
+    kb.close()
+  }
+
   test("bucketed PQ codes mirror: store pqKnnJoin takes the AdcCodesJoin " +
       "path with zero shuffles under the codes child, parity with the " +
       "plain kernel, and staleness falls back / refresh re-buckets") {
