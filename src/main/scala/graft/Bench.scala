@@ -1,75 +1,45 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.KbStore.deleteRecursively
 import graft.functions.FloatVecDot
 
-/** Benchmark main. Emits ONE JSON line:
-  *   {"metric":"total","value":<sec>,"unit":"sec","queries":{...},"sf":...}
+/** Benchmark main: a fixed list of timed points, grouped in sections.
   *
-  * RUN ORDER (r11) — chosen so ONE driver run certifies BOTH the
-  * operator inventory and the design-claim ladder, even on an
-  * IO-contended day (r7 clipped the ladder; r8 clipped the whole
-  * part-1 sweep; r10 recorded all four ladder legs but only one cycle
-  * each — strict priority ordering just moved the casualty):
-  *  0. an IO-calibration probe (fixed-size raw parquet write + cold
-  *     read) seeds the budget estimator's slowdown factor;
-  *  1. the CHEAP reference-protocol points (10k protocol, load-docs);
-  *  2. the full SparkEntry inventory, SINGLE-REP (~115 s healthy —
-  *     cheap relative to its information value) — with the ladder
-  *     spine's estimated budget RESERVED ([[reservedS]]) so a calib-3
-  *     day stops this sweep early instead of starving the ladder;
-  *  3. the 1M protocol + the knn ORDERING ladder at 2k probes (the
-  *     amortization ordering is probe-count-invariant; 2k legs are
-  *     cheap enough that TWO full interleaved cycles always fit), legs
-  *     round-robin (A,B,C,D,A,B,C,D; min per leg) so contention drift
-  *     hits all legs equally instead of mapping onto ladder position
-  *     (r8/r10 published inverted ladders exactly that way); the
-  *     outcome is stated explicitly as `ladder_monotone` +
-  *     `ladder_cycles` in the contract line; out-of-order rungs get
-  *     targeted retries ONLY while the budget still covers every
-  *     unrecorded design section;
-  *  4. the plain knn leg once at 10k probes (the absolute magnitude),
-  *     then the compressed-tier encode/probe points;
-  *  5. the remaining design points (curation-composition scaling pair
-  *     + real sf0.1/sf1 corpus points, z-order trio, BPE, image
-  *     near-dup, streaming ingest), then the most expensive
-  *     non-headline sweeps (pairs/neardup) LAST;
-  *  6. if budget remains, part-1 fast queries are UPGRADED from
-  *     single-rep to median-of-reps.
+  *   sbt "runMain graft.Bench [section | part-1 query] ..."
   *
-  * Every recorded point carries PROVENANCE — {reps, calib at
-  * measurement, residency where it applies} — so a consumer can see
-  * which numbers are weather-limited (single-shot on a calib-3 day)
-  * and which are solid.
+  * Sections always run in this order. With no arguments every section
+  * runs; otherwise only the named ones, and a part-1 query name runs the
+  * `part1` section with just the named queries.
+  *  - `io`: a fixed-size raw parquet write and read-back, so two runs'
+  *    deltas on disk-bound points can be told apart from code changes;
+  *  - `cheap`: the reference protocol at 10k docs (build, cold, warm)
+  *    and the text-only load-docs pair at 10k and 1M;
+  *  - `part1`: every SparkEntry query at `SPARK_GRAFT_SF_DIR`, 3 reps
+  *    each, after one untimed pass over the sf0.001 tables beside it;
+  *  - `1m`: the 1M protocol, the interleaved knn ladder, the 10k-probe
+  *    knn join, the compressed tiers, IVF build/probe, MaxSim and the
+  *    pairs/near-dup sweeps, all over one 1M × d1536 corpus;
+  *  - `clustered`, `stream`, `curation`, `zorder`, `bpe`, `image`: the
+  *    corpus-independent design points.
   *
-  * BUDGET DISCIPLINE: the whole run fits a wall-clock budget
-  * (`SPARK_GRAFT_BENCH_BUDGET_S`, default 1380 s) so the driver's
-  * timeout can never void the round's numbers again (r5: tail
-  * truncation; r6: rc 124, total loss; r7: budget overshoot clipped the
-  * ladder). Mechanisms:
-  *   - every point is recorded through [[record]], which (a) skips the
-  *     point if the remaining budget can't cover its estimate, (b) runs
-  *     ONE rep instead of a median-of-3 when the first rep exceeds
-  *     ~20 s (medians only matter where noise > signal), and (c)
-  *     rewrites BENCH_FULL.json after EVERY point, so even a SIGKILL
-  *     loses at most the in-flight point;
-  *   - per-point estimates RESCALE by the observed slowdown vs the last
-  *     recorded healthy run ([[expectedS]]): the sandbox's IO variance
-  *     is 2-5× run-to-run on disk-bound points (r7: svs_build_1m 299 s
-  *     driver vs 61 s builder, same tree), so static estimates clip
-  *     unpredictably — the running median of measured/expected ratios
-  *     ([[calib]]) absorbs that;
-  *   - heavy setup blocks are gated by [[setup]] — if the remaining
-  *     budget can't cover setup + its points, the section unwinds and
-  *     later INDEPENDENT sections still run;
-  *   - a JVM shutdown hook emits the contract JSON line from whatever
-  *     has been measured if the process is SIGTERMed mid-point (the
-  *     `timeout(1)` default signal). All result/skip state is guarded
-  *     by [[lock]] so the hook always formats a consistent snapshot
-  *     even when it fires concurrently with an in-flight [[record]].
+  * [[record]] times a point's reps and publishes their median. A point
+  * that throws is listed in `failed` with its exception class and no
+  * time; so is a section that throws outside a point, and the run goes
+  * on with the next section. After every point the full record (the
+  * contract plus per-point provenance and notes) is rewritten to
+  * `BENCH_FULL.<run_id>.json` in the working directory, so a killed run
+  * keeps what it measured. The last stdout line is the contract: one
+  * JSON object with the run fields, every recorded point under
+  * `queries` and every failure under `failed`.
   *
   * The retrieval kernel is the packed-f32 BINARY column + the codegen'd
   * [[FloatVecDot]] expression — the Spark-native analog of the
@@ -81,32 +51,15 @@ object Bench {
   private val wallT0 = System.nanoTime()
   private def elapsedS: Double = (System.nanoTime() - wallT0) / 1e9
 
-  /** Seconds held back for emission + spark.stop (the contract lines
-    * must always get out). */
-  private final val ReserveS = 25.0
+  /** Section names in run order (see the class doc). */
+  private val Sections = Seq("io", "cheap", "part1", "1m", "clustered",
+    "stream", "curation", "zorder", "bpe", "image")
 
-  private var budgetS: Double = 1380.0
-  private def remainS: Double = budgetS - elapsedS
-
-  /** Budget RESERVED for the knn-ladder certification spine (r11): the
-    * 1M protocol's minimum slice + PQ/assignment prep + two full
-    * interleaved 2k-probe ladder cycles. Active from the start of the
-    * part-1 sweep and stepped DOWN as each spine milestone completes,
-    * so on a calib-3 day the part-1 sweep (and any other non-spine
-    * point) stops early enough that ladder cycle 2 always fits — r7/r8/
-    * r10 each published a clipped or contention-inverted ladder because
-    * whatever ran first ate the whole budget. Spine points themselves
-    * gate on the RAW remainder (they are what the reservation is for).
-    */
-  @volatile private var reservedS: Double = 0.0
-
-  /** Task-level CPU vs run time, accumulated by a SparkListener: the
-    * contention detector the r10 verdict asked for. A point whose tasks
-    * show cpu/run ≈ 1 was on-CPU the whole time (slow ⇒ code or real
-    * work); cpu/run ≪ 1 means the executor threads were descheduled or
-    * IO-blocked (slow ⇒ environment) — recorded per point in
-    * provenance as `cpu_run`, so a 3× warm-1M miss is attributable
-    * in-record without a rerun. */
+  /** Task-level CPU vs run time, accumulated by a SparkListener and
+    * recorded per point as `cpu_run`: cpu/run ≈ 1 means the executor
+    * threads were on-CPU the whole time (slow ⇒ code or real work);
+    * cpu/run ≪ 1 means they were descheduled or IO-blocked (slow ⇒
+    * environment). */
   private val taskCpuNs = new java.util.concurrent.atomic.AtomicLong(0L)
   private val taskRunMs = new java.util.concurrent.atomic.AtomicLong(0L)
   private def cpuSnap(): (Long, Long) = (taskCpuNs.get(), taskRunMs.get())
@@ -116,224 +69,64 @@ object Bench {
     if (dr <= 0) None else Some(math.min(1.5, (dc / 1e6) / dr))
   }
 
-  /** Ladder certification outcome (r11 contract fields): monotone =
-    * every amortized 2k rung's published min beats the plain 2k
-    * baseline's; cycles = completed interleaved cycles (each leg's
-    * rep count at the time the flag was computed, minimum over legs). */
-  @volatile private var ladderMonotone: Option[Boolean] = None
-  @volatile private var ladderCycles: Int = 0
-  /** Split ladder contract (r12 verdict item 1b): the bucketed rung's
-    * codes-exchange elision is only ~100 MB at local scale, so its
-    * timed delta vs the pq rung sits INSIDE run noise by design — it
-    * can't carry an ordering gate the timer can't measure. The rung is
-    * certified STRUCTURALLY (OpsSpec/StoreScaleSpec: zero shuffles under the
-    * codes child) and the record carries its measured delta vs the pq
-    * rung, labeled noise-bounded, instead of an ordering claim.
-    * `ladder_monotone` covers the rungs with measurable local deltas:
-    * indexed and pq vs plain. */
-  @volatile private var bucketedVsPqS: Option[Double] = None
+  /** Ladder outcome: monotone = the indexed and pq legs' published mins
+    * are at or under the plain leg's; cycles = completed interleaved
+    * cycles. The bucketed leg's codes-exchange elision is only ~100 MB
+    * at local scale, inside run noise, so it carries no ordering claim:
+    * it is certified structurally (OpsSpec/StoreScaleSpec: zero
+    * shuffles under the codes child) and the record carries its
+    * measured delta vs the pq leg. */
+  private var ladderMonotone: Option[Boolean] = None
+  private var ladderCycles: Int = 0
+  private var bucketedVsPqS: Option[Double] = None
 
-  /** True when the opening calibration read > 1.5 and the run
-    * therefore inverted its priority order (part-1 sweep and the
-    * corpus-independent design sections before the 1M spine) — stated
-    * in the contract so a degraded-day record is self-describing. */
-  @volatile private var sweepFirstG: Boolean = false
-
-  /** Guards results/skipped/ratios/provenance AND the
-    * BENCH_FULL/stdout emission: the SIGTERM shutdown hook runs
-    * [[emitAll]] concurrently with the main thread's [[record]]
-    * mutations, and an unsynchronized LinkedHashMap iteration
-    * mid-insert can throw AFTER the hook has claimed [[emitted]] —
-    * losing the contract lines entirely (the exact failure the hook
-    * exists to prevent). */
-  private val lock = new Object
-  private val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-  private val skipped = scala.collection.mutable.ArrayBuffer[String]()
-  /** name -> preformatted JSON: {"reps":n,"calib":x[,"residency":r]} */
+  private val results = mutable.LinkedHashMap[String, Double]()
+  /** (point or section name, exception class) of everything that threw. */
+  private val failed = mutable.ArrayBuffer[(String, String)]()
+  /** name -> {reps, cpu_run, residency, recall stamps} */
   private val provenance =
-    scala.collection.mutable.LinkedHashMap[String, String]()
+    mutable.LinkedHashMap[String, mutable.LinkedHashMap[String, Double]]()
   private var sfDirG: String = ""
-  private var repsG: Int = 3
-  private val emitted = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Record provenance (r11, verdict item 7): WHO wrote this record and
-    * a unique run id, so the builder's and the driver's BENCH_FULL can
-    * never be confused mid-round. The driver runs Bench with no env →
-    * "driver"; builder-side runs set SPARK_GRAFT_WRITER=builder and
-    * SPARK_GRAFT_BENCH_OUT=BENCH_BUILDER.json so they never overwrite a
-    * driver-written BENCH_FULL.json. */
-  private val writerG: String =
-    sys.env.getOrElse("SPARK_GRAFT_WRITER", "driver")
   private val runIdG: String =
     java.lang.Long.toHexString(System.currentTimeMillis()) + "-" +
       java.lang.Integer.toHexString(
         new java.util.Random().nextInt(Int.MaxValue))
-  private val outPathG: String =
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-  /** Fixed-path sidecar for the compact contract line (r12 item 4):
-    * the driver wrapper's stdout-tail parse has failed three rounds
-    * running, so the contract is ALSO maintained as a file, rewritten
-    * atomically after every recorded point. A builder-side run writes
-    * next to its own BENCH_BUILDER.json, never over the driver's. */
-  private val contractPathG: String =
-    sys.env.getOrElse("SPARK_GRAFT_CONTRACT_OUT",
-      if (writerG == "driver") "BENCH_CONTRACT.json"
-      else "BENCH_CONTRACT_BUILDER.json")
+  private val fullPathG: String = s"BENCH_FULL.$runIdG.json"
 
-  /** Last recorded healthy complete run (r12 refresh: the calib-0.95
-    * complete record with skipped: [], cross-checked against the r12
-    * second run and r10/r11 where this box's CPU-steal waves made one
-    * sample untrustworthy — single-rep CPU-bound points here swing
-    * 2-3x between waves, so each anchor is the min of recent healthy
-    * observations, not any one run) — the denominator for the
-    * estimator's slowdown calibration. Only points
-    * ≥ 1 s feed ratios (below that, job-floor noise dominates); points
-    * with >3× healthy-day variance between CPU- and IO-bound regimes
-    * (load_docs) are left out rather than feeding a junk ratio.
-    * Values are seconds. */
-  private val expectedS: Map[String, Double] = Map(
-    "svs_io_probe_write" -> 3.3,
-    "svs_io_probe_read" -> 5.2,
-    "svs_build_1m" -> 60.0,
-    "svs_cold_1m" -> 6.0,
-    // the 2k ordering legs are NOT 1/5 of the 10k costs: the plain and
-    // indexed legs shuffle the 6.3 GB packed corpus per call regardless
-    // of probe count (the blocked kernel's pair flops are the cheap
-    // part), so they sit near their 10k twins; only the code-shuffling
-    // pq legs scale with the probe side
-    "svs_knn_join_1m" -> 24.0,
-    "svs_knn2k_plain_1m" -> 10.0,
-    "svs_knn2k_indexed_1m" -> 5.0,
-    "svs_knn2k_pq_1m" -> 5.0,
-    "svs_knn2k_pq_bucketed_1m" -> 8.0,
-    "svs_pairs_1m" -> 23.0,
-    "svs_neardup_1m" -> 23.0,
-    "svs_ivf_build_1m" -> 7.0,
-    "svs_pq_encode_1m" -> 24.0,
-    "svs_zorder_write_6m" -> 5.0,
-    "svs_bpe_train_1k" -> 18.0,
-    "svs_image_neardup_100k" -> 21.0,
-    "svs_curation_2m" -> 25.0,
-    // r12 additions (first complete record, calib 0.95): the stream
-    // trio. stream_ingest healthy dropped from r11's 70.9 to 46.8 on
-    // the same ingest code — split the difference so one lucky sample
-    // can't deflate calib on a normal day.
-    "svs_stream_ingest" -> 60.0,
-    "svs_stream_ingest_fast" -> 31.0,
-    "svs_stream_dedup" -> 16.0)
-  // (svs_stream_semdedup is new in r13 — no healthy anchor yet, so it
-  // deliberately stays out of expectedS until a complete record
-  // establishes one)
-
-  /** Last recorded healthy-run PART-1 values ≥ 1 s (same provenance as
-    * [[expectedS]]: the r11 builder-side complete run, calib ~1.0) —
-    * the denominator for the DEVIATION-ORDERED median-upgrade pass.
-    * A part-1 point published at >2× its healthy value was measured
-    * inside a contention wave (r11: x19_bpe_encode at 21.06 s vs 6.4 s
-    * healthy, cpu_run 0.16) and is exactly the number a repped re-run
-    * fixes — it must not wait behind an alphabet of already-clean
-    * sub-second queries for the leftover budget. NOT fed into calib
-    * (part-1 single-shots are too noisy for the estimator; expectedS
-    * stays the curated list). */
-  private val healthyPart1: Map[String, Double] = Map(
-    "a1_counts" -> 1.01, "b1_bm25_topk" -> 2.53,
-    "b1u_bm25_unicode" -> 2.41, "b2_tfidf_keywords" -> 2.02,
-    "b3_hybrid_rrf" -> 2.49, "c1_clusters" -> 3.04,
-    "d10_line_dedup" -> 1.84, "d13_substring_dedup" -> 2.71,
-    "d14_semantic_contamination" -> 1.06, "d15_semdedup" -> 3.75,
-    "d18_incremental_dedup" -> 4.1, // r12 first record (calib 1.4)
-    "d16_temperature_mixture" -> 1.23, "d17_keep_best" -> 1.49,
-    "d2_minhash_lsh" -> 3.41, "d3b_simhash_banded" -> 2.68,
-    "d4_ngram_jaccard" -> 5.7, "d5_embedding_neardup" -> 1.11,
-    "d6_semantic_dedup" -> 4.13, "d9_contamination" -> 5.35,
-    "e7_mad_outliers" -> 1.05, "e8_funnel" -> 1.09,
-    "g2_dfs_preorder" -> 2.11, "g3_pagerank" -> 6.12,
-    "g4_triangles" -> 4.08, "k3_knn_join_ivfpq" -> 1.5,
-    "n3_ivf_kmeans" -> 1.48, "q21_waiting_supplier" -> 1.26,
-    "q2_min_cost_supplier" -> 1.66, "q8_market_share" -> 1.22,
-    "x12_curation" -> 1.27, "x14_ngram_ppl" -> 2.74,
-    "x15_bpe_merges" -> 6.18, "x16_source_stats" -> 1.29,
-    "x19_bpe_encode" -> 6.35, "x20_oov_stats" -> 1.37,
-    "x21_dsir_weights" -> 2.78, "x22_classifier" -> 6.33,
-    "x26_cms_registers" -> 1.07, "x27_source_overlap" -> 1.9,
-    "x31_ppl_buckets" -> 2.8, "x33_kn_ppl" -> 3.43,
-    "x5_dup_ngram_fraction" -> 2.02)
-
-  /** measured/expected ratios of completed points (expected ≥ 1 s),
-    * tagged by point name so a RE-probe can retract the original
-    * probe's ratios (see [[ioProbe]]'s `replace`). */
-  private val namedRatios =
-    scala.collection.mutable.ArrayBuffer[(String, Double)]()
-  private def ratios: Seq[Double] = namedRatios.map(_._2).toSeq
-
-  /** Observed environment slowdown vs the recorded healthy run: median
-    * of per-point ratios, clamped to [0.5, 5]. 1.0 until the first
-    * calibrated point (the IO probe, by construction the first thing
-    * the run does). */
-  private def calib: Double = lock.synchronized { calibUnlocked }
-
-  private def addSkip(name: String): Unit =
-    lock.synchronized { skipped += name }
-
-  private def setProv(name: String, reps: Int,
+  private def publish(name: String, v: Double, reps: Int,
       residency: Option[Double] = None,
-      cpuRun: Option[Double] = None): Unit = lock.synchronized {
-    val extra = residency.map(r => s""","residency":${f"$r%.3f"}""")
-      .getOrElse("") +
-      cpuRun.map(c => s""","cpu_run":${f"$c%.2f"}""").getOrElse("")
-    provenance(name) =
-      s"""{"reps":$reps,"calib":${f"$calibUnlocked%.2f"}$extra}"""
+      cpuRun: Option[Double] = None): Unit = {
+    results(name) = v
+    provenance(name) = mutable.LinkedHashMap[String, Double]("reps" -> reps) ++
+      residency.map("residency" -> _) ++ cpuRun.map("cpu_run" -> _)
+    writeFull()
+  }
+
+  private def fail(name: String, e: Throwable): Unit = {
+    Console.err.println(s"[bench] $name failed: $e")
+    failed += (name -> e.getClass.getName)
+    writeFull()
   }
 
   /** Stamp a measured recall@k into an already-recorded point's
-    * provenance (r11 verdict item 5): the approximate 1M tier legs
-    * publish speed — this pins the accuracy bought at that speed, in
-    * the same record, measured against the exact top-k on the same
-    * corpus/queries (not the small-scale spec gate). No-op if the
-    * point was never recorded. */
+    * provenance: the approximate 1M tier legs publish speed, and this
+    * pins the accuracy bought at that speed, measured against the exact
+    * top-k on the same corpus and queries. No-op if the point was never
+    * recorded. */
   private def setRecall(name: String, recall: Double): Unit =
     setRecallKey(name, "recall_at_10", recall)
 
   /** Like [[setRecall]] but with a caller-chosen key, so a point can
-    * carry recall stamps for more than one corpus (r12 verdict item 3:
-    * the isotropic worst-case number needs its planted-structure
-    * counterpart in the same record). Idempotent per key: a re-stamp
-    * (e.g. a retry path) replaces the prior value instead of emitting
-    * a duplicate JSON key. */
+    * carry stamps for more than one corpus. */
   private def setRecallKey(name: String, key: String, recall: Double): Unit =
-    lock.synchronized {
-      provenance.get(name).foreach { p =>
-        val stripped = p.dropRight(1)
-          .replaceAll(s""","$key":[-0-9.eE]+""", "")
-        provenance(name) =
-          stripped + s""","$key":${f"$recall%.3f"}}"""
-      }
-      if (provenance.contains(name)) writeFullLocked()
-    }
-
-  private def feedRatio(name: String, measured: Double): Unit =
-    expectedS.get(name).filter(_ >= 1.0).foreach { e =>
-      lock.synchronized { namedRatios += ((name, measured / e)) }
-    }
-
-  /** Replace-to-min ratio feed for repped points (ADVICE r10): feeding
-    * from the FIRST rep bakes residual JIT into the calibration — a
-    * JIT-inflated ratio raises calib and can gate out later sections on
-    * a healthy run. Each rep re-feeds the leg's running min instead. */
-  private def feedRatioMin(name: String, runningMin: Double): Unit =
-    expectedS.get(name).filter(_ >= 1.0).foreach { e =>
-      lock.synchronized {
-        namedRatios.filterInPlace(_._1 != name)
-        namedRatios += ((name, runningMin / e))
-      }
-    }
+    provenance.get(name).foreach { p => p(key) = recall; writeFull() }
 
   /** Median of (seconds, cpu_run) rep pairs: the published value is the
     * median rep's time and THAT rep's cpu ratio (even count: mean of
     * the two middle reps, cpu averaged only when both are present).
-    * Shared by [[record]] and the fresh-dir write-rep loops so the
+    * Shared by [[record]] and the fresh-dir write-rep loop so the
     * publication policy can't drift between them. */
-  private def medianRep(
+  private[graft] def medianRep(
       ts: Seq[(Double, Option[Double])]): (Double, Option[Double]) = {
     val s = ts.sortBy(_._1)
     if (s.size % 2 == 1) s(s.size / 2)
@@ -344,89 +137,22 @@ object Bench {
     }
   }
 
-  /** Thrown when the remaining budget only covers emission — unwinds
-    * to the enclosing section boundary (independent later sections
-    * still get their chance; their gates re-check the budget). */
-  private final class BudgetUp extends RuntimeException("bench budget exhausted")
-
-  /** Single-point spend cap (r13 postmortem, verdict item 1): a BIG
-    * point whose calibrated estimate exceeds half the remaining
-    * headroom is skipped on a degraded day instead of eating what is
-    * left of the run (r13: the official record spent 355.9 s on
-    * svs_build_1m and recorded 9 of 157 points). Estimates under 60 s
-    * calibrated are never cap-skipped, so a healthy run — where every
-    * estimate ≤ 75 s meets ≥ 300 s of headroom — behaves exactly as
-    * before; only the expensive spine legs of a high-calib day are
-    * sacrificed, which is the priority order the r13 verdict asked
-    * for (the cheap sweep is the information-dense half). */
-  private def overCap(estS: Double, avail: Double): Boolean = {
-    val est = estS * calib
-    est > 60.0 && est > 0.5 * (avail - ReserveS)
-  }
-
-  /** Gate an UNTIMED setup block: if the remaining budget (minus any
-    * active ladder-spine reservation, unless this block IS spine) can't
-    * cover `estS` (calibration-scaled) plus the emission reserve — or
-    * the block alone would eat most of what remains ([[overCap]]) —
-    * stop measuring this section. */
-  private def setup(estS: Double, spine: Boolean = false): Unit = {
-    val avail = if (spine) remainS else remainS - reservedS
-    if (avail < estS * calib + ReserveS || overCap(estS, avail))
-      throw new BudgetUp
-  }
-
-  /** Time one point, budget-aware and adaptively repped (see class doc).
-    * `estS` is a conservative single-rep estimate — taken from the last
-    * healthy run where one exists — scaled by the observed slowdown
-    * [[calib]] for the skip decision; `reps=1` pins single-shot points
-    * (cold reads, loads — re-running those measures the page cache,
-    * not the operator). `spine = true` exempts the point from the
-    * ladder reservation (it IS what the reservation protects).
-    */
-  private def record(name: String, estS: Double = 10.0, reps: Int = 3,
-      longRepS: Double = 20.0,
-      residency: Option[Double] = None,
-      spine: Boolean = false)(body: => Any): Unit = {
-    if (remainS < ReserveS) { addSkip(name); throw new BudgetUp }
-    val avail = if (spine) remainS else remainS - reservedS
-    if (avail < estS * calib + ReserveS || overCap(estS, avail)) {
-      addSkip(name); return
-    }
-    val cpu0 = cpuSnap()
-    val first = timed(body)
-    val firstCpu = cpuRunRatio(cpu0)
-    feedRatio(name, first)
-    val more = reps > 1 && first < longRepS &&
-      remainS - ReserveS - (if (spine) 0.0 else reservedS) >
-        first * (reps - 1)
-    // cpu_run is stamped PER REP and the published ratio is the median
-    // rep's (the rep whose time the record carries) — accumulating from
-    // before rep 1 across all reps would bake a JIT-heavy or contended
-    // first rep into the provenance of a median-published point
-    // (ADVICE r11; timeLeg already stamps the min rep's ratio)
-    val (v, usedReps, pubCpu) =
-      if (more) {
-        val rest = (2 to reps).map { _ =>
-          val c0 = cpuSnap()
-          val t = timed(body)
-          (t, cpuRunRatio(c0))
-        }
-        val ts = (first, firstCpu) +: rest
-        val (m, mc) = medianRep(ts)
-        (m, ts.size, mc)
-      } else (first, 1, firstCpu)
-    setProv(name, usedReps, residency, pubCpu)
-    lock.synchronized { results(name) = v; writeFullLocked() }
-  }
-
-  /** Record an externally-timed value (the interleaved ladder times its
-    * own reps round-robin). */
-  private def recordValue(name: String, v: Double, reps: Int,
-      residency: Option[Double] = None,
-      cpuRun: Option[Double] = None): Unit = {
-    setProv(name, reps, residency, cpuRun)
-    lock.synchronized { results(name) = v; writeFullLocked() }
-  }
+  /** Time exactly `reps` runs of `body` and publish their median
+    * ([[medianRep]]), each rep's `cpu_run` taken over that rep alone.
+    * Cold reads pass `reps = 1` (a rerun measures the page cache, not
+    * the operator), and so do points too slow to repeat. A rep that
+    * throws lists the point in `failed` and publishes no time. */
+  private def record(name: String, reps: Int = 3,
+      residency: Option[Double] = None)(body: => Any): Unit =
+    try {
+      val ts = (1 to reps).map { _ =>
+        val c0 = cpuSnap()
+        val t = timed(body)
+        (t, cpuRunRatio(c0))
+      }
+      val (v, cpu) = medianRep(ts)
+      publish(name, v, reps, residency, cpu)
+    } catch { case NonFatal(e) => fail(name, e) }
 
   /** Fraction of all storage-pool bytes currently in MEMORY (vs spilled
     * to disk) across every cached RDD — 1.0 when nothing is cached.
@@ -440,19 +166,36 @@ object Bench {
     if (mem + disk <= 0) 1.0 else mem / (mem + disk)
   }
 
+  /** Drop every cached Dataset and persisted RDD. Operators cache and
+    * checkpoint internally (shingle sets, CC labels, index blocks), so
+    * this runs between part-1 queries and after every section —
+    * including one that threw with its working set still persisted. */
+  private def clearState(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  }
+
+  /** Evaluate via a noop sink, not count(): under count() Catalyst
+    * prunes every projected column, so scan-shaped queries would time
+    * an empty projection instead of the operator. */
+  private def evalAll(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
+    val named = args.toSet
+    val unknown = named -- Sections -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown section or part-1 query: " +
+      s"${unknown.mkString(" ")} (sections: ${Sections.mkString(" ")})")
+    def wanted(section: String): Boolean = named.isEmpty || named(section)
+    val part1 = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (q, _) => wanted("part1") || named(q) }
+
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sfDirG = sfDir
-    budgetS = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_S")
-      .flatMap(s => scala.util.Try(s.toDouble).toOption)
-      .getOrElse(1380.0)
     // bucketed-table points write through the catalog; keep the
     // warehouse off the repo tree
     val spark = Tables.session("spark.sql.warehouse.dir" ->
       sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE", "/tmp/graft-warehouse"))
-
-    // per-task CPU/run accumulation for the contention detector (the
-    // `cpu_run` provenance field — see [[cpuRunRatio]])
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onTaskEnd(
@@ -465,184 +208,54 @@ object Bench {
         }
       })
 
-    // SIGTERM safety net: timeout(1) sends TERM, shutdown hooks run —
-    // emit the contract lines from whatever has been measured so far
-    Runtime.getRuntime.addShutdownHook(new Thread(() => emitAll()))
-
-    repsG = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
-    // (optional args = run only the named part-1 queries — dev knob)
-    val only = args.toSet
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => only.isEmpty || only(q._1))
-
-    // ---- part 0: IO calibration probe (always first) ----
-    try ioProbe(spark)
-    catch { case _: BudgetUp => addSkip("(budget too small for io probe)") }
-
-    val runSvs = sys.env.getOrElse("SPARK_GRAFT_SVS", "1") != "0"
-
-    // ---- cheap reference-protocol points ----
-    if (runSvs) {
-      try svsCheap(spark)
-      catch { case _: BudgetUp =>
-        addSkip(s"(budget reached at ${f"$elapsedS%.0f"}s — later cheap-protocol points not run)")
+    Sections.foreach { section =>
+      if (if (section == "part1") part1.nonEmpty else wanted(section)) {
+        try section match {
+          case "io" => ioProbe(spark)
+          case "cheap" => svsCheap(spark)
+          case "part1" => part1Sweep(spark, part1)
+          case "1m" => svs1m(spark)
+          case "clustered" => clusteredRecallPoint(spark)
+          case "stream" => streamIngestPoint(spark)
+          case "curation" => curationScalePoints(spark)
+          case "zorder" => zorderPoints(spark)
+          case "bpe" => bpePoint(spark)
+          case "image" => imageNearDupPoint(spark)
+        } catch { case NonFatal(e) => fail(section, e) }
+        clearState(spark)
       }
     }
 
-    // operators cache/checkpoint internally (shingle sets, CC labels,
-    // index blocks); drop it all between queries so timings measure the
-    // operator, not accumulated GC pressure
-    def clearState(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    }
-    clearState()
-
-    // evaluate via a noop sink, not count(): under count() Catalyst prunes
-    // every projected column, so scan-shaped queries would time an empty
-    // projection instead of the operator
-    def evalAll(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // ---- ladder-spine reservation (r11, verdict item 1) ----
-    // from here until ladder cycle 2 completes, non-spine points see a
-    // budget reduced by the spine's calibrated estimate (1M protocol
-    // minimum slice ~135 s + PQ/assignment prep ~110 s + two 2k ladder
-    // cycles ~60 s, healthy), stepped down at each spine milestone —
-    // so the part-1 sweep on a calib-3 day stops early instead of
-    // starving the certification the round is graded on.
-    //
-    // r14 (r13 verdict item 1): ONLY on a healthy-ish day. At calib 5
-    // the reservation (1525 s) exceeded the whole 1380 s budget and
-    // gated out all 147 part-1 points, while the raw-remainder-gated
-    // spine still spent 476 s on svs_build_1m/svs_cold_1m — the
-    // official record carried 9 of 157 points. Past calib 1.5 the
-    // priority INVERTS: no reservation (the cheap, information-dense
-    // part-1 sweep runs first on whatever the day allows), svsHeavy
-    // runs its corpus-independent design sections before the 1M spine
-    // (see [[svsHeavy]]), and the expensive spine legs — each also
-    // subject to the [[overCap]] single-point spend cap — are the
-    // ones sacrificed.
-    sweepFirstG = calib > 1.5
-    if (runSvs && !sweepFirstG) reservedS = 305.0 * calib
-
-    // ---- the operator inventory at sfDir, SINGLE-REP, EARLY ----
-    // warmup at the smallest SF: pays JIT + codegen for the query shapes
-    // the protocol didn't touch (SPARK_GRAFT_WARMUP=0 disables). Capped
-    // at 8% of the budget AND skipped entirely when the remaining
-    // budget is tight — warm timings beat cold-JIT timings, but
-    // recording the sweep at all beats warm timings (and on a
-    // contended day every warmup second comes out of the 1M section's
-    // slot).
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0") {
-      val warm0 = elapsedS
-      selected.iterator
-        .takeWhile(_ => elapsedS - warm0 < budgetS * 0.08 &&
-          remainS - reservedS > 60)
-        .foreach { case (_, fn) =>
-          try { evalAll(fn(spark, "/root/testdata/sf0.001")) }
-          catch { case _: Throwable => () }
-          clearState()
-        }
-    }
-    try {
-      selected.foreach { case (name, fn) =>
-        record(name, estS = 3.0, reps = 1) {
-          try { evalAll(fn(spark, sfDir)) } catch { case _: Throwable => () }
-          clearState()
-        }
-      }
-    } catch { case _: BudgetUp =>
-      addSkip(s"(budget reached at ${f"$elapsedS%.0f"}s — later part-1 queries not run)")
-    }
-    clearState()
-
-    // ---- the 1M protocol, the interleaved ladder, tiers, sweeps ----
-    if (runSvs) {
-      try svsHeavy(spark)
-      catch { case _: BudgetUp =>
-        addSkip(s"(budget reached at ${f"$elapsedS%.0f"}s — later part-2 points not run)")
-      } finally reservedS = 0.0
-      clearState()
-    }
-
-    // ---- part-1 median upgrade, if budget remains ----
-    // single-rep numbers for sub-3s queries carry 2-3× VM/GC noise; a
-    // median-of-reps is what the baseline rows are. DEVIATION-ORDERED
-    // (r11 verdict item 2): candidates re-run in descending
-    // |measured/healthy| so a contention-poisoned outlier (x19's
-    // 21.06 s at cpu_run 0.16 in r11's record, 3.3× its healthy 6.4 s)
-    // gets the leftover budget FIRST — r11 spent the upgrade budget
-    // alphabetically and ran out before reaching it. Points >3 s with
-    // no healthy record stay as-recorded (nothing to call them an
-    // outlier against); each upgrade replaces value + provenance.
-    try {
-      if (repsG > 1) {
-        val snap = lock.synchronized { results.toMap }
-        val byName = selected.toMap
-        val candidates = selected.flatMap { case (name, _) =>
-          snap.get(name).map { prev =>
-            (name, prev, healthyPart1.get(name).map(prev / _))
-          }
-        }.filter { case (_, prev, dev) =>
-          // ≥3 s points re-run on a 1.25× deviation, not only the 2×
-          // blow-ups (r12 item 7: g4/d2/g3 published 1.2-1.4× their
-          // healthy anchors and the 2× bar let the drift stand
-          // unconfirmed for a round); still deviation-ORDERED, still
-          // budget-gated per candidate, so a healthy run spends ~0 here
-          prev < 3.0 || dev.exists(_ > 1.25)
-        }.sortBy { case (_, _, dev) => -dev.getOrElse(1.0) }
-        candidates.foreach { case (name, prev, dev) =>
-          val isOutlier = dev.exists(_ > 1.25)
-          // an outlier re-run is budgeted at its HEALTHY cost (the
-          // point of re-running is that the weather passed); a rep that
-          // is still slow simply won't multiply under record()'s 20s
-          // rule and the honest median/single replaces the old value
-          val est = if (isOutlier) healthyPart1(name) else prev
-          if (remainS > est * (repsG + 1) * calib + ReserveS + 30) {
-            record(name, estS = math.max(est * repsG, 1.0),
-              reps = repsG,
-              longRepS = if (isOutlier) math.max(3.0, est * 2.5) else 3.0) {
-              try { evalAll(byName(name)(spark, sfDir)) }
-              catch { case _: Throwable => () }
-              clearState()
-            }
-          }
-        }
-      }
-    } catch { case _: BudgetUp =>
-      addSkip(s"(budget reached at ${f"$elapsedS%.0f"}s — median upgrade stopped)")
-    }
-
-    emitAll()
+    println(contractLine(runFields, results.toSeq, failed.toSeq))
+    Console.out.flush()
     spark.stop()
+  }
+
+  /** The part-1 inventory: one untimed pass over the sf0.001 tables
+    * beside the measured ones pays JIT and codegen for every query
+    * shape, then each query is timed over 3 reps at the measured scale.
+    * A query that fails its warmup is timed anyway; its timed reps are
+    * what list it in `failed`. */
+  private def part1Sweep(spark: SparkSession,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)]): Unit = {
+    val warmDir = Paths.get(sfDirG).resolveSibling("sf0.001").toString
+    queries.foreach { case (_, fn) =>
+      try evalAll(fn(spark, warmDir)) catch { case NonFatal(_) => () }
+      clearState(spark)
+    }
+    queries.foreach { case (name, fn) =>
+      record(name) { evalAll(fn(spark, sfDirG)); clearState(spark) }
+    }
   }
 
   /** Fixed-size raw IO probe: ~1 GB uncompressed parquet written from a
     * cached source, then read back from whatever the page cache holds
-    * of it. Its
-    * ratio vs [[expectedS]] seeds [[calib]], and the recorded numbers
-    * let any two runs' disk-bound deltas be attributed to environment
-    * vs code (r7: 299 s vs 61 s for the same build, same tree).
-    *
-    * `replace = true` re-probes mid-run and RETRACTS the original
-    * probe's ratios first: a single transient stall at t=0 (r10: a
-    * 38.6 s write probe on a run whose next 20 min were healthy)
-    * otherwise poisons the calibration median for the entire run —
-    * the inflated calib gates out every section that could have fed a
-    * correcting ratio, so calib can never recover. The re-probed
-    * values overwrite the recorded points with reps=2 provenance; on
-    * a genuinely contended day the re-probe just confirms the first
-    * reading and costs one probe pair.
-    */
-  private def ioProbe(spark: SparkSession, replace: Boolean = false,
-      spine: Boolean = false): Unit = {
-    setup(20.0, spine = spine)
-    if (replace) lock.synchronized {
-      namedRatios.filterInPlace(!_._1.startsWith("svs_io_probe"))
-    }
+    * of it. The pair lets any two runs' deltas on disk-bound points be
+    * attributed to environment vs code (one tree once measured its 1M
+    * build at 299 s and 61 s on two runs, from IO contention alone). */
+  private def ioProbe(spark: SparkSession): Unit = {
     val dir = "/tmp/graft_bench_ioprobe"
-    KbStoreCleanup.delete(dir)
+    deleteRecursively(Paths.get(dir))
     // 2M rows × 512-char payload ≈ 1.0 GB; md5-hex is incompressible
     // enough that "uncompressed" is the honest size. Cached + counted
     // first so the timed write measures IO, not payload generation.
@@ -651,21 +264,20 @@ object Bench {
         md5(concat(col("id"), lit(i)))): _*).as("payload"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     df.count()
-    record("svs_io_probe_write", estS = 5.0, reps = 1, spine = spine) {
+    record("svs_io_probe_write", reps = 1) {
       df.repartition(32).write.mode("overwrite")
         .option("compression", "none").parquet(dir)
     }
     df.unpersist()
-    record("svs_io_probe_read", estS = 5.0, reps = 1, spine = spine) {
+    record("svs_io_probe_read", reps = 1) {
       spark.read.parquet(dir)
         .agg(count(lit(1)), sum(length(col("payload")))).collect()
     }
-    KbStoreCleanup.delete(dir)
+    deleteRecursively(Paths.get(dir))
   }
 
   /** The cheap reference-protocol points: retrieval-shape JIT warmup,
-    * the 10k protocol, and the text-only load-docs pair. ~35 s healthy
-    * — they run before the part-1 sweep because they are the
+    * the 10k protocol, and the text-only load-docs pair — the
     * BASELINE.md headline rows at small scale.
     */
   private def svsCheap(spark: SparkSession): Unit = {
@@ -673,16 +285,14 @@ object Bench {
     // cold/build points should measure IO, not first-call codegen
     // (measured: an unwarmed cold_10k times ~0.6 s of which ~0.4 s is
     // codegen/classloading, not the read)
-    setup(15.0)
     val wpath = "/tmp/graft_bench_warm1k"
-    KbStoreCleanup.delete(wpath)
+    deleteRecursively(Paths.get(wpath))
     syntheticEmbeddings(spark, 1000).write.mode("overwrite")
       .option("compression", "none").parquet(wpath)
     retrieveJob(spark.read.parquet(wpath), 1L)
     retrieveJob(spark.read.parquet(wpath), 2L)
-    KbStoreCleanup.delete(wpath)
+    deleteRecursively(Paths.get(wpath))
 
-    setup(15.0)
     svsProtocol(spark, n = 10548, tag = "10k")
 
     // text-only bulk load — the phase the reference's 0.07s @ 10k and
@@ -692,263 +302,77 @@ object Bench {
     // untimed warmup: the very first string-column parquet write pays
     // ~1.2s of one-time classload/JIT; the reference's 0.07s SQLite
     // number is steady-state, so ours should be too
-    setup(30.0)
+    val warmDocs = "/tmp/graft_bench_docs_warm"
     syntheticDocs(spark, 10000).coalesce(1).write.mode("overwrite")
-      .parquet("/tmp/graft_bench_docs_warm")
-    KbStoreCleanup.delete("/tmp/graft_bench_docs_warm")
+      .parquet(warmDocs)
+    deleteRecursively(Paths.get(warmDocs))
     Seq(10548L -> "10k", 1000000L -> "1m").foreach { case (n, tag) =>
-      setup(5.0)
       val docsDf = syntheticDocs(spark, n)
         .persist(StorageLevel.MEMORY_AND_DISK)
       docsDf.count() // generation excluded, like the reference's
       val parts = math.max(1, (n / 100000L).toInt)
-      // median-of-3 to FRESH output dirs (r11 verdict item 1): unlike
-      // cold READS — where a rerun measures the page cache, hence the
-      // single-shot policy — a WRITE reps when every rep writes a new
+      // median of 3 writes, each to a FRESH output dir: unlike cold
+      // READS — where a rerun measures the page cache, hence their
+      // single shot — a write reps when every rep writes a new
       // directory; each rep still shares the page cache (and any dirty
-      // writeback) the earlier reps left. r11's
-      // official 16.96 s was a single rep caught in an IO-contention
-      // wave (same tree measured 1.16 s builder-side); the median is
-      // what the protocol's other headline points already publish.
-      val reps = scala.collection.mutable.ArrayBuffer[(Double, Option[Double])]()
-      var rep = 0
-      while (rep < 3 && (rep == 0 ||
-          remainS - ReserveS > reps.map(_._1).max * (3 - rep) + 10)) {
-        val dir = s"/tmp/graft_bench_docs_${tag}_r$rep"
-        KbStoreCleanup.delete(dir)
+      // writeback) the earlier reps left
+      val reps = (0 until 3).map { rep =>
+        val dir = Paths.get(s"/tmp/graft_bench_docs_${tag}_r$rep")
+        deleteRecursively(dir)
         val c0 = cpuSnap()
         val t = timed {
-          docsDf.coalesce(parts).write.mode("overwrite").parquet(dir)
+          docsDf.coalesce(parts).write.mode("overwrite").parquet(dir.toString)
         }
-        reps += ((t, cpuRunRatio(c0)))
-        KbStoreCleanup.delete(dir)
-        rep += 1
+        val cpu = cpuRunRatio(c0)
+        deleteRecursively(dir)
+        (t, cpu)
       }
-      val (v, pubCpu) = medianRep(reps.toSeq)
-      recordValue(s"svs_load_docs_$tag", v, reps.size, cpuRun = pubCpu)
-      // gate-miss accounting for the 10k point (r12 verdict item 6):
-      // its 2-3× vs the reference's 0.07 s is the JVM job-dispatch +
-      // output-committer floor, not the write — the SAME path at 1M is
-      // ~14× FASTER than baseline. Measure that floor in the same
-      // weather (median of 3 one-row single-task parquet writes,
-      // committer renames included, page cache untouched — the floor
-      // is dispatch, not IO) and stamp it in the point's provenance so
-      // the irreducible share of the published value is in-record.
+      val (v, pubCpu) = medianRep(reps)
+      publish(s"svs_load_docs_$tag", v, reps.size, cpuRun = pubCpu)
+      // the 10k point's gap to the reference's 0.07 s is the JVM
+      // job-dispatch + output-committer floor, not the write — the SAME
+      // path at 1M is ~14× FASTER than baseline. Measure that floor in
+      // the same weather (median of 3 one-row single-task parquet
+      // writes, committer renames included) and stamp it in the point's
+      // provenance. Run-id-scoped paths, so two concurrent benches never
+      // race each other's floor dirs; non-fatal like the recall stamps.
       if (tag == "10k") try {
-        // run-id-scoped path (a concurrent builder + driver bench pair
-        // must not race each other's floor dirs), and non-fatal like
-        // the recall stamps — an optional provenance stamp must never
-        // kill the certification run
         val floors = (0 until 3).map { i =>
-          val d = s"/tmp/graft_bench_docs_floor_${runIdG}_$i"
-          KbStoreCleanup.delete(d)
+          val d = Paths.get(s"/tmp/graft_bench_docs_floor_${runIdG}_$i")
+          deleteRecursively(d)
           val t = timed {
-            spark.range(0, 1, 1, 1).write.mode("overwrite").parquet(d)
+            spark.range(0, 1, 1, 1).write.mode("overwrite").parquet(d.toString)
           }
-          KbStoreCleanup.delete(d)
+          deleteRecursively(d)
           t
         }.sorted
         setRecallKey(s"svs_load_docs_$tag", "dispatch_floor_s", floors(1))
       } catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           Console.err.println(s"[bench] floor stamp failed (non-fatal): $e")
       }
       docsDf.unpersist()
     }
   }
 
-  /** Everything that needs the 1M corpus, plus the remaining design
-    * points, in PRIORITY order: 1M protocol → interleaved knn ladder →
-    * compressed-tier encode/probe points → curation-composition
-    * scaling pair → z-order trio → BPE → image near-dup → the most
-    * expensive non-headline sweeps (pairs/neardup) LAST. Sections are
-    * independently BudgetUp-gated where they have no data dependency.
+  /** Everything that needs the 1M corpus: the 1M protocol → the
+    * interleaved knn ladder → the 10k-probe knn join → compressed-tier
+    * encode/probe points → IVF build/probe → MaxSim → the pairs and
+    * near-dup sweeps.
     */
-  private def svsHeavy(spark: SparkSession): Unit = {
-    // a pathological calib entering the round's most expensive section
-    // is re-checked before it can gate anything: if the opening probe
-    // hit a transient stall, this is where the poisoned median would
-    // cost the most (r10: one 38.6 s write probe at t=0 pinned calib
-    // at the 5.0 clamp and would have skipped the entire 1M protocol
-    // on an otherwise healthy run)
-    if (calib > 2.0) {
-      // spine = true: the re-probe is what lets an unlucky t=0 stall
-      // un-poison the whole run's gating — the reservation must never
-      // gate IT out (attempt r11-a1 nearly did)
-      try ioProbe(spark, replace = true, spine = true)
-      catch { case _: BudgetUp => }
-    }
-    // ---- corpus-INDEPENDENT design sections, hoisted into a local
-    // def (r14, r13 verdict item 1): each block below is
-    // individually budget-gated and try-caught. On a degraded day
-    // they run BEFORE the 1M spine, so a BudgetUp in the protocol —
-    // which unwinds this whole function — can no longer erase the
-    // round's design coverage (r13's official record lost all of it to
-    // exactly that unwind); on a healthy day they run exactly where
-    // they always did, after the compressed tiers, and the emitted
-    // order is unchanged.
-    //
-    // The flag is the OPENING decision (sweepFirstG), NOT a re-read of
-    // calib: the re-probe above can lower calib mid-run (this round's
-    // first record: opening 5.0 → re-probe 1.29), and re-deriving here
-    // deferred the sections past a spine that then ate the whole
-    // budget — the sections were neither run nor marked skipped. Once
-    // a run has started degraded (no ladder reservation, sweep already
-    // taken first), the inverted priority must persist: the budget
-    // arithmetic the reservation-free path planned with assumed the
-    // sections come before the spine.
-    val independentFirst = sweepFirstG
-    def independentSections(): Unit = {
-      // ---- design points: the round's FIRST-TIME coverage runs before
-      // the sections the r12 record already certifies — both rehearsal
-      // days this round lost the design TAIL to CPU-steal waves, and a
-      // new point that never lands is absent from the round entirely
-      // while a re-certified one just keeps its prior-record value ----
-
-      // planted-structure recall counterpart (r12 verdict item 3): new
-      // stamps this round. Its own corpus (6.3 GB) plus the still-cached
-      // raw corpus both fit the 64g heap's protected pool.
-      try clusteredRecallPoint(spark)
-      catch { case _: BudgetUp =>
-        addSkip("(clustered recall counterpart skipped on budget)") }
-
-      // streaming store ingest + the dedup screens — svs_stream_semdedup
-      // (r12 verdict item 2) is new this round and lives at this
-      // section's end, so the section as a whole moves up
-      try streamIngestPoint(spark)
-      catch { case _: BudgetUp => addSkip("(streaming ingest section skipped on budget)") }
-
-      // ---- remaining design points (corpus-independent), cheapest and
-      // least-often-certified first ----
-      // composed end-to-end curation at two scales (r10): the 100×
-      // design claims are per-operator; this point runs the x12
-      // composition (Gopher rules ∧ exact-dup representative ∧ quality
-      // above the corpus median — three keyed/narrow stages over one
-      // corpus) at 200k and at 2M docs, so the RECORD certifies the
-      // composition scales ~linearly (2m ≈ 10× 200k), not just its
-      // pieces. Synthetic ~1200-char docs — the sfDir documents table
-      // (5k rows) sits under the job floor at both scales. Runs first
-      // among the RE-CERTIFIED design points (the r13 first-time
-      // sections above take precedence; see the "ordering" note).
-      try curationScalePoints(spark)
-      catch { case _: BudgetUp => addSkip("(curation section skipped on budget)") }
-
-      // lakehouse layout + data skipping, measured on a 6M-row table
-      // with a ~256-byte payload (~1.5 GB raw) and a 1/8-range predicate
-      // on one of two z-interleaved dimensions, payload in the
-      // aggregate so scans are decode-bound like a real wide table.
-      // (r7 interlude: a 3M variant proved too SMALL to demonstrate
-      // anything — at 0.77 GB both layouts scan under the ~0.25 s job
-      // floor; at 6M the unordered scan is decode-bound and the layout
-      // delta is real.)
-      //  - svs_zscan_pruned_6m: z-ordered layout, plain scan — the
-      //    engine's own row-group stats prune because the LAYOUT made
-      //    ranges tight (and the same layout serves BOTH dims);
-      //  - svs_scan_unordered_6m: identical data, naive layout — every
-      //    row group straddles the predicate; the delta vs pruned is
-      //    the measured z-order win;
-      //  - svs_skip_scan_6m: the manifest file-skipping path (15/64
-      //    files read). At local-NVMe scale its timed cost ≈ pruned
-      //    plus a fixed ~0.2 s manifest lookup — the honest local
-      //    story; its real win (one manifest read replacing per-file
-      //    footer opens, 4× fewer tasks) is object-store metadata
-      //    latency, which this VM cannot exhibit. Result parity for
-      //    the composition is LayoutSpec-pinned.
-      try {
-        setup(60.0)
-        val zdir = "/tmp/graft_bench_zorder"
-        val udir = "/tmp/graft_bench_unordered"
-        KbStoreCleanup.delete(zdir); KbStoreCleanup.delete(udir)
-        val zdf = spark.range(6000000L).select(col("id"),
-          pmod(hash(col("id")), lit(1024)).cast("long").as("x"),
-          pmod(hash(col("id") + 7L), lit(1024)).cast("long").as("y"),
-          concat_ws("", (0 until 8).map(i =>
-            md5(concat(col("id"), lit(i)))): _*).as("payload"))
-        record("svs_zorder_write_6m", estS = 8.0, reps = 1) {
-          graft.ops.Layout.writeZordered(zdf, zdir,
-            graft.ops.Layout.zValue(10, col("x"), col("y")), numFiles = 64)
-        }
-        zdf.repartition(64).write.mode("overwrite").parquet(udir)
-        val zstats = graft.ops.Layout
-          .parquetFileStats(spark, zdir, Seq("x", "y"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        zstats.count()
-        def scanAgg(df: org.apache.spark.sql.DataFrame): Unit = {
-          df.agg(count(lit(1)), sum(length(col("payload")))).collect(); ()
-        }
-        // each rep reads whatever the page cache holds of the tables
-        // just written: cache-warm, a 1.5 GB table decodes under the
-        // job floor and both layouts can time alike, so the IO-bound
-        // comparison a cluster reading cold data sees shows only as far
-        // as the cache has evicted them
-        record("svs_skip_scan_6m", estS = 3.0) {
-          scanAgg(graft.ops.Layout.skippingScan(spark, zdir, zstats,
-            "x", 0, 127))
-        }
-        record("svs_zscan_pruned_6m", estS = 3.0) {
-          scanAgg(spark.read.parquet(zdir).where(col("x").between(0, 127)))
-        }
-        record("svs_scan_unordered_6m", estS = 3.0) {
-          scanAgg(spark.read.parquet(udir).where(col("x").between(0, 127)))
-        }
-        zstats.unpersist()
-        KbStoreCleanup.delete(zdir); KbStoreCleanup.delete(udir)
-      } catch { case _: BudgetUp => addSkip("(z-order section skipped on budget)") }
-
-      // batched BPE training at a production-ish merge count (r8): the
-      // jobs-per-merge fix, measured — the naive loop is 1000 jobs for
-      // 1000 merges; the batched passes run ~2 jobs per batch of
-      // disjoint merges (Bpe.bpeTrain scaladoc), exactly greedy-
-      // equivalent (BpeSpec + the x15/x19 oracles pin it)
-      try {
-        setup(5.0)
-        val bpeDocs = Tables.t(spark, sfDirG, "documents")
-        record("svs_bpe_train_1k", estS = 30.0, reps = 1) {
-          graft.ops.Bpe.bpeTrain(bpeDocs, numMerges = 1000).count()
-        }
-      } catch { case _: BudgetUp => addSkip("(bpe train section skipped on budget)") }
-
-      // real-codec image near-dup mining at 100k (r8): synthetic JPEG
-      // corpus through ImageIoDecoder → aHash → banded Hamming join —
-      // the measured throughput behind the r7 "real pixel decode" claim.
-      try imageNearDupPoint(spark)
-      catch { case _: BudgetUp => addSkip("(image neardup section skipped on budget)") }
-    }
-    if (independentFirst) independentSections()
-
+  private def svs1m(spark: SparkSession): Unit = {
     // ---- the 1M protocol (the BASELINE.md headline rows) ----
-    // the entry gate covers only the MINIMUM useful slice (staging ~40
-    // + build ~70 + cold ~25): every interior point re-checks the
-    // budget itself, so gating the whole section's cost here would
-    // skip the round's headline numbers on days they still fit (a
-    // calib-2.5 dry run did exactly that with a 350 s estimate)
-    setup(150.0, spine = true)
-    val kept1m = svsProtocol(spark, n = 1000000, tag = "1m", keep = true,
-      spine = true)
-    // spine milestone: protocol done — reservation shrinks to prep + cycles
-    reservedS = 170.0 * calib
-
-    setup(30.0, spine = true)
+    val kept1m = svsProtocol(spark, n = 1000000, tag = "1m", keep = true)
     val corpus1m = spark.read.parquet(kept1m)
-    var corpusCached = false
-    def ensureCorpus(): Unit = if (!corpusCached) {
-      corpus1m.persist(StorageLevel.MEMORY_AND_DISK)
-      corpus1m.count()
-      corpusCached = true
-    }
-    def dropCorpus(): Unit = if (corpusCached) {
-      corpus1m.unpersist(true); corpusCached = false
-    }
-    ensureCorpus()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    corpus1m.count()
     val cents2 = corpus1m.where(col("id") < 256)
       .select(col("id").as("cid"), col("vec").as("cvec"))
 
-    // the 2k ORDERING query set (r11): the ladder's claim — every
-    // amortized rung beats per-call assignment — is probe-count-
-    // invariant, and 2k-probe legs cost a fraction of the old 10k legs,
-    // so two full interleaved cycles (plus retries) fit even on a
-    // calib-3 day. The absolute 10k number keeps one plain leg below.
-    setup(20.0, spine = true)
+    // the 2k ORDERING query set: the ladder's claim — every amortized
+    // rung beats per-call assignment — is probe-count-invariant, and
+    // 2k-probe legs cost a fraction of 10k legs. The absolute 10k number
+    // keeps one plain leg below.
     val queries2k = syntheticEmbeddings(spark, 2000)
       .persist(StorageLevel.MEMORY_AND_DISK)
     queries2k.count()
@@ -967,37 +391,24 @@ object Bench {
     // storage pool (the r6 ladder lesson); they derive from the cached
     // corpus by a narrow map, so the train (1% sample) and encode (one
     // pass) recomputes are cheaper than the eviction they'd cause.
-    // Own BudgetUp gate (r11): if prep can't fit, legs A/B still ladder.
-    var pqReady = false
-    var centsArr: Array[(Long, Array[Float])] = null
-    var rbooks: graft.ops.VectorQuant.Codebooks = null
-    var ivfpqCodes: DataFrame = null
-    try {
-      setup(80.0, spine = true)
-      centsArr = cents2.collect().map(r =>
-        (r.getLong(0), FloatVecDot.unpack(r.getAs[Array[Byte]](1))))
-      val res1m = graft.ops.VectorQuant.ivfResiduals(corpus1m, centsArr)
-      rbooks = graft.ops.VectorQuant.pqTrain(
-        res1m.select(col("id"), col("rvec").as("vec")), m = 96,
-        ncodes = 256, sampleMod = 100, iters = 2)
-      ivfpqCodes = graft.ops.VectorQuant.ivfPqEncode(res1m, rbooks)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      ivfpqCodes.count()
-      // the cid-bucketed codes catalog table for leg D (written once,
-      // cached — the "pay the layout once per build" posture)
-      setup(30.0, spine = true)
-      spark.sql("DROP TABLE IF EXISTS graft_bench_pq_codes")
-      KbStoreCleanup.delete(
-        spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:") + "/graft_bench_pq_codes")
-      graft.ops.VectorQuant.writeCodesBucketed(ivfpqCodes,
-        "graft_bench_pq_codes", buckets = spark.sparkContext.defaultParallelism)
-      spark.catalog.cacheTable("graft_bench_pq_codes")
-      spark.table("graft_bench_pq_codes").count()
-      pqReady = true
-    } catch { case _: BudgetUp =>
-      addSkip("(pq prep skipped on budget — pq ladder legs unavailable)")
-    }
+    val centsArr = cents2.collect().map(r =>
+      (r.getLong(0), FloatVecDot.unpack(r.getAs[Array[Byte]](1))))
+    val res1m = graft.ops.VectorQuant.ivfResiduals(corpus1m, centsArr)
+    val rbooks = graft.ops.VectorQuant.pqTrain(
+      res1m.select(col("id"), col("rvec").as("vec")), m = 96,
+      ncodes = 256, sampleMod = 100, iters = 2)
+    val ivfpqCodes = graft.ops.VectorQuant.ivfPqEncode(res1m, rbooks)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    ivfpqCodes.count()
+    // the cid-bucketed codes catalog table for leg D (written once,
+    // cached — the "pay the layout once per build" posture)
+    spark.sql("DROP TABLE IF EXISTS graft_bench_pq_codes")
+    deleteRecursively(Paths.get(spark.conf.get("spark.sql.warehouse.dir")
+      .stripPrefix("file:") + "/graft_bench_pq_codes"))
+    graft.ops.VectorQuant.writeCodesBucketed(ivfpqCodes,
+      "graft_bench_pq_codes", buckets = spark.sparkContext.defaultParallelism)
+    spark.catalog.cacheTable("graft_bench_pq_codes")
+    spark.table("graft_bench_pq_codes").count()
 
     // ---- the knn ORDERING ladder (2k probes), reps INTERLEAVED ----
     // Four legs over the same 2k×1M join, each a rung of the
@@ -1005,366 +416,162 @@ object Bench {
     // assignment (B: indexed) → compressed codes (C: pq) → compressed
     // codes through the custom exchange-free plan (D: pq_bucketed).
     // Sequential min-of-2 (r8) let contention DRIFT map onto ladder
-    // position and invert the published ordering; round-robin cycles
-    // (A,B,C,D,A,B,C,D — min per leg) spread drift across all legs.
-    // Leg B's derived layout — the flattened (cid, cand_id, vec)
+    // position and invert the published ordering; two round-robin
+    // cycles (A,B,C,D,A,B,C,D — min per leg) spread drift across all
+    // legs. Leg B's derived layout — the flattened (cid, cand_id, vec)
     // assignment — is built ONCE, untimed (index maintenance a
     // deployment amortizes per layout, not per call), and stays
-    // storage-pool resident ACROSS cycles: at the 64g default heap the
-    // raw corpus (~6.3 GB) and this layout (~6.3 GB) both fit inside
-    // the ~19 GB protected storage region, so cycles no longer pay a
-    // rebuild + drop-corpus + re-warm transition per rep. (The r6
-    // capacity inversion — and r10's 11 s ↔ 25 s indexed-leg
-    // bimodality — were 40 g artifacts: the 12.6 GB pair missed that
-    // heap's 12 GB protected region and evicted each other under
-    // execution pressure, so the timed rep measured whichever blocks
-    // survived.) Every rep stamps the storage pool's memory-residency
-    // fraction into provenance, so a spill-poisoned number is visible
-    // in its own record.
-    val legTimes = scala.collection.mutable.LinkedHashMap(
-      "svs_knn2k_plain_1m" -> scala.collection.mutable.ArrayBuffer[Double](),
-      "svs_knn2k_indexed_1m" -> scala.collection.mutable.ArrayBuffer[Double](),
-      "svs_knn2k_pq_1m" -> scala.collection.mutable.ArrayBuffer[Double](),
-      "svs_knn2k_pq_bucketed_1m" -> scala.collection.mutable.ArrayBuffer[Double]())
-    val legEst = Map(
-      "svs_knn2k_plain_1m" -> 11.0,
-      "svs_knn2k_indexed_1m" -> 6.0,
-      "svs_knn2k_pq_1m" -> 6.0,
-      "svs_knn2k_pq_bucketed_1m" -> 9.0)
+    // storage-pool resident across cycles. Every rep stamps the storage
+    // pool's memory-residency fraction into provenance, so a
+    // spill-poisoned number is visible in its own record.
+    val plain = "svs_knn2k_plain_1m"
+    val indexed = "svs_knn2k_indexed_1m"
+    val pq = "svs_knn2k_pq_1m"
+    val bucketed = "svs_knn2k_pq_bucketed_1m"
+    val legTimes = Seq(plain, indexed, pq, bucketed)
+      .map(_ -> mutable.ArrayBuffer[Double]()).toMap
 
-    // leg B's persisted assignment — own gate like the pq prep
-    var idxReady = false
-    var preAssigned: DataFrame = null
-    try {
-      setup(40.0, spine = true)
-      preAssigned = graft.ops.SimilaritySearch
-        .ivfAssignPacked(corpus1m, cents2).alias("a")
-        .join(corpus1m.alias("e"), col("a.vec_id") === col("e.id"))
-        .select(col("a.cid").as("ccid"),
-          col("a.vec_id").as("cand_id"), col("e.vec").as("cv"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      preAssigned.count()
-      idxReady = true
-    } catch { case _: BudgetUp =>
-      addSkip("(assignment prep skipped on budget — indexed leg unavailable)")
-    }
-    // spine milestone: prep done — reservation shrinks to the two cycles
-    reservedS = 60.0 * calib
+    val preAssigned = graft.ops.SimilaritySearch
+      .ivfAssignPacked(corpus1m, cents2).alias("a")
+      .join(corpus1m.alias("e"), col("a.vec_id") === col("e.id"))
+      .select(col("a.cid").as("ccid"),
+        col("a.vec_id").as("cand_id"), col("e.vec").as("cv"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    preAssigned.count()
 
-    val legRes = scala.collection.mutable.Map.empty[String, Double]
-    val legCpu = scala.collection.mutable.Map.empty[String, Double]
-    // recall@10 of the shared nProbe-4 IVF candidate set, measured in
-    // the ladder section; the 10k absolute leg (same kernel, same
-    // nProbe) stamps it after it records
-    var ivfRecall: Option[Double] = None
+    val legRes = mutable.Map.empty[String, Double]
+    val legCpu = mutable.Map.empty[String, Double]
     def timeLeg(name: String)(body: => Unit): Unit = {
-      if (remainS < legEst(name) * calib + ReserveS) throw new BudgetUp
       val res = storagePoolResidency(spark)
       val cpu0 = cpuSnap()
       val t = timed(body)
       legTimes(name) += t
-      // calibration feed follows the leg's RUNNING MIN, not the first
-      // rep (ADVICE r10): the first rep can carry residual JIT whose
-      // inflated ratio would raise calib and gate out later sections
-      feedRatioMin(name, legTimes(name).min)
-      // publish the running min after every rep (a SIGKILL mid-ladder
+      // publish the running min after every rep (a kill mid-ladder
       // keeps the completed reps); the residency + cpu_run stamps
       // follow the MIN rep — the one whose value is published
       if (t <= legTimes(name).min) {
         legRes(name) = res
         cpuRunRatio(cpu0).foreach(legCpu(name) = _)
       }
-      recordValue(name, legTimes(name).min, legTimes(name).size,
+      publish(name, legTimes(name).min, legTimes(name).size,
         legRes.get(name), legCpu.get(name))
     }
-
-    val baseline = "svs_knn2k_plain_1m"
-    // ORDERING-contract rungs: the legs whose delta vs plain is
-    // measurable at local scale. The bucketed leg still runs every
-    // cycle but sits OUTSIDE the ordering gate — its claim is
-    // structural (see bucketedVsPqS): at this scale its elided codes
-    // exchange is ~100 MB, inside run noise, so r12's official record
-    // published `ladder_monotone: false` off a 1.1 s noise inversion
-    // while the plan spec proved the elision all along.
-    val rungs = Seq("svs_knn2k_indexed_1m", "svs_knn2k_pq_1m")
-    val bucketedLeg = "svs_knn2k_pq_bucketed_1m"
-    def runCycle(wanted: Set[String]): Unit = {
-      ensureCorpus()
-      if (wanted(baseline)) {
-        timeLeg(baseline) {
-          graft.ops.SimilaritySearch.knnJoinIvfPacked(
-            queries2k, corpus1m, cents2, k = 10, nProbe = 4)
-            .write.format("noop").mode("overwrite").save()
-        }
+    def runCycle(): Unit = {
+      timeLeg(plain) {
+        graft.ops.SimilaritySearch.knnJoinIvfPacked(
+          queries2k, corpus1m, cents2, k = 10, nProbe = 4)
+          .write.format("noop").mode("overwrite").save()
       }
-      if (wanted("svs_knn2k_indexed_1m")) {
-        timeLeg("svs_knn2k_indexed_1m") {
-          graft.ops.SimilaritySearch.knnJoinIvfAssigned(
-            queries2k, preAssigned, cents2, k = 10, nProbe = 4)
-            .write.format("noop").mode("overwrite").save()
-        }
+      timeLeg(indexed) {
+        graft.ops.SimilaritySearch.knnJoinIvfAssigned(
+          queries2k, preAssigned, cents2, k = 10, nProbe = 4)
+          .write.format("noop").mode("overwrite").save()
       }
-      if (wanted("svs_knn2k_pq_1m")) {
-        timeLeg("svs_knn2k_pq_1m") {
-          graft.ops.VectorQuant.knnJoinIvfPq(queries2k, ivfpqCodes,
-            centsArr, rbooks, corpus1m, k = 10, nProbe = 4, rerank = 50)
-            .write.format("noop").mode("overwrite").save()
-        }
+      timeLeg(pq) {
+        graft.ops.VectorQuant.knnJoinIvfPq(queries2k, ivfpqCodes,
+          centsArr, rbooks, corpus1m, k = 10, nProbe = 4, rerank = 50)
+          .write.format("noop").mode("overwrite").save()
       }
-      if (wanted("svs_knn2k_pq_bucketed_1m")) {
-        // this leg scans the cid-bucketed codes CATALOG table; its
-        // cache blocks are the ones the preceding legs' working sets
-        // evict first on contended days (r10: 49.9 s vs the pq leg's
-        // 29.1 s on the same cycle — the delta was a disk re-read of
-        // the table, not the operator). Same discipline as the warm
-        // points: restore residency untimed before timing.
-        if (storagePoolResidency(spark) < 0.98) {
-          spark.catalog.uncacheTable("graft_bench_pq_codes")
-          spark.catalog.cacheTable("graft_bench_pq_codes")
-          spark.table("graft_bench_pq_codes").count()
-        }
-        timeLeg("svs_knn2k_pq_bucketed_1m") {
-          graft.ops.VectorQuant.knnJoinIvfPqBucketed(queries2k,
-            "graft_bench_pq_codes", centsArr, rbooks, corpus1m,
-            k = 10, nProbe = 4, rerank = 50)
-            .write.format("noop").mode("overwrite").save()
-        }
+      // this leg scans the cid-bucketed codes CATALOG table, whose
+      // cache blocks are the ones the preceding legs' working sets
+      // evict first (once 49.9 s vs the pq leg's 29.1 s on the same
+      // cycle — the delta was a disk re-read of the table, not the
+      // operator). Same discipline as the warm points: restore
+      // residency untimed before timing.
+      if (storagePoolResidency(spark) < 0.98) {
+        spark.catalog.uncacheTable("graft_bench_pq_codes")
+        spark.catalog.cacheTable("graft_bench_pq_codes")
+        spark.table("graft_bench_pq_codes").count()
+      }
+      timeLeg(bucketed) {
+        graft.ops.VectorQuant.knnJoinIvfPqBucketed(queries2k,
+          "graft_bench_pq_codes", centsArr, rbooks, corpus1m,
+          k = 10, nProbe = 4, rerank = 50)
+          .write.format("noop").mode("overwrite").save()
       }
     }
+    runCycle() // cycle 1 (absorbs any residual JIT)
+    runCycle()
+    ladderCycles = legTimes.values.map(_.size).min
+    ladderMonotone = Some(
+      Seq(indexed, pq).forall(legTimes(_).min <= legTimes(plain).min))
+    bucketedVsPqS = Some(legTimes(bucketed).min - legTimes(pq).min)
+    writeFull()
 
-    // the contract flags: monotone = every available amortized rung's
-    // published min beats plain's; cycles = completed interleaved
-    // cycles (min rep count over the legs that ran)
-    def refreshLadderFlags(): Unit = {
-      val ran = legTimes.filter(_._2.nonEmpty)
-      ladderCycles = if (ran.isEmpty) 0 else ran.values.map(_.size).min
-      ladderMonotone =
-        if (legTimes(baseline).isEmpty ||
-            !rungs.exists(legTimes(_).nonEmpty)) None
-        else Some(rungs.filter(legTimes(_).nonEmpty)
-          .forall(r => legTimes(r).min <= legTimes(baseline).min))
-      bucketedVsPqS =
-        if (legTimes(bucketedLeg).nonEmpty &&
-            legTimes("svs_knn2k_pq_1m").nonEmpty)
-          Some(legTimes(bucketedLeg).min - legTimes("svs_knn2k_pq_1m").min)
-        else None
-      lock.synchronized { writeFullLocked() }
-    }
-
-    val availableLegs: Set[String] = Set(baseline) ++
-      (if (idxReady) Set("svs_knn2k_indexed_1m") else Set.empty[String]) ++
-      (if (pqReady) Set("svs_knn2k_pq_1m", "svs_knn2k_pq_bucketed_1m")
-       else Set.empty[String])
-    // estimated healthy cost of everything that still deserves first-
-    // time coverage after the ladder (tiers ~85, ivf build/probe ~25,
-    // 10k absolute leg ~25, curation ~55, z-order ~45, bpe ~30, image
-    // ~35, streaming ~45): ladder RETRIES only run when the remaining
-    // budget covers them PLUS this — budget death hits retries, never
-    // first-time coverage (r10 item 3)
-    // r13: +70 for the two new first-time sections (clustered recall
-    // ~60, semantic screen ~10) and +6 for the pruned-maxsim tier
-    // point; the worst ordering inversion's FIRST retry is
-    // reservation-funded and exempt from this gate
-    val designCostS = 421.0
+    // ---- recall@10 stamps for the approximate rungs: accuracy in the
+    // SAME record as the speed, at the 1M scale, vs the EXACT top-10 —
+    // nProbe = 256 probes every list, so the assigned join degenerates
+    // to exact brute force. A 32-query subset bounds the truth pass at
+    // ~32M kernel pairs. The IVF rungs (plain/indexed, and the 10k
+    // absolute leg — same kernel and nProbe) share one recall:
+    // identical candidate set, exact within it; the pq rungs add ADC +
+    // bounded re-rank on top. The stamp is OPTIONAL provenance: a
+    // failure here (an analysis error, an OOM on the truth pass) must
+    // not cost the rest of the section — log and move on.
+    var ivfRecall: Option[Double] = None
     try {
-      runCycle(availableLegs) // cycle 1 (absorbs any residual JIT)
-      reservedS = 42.0 * calib
-      runCycle(availableLegs) // cycle 2 — min per leg now has 2 samples
-      refreshLadderFlags()
-      // RESERVED retry (r12 verdict item 1a): if an ordering rung sits
-      // above plain after both cycles, its retry runs out of the
-      // ladder reservation itself — gated only on the retry fitting,
-      // never on the design sections' budget. A 1 s noise inversion
-      // must not publish uncontested while budget remains; r12's did
-      // because retries competed with design-section coverage.
-      reservedS = 12.0 * calib
-      if (legTimes(baseline).nonEmpty) {
-        // worst = largest inversion vs the BASELINE (the claim under
-        // contest), not vs the leg's own healthy estimate — on a slow
-        // day min/legEst would pick whichever rung drew the worst
-        // weather even when its ordering inversion is the smaller one
-        rungs.filter(r => legTimes(r).nonEmpty &&
-            legTimes(r).min > legTimes(baseline).min)
-          .sortBy(r => -(legTimes(r).min / legTimes(baseline).min))
-          .headOption
-          .foreach { r =>
-            if (remainS > legEst(r) * calib + ReserveS) runCycle(Set(r))
-            else addSkip(s"(reserved ladder retry of $r did not fit)")
-          }
-      }
-      reservedS = 0.0
-      refreshLadderFlags()
-      // ordering audit: the amortization claim is that every rung
-      // beats the per-call-assignment BASELINE (indexed < plain,
-      // pq < plain; indexed vs pq carry no claimed order — pq trades
-      // time for a 96 B/vector footprint; the bucketed leg's claim is
-      // structural — exchange elision — its time ≈ pq). A rung
-      // recorded ABOVE the baseline absorbed contention both cycles
-      // (the r8 inversion): retry such rungs one at a time in
-      // severity order — but ONLY while the remaining budget still
-      // covers every design section that has not yet recorded
-      // (designCostS above): a retry is a second chance at a number
-      // the record already holds, a design section is coverage that
-      // would otherwise be absent from the round entirely.
-      if (legTimes(baseline).nonEmpty) {
-        rungs.filter(r => legTimes(r).nonEmpty &&
-            legTimes(r).min > legTimes(baseline).min)
-          .sortBy(r => -(legTimes(r).min / legEst(r)))
-          .foreach { r =>
-            if (legTimes(r).min > legTimes(baseline).min) {
-              if (remainS > (designCostS + legEst(r)) * calib + ReserveS)
-                runCycle(Set(r))
-              else addSkip(s"(ladder retry of $r skipped to protect design-section coverage)")
-            }
-          }
-      }
-      // bucketed-delta audit (split contract): the bucketed leg's
-      // published claim is "≈ pq, noise-bounded" + the structural
-      // exchange-elision spec — but a published min 1.3× above the pq
-      // rung (r12: 11.21 vs 9.69) is a contention outlier, not noise;
-      // give it budget-gated retries until the delta is honest or the
-      // design sections need the budget
-      // the FIRST delta retry is reservation-style (gated only on the
-      // retry fitting): the noise-bounded claim (bucketed_vs_pq_s ~ 0)
-      // deserves the same one-shot protection as the ordering gate —
-      // rehearsal 3 published a 6.8 s outlier delta because the
-      // designCostS gate priced every retry out at calib 2.3
-      var bucketedRetries = 0
-      while (bucketedRetries < 3 && legTimes(bucketedLeg).nonEmpty &&
-          legTimes("svs_knn2k_pq_1m").nonEmpty &&
-          legTimes(bucketedLeg).min >
-            legTimes("svs_knn2k_pq_1m").min * 1.3 &&
-          (remainS > (designCostS + legEst(bucketedLeg)) * calib + ReserveS
-            || (bucketedRetries == 0 &&
-                remainS > legEst(bucketedLeg) * calib + ReserveS))) {
-        bucketedRetries += 1
-        runCycle(Set(bucketedLeg))
-      }
-      // absolute-sanity retries: a leg whose published min still sits
-      // >2× its healthy expectation after two cycles was measured
-      // inside a contention wave even when the ORDERING survived (the
-      // r11-a3 run published a vacuously-monotone ladder whose plain
-      // baseline was itself 3× inflated). One more budget-gated sample
-      // each, worst-first, under the same design-section protection.
-      legTimes.keys.toSeq
-        .filter(r => availableLegs(r) && legTimes(r).nonEmpty &&
-          expectedS.get(r).exists(e => legTimes(r).min > 2 * e))
-        .sortBy(r => -(legTimes(r).min / legEst(r)))
-        .foreach { r =>
-          if (remainS > (designCostS + legEst(r)) * calib + ReserveS)
-            runCycle(Set(r))
-          else addSkip(s"(ladder value retry of $r skipped to protect design-section coverage)")
-        }
-      // ---- recall@10 stamps for the approximate rungs (r11 verdict
-      // item 5): accuracy in the SAME record as the speed, at the 1M
-      // scale, vs the EXACT top-10 — nProbe = 256 probes every list,
-      // so the assigned join degenerates to exact brute force. A
-      // 32-query subset bounds the truth pass at ~32M kernel pairs
-      // (a few seconds through the persisted assignment). The IVF
-      // rungs (plain/indexed, and the 10k absolute leg — same kernel
-      // and nProbe) share one recall: identical candidate set, exact
-      // within it; the pq rungs add ADC + bounded re-rank on top.
-      // The stamp is OPTIONAL provenance: a failure here (an analysis
-      // error, an OOM on the truth pass) must never kill the
-      // certification run the round is graded on — log and move on.
-      // BudgetUp still unwinds normally.
-      if (idxReady) try {
-        setup(25.0)
-        val queries32 = queries2k.where(col("id") < 32)
-        val exact = graft.ops.SimilaritySearch.knnJoinIvfAssigned(
-            queries32, preAssigned, cents2, k = 10, nProbe = 256)
-          .select(col("qid"), col("cid")).collect()
+      val queries32 = queries2k.where(col("id") < 32)
+      val exact = graft.ops.SimilaritySearch.knnJoinIvfAssigned(
+          queries32, preAssigned, cents2, k = 10, nProbe = 256)
+        .select(col("qid"), col("cid")).collect()
+        .groupBy(_.getLong(0))
+        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+      def recallOf(approx: DataFrame): Double = {
+        // both join kernels name the candidate column "cid"
+        val ap = approx.select(col("qid"), col("cid")).collect()
           .groupBy(_.getLong(0))
           .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        def recallOf(approx: DataFrame): Double = {
-          // both join kernels name the candidate column "cid"
-          val ap = approx.select(col("qid"), col("cid")).collect()
-            .groupBy(_.getLong(0))
-            .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-          val per = exact.toSeq.map { case (q, ex) =>
-            ap.get(q).map(_.intersect(ex).size.toDouble / ex.size)
-              .getOrElse(0.0) }
-          per.sum / math.max(1, per.size)
-        }
-        val ivfR = recallOf(graft.ops.SimilaritySearch.knnJoinIvfAssigned(
-          queries32, preAssigned, cents2, k = 10, nProbe = 4))
-        ivfRecall = Some(ivfR)
-        setRecall("svs_knn2k_plain_1m", ivfR)
-        setRecall("svs_knn2k_indexed_1m", ivfR)
-        if (pqReady) {
-          val pqR = recallOf(graft.ops.VectorQuant.knnJoinIvfPq(
-            queries32, ivfpqCodes, centsArr, rbooks, corpus1m,
-            k = 10, nProbe = 4, rerank = 50))
-          setRecall("svs_knn2k_pq_1m", pqR)
-          setRecall("svs_knn2k_pq_bucketed_1m", pqR)
-        }
-      } catch {
-        // NOT rethrown: a BudgetUp here would land in the ladder
-        // section's catch and publish "remaining ladder reps not run"
-        // when every ladder rep in fact completed — record the honest
-        // skip and let the section finish (later gates re-check the
-        // budget themselves)
-        case _: BudgetUp =>
-          addSkip("(ladder recall stamps skipped on budget)")
-        case scala.util.control.NonFatal(e) =>
-          Console.err.println(s"[bench] recall stamp failed (non-fatal): $e")
+        val per = exact.toSeq.map { case (q, ex) =>
+          ap.get(q).map(_.intersect(ex).size.toDouble / ex.size)
+            .getOrElse(0.0) }
+        per.sum / math.max(1, per.size)
       }
-    } catch { case _: BudgetUp =>
-      addSkip(s"(budget reached at ${f"$elapsedS%.0f"}s — remaining ladder reps not run)")
-    } finally {
-      reservedS = 0.0
-      if (preAssigned != null) preAssigned.unpersist(true)
-      refreshLadderFlags()
+      val ivfR = recallOf(graft.ops.SimilaritySearch.knnJoinIvfAssigned(
+        queries32, preAssigned, cents2, k = 10, nProbe = 4))
+      ivfRecall = Some(ivfR)
+      setRecall(plain, ivfR)
+      setRecall(indexed, ivfR)
+      val pqR = recallOf(graft.ops.VectorQuant.knnJoinIvfPq(
+        queries32, ivfpqCodes, centsArr, rbooks, corpus1m,
+        k = 10, nProbe = 4, rerank = 50))
+      setRecall(pq, pqR)
+      setRecall(bucketed, pqR)
+    } catch {
+      case NonFatal(e) =>
+        Console.err.println(s"[bench] recall stamp failed (non-fatal): $e")
     }
+    preAssigned.unpersist(true)
 
     // ---- the ABSOLUTE-number leg: the same plain IVF knn join at the
     // 10k probe count past rounds' records carry (the 2k ladder above
     // certifies ordering; this pins the headline magnitude) ----
-    try {
-      setup(35.0)
-      val queries10k = syntheticEmbeddings(spark, 10000)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      queries10k.count()
-      ensureCorpus()
-      // longRepS raised past this point's KNOWN bimodal-high mode
-      // (r10 driver 69.9 s vs 28.4 s clean; r11 86-110 s vs 15.9-21 s
-      // same-day, cpu_run ~0.95 both modes — SURVEY's round-11 record
-      // pins the cause as hypervisor CPU-steal waves that inflate thread
-      // CPU itself, so neither cpu_run nor residency can flag them):
-      // a pathological first rep must not be published alone when the
-      // budget can afford companions
-      record("svs_knn_join_1m", estS = 20.0, longRepS = 150.0) {
-        graft.ops.SimilaritySearch.knnJoinIvfPacked(
-          queries10k, corpus1m, cents2, k = 10, nProbe = 4)
-          .write.format("noop").mode("overwrite").save()
-      }
-      ivfRecall.foreach(setRecall("svs_knn_join_1m", _))
-      queries10k.unpersist()
-    } catch { case _: BudgetUp =>
-      addSkip("(10k absolute knn leg skipped on budget)")
+    val queries10k = syntheticEmbeddings(spark, 10000)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    queries10k.count()
+    record("svs_knn_join_1m") {
+      graft.ops.SimilaritySearch.knnJoinIvfPacked(
+        queries10k, corpus1m, cents2, k = 10, nProbe = 4)
+        .write.format("noop").mode("overwrite").save()
     }
+    ivfRecall.foreach(setRecall("svs_knn_join_1m", _))
+    queries10k.unpersist()
 
-    // ---- compressed-tier encode/probe points (cheap, post-ladder;
-    // budget-starved since r5 when they sat behind the sweeps) ----
-    ensureCorpus()
+    // ---- compressed-tier encode/probe points ----
     queries2k.unpersist()
     // exact top-10 for the single-query probe points (query id 2, the
     // same vector every probe uses): one untimed exact pass over the
     // cached corpus — each probe's recall@10 then stamps into its own
     // provenance from the rows the TIMED run already collected
-    var exactTop10Q2: Set[Long] = Set.empty
-    try {
-      setup(10.0)
+    val exactTop10Q2: Set[Long] = try {
       val qv2 = lit(FloatVecDot.pack(syntheticVec(2L)))
-      exactTop10Q2 = corpus1m
+      corpus1m
         .select(col("id"), FloatVecDot.floatVecDot(col("vec"), qv2).as("s"))
         .orderBy(desc("s"), col("id")).limit(10)
         .collect().map(_.getLong(0)).toSet
     } catch {
-      case _: BudgetUp =>
-        addSkip("(probe recall truth pass skipped on budget)")
-      case scala.util.control.NonFatal(e) =>
+      case NonFatal(e) =>
         Console.err.println(s"[bench] probe recall truth failed (non-fatal): $e")
+        Set.empty
     }
     def stampProbeRecall(name: String, rows: Array[org.apache.spark.sql.Row]): Unit =
       if (exactTop10Q2.nonEmpty && rows != null) {
@@ -1373,20 +580,17 @@ object Bench {
           exactTop10Q2.size)
       }
     var probeRows: Array[org.apache.spark.sql.Row] = null
-    if (pqReady) {
-      record("svs_ivfpq_probe_1m", estS = 2.0) {
-        probeRows = graft.ops.VectorQuant.ivfPqTopKRefined(ivfpqCodes,
-          corpus1m, centsArr, rbooks, syntheticVec(2L), k = 100,
-          nProbe = 4, rerank = 1000).collect()
-      }
-      stampProbeRecall("svs_ivfpq_probe_1m", probeRows)
-      ivfpqCodes.unpersist()
-      spark.catalog.uncacheTable("graft_bench_pq_codes")
-      spark.sql("DROP TABLE IF EXISTS graft_bench_pq_codes")
+    record("svs_ivfpq_probe_1m") {
+      probeRows = graft.ops.VectorQuant.ivfPqTopKRefined(ivfpqCodes,
+        corpus1m, centsArr, rbooks, syntheticVec(2L), k = 100,
+        nProbe = 4, rerank = 1000).collect()
     }
+    stampProbeRecall("svs_ivfpq_probe_1m", probeRows)
+    ivfpqCodes.unpersist()
+    spark.catalog.uncacheTable("graft_bench_pq_codes")
+    spark.sql("DROP TABLE IF EXISTS graft_bench_pq_codes")
 
-    setup(30.0)
-    record("svs_sq_encode_1m", estS = 10.0) {
+    record("svs_sq_encode_1m") {
       graft.ops.VectorQuant.sqEncodePacked(corpus1m)
         .write.format("noop").mode("overwrite").save()
     }
@@ -1395,7 +599,7 @@ object Bench {
     sqCodes.count()
     val (qCode, qScale) = graft.functions.Int8VecDot.quantize(syntheticVec(2L))
     probeRows = null
-    record("svs_sq_probe_1m", estS = 3.0) {
+    record("svs_sq_probe_1m") {
       probeRows = graft.ops.VectorQuant
         .sqTopKPacked(sqCodes, qCode, qScale, 100).collect()
     }
@@ -1404,8 +608,7 @@ object Bench {
 
     // binary (sign-bit) tier: 192 B/vector — the XOR+popcount
     // prefilter scan plus exact re-rank of the 1000 survivors
-    setup(25.0)
-    record("svs_bin_encode_1m", estS = 3.0) {
+    record("svs_bin_encode_1m") {
       graft.ops.VectorQuant.binEncodePacked(corpus1m)
         .write.format("noop").mode("overwrite").save()
     }
@@ -1413,7 +616,7 @@ object Bench {
       .persist(StorageLevel.MEMORY_AND_DISK)
     binCodes.count()
     probeRows = null
-    record("svs_bin_probe_1m", estS = 3.0) {
+    record("svs_bin_probe_1m") {
       probeRows = graft.ops.VectorQuant.binTopKPacked(binCodes, corpus1m,
         syntheticVec(2L), k = 100, rerank = 1000).collect()
     }
@@ -1422,22 +625,20 @@ object Bench {
 
     // PQ train on a 10k id-mod sample (2 Lloyd iterations, 96
     // subspaces × 256 codes), then encode the full corpus
-    setup(40.0)
     var books: graft.ops.VectorQuant.Codebooks = null
-    record("svs_pq_train_1m", estS = 3.0) {
+    record("svs_pq_train_1m") {
       books = graft.ops.VectorQuant.pqTrain(corpus1m, m = 96,
         ncodes = 256, sampleMod = 100, iters = 2)
     }
-    record("svs_pq_encode_1m", estS = 28.0) {
+    record("svs_pq_encode_1m") {
       graft.ops.VectorQuant.pqEncode(corpus1m, books)
         .write.format("noop").mode("overwrite").save()
     }
-    setup(40.0)
     val pqCodes = graft.ops.VectorQuant.pqEncode(corpus1m, books)
       .persist(StorageLevel.MEMORY_AND_DISK)
     pqCodes.count()
     probeRows = null
-    record("svs_pq_probe_1m", estS = 2.0) {
+    record("svs_pq_probe_1m") {
       probeRows = graft.ops.VectorQuant.pqTopKRefined(pqCodes, corpus1m,
         books, syntheticVec(2L), k = 100, rerank = 1000).collect()
     }
@@ -1448,10 +649,9 @@ object Bench {
     // against 256 broadcast centroids via the packed-f32 kernel, and
     // the inverted-list table written out — the "Spark builds the
     // vector index in batch" flagship at scale
-    setup(25.0)
     val ivfPath = "/tmp/graft_bench_ivf"
-    KbStoreCleanup.delete(ivfPath)
-    record("svs_ivf_build_1m", estS = 9.0) {
+    deleteRecursively(Paths.get(ivfPath))
+    record("svs_ivf_build_1m") {
       graft.ops.SimilaritySearch.ivfAssignPacked(corpus1m, cents2)
         .write.mode("overwrite").option("compression", "none")
         .parquet(ivfPath)
@@ -1459,12 +659,11 @@ object Bench {
     // probe: 8 of 256 lists → ~1/32 of the corpus scored. The probed
     // member ids broadcast back against the corpus — the DataFrame
     // form of partition pruning on the list id.
-    setup(15.0)
     val assigned1m = spark.read.parquet(ivfPath)
       .persist(StorageLevel.MEMORY_AND_DISK)
     assigned1m.count()
     probeRows = null
-    record("svs_ivf_probe_1m", estS = 2.0) {
+    record("svs_ivf_probe_1m") {
       val qv = lit(FloatVecDot.pack(syntheticVec(2L)))
       val probes = cents2
         .select(col("cid"), FloatVecDot.floatVecDot(col("cvec"), qv).as("ps"))
@@ -1484,7 +683,7 @@ object Bench {
     // kernel (SimilaritySearch.filteredTopKIvf's shape) — the scored
     // row count drops to selectivity × probed-list size, which is the
     // whole point of pushing the predicate inside the probe
-    record("svs_filtered_probe_1m", estS = 2.0) {
+    record("svs_filtered_probe_1m") {
       val qv = lit(FloatVecDot.pack(syntheticVec(2L)))
       val probes = cents2
         .select(col("cid"), FloatVecDot.floatVecDot(col("cvec"), qv).as("ps"))
@@ -1504,7 +703,7 @@ object Bench {
     // tokens — one corpus pass, 8M packed-kernel dots, then two narrow
     // aggregate shuffles (docs x 8 rows, then docs rows), top-100.
     // SimilaritySearch.maxSimTopK's plan shape at bench scale.
-    record("svs_maxsim_1m", estS = 4.0) {
+    record("svs_maxsim_1m") {
       import spark.implicits._
       val qts = (0 until 8).map(i =>
         (i.toLong, FloatVecDot.pack(syntheticVec(3000000L + i))))
@@ -1528,7 +727,7 @@ object Bench {
     // the top 1000 docs (0.5% of the corpus) pay the exact token
     // kernel: 40k dots instead of svs_maxsim_1m's 8M
     // (SimilaritySearch.maxSimTopKIvfAssigned's shape).
-    record("svs_maxsim_ivf_1m", estS = 2.0) {
+    record("svs_maxsim_ivf_1m") {
       import spark.implicits._
       import org.apache.spark.sql.expressions.Window
       val qts = (0 until 8).map(i =>
@@ -1560,20 +759,15 @@ object Bench {
         .collect()
     }
     assigned1m.unpersist()
-    KbStoreCleanup.delete(ivfPath)
+    deleteRecursively(Paths.get(ivfPath))
 
-    if (!independentFirst) independentSections()
-
-
-    // ---- most expensive non-headline sweeps LAST ----
+    // ---- the most expensive non-headline sweeps ----
     // §3.3 scale point: top-25 pairwise scores over the SAME 1M × d1536
     // corpus via the sketch-candidates + exact-re-rank path. The exact
     // all-pairs formulation is 5×10¹¹ pairs × 1536 flops ≈ 8×10¹⁴ flops
     // — infeasible on any engine — so this measures the path that
     // actually runs at that cardinality (PairwiseTopK scaladoc).
-    setup(5.0)
-    ensureCorpus()
-    record("svs_pairs_1m", estS = 35.0) {
+    record("svs_pairs_1m", reps = 1) {
       graft.ops.PairwiseTopK.sketchTopKPairs(
         corpus1m, dim = Dim, k = 25,
         sketchBits = 320, bands = 16, rerank = 20000)
@@ -1583,13 +777,13 @@ object Bench {
     // embeddingNearDups scale path (sketch banding + Hamming cutoff +
     // exact verify). A random corpus has no cos ≥ 0.8 pairs, so this
     // measures the candidate pipeline itself completing at 1M.
-    record("svs_neardup_1m", estS = 35.0) {
+    record("svs_neardup_1m", reps = 1) {
       graft.ops.PairwiseTopK.sketchThresholdPairs(
         corpus1m, dim = Dim, threshold = 0.8).count()
     }
 
-    dropCorpus()
-    KbStoreCleanup.delete(kept1m)
+    corpus1m.unpersist(true)
+    deleteRecursively(Paths.get(kept1m))
   }
 
   /** Clustered-corpus recall stamps (r12 verdict item 3): the ladder's
@@ -1630,12 +824,6 @@ object Bench {
       }.toDF("id", "vec").persist(StorageLevel.MEMORY_AND_DISK)
     var codes: DataFrame = null
     try {
-      // each slice gates itself: the entry gate covers only generation
-      // (a 90 s whole-section estimate at calib 2+ priced the section
-      // out of days that could in fact afford it, rehearsal 3), so the
-      // worst case is ~12 s of generation and truth paid before a
-      // mid-section skip
-      setup(20.0)
       corpus.count()
       // 32 fresh queries, one per distinct near-dup group (spread
       // across clusters): each query's true top-10 is dominated by its
@@ -1654,7 +842,6 @@ object Bench {
       // query array with per-partition top-10 heaps (a DataFrame
       // crossJoin would ship 12 KB of vectors per pair row — measured
       // 58 s vs ~2 s for this shape at 1M × 32)
-      setup(10.0)
       val exact = {
         val bcQ = spark.sparkContext.broadcast(qArr)
         val partTops = corpus.select(col("id"), col("vec"))
@@ -1696,7 +883,6 @@ object Bench {
       // per-query top-4 centroids, computed on the driver): the join
       // never scores a candidate outside them, so the skipped lists
       // cannot change the measured recall — and the encode bill halves
-      setup(55.0)
       val recall = {
         val probedCids = qArr.flatMap { case (_, qv) =>
           centsArr.map { case (cid, cv) =>
@@ -1763,11 +949,6 @@ object Bench {
     * query — only the corpus is bigger.
     */
   private def curationScalePoints(spark: SparkSession): Unit = {
-    // entry gate = synth gen + warmup + the 200k point only (~25 s
-    // healthy); the 2M point re-gates itself below. The r10d run
-    // skipped this whole section off an 80 s entry estimate when the
-    // section's true cost was ~35 s
-    setup(25.0)
     def runDocs(docs0: DataFrame): Unit = {
       import org.apache.spark.sql.expressions.Window
       val docs = docs0
@@ -1791,9 +972,8 @@ object Bench {
       runDocs(syntheticDocs(spark, n).select(col("id").as("doc_id"),
         col("text")))
     run(20000L) // untimed JIT/codegen warmup of the composed shape
-    record("svs_curation_200k", estS = 8.0, reps = 1) { run(200000L) }
-    setup(15.0)
-    record("svs_curation_2m", estS = 25.0, reps = 1) { run(2000000L) }
+    record("svs_curation_200k", reps = 1) { run(200000L) }
+    record("svs_curation_2m", reps = 1) { run(2000000L) }
 
     // the same composition over REAL corpus text (r10 verdict item 5):
     // the sfDir documents table, and an sf1-scale variant — no sf1
@@ -1802,15 +982,14 @@ object Bench {
     // (ids offset 1e6/copy, so dedup groups replicate honestly rather
     // than collapsing into one fingerprint). The pair restates the
     // 200k→2M linearity claim on real data.
-    setup(15.0)
     val realDocs = Tables.t(spark, sfDirG, "documents")
       .select(col("doc_id"), col("text"))
-    record("svs_curation_sf01", estS = 4.0, reps = 1) { runDocs(realDocs) }
+    record("svs_curation_sf01", reps = 1) { runDocs(realDocs) }
     val sf1Docs = realDocs
       .crossJoin(broadcast(spark.range(10).toDF("k")))
       .select((col("doc_id") + col("k") * 1000000L).as("doc_id"),
         col("text"))
-    record("svs_curation_sf1", estS = 10.0, reps = 1) { runDocs(sf1Docs) }
+    record("svs_curation_sf1", reps = 1) { runDocs(sf1Docs) }
   }
 
   /** Streaming store ingest throughput (r10 verdict item 6): a seeded
@@ -1824,10 +1003,9 @@ object Bench {
     * foreachBatch/codegen JIT).
     */
   private def streamIngestPoint(spark: SparkSession): Unit = {
-    setup(60.0)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val dir = "/tmp/graft_bench_stream"
-    KbStoreCleanup.delete(dir)
+    deleteRecursively(Paths.get(dir))
     val provider = new graft.core.Embeddings.EmbeddingProvider {
       def name = "bench-hash"
       def dim = 256
@@ -1871,8 +1049,7 @@ object Bench {
     try {
       stream.addData(batchTexts(0)) // untimed warmup micro-batch
       q.processAllAvailable()
-      setup(80.0)
-      record("svs_stream_ingest", estS = 75.0, reps = 1) {
+      record("svs_stream_ingest", reps = 1) {
         (1 to 6).foreach { b =>
           stream.addData(batchTexts(b))
           q.processAllAvailable()
@@ -1886,14 +1063,13 @@ object Bench {
       // of the window. docs/s = 3000/value, directly comparable to
       // svs_stream_ingest's live-index number.
       try q.stop() catch { case _: Throwable => () }
-      setup(40.0)
       val stream2 = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[String]
       val q2 = graft.streaming.StreamingIngest.startStoreIngest(
         stream2.toDF().toDF("text"), kb, provider, s"$dir/ckpt_fast",
         maintainIndex = false)
       try {
-        record("svs_stream_ingest_fast", estS = 25.0, reps = 1) {
+        record("svs_stream_ingest_fast", reps = 1) {
           (7 to 12).foreach { b =>
             stream2.addData(batchTexts(b))
             q2.processAllAvailable()
@@ -1915,14 +1091,13 @@ object Bench {
       // docs band-collide occasionally and must be verified away).
       // Built AFTER the ingest records so their numbers stay
       // comparable to r11 (no per-batch dedup refresh riding along).
-      setup(30.0)
       kb.buildDedupIndex()
       val fresh20 = batchTexts(20)
       val copies = batchTexts(1).take(50)
       val screen = ((0 until 450).map(i => (9000000L + i, fresh20(i))) ++
         copies.zipWithIndex.map { case (t, i) => (9100000L + i, t) })
         .toDF("doc_id", "text")
-      record("svs_stream_dedup", estS = 10.0) {
+      record("svs_stream_dedup") {
         kb.dedupCandidates(screen, threshold = 0.8)
           .write.format("noop").mode("overwrite").save()
       }
@@ -1936,16 +1111,15 @@ object Bench {
       // text-deterministic), so the drop path has genuine work; at
       // 100 TB this is the paraphrase-robust second screen stage that
       // never pays an O(corpus) re-mine.
-      setup(20.0)
       val screenSem = (batchTexts(21).take(450) ++ copies).toDF("text")
-      record("svs_stream_semdedup", estS = 8.0) {
+      record("svs_stream_semdedup") {
         val (kept, _, cln) = kb.screenBatchSemantic(
           screenSem, 0.9, provider, nProbe = 4)
         try kept.count() finally cln()
       }
     } finally {
       try q.stop() catch { case _: Throwable => () }
-      KbStoreCleanup.delete(dir)
+      deleteRecursively(Paths.get(dir))
     }
   }
 
@@ -1957,7 +1131,6 @@ object Bench {
     * band keys stay near-uniform and the join never degenerates.
     */
   private def imageNearDupPoint(spark: SparkSession): Unit = {
-    setup(40.0)
     import spark.implicits._
     val n = 100000L
     val media = spark.range(0, n, 1, spark.sparkContext.defaultParallelism)
@@ -1987,151 +1160,144 @@ object Bench {
       .toDF("media_id", "kind", "payload")
       .persist(StorageLevel.MEMORY_AND_DISK)
     media.count() // corpus generation untimed, like every other point
-    record("svs_image_neardup_100k", estS = 25.0) {
+    record("svs_image_neardup_100k") {
       graft.ops.Multimodal.imageNearDups(media, maxHamming = 2).count()
     }
     media.unpersist()
   }
 
-  /** Emit everything measured so far: BENCH_FULL.json (pretty, complete)
-    * plus the three stdout lines the driver's 2000-char tail window
-    * reads. Idempotent — called from the normal end of main AND from
-    * the SIGTERM shutdown hook; whichever fires first wins, and the
-    * whole emission runs under [[lock]] so a hook firing mid-[[record]]
-    * still formats a consistent snapshot.
-    */
-  private def emitAll(): Unit = {
-    if (!emitted.compareAndSet(false, true)) return
-    lock.synchronized {
-      // part-2 svs_* points FIRST, part-1 oracle queries LAST: the driver
-      // archives only the final ~2000 chars of output, and r5's part-1
-      // numbers fell out of that window. With the oracle queries at the
-      // tail, all of them land inside it; anything clipped at the front is
-      // in BENCH_FULL.json (written incrementally) which the round-end
-      // commit picks up.
-      val ordered = results.toSeq.sortBy { case (k, _) =>
-        if (k.startsWith("svs_")) 0 else 1 }
-      val qs = ordered.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-      val total = results.values.sum
-      writeFullLocked()
-      println(s"""{"notes":${notesJson()},"tail_format":"last line = the compact contract JSON (svs_* design points; part-1 detail lives in $outPathG), preceded by a bare part-1 seconds line (space-separated name:sec ascending) and the full canonical JSON line; the archive window clips from the FRONT"}""")
-      println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDirG","full":"$outPathG","writer":"$writerG","run_id":"$runIdG","ladder_monotone":${ladderMonotoneJson()},"ladder_cycles":$ladderCycles,"bucketed_vs_pq_s":${bucketedVsPqJson()},"budget_s":$budgetS,"elapsed_s":${f"$elapsedS%.1f"},"calib":${f"$calibUnlocked%.2f"},"skipped":${skippedJson()},"queries":$qs}""")
-      // bare part-1 line, ascending by time: the window clips the FRONT
-      // of an over-long line, so the entries it loses are the fastest
-      // (least diagnostic) ones; the slowest always land in the
-      // archived tail. Complete data is in BENCH_FULL.json regardless.
-      println(ordered.filterNot(_._1.startsWith("svs_"))
-        .sortBy(_._2)
-        .map { case (k, v) => s"$k:${trim2(v)}" }
-        .mkString("part1_sec_asc ", " ", "")) // (trim2: shared helper)
-      // COMPACT contract line, the ABSOLUTE LAST stdout line (r11
-      // verdict item 7): the canonical line above carries all ~135
-      // queries (~4k chars) and fell out of the driver wrapper's
-      // archived-tail window two rounds running ("parsed": null).
-      // This line keeps the contract fields + the svs_* design points
-      // only (~1.5k chars), small enough to survive the window; part-1
-      // values live in the bare line above it and in BENCH_FULL.json.
-      // The SAME line is also maintained as a fixed SIDECAR file
-      // (BENCH_CONTRACT.json, rewritten after every point) — stdout-
-      // tail parsing failed three rounds running (r10–r12 "parsed":
-      // null), so the file is the robust channel.
-      println(compactContractLocked())
-      Console.out.flush()
+  /** Lakehouse layout + data skipping, measured on a 6M-row table
+    * with a ~256-byte payload (~1.5 GB raw) and a 1/8-range predicate
+    * on one of two z-interleaved dimensions, payload in the
+    * aggregate so scans are decode-bound like a real wide table.
+    * (A 3M variant proved too SMALL to demonstrate
+    * anything — at 0.77 GB both layouts scan under the ~0.25 s job
+    * floor; at 6M the unordered scan is decode-bound and the layout
+    * delta is real.)
+    *  - svs_zscan_pruned_6m: z-ordered layout, plain scan — the
+    *    engine's own row-group stats prune because the LAYOUT made
+    *    ranges tight (and the same layout serves BOTH dims);
+    *  - svs_scan_unordered_6m: identical data, naive layout — every
+    *    row group straddles the predicate; the delta vs pruned is
+    *    the measured z-order win;
+    *  - svs_skip_scan_6m: the manifest file-skipping path (15/64
+    *    files read). At local-NVMe scale its timed cost ≈ pruned
+    *    plus a fixed ~0.2 s manifest lookup — the honest local
+    *    story; its real win (one manifest read replacing per-file
+    *    footer opens, 4× fewer tasks) is object-store metadata
+    *    latency, which this VM cannot exhibit. Result parity for
+    *    the composition is LayoutSpec-pinned. */
+  private def zorderPoints(spark: SparkSession): Unit = {
+    val zdir = "/tmp/graft_bench_zorder"
+    val udir = "/tmp/graft_bench_unordered"
+    deleteRecursively(Paths.get(zdir)); deleteRecursively(Paths.get(udir))
+    val zdf = spark.range(6000000L).select(col("id"),
+      pmod(hash(col("id")), lit(1024)).cast("long").as("x"),
+      pmod(hash(col("id") + 7L), lit(1024)).cast("long").as("y"),
+      concat_ws("", (0 until 8).map(i =>
+        md5(concat(col("id"), lit(i)))): _*).as("payload"))
+    record("svs_zorder_write_6m", reps = 1) {
+      graft.ops.Layout.writeZordered(zdf, zdir,
+        graft.ops.Layout.zValue(10, col("x"), col("y")), numFiles = 64)
+    }
+    zdf.repartition(64).write.mode("overwrite").parquet(udir)
+    val zstats = graft.ops.Layout
+      .parquetFileStats(spark, zdir, Seq("x", "y"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    zstats.count()
+    def scanAgg(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.agg(count(lit(1)), sum(length(col("payload")))).collect(); ()
+    }
+    // each rep reads whatever the page cache holds of the tables
+    // just written: cache-warm, a 1.5 GB table decodes under the
+    // job floor and both layouts can time alike, so the IO-bound
+    // comparison a cluster reading cold data sees shows only as far
+    // as the cache has evicted them
+    record("svs_skip_scan_6m") {
+      scanAgg(graft.ops.Layout.skippingScan(spark, zdir, zstats,
+        "x", 0, 127))
+    }
+    record("svs_zscan_pruned_6m") {
+      scanAgg(spark.read.parquet(zdir).where(col("x").between(0, 127)))
+    }
+    record("svs_scan_unordered_6m") {
+      scanAgg(spark.read.parquet(udir).where(col("x").between(0, 127)))
+    }
+    zstats.unpersist()
+    deleteRecursively(Paths.get(zdir)); deleteRecursively(Paths.get(udir))
+  }
+
+  /** Batched BPE training at a production-ish merge count: the
+    * jobs-per-merge fix, measured — the naive loop is 1000 jobs for
+    * 1000 merges; the batched passes run ~2 jobs per batch of
+    * disjoint merges (Bpe.bpeTrain scaladoc), exactly greedy-
+    * equivalent (BpeSpec + the x15/x19 oracles pin it) */
+  private def bpePoint(spark: SparkSession): Unit = {
+    val bpeDocs = Tables.t(spark, sfDirG, "documents")
+    record("svs_bpe_train_1k", reps = 1) {
+      graft.ops.Bpe.bpeTrain(bpeDocs, numMerges = 1000).count()
     }
   }
 
-  // NOTE r13: this used to also strip the leading zero ("0.36" →
-  // ".36") to shave the compact line — but ".36" is NOT valid JSON
-  // (strict parsers reject the whole line), which is the likely root
-  // cause of three rounds of wrapper "parsed": null. Keep the zero.
-  private def trim2(v: Double): String = {
-    var s = f"$v%.2f"
-    while (s.endsWith("0")) s = s.dropRight(1)
-    if (s.endsWith(".")) s = s.dropRight(1)
-    if (s.isEmpty) "0" else s
-  }
+  /** `v` as a strict JSON number: at most 4 decimals, no trailing zeros
+    * and never a bare leading point (".36" fails a strict parser). */
+  private def num(v: Double): String =
+    java.math.BigDecimal.valueOf(v)
+      .setScale(4, java.math.RoundingMode.HALF_UP)
+      .stripTrailingZeros.toPlainString
 
-  /** The compact contract JSON — contract fields + svs_* design points
-    * only (~1.5k chars). Printed as the absolute last stdout line AND
-    * maintained at [[contractPathG]] after every recorded point
-    * (r12 verdict item 4). Callers must hold [[lock]]. */
-  private def compactContractLocked(): String = {
-    val ordered = results.toSeq.sortBy { case (k, _) =>
-      if (k.startsWith("svs_")) 0 else 1 }
-    val total = results.values.sum
-    val svsQs = ordered.filter(_._1.startsWith("svs_"))
-      .map { case (k, v) => "\"" + k + "\":" + trim2(v) }
-      .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","sf":"$sfDirG","full":"$outPathG","writer":"$writerG","run_id":"$runIdG","ladder_monotone":${ladderMonotoneJson()},"ladder_cycles":$ladderCycles,"bucketed_vs_pq_s":${bucketedVsPqJson()},"budget_s":$budgetS,"elapsed_s":${f"$elapsedS%.1f"},"calib":${f"$calibUnlocked%.2f"},"sweep_first":$sweepFirstG,"n_part1":${ordered.count(!_._1.startsWith("svs_"))},"skipped_n":${skipped.size},"queries":$svsQs}"""
-  }
+  private def str(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
-  /** [[calib]] without re-taking [[lock]] — for callers already in it. */
-  private def calibUnlocked: Double =
-    if (ratios.isEmpty) 1.0
-    else {
-      val s = ratios.sorted
-      val m = if (s.size % 2 == 1) s(s.size / 2)
-              else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      math.min(5.0, math.max(0.5, m))
-    }
+  private def obj(kvs: Iterable[(String, String)]): String =
+    kvs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
 
-  private def skippedJson(): String = {
-    // cap at 20 names so a deeply-truncated run can't bloat the
-    // contract line; the count always reports the true total
-    val shown = skipped.take(20).map(s => "\"" + s + "\"")
-    val more = if (skipped.size > 20)
-      Seq("\"...+" + (skipped.size - 20) + " more\"") else Nil
-    (shown ++ more).mkString("[", ",", "]")
-  }
+  /** One JSON object: `fields` (already-rendered JSON values), then every
+    * recorded point under `queries` and every (name, exception class)
+    * failure under `failed`. Both the contract line and the full record
+    * are written through it. */
+  private[graft] def contractLine(fields: Seq[(String, String)],
+      points: Seq[(String, Double)], failures: Seq[(String, String)]): String =
+    obj(fields ++ Seq(
+      "queries" -> obj(points.map { case (k, v) => k -> num(v) }),
+      "failed" -> failures.map { case (n, e) =>
+        obj(Seq("name" -> str(n), "error" -> str(e))) }.mkString("[", ",", "]")))
 
-  /** Rewrite BENCH_FULL.json from the current results map — called
-    * after every recorded point, so a kill at any moment loses only
-    * the in-flight point. Callers must hold [[lock]]. */
-  private def writeFullLocked(): Unit = {
-    val ordered = results.toSeq.sortBy { case (k, _) =>
-      if (k.startsWith("svs_")) 0 else 1 }
-    val total = results.values.sum
-    val provJson = ordered.flatMap { case (k, _) =>
-      provenance.get(k).map(p => "\n    \"" + k + "\": " + p) }
-      .mkString(",")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDirG","writer":"$writerG","run_id":"$runIdG","ladder_monotone":${ladderMonotoneJson()},"ladder_cycles":$ladderCycles,"bucketed_vs_pq_s":${bucketedVsPqJson()},"budget_s":$budgetS,"elapsed_s":${f"$elapsedS%.1f"},"calib":${f"$calibUnlocked%.2f"},"sweep_first":$sweepFirstG,"skipped":${skippedJson()},"notes":${notesJson()},"provenance":{$provJson\n},"queries":{${
-      ordered.map { case (k, v) => "\n    \"" + k + "\": " + f"$v%.4f" }
-        .mkString(",")}\n}}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPathG),
-      full.getBytes("UTF-8"))
-    catch { case e: Exception =>
-      Console.err.println(s"$outPathG write failed: $e") }
-    // contract sidecar: tmp + atomic rename so a reader never sees a
-    // torn write; best-effort like the full record
+  private def runFields: Seq[(String, String)] = Seq(
+    "metric" -> str("total"), "value" -> num(results.values.sum),
+    "unit" -> str("sec"), "sf" -> str(sfDirG), "full" -> str(fullPathG),
+    "run_id" -> str(runIdG),
+    "ladder_monotone" -> ladderMonotone.fold("null")(_.toString),
+    "ladder_cycles" -> ladderCycles.toString,
+    "bucketed_vs_pq_s" -> bucketedVsPqS.fold("null")(num),
+    "elapsed_s" -> num(elapsedS),
+    "n_part1" -> results.keys.count(!_.startsWith("svs_")).toString)
+
+  /** Rewrite the full record — the contract plus per-point provenance
+    * and notes — through a temp file and an atomic rename, after every
+    * point: a kill at any moment leaves a whole record of what was
+    * measured. */
+  private def writeFull(): Unit = {
+    val full = contractLine(runFields ++ Seq(
+      "provenance" -> obj(provenance.map { case (k, p) =>
+        k -> obj(p.map { case (pk, pv) => pk -> num(pv) }) }),
+      "notes" -> obj(notes.map { case (k, v) => k -> str(v) })),
+      results.toSeq, failed.toSeq)
     try {
-      val tmp = java.nio.file.Paths.get(contractPathG + ".tmp")
-      java.nio.file.Files.write(tmp,
-        (compactContractLocked() + "\n").getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, java.nio.file.Paths.get(contractPathG),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch { case e: Exception =>
-      Console.err.println(s"$contractPathG write failed: $e") }
+      val tmp = Paths.get(fullPathG + ".tmp")
+      Files.write(tmp, (full + "\n").getBytes("UTF-8"))
+      Files.move(tmp, Paths.get(fullPathG), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } catch { case NonFatal(e) =>
+      Console.err.println(s"$fullPathG write failed: $e") }
   }
-
-  private def ladderMonotoneJson(): String =
-    ladderMonotone.map(_.toString).getOrElse("null")
-
-  /** Published bucketed-rung delta vs the pq rung (seconds, min-vs-min;
-    * noise-bounded by design at local scale — the rung's real claim is
-    * the structural exchange elision, see the split-contract note). */
-  private def bucketedVsPqJson(): String =
-    bucketedVsPqS.map(d => f"$d%.2f").getOrElse("null")
 
   /** Workload annotations: which engine numbers pair with which
     * BASELINE.md rows (and which have no published counterpart). */
-  private def notesJson(): String = Seq(
-    "ordering" -> "r13: io probe, then the cheap protocol points (10k, load-docs), then the FULL part-1 inventory single-rep, then the 1M protocol + the interleaved 2k-probe ORDERING ladder (two guaranteed cycles — their budget is RESERVED from the moment the part-1 sweep starts, stepped down at each spine milestone), then the 10k absolute plain knn leg, then compressed tiers + ivf build/probe, then the round's FIRST-TIME design sections (clustered-recall counterpart, streaming ingest incl. the semantic dedup screen) BEFORE the sections prior records already certify — curation (incl. real sf0.1/sf1-scale corpus points), z-order, bpe, image — then the pairs/neardup sweeps last, and a part-1 median upgrade if budget remains. Rationale: on a contention-clipped day a new point that never lands is absent from the round entirely, while a re-certified one keeps its prior-record value. Ladder RETRIES (beyond the one reservation-funded retry of the worst ordering inversion) only run when the remaining budget also covers every design section not yet recorded",
-    "provenance" -> "every recorded point carries {reps, calib-at-measurement, cpu_run} in the record's provenance map (warm points and ladder legs add the working set's memory-residency fraction; the approximate 1M tier points add recall_at_10 measured vs the exact top-10 on the same corpus — 32-query mean for the knn-join legs, the probe query itself for single-query probes; NOTE the corpus is isotropic random vectors, the hardest case for quantized tiers — see the svs_knn2k_pq_1m note): single-rep points on a calib>2 day are weather-limited and marked as such by their own record. cpu_run = sum(task executorCpuTime)/sum(task executorRunTime) across the point's published rep(s) — <<1 means the executor threads were descheduled or IO-blocked (a slow number is environment/contention, e.g. this record's warm-1M); ~1.0 means the tasks were on-CPU, which is EITHER real work or this VM's second contention mode, hypervisor CPU steal, which inflates thread CPU itself and is invisible to every guest-side counter (SURVEY's round-11 record pins it: identical back-to-back calls burning 2.5x the cpu-seconds with zero GC; /proc/stat shows hours of steal arriving in waves) — hence median-of-reps and the interleaved ladder rather than any single-shot number",
-    "ladder" -> "the four knn-ladder legs (svs_knn2k_*) run 2000 probes against the SAME 1M x d1536 corpus, reps INTERLEAVED round-robin (A,B,C,D,A,B,C,D; published value = min per leg) so contention drift lands on all legs equally instead of mapping onto ladder position (r8/r10 published inverted orderings exactly that way). r11: the ladder certifies ORDERING at 2k probes — the amortization claim (every rung beats per-call assignment) is probe-count-invariant, and 2k legs are cheap enough that TWO full cycles fit even at calib 3, with their budget reserved before the part-1 sweep can eat it; the plain path also records once at 10k probes (svs_knn_join_1m) for the absolute magnitude. The ladder_monotone/ladder_cycles contract fields state the outcome explicitly. r13 SPLIT CONTRACT: ladder_monotone covers the rungs with MEASURABLE local deltas (indexed, pq vs plain); the bucketed rung's elided codes exchange is ~100 MB at this scale — inside run noise by design (r12's official record inverted on exactly that) — so that rung is certified STRUCTURALLY by the OpsSpec/StoreScaleSpec zero-shuffle-under-the-codes-child assertions, and the record carries bucketed_vs_pq_s, its measured noise-bounded delta vs the pq rung. The worst out-of-order ordering rung gets one retry funded by the ladder's own RESERVATION (never competing with design-section budget); further out-of-order rungs get targeted retries, worst first, each gated on the budget still covering all unrecorded design sections. The indexed leg's derived layout is built ONCE before cycle 1 (untimed index maintenance) and held storage-pool resident across cycles; every rep stamps residency + cpu_run, so a spill- or contention-poisoned rep is visible in its own record",
-    "noise" -> s"part-1 queries record single-shot EARLY, then upgrade to medians of $repsG when budget remains (the upgrade replaces value + provenance); part-2 points on persisted state are medians of up to 3 under a 20s rule; cold/load stay single-shot (a cold point reads whatever the page cache holds, which the run never drops, and a rerun would read it cache-warm). The whole run fits SPARK_GRAFT_BENCH_BUDGET_S (default 1380s): points that would overflow are listed in `skipped`, never silently dropped; per-point estimates rescale by `calib` (median measured/expected vs the recorded healthy run)",
-    "svs_io_probe_read" -> "fixed-size IO calibration: ~1 GB uncompressed parquet written from cache then read back from whatever the page cache holds of it (the run never drops the cache); the ratio vs the recorded healthy run seeds the budget estimator, and the pair attributes any run-to-run delta on disk-bound points to environment vs code (r7: same-tree svs_build_1m measured 299s vs 61s purely from IO contention)",
+  private val notes: Seq[(String, String)] = Seq(
+    "provenance" -> "every recorded point carries {reps, cpu_run} in the record's provenance map (warm points and ladder legs add the working set's memory-residency fraction; the approximate 1M tier points add recall_at_10 measured vs the exact top-10 on the same corpus — 32-query mean for the knn-join legs, the probe query itself for single-query probes; NOTE the corpus is isotropic random vectors, the hardest case for quantized tiers — see the svs_knn2k_pq_1m note). cpu_run = sum(task executorCpuTime)/sum(task executorRunTime) across the point's published rep(s) — <<1 means the executor threads were descheduled or IO-blocked (a slow number is environment/contention); ~1.0 means the tasks were on-CPU, which is EITHER real work or hypervisor CPU steal, which inflates thread CPU itself and is invisible to every guest-side counter — hence median-of-reps and the interleaved ladder rather than any single-shot number",
+    "ladder" -> "the four knn-ladder legs (svs_knn2k_*) run 2000 probes against the SAME 1M x d1536 corpus in two INTERLEAVED cycles (A,B,C,D,A,B,C,D; published value = min per leg) so contention drift lands on all legs equally instead of mapping onto ladder position (sequential legs once published inverted orderings exactly that way). The amortization claim (every rung beats per-call assignment) is probe-count-invariant; the plain path also records once at 10k probes (svs_knn_join_1m) for the absolute magnitude. ladder_monotone covers the rungs with MEASURABLE local deltas (indexed, pq vs plain); the bucketed rung's elided codes exchange is ~100 MB at this scale, inside run noise by design, so that rung is certified STRUCTURALLY by the OpsSpec/StoreScaleSpec zero-shuffle-under-the-codes-child assertions, and the record carries bucketed_vs_pq_s, its measured noise-bounded delta vs the pq rung. The indexed leg's derived layout is built ONCE before cycle 1 (untimed index maintenance) and held storage-pool resident across cycles; every rep stamps residency + cpu_run, so a spill- or contention-poisoned rep is visible in its own record",
+    "svs_io_probe_read" -> "fixed-size IO probe: ~1 GB uncompressed parquet written from cache then read back from whatever the page cache holds of it (the run never drops the cache); the pair attributes any run-to-run delta on disk-bound points to environment vs code (one tree's svs_build_1m once measured 299s vs 61s purely from IO contention)",
     "svs_build_10k" -> "writes the full packed-f32 vector store; no published counterpart (the reference folds this into its ~2h embed phase; its 0.07s fn2 number is text-only -> compare svs_load_docs_10k)",
     "svs_build_1m" -> "writes the full 6.3GB packed-f32 vector store; no published counterpart (reference folds it into the ~2h embed phase; its 8s fn2 number is text-only -> compare svs_load_docs_1m)",
     "svs_warm_1m" -> "single query against the memory-resident block index; the index's storage-pool residency is VERIFIED (and restored by a rebuild if evicted) before timing, and the measured residency fraction is recorded in provenance — r8's official 0.592s was a partially-evicted matrix measuring disk, not the scan",
@@ -2155,12 +1321,11 @@ object Bench {
     "svs_knn2k_plain_1m" -> "ordering-ladder BASELINE: the plain IVF knn join (per-call corpus assignment) at 2k probes x 1M candidates — the rung every amortized leg must beat; see the ladder note",
     "svs_knn2k_indexed_1m" -> "the same 2k x 1M join probing a PERSISTED assignment (pre-assigned+persisted outside the timer): saves the per-call assignment pass (the measured delta vs svs_knn2k_plain_1m); the candidates' packed vectors still cross the join exchange per call. The raw-blob ccid-BUCKETED variant was retired from the timed set after measuring 2.7x slower than this point: its relational core copies a 6KB blob per candidate pair, dwarfing the one exchange it elides (operator + exchange-elision plan spec remain in the library; bucketed layouts are for small-payload code tables)",
     "svs_knn2k_pq_1m" -> "the same 2k x 1M join through residual PQ codes: ADC (96 B/vector, per-query lookup tables behind a bounded LRU) pre-filters candidates, exact re-rank of 50 survivors/query; approximate (recall spec-gated at small scale; exact at full probe+rerank, the k3 oracle) — the compressed scale path when raw-vector joins dominate. The stamped recall_at_10 is measured on THIS corpus — isotropic random unit vectors, the worst case for any quantizer: all 1M query dots concentrate within ~±0.03 (1/sqrt(1536)), so 96-byte codes cannot separate rank neighbors that differ by less than the quantization noise. Real embedding corpora are strongly anisotropic (cluster structure is what IVF/PQ exploit); the IN-RECORD counterpart is recall_at_10_clustered — the same residual IVF-PQ path measured on a planted-structure 1M corpus (256 clusters x near-dup groups, the realistic macro-margin ranking problem) vs a brute-force exact truth pass — and the k3 oracle pins exactness at full probe+rerank",
-    "svs_knn2k_pq_bucketed_1m" -> "the same compressed join through the CUSTOM physical operator (plans/AdcCodesJoin: requiredChildDistribution = ClusteredDistribution(cid) on both children) over a cid-bucketed codes catalog table: the planner accepts the bucketed scan as-is and shuffles only the probe rows per call — codes-side exchange elision a DataFrame-level kernel cannot express; at this local scale the codes exchange is only ~100 MB so the timed delta vs svs_knn2k_pq_1m sits inside run noise — therefore this rung is OUTSIDE the ladder_monotone ordering gate (r13 split contract): its certification is the STRUCTURAL plan assertion (OpsSpec/StoreScaleSpec: zero shuffles under the codes child), its time claim is bucketed_vs_pq_s ~ 0 (noise-bounded, retried when the published delta exceeds 1.3x the pq rung), and the payoff is at scale: at 100 TB raw the codes are ~1.5 TB per call that never cross the wire",
+    "svs_knn2k_pq_bucketed_1m" -> "the same compressed join through the CUSTOM physical operator (plans/AdcCodesJoin: requiredChildDistribution = ClusteredDistribution(cid) on both children) over a cid-bucketed codes catalog table: the planner accepts the bucketed scan as-is and shuffles only the probe rows per call — codes-side exchange elision a DataFrame-level kernel cannot express; at this local scale the codes exchange is only ~100 MB so the timed delta vs svs_knn2k_pq_1m sits inside run noise — therefore this rung is OUTSIDE the ladder_monotone ordering gate: its certification is the STRUCTURAL plan assertion (OpsSpec/StoreScaleSpec: zero shuffles under the codes child), its time claim is bucketed_vs_pq_s ~ 0 (noise-bounded), and the payoff is at scale: at 100 TB raw the codes are ~1.5 TB per call that never cross the wire",
     "svs_load_docs_10k" -> "single-task parquet write of a 10k-row text corpus; the residual ~0.2-0.3s is the JVM job-dispatch + output-committer floor, MEASURED and stamped as dispatch_floor_s in this point's provenance (median of 3 one-row single-task writes in the same weather) -> the gate miss vs the reference's 0.07s in-process SQLite insert (fn2 @10k) is the floor, not the write: value - dispatch_floor_s is the actual 10k write cost, and the same path at 1M is ~14x FASTER than baseline",
     "svs_zscan_pruned_6m" -> "z-ordered 6M x 256B table (~1.5 GB raw), 1/8-range predicate on one interleaved dim, payload-reading aggregate, each rep reading whatever the page cache holds of the table just written (the run never drops the cache; a cluster reading cold data is disk-bound): the engine's row-group stats prune because the LAYOUT made ranges tight; vs svs_scan_unordered_6m (identical data, naive layout, row groups straddle the predicate) the delta is the measured z-order win — and one layout serves range predicates on BOTH interleaved dims",
     "svs_skip_scan_6m" -> "the manifest file-skipping path over the same table (reads 15/64 files): reads only the manifest-selected files; times as svs_zscan_pruned_6m plus a fixed ~0.2s manifest lookup — honest local number; the file-level win (one manifest read replacing per-file footer opens, 4x fewer tasks) is object-store metadata latency this VM cannot exhibit; result parity LayoutSpec-pinned"
-  ).map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-    .mkString("{", ",", "}")
+  )
 
   /** One deterministic synthetic unit vector (the reference's fake d1536
     * embeddings, `One Million Documents Benchmark.ipynb` cell 5).
@@ -2234,11 +1399,11 @@ object Bench {
   }
 
   private def svsProtocol(spark: SparkSession, n: Long, tag: String,
-      keep: Boolean = false, spine: Boolean = false): String = {
+      keep: Boolean = false): String = {
     val path = s"/tmp/graft_bench_$tag"
     val staging = s"/tmp/graft_stage_$tag"
-    KbStoreCleanup.delete(path)
-    KbStoreCleanup.delete(staging)
+    deleteRecursively(Paths.get(path))
+    deleteRecursively(Paths.get(staging))
 
     // untimed: generate the synthetic corpus (the reference's '~2h embed'
     // phase is likewise excluded from its load number)
@@ -2248,36 +1413,24 @@ object Bench {
     // build: bulk-load pre-embedded vectors into the store (reference
     // 'load into store', 8s @ 1M). Uncompressed parquet: random f32
     // vectors are incompressible, so snappy only burns CPU (the columns
-    // a real store would compress — ids, text — still would be).
-    // up-to-median-of-3 (each rep re-reads staging and rewrites the full
-    // store — real compute + IO, not a page-cache echo); at 1M a single
-    // rep is ~60-300s depending on IO weather, so the 20s adaptive rule
-    // makes it single-shot
-    val buildEst = if (n > 100000) 70.0 else 2.0
-    def doBuild(): Unit =
+    // a real store would compress — ids, text — still would be). Each
+    // rep re-reads staging and rewrites the full store — real compute +
+    // IO, not a page-cache echo; at 1M a rep writes 6.3 GB, so it runs
+    // once
+    record(s"svs_build_$tag", reps = if (n > 100000) 1 else 3) {
       spark.read.parquet(staging).write.mode("overwrite")
         .option("compression", "none")
         .option("parquet.enable.dictionary", "false")
         .parquet(path)
-    record(s"svs_build_$tag", estS = buildEst, spine = spine) { doBuild() }
-    // if the timed build was budget-skipped the store was never
-    // written; every downstream point (cold/warm, and at 1M the whole
-    // ladder) reads it — build untimed rather than crash on a missing
-    // path (setup() still gates the attempt, so a truly exhausted
-    // budget unwinds cleanly instead)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) {
-      setup(buildEst, spine = spine)
-      doBuild()
     }
-    KbStoreCleanup.delete(staging)
+    deleteRecursively(Paths.get(staging))
 
     // cold: fresh read of the store, score, top-100 (reference 2min
     // @ 1M). The store was just written, so the read takes whatever the
     // page cache still holds of it (r7 measured 14 s for 6.3 GB — cache
     // bandwidth, not disk); the notes carry that caveat.
     val cold = spark.read.parquet(path)
-    record(s"svs_cold_$tag", estS = if (n > 100000) 25.0 else 2.0,
-      reps = 1, spine = spine) { retrieveJob(cold, queryId = 1L) }
+    record(s"svs_cold_$tag", reps = 1) { retrieveJob(cold, queryId = 1L) }
 
     // warm: the batch-built in-memory index — block-contiguous f32
     // matrix shards, the engine's analog of the reference's cached
@@ -2287,7 +1440,6 @@ object Bench {
     // the preceding build's pressure evicted it, and record the final
     // fraction in the point's provenance (the r8 official record's
     // 0.592s was a partially-evicted matrix timing the disk).
-    setup(if (n > 100000) 60.0 else 10.0, spine = spine)
     val blocks = math.max(1, math.min(32, n / 20000)).toInt
     def buildIdx() = graft.ops.VectorIndex
       .fromPacked(spark.read.parquet(path), blocks).get
@@ -2296,30 +1448,17 @@ object Bench {
     idx.topK(syntheticVec(3L), 100)
     var res = idx.memoryResidency()
     if (res < 0.98) {
-      setup(if (n > 100000) 40.0 else 5.0, spine = spine)
       idx.unpersist()
       idx = buildIdx()
       idx.topK(syntheticVec(1L), 100)
       idx.topK(syntheticVec(3L), 100)
       res = idx.memoryResidency()
     }
-    record(s"svs_warm_$tag", estS = 3.0, residency = Some(res),
-      spine = spine) {
+    record(s"svs_warm_$tag", residency = Some(res)) {
       idx.topK(syntheticVec(2L), 100)
     }
     idx.unpersist()
-    if (!keep) KbStoreCleanup.delete(path)
+    if (!keep) deleteRecursively(Paths.get(path))
     path
-  }
-}
-
-private object KbStoreCleanup {
-  def delete(path: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    }
   }
 }

@@ -107,7 +107,7 @@ object ProfileRefreshPlans {
       finally System.clearProperty("graft.kb.forceFullRefreshDiff")
     } finally {
       spark.stop()
-      KbStoreCleanup.delete(base.toString)
+      graft.core.KbStore.deleteRecursively(base)
     }
   }
 }

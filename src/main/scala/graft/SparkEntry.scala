@@ -43,12 +43,8 @@ object SparkEntry {
   private def fixtureDir(s: SparkSession): java.nio.file.Path =
     fixtureDirs.computeIfAbsent(s.sparkContext.applicationId, app => {
       val dir = java.nio.file.Files.createTempDirectory("graft_fixtures_")
-      def delete(): Unit = if (fixtureDirs.remove(app, dir)) {
-        val walk = java.nio.file.Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
+      def delete(): Unit =
+        if (fixtureDirs.remove(app, dir)) graft.core.KbStore.deleteRecursively(dir)
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =

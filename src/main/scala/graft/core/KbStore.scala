@@ -3801,11 +3801,14 @@ object KbStore {
     } finally listing.close()
   }
 
-  private[core] def deleteRecursively(p: Path): Unit = {
+  /** Delete `p` and everything under it; a no-op when it is absent.
+    * The walk's stream holds a directory handle until it is closed. */
+  private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.deleteIfExists(f))
+      finally walk.close()
     }
-  }
 
 }
