@@ -3,9 +3,14 @@ package graft.core
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{FileFormat,
+  HadoopFsRelation, LogicalRelation, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -48,7 +53,7 @@ import graft.functions.VectorFunctions._
   * later read of that layout — the reference's "first query slow, later
   * queries fast" matrix (`_EmbeddingsMatrix`, `kb.py:856-893`,
   * `README.md:135`), applied to all read state. Two kinds of entry:
-  *   - resident tables, each collected whole once and indexed on the
+  *   - resident tables, each loaded whole once and indexed on the
   *     driver: `docs` (keyed by `id` and by `emb_id`; every read path
   *     hydrates its hits from it), `keyval` (what [[getKey]] and its
   *     siblings read), `ivf_centroids` with `ivf_assign` (the inverted
@@ -70,10 +75,17 @@ import graft.functions.VectorFunctions._
   * into what is held: O(batch) reads, not a reload. Resident rows drop
   * the tombstoned keys and append the added rows; the driver-local
   * matrix does the same through `VectorIndex.updated`; an
-  * executor-block matrix does not fold. Whatever cannot be folded to
-  * the live layout (executor blocks after any embeddings write,
-  * anything after a minor compaction, `compact()`, a full rewrite or
-  * an adopted rewrite) is loaded again. The one loop that folds or
+  * executor-block matrix does not fold. A segment of an unpartitioned
+  * table planned at most [[KbStore.ResidentMaxBytes]] is read on the
+  * driver by Spark's own Parquet reader ([[collectable]]), the way the
+  * reference reads its SQLite file in-process, so a fold of a small
+  * version runs no Spark job. A resident table's load is the same fold
+  * over its base segment's rows, and runs no job when every segment of
+  * the layout is read that way; otherwise (the partitioned
+  * `text_postings`) it collects the view in one job. Whatever cannot
+  * be folded to the live layout (executor blocks after any embeddings
+  * write, anything after a minor compaction, `compact()`, a full
+  * rewrite or an adopted rewrite) is loaded again. The one loop that folds or
   * loads also releases what it replaces, and only executor blocks are
   * unpersisted (the other entries live on the driver heap); a publish
   * releases the entries it leaves unable to fold, and `close` releases
@@ -233,6 +245,52 @@ final class KbStore private (
       Option(segments.putIfAbsent(dir, p)).getOrElse(p)
     }
 
+  /** File schema -> Spark's Parquet reader of files of that schema,
+    * built once per store (each build broadcasts the Hadoop conf): what
+    * [[collectable]] reads small segments with on the driver. */
+  private val readers = new java.util.concurrent.ConcurrentHashMap[StructType,
+    PartitionedFile => Iterator[InternalRow]]()
+
+  /** The files of resolved scan `p` when [[collectable]] reads them on
+    * the driver: an unpartitioned segment planned at most
+    * [[residentCap]] bytes. */
+  private def driverRead(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+    case r: LogicalRelation => r.relation match {
+      case fs: HadoopFsRelation if fs.partitionSchema.isEmpty &&
+          r.stats.sizeInBytes <= residentCap => Some(fs)
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** Segment `dir` as the frame a read should collect, None when it
+    * holds no parquet file. A segment [[driverRead]] takes is read here
+    * on the driver, file by file in the order a scan reads them
+    * (largest first), by Spark's own Parquet reader, and its copied
+    * rows are returned as a local relation, whose `select`s fold into
+    * it and whose `collect` starts no job; any other is the Spark scan
+    * of [[segment]]. A partitioned `text_postings` segment keeps the
+    * scan: it holds one file per touched bucket, and each file read on
+    * the driver costs ~10 ms whatever its size (4-core box). */
+  private def collectable(dir: String): Option[DataFrame] =
+    resolved(dir).map { p =>
+      driverRead(p).fold(KbStore.freshScan(spark, p)) { fs =>
+        val read = readers.computeIfAbsent(fs.dataSchema, schema =>
+          new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+            schema, new StructType(), schema, Nil,
+            Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+            org.apache.spark.sql.graft.Bridge.hadoopConf(spark)))
+        val rows = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+          .sortBy(-_.getLen).flatMap { f =>
+            read(PartitionedFile(InternalRow.empty,
+              SparkPath.fromPath(f.getPath), 0L, f.getLen, Array.empty[String],
+              f.getModificationTime, f.getLen)).map(_.copy())
+          }
+        org.apache.spark.sql.graft.Bridge.ofRows(spark,
+          LocalRelation(p.output.map(_.newInstance()), rows))
+      }
+    }
+
   /** Remember the schema of each segment dir a commit staged, once
     * manifest `m` has published it, so no read of it runs a schema
     * inference job. Only published dirs: a rolled-back stage is never
@@ -312,6 +370,10 @@ final class KbStore private (
     (segments.keySet.asScala.toSet, views.size)
   }
 
+  /** Segment `dir` as [[collectable]] reads it, for specs. */
+  private[graft] def collectableForSpec(dir: String): Option[DataFrame] =
+    collectable(dir)
+
   /** The memoized scan schema of segment `dir`, for specs; None when
     * the dir is not resolved or holds no parquet file. */
   private[graft] def segmentSchemaForSpec(dir: String): Option[StructType] =
@@ -337,16 +399,17 @@ final class KbStore private (
       .flatMap(resolved).map(_.stats.sizeInBytes).sum
 
   /** Keys tombstoned by version `v` of table `name` and the `add`
-    * segment it appended (None for either side it lacks). Every table's
-    * [[KbStore.DeltaKeys]] is one column, so a key is that column's
-    * value. */
+    * segment it appended (None for either side it lacks), both read
+    * through [[collectable]], so a small version costs no job. Every
+    * table's [[KbStore.DeltaKeys]] is one column, so a key is that
+    * column's value. */
   private def versionDelta(name: String, v: Long)
       : (Set[Any], Option[DataFrame]) = {
     val dir = tableDir(name, v)
     val key = KbStore.DeltaKeys(name).head
-    val gone = segment(s"$dir/del").fold(Set.empty[Any])(
+    val gone = collectable(s"$dir/del").fold(Set.empty[Any])(
       _.select(col(key)).collect().iterator.map(_.get(0)).toSet)
-    (gone, segment(s"$dir/add"))
+    (gone, collectable(s"$dir/add"))
   }
 
   /** What read-memo entry `memo` holds for the live layout of its
@@ -382,28 +445,40 @@ final class KbStore private (
 
   /** The read-memo entry of table `name` held as its collected rows
     * while `within` its layout (see the class doc): `rows` collects a
-    * view and `index` shapes the collected rows for lookups. A fold
+    * frame and `index` shapes the collected rows for lookups. A fold
     * takes, per new version in publish order, the rows whose `key` that
     * version tombstoned out and appends the rows of its `add` segment
     * (collected by `rows`), then runs `index` over the result. That is
     * the merge-on-read fold of [[readWithMeta]] over the same segments,
     * so it holds the rows a fresh collect would return, in the order
-    * the view's scans produce them. */
+    * the view's scans produce them. A load is the same fold over the
+    * base segment's rows, when [[collectable]] reads every segment of
+    * the layout on the driver (no job); otherwise it collects the view,
+    * in one job. */
   private def rowsMemo[R: scala.reflect.ClassTag, T <: AnyRef](name: String,
       within: ((Long, Seq[Long])) => Boolean)(rows: DataFrame => Array[R])(
       key: R => Any)(index: Array[R] => T): KbStore.Memo[KbStore.Resident[R, T]] = {
-    def resident(collected: Array[R]) = KbStore.Resident(collected, index(collected))
+    def walk(held: Array[R], base: Long, versions: Seq[Long]) = {
+      val columns = baseSegment(name, base).columns
+      val collected = versions.foldLeft(held) { (acc, v) =>
+        val (gone, add) = versionDelta(name, v)
+        val kept = if (gone.isEmpty) acc else acc.filterNot(r => gone(key(r)))
+        add.fold(kept)(a => kept ++ rows(a.select(columns.map(col(_)): _*)))
+      }
+      KbStore.Resident(collected, index(collected))
+    }
     new KbStore.Memo[KbStore.Resident[R, T]](name, name,
-      load = l => Option.when(within(l))(resident(rows(view(name, l)))),
+      load = l => Option.when(within(l)) {
+        val (base, chain) = l
+        val onDriver = layoutDirs(name, base, chain)
+          .forall(resolved(_).forall(driverRead(_).isDefined))
+        if (onDriver)
+          walk(rows(collectable(tableDir(name, base)).get), base, chain)
+        else walk(rows(view(name, l)), base, Nil)
+      },
       folds = _ => true,
-      fold = (r, l, versions) => Option.when(within(l)) {
-        val columns = baseSegment(name, l._1).columns
-        resident(versions.foldLeft(r.rows) { (acc, v) =>
-          val (gone, add) = versionDelta(name, v)
-          val kept = if (gone.isEmpty) acc else acc.filterNot(r => gone(key(r)))
-          add.fold(kept)(a => kept ++ rows(a.select(columns.map(col(_)): _*)))
-        })
-      })
+      fold = (r, l, versions) =>
+        Option.when(within(l))(walk(r.rows, l._1, versions)))
   }
 
   /** The live layout of table `name`, resident (see the class doc) while
@@ -487,15 +562,17 @@ final class KbStore private (
   /** The batch-built retrieval index (reference `_EmbeddingsMatrix`,
     * `kb.py:856-893`): a read-memo entry (see the class doc), built on
     * the first retrieve by `VectorIndex.fromPacked` straight from the
-    * embeddings view, so a cold build below its local threshold runs a
-    * count and one collect and persists nothing. None when the store
-    * has no embeddings.
+    * embeddings view. The manifest's `max_doc_id` bounds the view's
+    * rows with no job, so a cold build of at most the local threshold
+    * of them runs one collect and persists nothing; above it, a count
+    * runs first. None when the store has no embeddings.
     *
     * After a write that appended versions to the embeddings chain, a
     * driver-local index is brought forward instead of rebuilt: per new
     * version, the ids it tombstoned leave and its `add` rows, packed by
     * the same `floatVecPack`, join as one more stripe
-    * ([[graft.ops.VectorIndex.updated]]). A result above the local
+    * ([[graft.ops.VectorIndex.updated]]); a small version is read on
+    * the driver ([[collectable]]), with no job. A result above the local
     * threshold, or an empty one, is built from scratch like any other
     * layout.
     */
@@ -504,7 +581,11 @@ final class KbStore private (
   private val indexMemo = {
     import graft.functions.FloatVecPack.floatVecPack
     new KbStore.Memo[graft.ops.VectorIndex]("index", "embeddings",
-      load = l => graft.ops.VectorIndex.fromArrays(view("embeddings", l)),
+      // embeddings ids are unique, at least 1 and at most max_doc_id
+      // (every write that adds one raises the counter to it), so the
+      // view holds at most max_doc_id rows
+      load = l => graft.ops.VectorIndex.fromArrays(view("embeddings", l),
+        rowBound = metaCache.max_doc_id),
       folds = _.isLocal,
       fold = (idx, _, versions) => versions.foldLeft(Option(idx)) { (acc, v) =>
         acc.flatMap { i =>
@@ -3448,10 +3529,13 @@ object KbStore {
 
   /** Largest planned view (Parquet bytes) of `docs`, `keyval`,
     * `ivf_assign`, `text_postings` or `text_doclens` a store keeps
-    * resident. A write that appends to a table's delta chain costs the
-    * next read only the new segments, folded into the held rows; a
-    * write that rewrites the table (a compaction, a full commit) makes
-    * the next read collect the whole table again. The cap is checked
+    * resident, and the largest segment of an unpartitioned table a
+    * store reads on the driver instead of with a Spark job (a fold's
+    * `del` and `add` sides, a resident table's load; see
+    * `KbStore#collectable`). A write that appends to a table's delta
+    * chain costs the next read only the new segments, folded into the
+    * held rows; a write that rewrites the table (a compaction, a full
+    * commit) makes the next read load the whole table again. The cap is checked
     * on every new layout, so a table that grows past it leaves
     * residency. Measured on a 4-core box, before the fold (every write
     * made the next read collect the whole table):

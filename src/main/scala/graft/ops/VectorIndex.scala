@@ -29,8 +29,9 @@ import org.apache.spark.storage.StorageLevel
   * Tie order matches the reference's top-k (larger id first on equal
   * score, `util.py:190-203`).
   *
-  * [[VectorIndex.fromPacked]] picks the form from the row count: at
-  * most [[VectorIndex.LocalThreshold]] vectors are collected once and
+  * [[VectorIndex.fromPacked]] picks the form from the row count, or
+  * from a bound on it the caller knows: at most
+  * [[VectorIndex.LocalThreshold]] vectors are collected once and
   * held on the driver in stripes ([[isLocal]]), exactly the reference's
   * in-RAM matrix; larger ones stay in persisted executor blocks. An
   * index never changes after it is built.
@@ -239,27 +240,35 @@ object VectorIndex {
 
   /** Build from a DataFrame with (id LONG, vec BINARY packed f32) —
     * e.g. the Bench corpus or a packed embeddings table — or None when
-    * it has no rows. One job counts the rows; at most
-    * [[LocalThreshold]] of them are then collected in one more job and
-    * cut into driver stripes, and nothing is persisted. Above it the
-    * index is [[onExecutors]], with the dim read off one row.
+    * it has no rows. Nothing is persisted for an index of at most
+    * [[LocalThreshold]] rows: they are collected in one job and cut
+    * into driver stripes. A `rowBound` at most that threshold says so
+    * with no job, and the collect runs alone; otherwise one job counts
+    * the rows first. Above the threshold the index is [[onExecutors]],
+    * with the dim read off one row.
     *
     * @param numBlocks optional shard count of the executor form; use
     *                  fewer blocks for small corpora so per-task
     *                  scheduling overhead doesn't dominate query
     *                  latency (a block of ≲100k×d1536 scans in a few ms)
+    * @param rowBound  an upper bound on `df`'s row count that the
+    *                  caller knows without a job, if any
     */
-  def fromPacked(df: DataFrame, numBlocks: Int = 0): Option[VectorIndex] = {
+  def fromPacked(df: DataFrame, numBlocks: Int = 0,
+      rowBound: Long = Long.MaxValue): Option[VectorIndex] = {
     val base = df.select(col("id"), col("vec"))
     // a row count with no aggregate: one job, no shuffle stage
-    val n = base.select(col("id")).rdd.count()
+    val n = if (rowBound <= LocalThreshold) rowBound
+      else base.select(col("id")).rdd.count()
     if (n == 0) None
     else if (n <= LocalThreshold) {
       val rows = base.collect()
-      val ids = rows.map(_.getLong(0))
-      val dim = rows.head.getAs[Array[Byte]](1).length / 4
-      val held = striped(ids, dim)(r => (rows(r).getAs[Array[Byte]](1), 0))
-      Some(new VectorIndex(None, Some(held), dim, ids.length.toLong))
+      Option.when(rows.nonEmpty) {
+        val ids = rows.map(_.getLong(0))
+        val dim = rows.head.getAs[Array[Byte]](1).length / 4
+        val held = striped(ids, dim)(r => (rows(r).getAs[Array[Byte]](1), 0))
+        new VectorIndex(None, Some(held), dim, ids.length.toLong)
+      }
     } else {
       val dim = base.select(length(col("vec"))).head().getInt(0) / 4
       Some(onExecutors(base, dim, n, numBlocks))
@@ -268,9 +277,11 @@ object VectorIndex {
 
   /** Build from an (id LONG, vec ARRAY<FLOAT>) embeddings table, as
     * [[fromPacked]] does. */
-  def fromArrays(df: DataFrame): Option[VectorIndex] = {
+  def fromArrays(df: DataFrame,
+      rowBound: Long = Long.MaxValue): Option[VectorIndex] = {
     import graft.functions.FloatVecPack.floatVecPack
-    fromPacked(df.select(col("id"), floatVecPack(col("vec")).as("vec")))
+    fromPacked(df.select(col("id"), floatVecPack(col("vec")).as("vec")),
+      rowBound = rowBound)
   }
 
   /** The executor form of [[fromPacked]] over `df`'s (id, vec) rows,

@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => 
   * turn a hand-built [[LogicalPlan]] into a user-facing DataFrame
   * (`Dataset.ofRows` — package-private to `org.apache.spark.sql`,
   * which is why this object lives under it), and make a schema
-  * nullable as Spark's Parquet writer does (`StructType.asNullable`).
+  * nullable as Spark's Parquet writer does (`StructType.asNullable`),
+  * and give a file reader the session's Hadoop conf.
   * Everything else in the custom-operator stack (logical node,
   * strategy, exec node, `extraStrategies` registration) uses public
   * APIs.
@@ -20,4 +21,9 @@ object Bridge {
 
   /** `schema` with every field nullable, at every depth. */
   def asNullable(schema: StructType): StructType = schema.asNullable
+
+  /** A new Hadoop conf with the session's SQL settings, as a file scan
+    * of `spark` gets it. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[ClassicSparkSession].sessionState.newHadoopConf()
 }

@@ -226,16 +226,19 @@ class ResidentFoldSpec extends SparkSpec {
     kb.close()
   }
 
-  test("after a setKey, getKeyOr runs <= 2 jobs") {
+  test("after a setKey, getKeyOr runs no job") {
     val kb = KbStore.create(spark, freshPath(), provider.params,
       forceFresh = true)
     kb.setKey("a", 1L)
     assert(kb.getKeyOr("a", -1L) == 1L)
-    kb.setKey("a", 2L)
+    kb.setKey("a", 2L) // an upsert: one version with a del and an add
+    val kv = s"${kb.path}/keyval/v${kb.meta.table_deltas("keyval").last}"
+    assert(Seq("del", "add").forall(side =>
+      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(kv, side))))
     var v: Any = null
     val jobs = jobsDuring { v = kb.getKeyOr("a", -1L) }
     assert(v == 2L)
-    assert(jobs <= 2, s"getKeyOr ran $jobs jobs")
+    assert(jobs == 0, s"getKeyOr ran $jobs jobs")
     assert(jobsDuring(kb.getKeyOr("a", -1L)) == 0)
     kb.close()
   }
@@ -272,7 +275,7 @@ class ResidentFoldSpec extends SparkSpec {
     (SpecProbes.cachedEntries(spark),
       spark.sparkContext.getPersistentRDDs.keySet.toSet)
 
-  test("a cold index() below the local threshold runs <= 2 jobs and " +
+  test("a cold index() below the local threshold runs one job and " +
       "persists nothing") {
     val kb = indexedStore(50)
     kb.close() // what a reopened store holds: no read state
@@ -280,7 +283,7 @@ class ResidentFoldSpec extends SparkSpec {
     var idx: Option[graft.ops.VectorIndex] = None
     val jobs = jobsDuring { idx = kb.index() }
     assert(idx.exists(i => i.isLocal && i.count == 50L))
-    assert(jobs <= 2, s"the cold index() ran $jobs jobs")
+    assert(jobs == 1, s"the cold index() ran $jobs jobs")
     assert(cacheProbes == before)
     kb.close()
   }
@@ -333,6 +336,94 @@ class ResidentFoldSpec extends SparkSpec {
     leavesNoPersist("bulkAddDocsDistributed naming a missing parent")(
       intercept[IllegalArgumentException](kb.bulkAddDocsDistributed(
         Seq(("orphan", 999999L)).toDF("text", "parent_id"), provider)))
+    kb.close()
+  }
+
+  test("a fold of one small version runs no job: docs and the matrix") {
+    val kb = indexedStore(20)
+    assert(kb.fetchDoc(1L).text == text(1))
+    assert(kb.index().exists(_.count == 20L))
+    kb.bulkAddDocs(provider)(_.add(text(21)))
+    val id = kb.meta.max_doc_id
+    var got: Any = null
+    assert(jobsDuring { got = kb.fetchDoc(id).text } == 0)
+    assert(got == text(21))
+    var idx: Option[graft.ops.VectorIndex] = None
+    assert(jobsDuring { idx = kb.index() } == 0)
+    assert(idx.exists(i => i.isLocal && i.count == 21L))
+    assertAsFresh(kb, Seq(1L, id), Nil, "the folds")
+    kb.close()
+  }
+
+  test("a cold resident load of a view under the cap runs no job") {
+    val kb = indexedStore(20)
+    kb.bulkAddDocs(provider)(_.add(text(21)))
+    kb.updateDocMeta(3L, Some("""{"cold": 1}""")) // a docs del and add
+    kb.close() // what a cold read finds: no read state
+    val id = kb.meta.max_doc_id
+    var got: Any = null
+    assert(jobsDuring { got = kb.fetchDoc(id).text } == 0)
+    assert(got == text(21))
+    assert(kb.residentRowsForSpec("docs") == Seq(21))
+    assertAsFresh(kb, Seq(3L, id), Nil, "the cold load")
+    kb.close()
+  }
+
+  test("a segment read on the driver holds the Spark scan's rows, nulls " +
+      "included") {
+    val kb = KbStore.create(spark, freshPath(), provider.params,
+      forceFresh = true)
+    kb.bulkAddDocs(provider) { a =>
+      a.add("root", meta = Some("""{"a": 1}""")); a.add("plain")
+    }
+    kb.bulkAddDocs(provider) { a =>
+      a.add("child", parentId = Some(1L)); a.add("bare", noEmbedding = true)
+      a.add("gone", meta = Some("{}"))
+    }
+    def last(t: String) = s"${kb.path}/$t/v${kb.meta.table_deltas(t).last}"
+    val adds = Seq(last("docs"), last("embeddings")).map(_ + "/add")
+    kb.bulkDelDocs(Seq(kb.meta.max_doc_id))
+    val dels = Seq(last("docs"), last("embeddings")).map(_ + "/del")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(
+      dels.head.stripSuffix("del") + "add")), "the delete is del-only")
+    (adds ++ dels).foreach { dir =>
+      val frame = kb.collectableForSpec(dir).get
+      var got = Array.empty[org.apache.spark.sql.Row]
+      assert(jobsDuring { got = frame.collect() } == 0, dir)
+      val want = spark.read.parquet(dir).collect()
+      assert(got.map(_.toSeq).sortBy(_.toString).toSeq ==
+        want.map(_.toSeq).sortBy(_.toString).toSeq, dir)
+    }
+    val docs = kb.collectableForSpec(adds.head).get
+    assert(docs.filter("parent_id IS NULL AND meta IS NULL").count() == 1L)
+    assert(docs.filter("emb_id IS NULL").count() == 1L)
+    kb.close()
+  }
+
+  test("the embeddings view never holds more rows than max_doc_id") {
+    import spark.implicits._
+    val kb = KbStore.create(spark, freshPath(), provider.params,
+      forceFresh = true)
+    def bounded(step: String): Unit = {
+      val n = kb.embeddings.count()
+      assert(n > 0 && n <= kb.meta.max_doc_id,
+        s"after $step: $n rows, max_doc_id ${kb.meta.max_doc_id}")
+    }
+    kb.bulkAddDocs(provider) { a =>
+      (1 to 6).foreach(i => a.add(text(i)))
+      a.add("no vector", noEmbedding = true)
+    }
+    bounded("bulkAddDocs")
+    kb.bulkAddDocsDistributed((7 to 12).map(text).toDF("text"), provider)
+    bounded("bulkAddDocsDistributed")
+    val top = kb.docs.collect().maxBy(_.id)
+    kb.bulkDelDocs(Seq(top.id))
+    kb.setDocEmbedding(2L, Some(provider.embed(Seq("re-embedded")).head))
+    bounded("setDocEmbedding after bulkDelDocs")
+    kb.reembedAll(provider)
+    bounded("reembedAll")
+    kb.compact()
+    bounded("compact()")
     kb.close()
   }
 }
